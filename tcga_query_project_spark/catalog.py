@@ -2198,8 +2198,9 @@ def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 decimals so the threshold decision is FP-portable). Exact
     all-pairs semantics, executed as a distributed blocked matmul
     (disjoint id-blocks x applyInPandas numpy kernel — nothing on the
-    driver); dedup.embedding_near_dup_bucketed is the sub-quadratic
-    sign-LSH variant for corpora where exactness can be traded."""
+    driver); dedup.embedding_near_dup_auto (dd_embedding_lsh_pairs) is
+    the sub-quadratic sign-LSH variant for corpora where exactness can
+    be traded."""
     emb = _t(spark, sf_dir, "embeddings")
     return dedup.embedding_near_dup(emb, "vec_id", "embedding", 0.35)
 
@@ -4474,10 +4475,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1/16th of the corpus instead of all of it. Recall < 1 by
     construction (the ANN trade-off); the bucketing is deterministic and
     mirrored verbatim in the oracle, so the *result* is exact and
-    hash-checkable. The k-means IVF variant (data-trained centroids,
-    operators/similarity.cosine_topk_ivf) is recall-tested in
-    tests/test_operators_unit.py — a learned index cannot be mirrored in
-    static oracle SQL."""
+    hash-checkable."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.cosine_topk_bucketed(
         emb,

@@ -745,22 +745,20 @@ def embedding_near_dup(
     peak task memory 2·(n/B)·d doubles). Size ``n_blocks`` ≈
     √(2·parallelism) for CPU balance, or larger to bound per-task
     memory: n = 1e6 docs at B = 1024 is ~1k-row blocks — fine. When
-    exactness is not required, :func:`embedding_near_dup_bucketed`
-    drops the quadratic term entirely (sign-LSH candidates, same
-    kernel as per-bucket verify).
+    exactness is not required, :func:`embedding_near_dup_auto` drops
+    the quadratic term entirely (sign-LSH candidates, same kernel as
+    per-bucket verify).
     """
     # Each row emits its grid cells in ONE narrow pass — for block b:
     # 'a' role in cells (b, j) for j >= b, 'b' role in cells (i, b) for
     # i < b — so the plan is scan -> explode -> one shuffle into the
-    # kernel groups. (A previous revision built the same rows as two
-    # broadcast-grid joins unioned together: two scans of the corpus and
-    # three extra stages for identical output.) The guard on b = 0
+    # kernel groups, one scan of the corpus. The guard on b = 0
     # matters: Spark's sequence(0, -1) yields a DESCENDING [0, -1], not
     # an empty array.
     # a NULL vector can never clear a positive cosine threshold, and it
     # would crash the numpy kernel (inhomogeneous array); the SQL
     # convention drops it via the norms join — mirror that up front.
-    # Same guard in the bucketed/auto variants.
+    # Same guard in embedding_near_dup_auto.
     df = df.filter(F.col(vec_col).isNotNull())
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
     a_cells = F.transform(
@@ -798,10 +796,9 @@ def embedding_near_dup(
         # an OFF-diagonal cell whose partner block holds no vectors
         # arrives as an all-'a' group — indistinguishable from a
         # diagonal block by roles alone, and the homogeneous branch
-        # would re-score the whole block once per empty partner
-        # (round-8 embeddings fuzz: 4 vectors sharing block 3 with
-        # blocks 4/6/7 empty emitted the (3,4) pair four times). The
-        # grouping keys disambiguate: only bi == bj may self-score.
+        # would re-score the whole block once per empty partner,
+        # duplicating its pairs. The grouping keys disambiguate: only
+        # bi == bj may self-score.
         if (
             len(pdf)
             and pdf["bi"].iat[0] != pdf["bj"].iat[0]
@@ -815,85 +812,6 @@ def embedding_near_dup(
     return both.groupBy("bi", "bj").applyInPandas(kernel, _PAIR_SCHEMA)
 
 
-def embedding_near_dup_bucketed(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    bits: int = 4,
-    n_tables: int = 4,
-) -> DataFrame:
-    """Approximate embedding near-dup: sign-LSH candidate generation
-    with the exact matmul kernel as the per-bucket verify stage — the
-    100 TB path, never quadratic in the corpus.
-
-    Table ``t`` buckets each vector by the sign pattern of components
-    ``[t·bits, (t+1)·bits)`` (deterministic, model-free, mirrorable in
-    any SQL engine); two vectors are candidates if they share a bucket
-    in ANY table. Each (table, bucket) group is scored by one numpy
-    matmul and pairs are deduped across tables. Output ⊆ the exact
-    :func:`embedding_near_dup` result; recall rises with ``n_tables``
-    (≈ 1 − (1 − p^bits)^T for per-component sign-agreement p), cost is
-    Σ bucket² ≈ n²·T/2^bits per-table work — the dial a training-data
-    dedup pipeline tunes. Requires dim ≥ bits·n_tables.
-    """
-    df = df.filter(F.col(vec_col).isNotNull())  # see embedding_near_dup
-    tables = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                sum(
-                    (
-                        F.when(
-                            F.element_at(F.col(vec_col), t * bits + b + 1).cast(
-                                "double"
-                            )
-                            > 0,
-                            F.lit(1 << b),
-                        ).otherwise(F.lit(0))
-                        for b in range(bits)
-                    ),
-                    F.lit(0),
-                ).cast("long").alias("bkt"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    return _sign_lsh_pairs(
-        fan_out(df.select(F.col(id_col), F.col(vec_col)), id_col),
-        id_col, vec_col, threshold, tables,
-    )
-
-
-def _sign_lsh_pairs(
-    prepared: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    tables: Column,
-) -> DataFrame:
-    """Shared sign-LSH tail: explode the per-table ``(tbl, bkt)``
-    structs, score each bucket with the exact matmul kernel, dedup
-    pairs found in several tables (same rounded cosine everywhere, so
-    plain distinct suffices). Bucketed (fixed bits) and auto (tuned
-    bits) differ only in how ``tables`` is built."""
-    rows = prepared.select(
-        F.col(id_col), F.col(vec_col), F.explode(tables).alias("_tb")
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("_tb.tbl").alias("_tbl"),
-        F.col("_tb.bkt").alias("_bkt"),
-        F.lit("a").alias("_role"),
-    )
-
-    def kernel(pdf):
-        return _pair_kernel_pdf(pdf, id_col, vec_col, threshold)
-
-    scored = rows.groupBy("_tbl", "_bkt").applyInPandas(kernel, _PAIR_SCHEMA)
-    return scored.distinct()
-
-
 def embedding_near_dup_auto(
     df: DataFrame,
     id_col: str,
@@ -904,15 +822,19 @@ def embedding_near_dup_auto(
     min_bits: int = 4,
     max_bits: int = 16,
 ) -> DataFrame:
-    """Sign-LSH embedding near-dup with the bucket width TUNED TO THE
-    CORPUS, in-plan — the genuinely scale-safe member of the family.
+    """Approximate embedding near-dup: sign-LSH candidate generation
+    with the exact matmul kernel as the per-bucket verify stage, the
+    bucket width TUNED TO THE CORPUS in-plan — never quadratic in the
+    corpus.
 
-    :func:`embedding_near_dup_bucketed` at FIXED ``bits`` is a
-    constant-factor reduction of quadratic (Σ bucket² ≈ n²·T/2^bits):
-    measured on the round-8 scale curve, bits=4 reads 4.0× time on the
-    3× 10×→30× segment — the quadratic term surfacing. Production
-    systems re-tune bits as the corpus grows; this operator encodes
-    that rule in the plan itself:
+    Table ``t`` buckets each vector by the sign pattern of its ``bits``
+    components starting at ``t·bits``; two vectors are candidates if
+    they share a bucket in ANY table. Each (table, bucket) group is
+    scored by one numpy matmul and pairs are deduped across tables.
+    Output ⊆ the exact :func:`embedding_near_dup` result. A FIXED
+    ``bits`` is only a constant-factor reduction of quadratic
+    (Σ bucket² ≈ n²·T/2^bits), so the width follows the corpus size
+    (``min_bits == max_bits`` pins it):
 
         bits = clamp(min_bits, max_bits,
                      ceil(log2(n / target_occupancy)))
@@ -932,7 +854,7 @@ def embedding_near_dup_auto(
     while DuckDB's std::log2 gives exactly 29) — but every input whose
     ceil could diverge lies far above the max_bits=16 clamp, where both
     engines saturate to the same value. Raising max_bits past ~29 must
-    re-examine this boundary (round-8 advisor finding).
+    re-examine this boundary.
 
     Recall concentrates on genuine near-dups as bits grows (per-table
     match prob p^bits for per-component sign agreement p ≈ 1 − θ/π):
@@ -985,7 +907,24 @@ def embedding_near_dup_auto(
     prepared = fan_out(df.select(F.col(id_col), vec), id_col).crossJoin(
         F.broadcast(cnt.select(bits_col.alias("_bits")))
     )
-    return _sign_lsh_pairs(prepared, id_col, vec_col, threshold, tables)
+    rows = prepared.select(
+        F.col(id_col), F.col(vec_col), F.explode(tables).alias("_tb")
+    ).select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.col("_tb.tbl").alias("_tbl"),
+        F.col("_tb.bkt").alias("_bkt"),
+        F.lit("a").alias("_role"),
+    )
+
+    def kernel(pdf):
+        return _pair_kernel_pdf(pdf, id_col, vec_col, threshold)
+
+    # every (table, bucket) group is a diagonal block for the pair
+    # kernel; a pair found in several tables carries the same rounded
+    # cosine in each, so plain distinct dedups it
+    scored = rows.groupBy("_tbl", "_bkt").applyInPandas(kernel, _PAIR_SCHEMA)
+    return scored.distinct()
 
 
 # --- SimHash --------------------------------------------------------------
@@ -1215,88 +1154,6 @@ def dup_clusters(
     )
 
 
-def semantic_near_dup(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    n_centroids: int = 16,
-    seed: int = 42,
-    sample_n: int = 2000,
-) -> DataFrame:
-    """SemDeDup-style semantic near-duplicate pairs (Abbas, Tirumala,
-    Simig, Ganguli & Morcos, "SemDeDup: Data-efficient learning at
-    web-scale through semantic deduplication", 2023): coarse-cluster
-    the embedding space with a sampled spherical k-means
-    (similarity.train_spherical_kmeans — the quantizer shared with the
-    IVF index), then score pairwise cosine ONLY within each cluster
-    with the exact matmul kernel. Emits ``(id_a, id_b, cosine)`` with
-    ``id_a < id_b`` and cosine ≥ ``threshold`` (rounded to 4 decimals,
-    same portability contract as embedding_near_dup).
-
-    Versus :func:`embedding_near_dup_bucketed` (sign-LSH cells):
-    learned cells follow the DATA's density, so semantically-near
-    pairs co-locate far more often than under axis-aligned sign
-    planes — the recall/cost dial is ``n_centroids`` (cost
-    Σ cell² ≈ n²/n_centroids for balanced cells). Like any
-    single-probe scheme it misses pairs straddling a cell boundary;
-    raise ``threshold``-adjacent recall by lowering ``n_centroids`` or
-    composing with a second pass on a different seed.
-
-    Feed the pairs to :func:`clusters_from_pairs` for transitive
-    keeper resolution (the composition `semantic_dup_clusters`
-    packages)."""
-    from tcga_query_project_spark.operators.similarity import (
-        nearest_cells_expr,
-        train_spherical_kmeans,
-    )
-
-    centroids = train_spherical_kmeans(
-        df, vec_col, n_centroids, seed=seed, sample_n=sample_n
-    )
-    cell = nearest_cells_expr(centroids, vec_col, n_probe=1)[0]
-    # every cell group is a diagonal block for the shared pair kernel:
-    # all rows carry role 'a', so it scores the group against itself
-    # and keeps the strict upper triangle
-    rows = fan_out(df.select(F.col(id_col), F.col(vec_col)), id_col).select(
-        F.col(id_col),
-        F.col(vec_col),
-        cell.alias("_cell"),
-        F.lit("a").alias("_role"),
-    )
-
-    def kernel(pdf):
-        return _pair_kernel_pdf(pdf, id_col, vec_col, threshold)
-
-    return (
-        rows.groupBy("_cell")
-        .applyInPandas(kernel, _PAIR_SCHEMA)
-    )
-
-
-def semantic_dup_clusters(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    n_centroids: int = 16,
-    seed: int = 42,
-    sample_n: int = 2000,
-    weight_col: Column | None = None,
-) -> DataFrame:
-    """SemDeDup end-to-end: semantic pair generation within learned
-    k-means cells + transitive cluster resolution with one keeper per
-    cluster (``weight_col`` maximizer, default smallest id — SemDeDup
-    proper keeps the member with LOWEST cosine to the cluster
-    centroid; pass that as ``weight_col`` to match exactly). One row
-    per input: ``(id_col, component, cluster_size, keep_id)``."""
-    pairs = semantic_near_dup(
-        df, id_col, vec_col, threshold,
-        n_centroids=n_centroids, seed=seed, sample_n=sample_n,
-    )
-    return clusters_from_pairs(df, pairs, id_col, weight_col=weight_col)
-
-
 def build_dedup_index(
     docs: DataFrame,
     id_col: str,
@@ -1310,8 +1167,7 @@ def build_dedup_index(
     """Materialize the corpus's MinHash state as a PERSISTED dedup
     index, so later deltas dedup against history without re-reading
     (or re-hashing) the corpus — the incremental-ingest counterpart of
-    :func:`near_duplicates`, same layout philosophy as
-    ``similarity.build_ann_index``.
+    :func:`near_duplicates`.
 
     Layout under ``index_dir``:
 

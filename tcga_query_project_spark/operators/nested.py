@@ -8,9 +8,8 @@ chars of barcode, :47-48), and subsets samples (:55-56).
 
 Spark-first mapping: ``exists()`` higher-order predicate — no explode,
 no shuffle, evaluated row-local inside codegen — plus a left-semi join
-for the derived-cohort subset. The explode variant is provided for when
-per-treatment rows are themselves needed. JSON property access (driver's
-``events.props``) is the same pattern over a JSON-string column.
+for the derived-cohort subset. JSON property access (``events.props``)
+is the same pattern over a JSON-string column.
 """
 
 from __future__ import annotations
@@ -51,22 +50,6 @@ def cohort_semi_join(
     (``prep[,keep]`` after ``%in%``, drug_km_median_exp.R:55-56).
     Left-semi join; the cohort id list is small → broadcast."""
     return samples.join(F.broadcast(cohort_ids), on=on, how="left_semi")
-
-
-def explode_treatments(
-    df: DataFrame, treatments_col: str, keep_cols: list[str]
-) -> DataFrame:
-    """Explode variant of the nested sub-table when per-treatment rows
-    are needed downstream (e.g. labeling cohorts by drug class for the
-    per-cohort KM pass, SURVEY.md §3.3 step 4)."""
-    return df.select(
-        *keep_cols, F.explode_outer(F.col(treatments_col)).alias("treatment")
-    ).select(
-        *keep_cols,
-        F.col("treatment.submitter_id").alias("treatment_submitter_id"),
-        F.col("treatment.treatment_type").alias("treatment_type"),
-        F.col("treatment.therapeutic_agents").alias("therapeutic_agents"),
-    )
 
 
 def json_int(props: Column, field: str) -> Column:

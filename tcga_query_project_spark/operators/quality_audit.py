@@ -213,12 +213,6 @@ def _bin_label_sql(col: str, edges: Sequence[float]) -> str:
     )
 
 
-def _bin_label(col: str, edges: Sequence[float]) -> Column:
-    """Column form of :func:`_bin_label_sql` (kept for callers holding
-    Column-level pipelines)."""
-    return F.expr(_bin_label_sql(col, edges))
-
-
 def psi_drift(
     ref: DataFrame,
     cur: DataFrame,

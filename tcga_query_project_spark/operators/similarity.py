@@ -1,9 +1,9 @@
 """Similarity search over embedding columns (north-star; SURVEY.md §2.10).
 
-``embeddings(vec_id, embedding ARRAY<FLOAT>, label)`` — approximate
-nearest neighbor with a brute-force cosine baseline, an LSH-bucketed
-scale path, an IVF (trained-quantizer) path, and int8 scalar
-quantization for storage/compute compression.
+``embeddings(vec_id, embedding ARRAY<FLOAT>, label)`` — cosine top-k
+with a brute-force baseline (:func:`cosine_topk`) and a sign-LSH
+bucketed scale path (:func:`cosine_topk_bucketed`), plus the per-row
+array profile (:func:`array_stats`).
 
 Pair scoring runs in Arrow-batched pandas UDFs (einsum over the batch)
 — Spark's higher-order-function lambdas evaluate interpreted, so
@@ -13,10 +13,9 @@ any scale (the HOF forms are kept for single-row derived columns and as
 the oracle-mirrorable reference semantics).
 
 Scale notes: brute force is O(|Q|·|C|) — right answer for small query
-sets against a broadcast candidate side, or as the verify stage after
-bucketing. The LSH path buckets by sign-pattern against deterministic
-hyperplanes so candidate generation is an equi-join on bucket id,
-cutting the cross product by ~2^bits per table.
+sets against a broadcast candidate side. The bucketed path buckets by
+sign pattern on the leading components, so candidate generation is an
+equi-join on bucket id, cutting the cross product by ~2^bits.
 """
 
 from __future__ import annotations
@@ -28,7 +27,6 @@ from pyspark.sql.types import DoubleType
 
 from tcga_query_project_spark.operators.caching import (
     materialize_shared as _materialize_shared,
-    release_shared_caches,  # noqa: F401  (re-export: the release valve)
 )
 from tcga_query_project_spark.operators.partitioning import fan_out
 
@@ -84,8 +82,16 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _rank_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Keep each query's ``k`` best ``(query_id, neighbor_id, cosine)``
+    rows, ranked by cosine with a deterministic tiebreak on neighbor
+    id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
 
 
 def array_stats(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -121,22 +127,12 @@ def cosine_topk(
 
     The query side is expected to be small — Spark broadcasts it, so the
     candidate scan never shuffles; the only shuffle is the tiny per-query
-    top-k window. Norms are precomputed per row (not per pair).
+    top-k window.
     """
-    # query norms precompute on the BROADCAST side (round 13): the
-    # extra ArrowEvalPython stage runs over |Q| rows inside the
-    # broadcast build — microseconds — and removes the |Q|·|C|·d
-    # redundant per-pair query-norm flops of the round-12 single-stage
-    # form. The candidate norm stays FUSED with the dot in the one
-    # streamed Python stage: round 13 measured all three placements at
-    # |C|=200k, d=64 (OPTIMIZATION_r13.md) — recompute-both 8.08 s,
-    # q-norm-precomputed 8.03 s, full-precompute 7.86 s min but with a
-    # second streamed Python stage and the widest rep spread — i.e.
-    # the variants are within host noise even at 10M pairs, so the
-    # q-norm form wins on dominance: it never adds a big-side boundary
-    # crossing and never recomputes a norm the broadcast already has.
-    # norm(_qv) is the same float64 reduction on the same input either
-    # way — bit-identical cosine.
+    # the query norm is computed once per query on the BROADCAST side
+    # (|Q| rows), never per pair; the candidate norm stays fused with
+    # the dot in the one streamed Python stage, so the big side crosses
+    # the Arrow boundary exactly once.
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
@@ -163,154 +159,7 @@ def cosine_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def train_spherical_kmeans(
-    df: DataFrame,
-    vec_col: str,
-    n_centroids: int,
-    seed: int = 42,
-    sample_n: int = 2000,
-    iters: int = 5,
-):
-    """Driver-side spherical k-means on a bounded seeded sample —
-    the coarse-quantizer trainer shared by the IVF index and semantic
-    dedup (a coarse quantizer is *supposed* to train on a sample; only
-    assignment is distributed). Returns a unit-normalized
-    ``(n_centroids, dim)`` numpy array, deterministic for fixed
-    seed/sample."""
-    import numpy as np
-
-    def _unit(mat):
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        return mat / norms[:, None]
-
-    sample = df.select(vec_col).limit(sample_n).toPandas()
-    train = _unit(
-        np.array([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
-    )
-    rng = np.random.default_rng(seed)
-    centroids = train[
-        rng.choice(
-            len(train), size=min(n_centroids, len(train)), replace=False
-        )
-    ]
-    for _ in range(iters):
-        assign = np.argmax(train @ centroids.T, axis=1)
-        for c in range(len(centroids)):
-            members = train[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-        centroids = _unit(centroids)
-    return centroids
-
-
-def nearest_cells_expr(centroids, vec_col: str, n_probe: int = 1) -> Column:
-    """Expression-level assignment to the ``n_probe`` nearest k-means
-    cells: the unit-norm centroids become literal arrays, each row
-    computes one dot per centroid and keeps the best via array_sort —
-    no Python, no shuffle. (Raw dot ranks cells identically to cosine:
-    centroid norms are 1 and the row norm is a per-row constant.)
-    Returns an ARRAY<INT> of cell ids, best first; centroid index
-    breaks exact ties deterministically."""
-    vec = F.col(vec_col)
-    cell_scores = F.array(
-        *[
-            F.struct(
-                (-_dot(vec, F.array(*[F.lit(float(x)) for x in c]))).alias(
-                    "nd"
-                ),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return F.transform(
-        F.slice(F.array_sort(cell_scores), 1, n_probe), lambda s: s["i"]
-    )
-
-
-def cosine_topk_ivf(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    sample_n: int = 2000,
-    iters: int = 5,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: coarse-quantize vectors to their nearest
-    centroid cell, probe each query against its ``n_probe`` nearest
-    cells, exact-rerank only the cells' members.
-
-    Index build is a driver-side spherical k-means on a bounded seeded
-    sample (the classic IVF recipe — the coarse quantizer is *supposed*
-    to be trained on a sample; only assignment is distributed).
-    Assignment stays entirely expression-level: the unit-norm centroids
-    become literal arrays, each row computes one dot per centroid and
-    keeps the ``n_probe`` best via array_sort — no Python, no shuffle.
-    (Raw dot ranks cells identically to cosine: centroid norms are 1 and
-    the row norm is a per-row constant.) Candidate generation is then an
-    equi-join on cell id — never quadratic — and the cost/recall dial is
-    ``n_probe/n_centroids`` (expected scan fraction of the corpus per
-    query).
-
-    Deterministic for fixed seed/sample; returns the same schema as
-    :func:`cosine_topk` (query_id, neighbor_id, cosine, rank).
-    """
-    centroids = train_spherical_kmeans(
-        df, vec_col, n_centroids, seed=seed, sample_n=sample_n, iters=iters
-    )
-    probes = nearest_cells_expr(centroids, vec_col, n_probe)
-    # the probe-assignment subtree feeds both the candidate and query
-    # branches; persist + eagerly populate so the centroid scoring runs
-    # once per row (caching contract: see _materialize_shared).
-    based = _materialize_shared(
-        fan_out(df.select(F.col(id_col), F.col(vec_col)), id_col).withColumn(
-            "_probes", probes
-        )
-    )
-    cands = based.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        _norm_batch(F.col(vec_col)).alias("_cn"),
-        F.col("_probes")[0].alias("_cell"),  # index under nearest cell only
-    )
-    queries = based.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm_batch(F.col(vec_col)).alias("_qn"),
-        F.explode("_probes").alias("_cell"),
-    )
-    scored = (
-        queries.join(cands, "_cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot_batch(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * F.col("_cn")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    return _rank_top_k(scored, k)
 
 
 def sign_bucket(vec: Column, bits: int = 4) -> Column:
@@ -318,8 +167,7 @@ def sign_bucket(vec: Column, bits: int = 4) -> Column:
     component b+1. The simplest member of the hyperplane family —
     deterministic, model-free, and expressible verbatim in any SQL
     engine (which is why the catalog's oracle-checked bucketed-ANN query
-    uses it; :func:`hyperplane_bucket` is the random-rotation variant
-    for skewed component distributions)."""
+    uses it)."""
     bucket = F.lit(0).cast("long")
     for b in range(bits):
         bucket = bucket + F.when(
@@ -352,9 +200,9 @@ def cosine_topk_bucketed(
     # not per branch, and the broadcast build never races a cold cache
     # (the in-memory cache plays the role the bucketed table layout
     # plays at cluster scale; caching contract: see _materialize_shared).
-    # Round-12 note: a lazy variant measured WORSE here (1.3s -> 1.8s
-    # wall at sf0.1) — the broadcast build's first touch serializes the
-    # population the eager count parallelizes across all cores.
+    # Eager, not lazy: the broadcast build's first touch would
+    # serialize the population the eager count parallelizes across all
+    # cores.
     based = _materialize_shared(
         fan_out(df.select(F.col(id_col), F.col(vec_col)), id_col).select(
             F.col(id_col),
@@ -391,588 +239,4 @@ def cosine_topk_bucketed(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-
-
-def hyperplane_bucket(vec: Column, dim: int, bits: int = 8, seed: int = 7) -> Column:
-    """Deterministic random-hyperplane LSH bucket id.
-
-    Hyperplane b's weight for dimension i is derived from
-    ``hash(seed, b, i)`` mapped to ±1 — reproducible across runs and
-    engines, no stored model. Bucket id packs the sign bits.
-    """
-    bucket = F.lit(0).cast("long")
-    for b in range(bits):
-        acc = F.lit(0.0)
-        for i in range(dim):
-            sign = 1.0 if (hash((seed, b, i)) & 1) else -1.0
-            acc = acc + F.element_at(vec, i + 1).cast("double") * F.lit(sign)
-        bucket = bucket + F.when(acc > 0, F.lit(1 << b)).otherwise(F.lit(0)).cast("long")
-    return bucket
-
-
-def cosine_topk_lsh(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    k: int = 5,
-    bits: int = 8,
-    n_tables: int = 4,
-) -> DataFrame:
-    """LSH-bucketed ANN: each row lands in one bucket per hash table
-    (``n_tables`` independent hyperplane sets); candidate pairs share a
-    bucket in ANY table — an explode + equi-join on (table, bucket),
-    deduped — then exact cosine + top-k over candidates only.
-
-    Recall/cost dial: P(candidate) ≈ 1 − (1 − p^bits)^n_tables with p
-    the per-plane agreement probability; more tables buys recall
-    linearly in scan cost while the join stays equi (never quadratic).
-    The expensive exact scoring runs once per distinct candidate pair.
-    """
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                hyperplane_bucket(
-                    F.col(vec_col), dim, bits, seed=7 + 1000 * t
-                ).alias("bkt"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    with_bucket = fan_out(df, id_col).select(
-        F.col(id_col), F.col(vec_col), F.explode(buckets).alias("_b")
-    ).select(
-        F.col(id_col), F.col(vec_col), F.col("_b.tbl").alias("_tbl"),
-        F.col("_b.bkt").alias("_bkt"),
-    )
-    q = with_bucket.select(
-        F.col(id_col).alias("query_id"), "_tbl", "_bkt"
-    )
-    c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"), "_tbl", "_bkt"
-    )
-    cand = (
-        q.join(c, ["_tbl", "_bkt"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    vecs = df.select(F.col(id_col), F.col(vec_col))
-    scored = (
-        cand.join(
-            vecs.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-            ),
-            "query_id",
-        )
-        .join(
-            vecs.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot_batch(F.col("_qv"), F.col("_cv"))
-                / (_norm_batch(F.col("_qv")) * _norm_batch(F.col("_cv"))),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-
-
-# --- int8 scalar quantization ---------------------------------------------
-
-
-def quantization_bounds(df: DataFrame, vec_col: str) -> tuple[float, float]:
-    """Global (min, max) over all vector components — the per-tensor
-    scalar-quantization range. One exploded aggregation (map-side
-    combined); at petabyte scale run it on a sample — the range only
-    needs to bracket the data.
-    """
-    row = df.select(
-        F.array_min(vec_col).alias("_mn"), F.array_max(vec_col).alias("_mx")
-    ).agg(F.min("_mn").alias("mn"), F.max("_mx").alias("mx")).first()
-    return float(row["mn"]), float(row["mx"])
-
-
-def quantize_embeddings(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    bounds: tuple[float, float],
-    out: str = "codes",
-) -> DataFrame:
-    """int8 scalar quantization: each float32 component maps to a uint8
-    code ``round((v - mn) / (mx - mn) * 255)``, the whole vector packed
-    into ONE BinaryType cell — 4x smaller than array<float> in memory
-    and shuffle, with none of parquet's per-element list overhead.
-
-    This is the storage leg of a production embedding index: the scan,
-    shuffle, and candidate-generation stages touch codes only; full
-    floats are read back just for the final exact rerank
-    (:func:`cosine_topk_quantized`). Kernel is one Arrow-batched numpy
-    pass (quantization happens once, at index build).
-    """
-    import numpy as np
-    import pandas as pd
-
-    mn, mx = bounds
-    scale = (mx - mn) / 255.0 if mx > mn else 1.0
-
-    @F.pandas_udf("binary")
-    def _q(vs):
-        if not len(vs):
-            return pd.Series([], dtype="object")
-        out_bytes = []
-        for v in vs.to_numpy():
-            arr = np.asarray(v, dtype=np.float64)
-            codes = np.clip(np.rint((arr - mn) / scale), 0, 255).astype(np.uint8)
-            out_bytes.append(codes.tobytes())
-        return pd.Series(out_bytes)
-
-    return df.select(F.col(id_col), _q(F.col(vec_col)).alias(out))
-
-
-def cosine_topk_quantized(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str,
-    vec_col: str,
-    bounds: tuple[float, float],
-    k: int = 5,
-    rerank_factor: int = 4,
-) -> DataFrame:
-    """Asymmetric quantized top-k with exact rerank — the compressed
-    brute-force path: candidates are scanned as int8 codes (4x less
-    I/O and memory than floats), scored approximately against
-    full-precision query vectors, and only the top ``k*rerank_factor``
-    survivors per query are re-scored exactly from the float column.
-
-    Recall comes from the rerank margin: the approximate pass only has
-    to keep the true top-k inside its top ``k*rerank_factor``, which
-    int8 error (≤ half a code step per component) achieves with small
-    factors in practice. Output schema matches :func:`cosine_topk`;
-    scores are EXACT cosines (the quantized pass only selects).
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm_batch(F.col(vec_col)).alias("_qn"),
-    )
-    codes = quantize_embeddings(
-        fan_out(candidates, id_col), id_col, vec_col, bounds
-    )
-    mn, mx = bounds
-    scale = (mx - mn) / 255.0 if mx > mn else 1.0
-
-    import numpy as np
-    import pandas as pd
-
-    @F.pandas_udf(DoubleType())
-    def _qdot(qv, code_bytes):
-        if not len(qv):
-            return pd.Series([], dtype="float64")
-        ma = np.stack(qv.to_numpy()).astype("float64", copy=False)
-        mb = np.stack(
-            [
-                np.frombuffer(b, dtype=np.uint8).astype(np.float64) * scale + mn
-                for b in code_bytes.to_numpy()
-            ]
-        )
-        return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-    approx = (
-        F.broadcast(q)
-        .crossJoin(codes.select(F.col(id_col).alias("neighbor_id"), "codes"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "_qv",
-            "_qn",
-            _qdot(F.col("_qv"), F.col("codes")).alias("_approx"),
-        )
-    )
-    w_approx = Window.partitionBy("query_id").orderBy(
-        F.col("_approx").desc(), F.col("neighbor_id").asc()
-    )
-    survivors = approx.withColumn(
-        "_arank", F.row_number().over(w_approx)
-    ).filter(F.col("_arank") <= k * rerank_factor)
-    # exact rerank: only k*rerank_factor rows per query fetch floats
-    exact = survivors.join(
-        candidates.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            _norm_batch(F.col(vec_col)).alias("_cn"),
-        ),
-        "neighbor_id",
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            _dot_batch(F.col("_qv"), F.col("_cv"))
-            / (F.col("_qn") * F.col("_cn")),
-            4,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= k)
-
-
-# --- persisted ANN index layout -------------------------------------------
-
-
-def build_ann_index(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    bits: int = 4,
-) -> None:
-    """Materialize the bucketed-ANN layout the in-session operators
-    emulate with a persist: corpus written hive-partitioned by sign-LSH
-    bucket id, norms precomputed — the index-build job of a production
-    embedding store, run ONCE per corpus version.
-
-    At query time (:func:`query_ann_index`) a single-bucket probe is a
-    partition-pruned directory read: ~|corpus|/2^bits rows scanned per
-    probed bucket, the rest never listed. The same layout serves every
-    later query; the cost model is one full corpus pass at build,
-    against per-query scans shrunk by 2^bits forever after.
-    """
-    fan_out(df.select(F.col(id_col), F.col(vec_col)), id_col).select(
-        F.col(id_col),
-        F.col(vec_col),
-        _norm_batch(F.col(vec_col)).alias("nrm"),
-        sign_bucket(F.col(vec_col), bits).alias("bkt"),
-    ).write.mode("overwrite").partitionBy("bkt").parquet(path)
-
-
-def query_ann_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 3,
-    bits: int = 4,
-    n_flip: int = 0,
-) -> DataFrame:
-    """Top-k cosine against a :func:`build_ann_index` layout: each query
-    row computes its bucket, the index scan filters to exactly the
-    probed buckets (partition pruning — the plan shows the bucket
-    predicate under PartitionFilters), and only those directories'
-    rows are exact-scored.
-
-    ``n_flip`` is the multi-probe recall dial: 0 probes only the
-    query's own bucket (~1/2^bits of the corpus); 1 additionally
-    probes every Hamming-1 neighbor bucket (the ``bits`` single-bit
-    flips — the vectors most likely to land across a hyperplane from a
-    near-boundary query), scanning (bits+1)/2^bits of the corpus for
-    markedly better recall. The same dial the multi-table LSH variant
-    turns with whole extra tables, at directory-pruning granularity.
-
-    The query side is broadcast (query sets are small by contract);
-    the bucket filter uses an IN-list of the DISTINCT probed buckets —
-    literal-sized, so Catalyst prunes partitions statically. Output
-    schema matches :func:`cosine_topk`.
-    """
-    own = sign_bucket(F.col(vec_col), bits)
-    probes = F.array(own, *[
-        own.bitwiseXOR(F.lit(1 << b)) for b in range(bits if n_flip else 0)
-    ])
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm_batch(F.col(vec_col)).alias("_qn"),
-        F.explode(probes).alias("bkt"),
-    )
-    probe_buckets = [r["bkt"] for r in q.select("bkt").distinct().collect()]
-    idx = spark.read.parquet(path).filter(F.col("bkt").isin(probe_buckets))
-    scored = (
-        F.broadcast(q)
-        .join(idx, "bkt")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                _dot_batch(F.col("_qv"), F.col(vec_col))
-                / (F.col("_qn") * F.col("nrm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-
-
-# --- product quantization (PQ) --------------------------------------------
-
-
-def pq_train(
-    df: DataFrame,
-    vec_col: str,
-    m: int = 4,
-    n_codes: int = 16,
-    sample_n: int = 2000,
-    seed: int = 42,
-    iters: int = 8,
-):
-    """Train a product-quantization codebook: split the vector into
-    ``m`` contiguous subspaces, k-means each subspace to ``n_codes``
-    centroids on a bounded seeded sample (driver-side, like the IVF
-    coarse quantizer — codebooks are supposed to be sample-trained;
-    only encoding/scoring is distributed).
-
-    Returns a numpy array of shape (m, n_codes, sub_dim) — ~m·n_codes·
-    sub_dim floats, kilobytes for any practical setting, broadcast to
-    every encode/score task. PQ compresses each vector to ``m`` bytes
-    (vs 4·dim for float32): at 100 TB the candidate scan reads m bytes
-    per row and scores against a per-query lookup table — memory-
-    bandwidth-bound, no float math per pair.
-    """
-    import numpy as np
-
-    sample = df.select(vec_col).limit(sample_n).toPandas()
-    train = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in sample[vec_col]]
-    )
-    dim = train.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    rng = np.random.default_rng(seed)
-    books = np.zeros((m, n_codes, sub))
-    for j in range(m):
-        block = train[:, j * sub : (j + 1) * sub]
-        k_eff = min(n_codes, len(block))
-        cents = block[rng.choice(len(block), size=k_eff, replace=False)]
-        for _ in range(iters):
-            d2 = ((block[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            for c in range(k_eff):
-                members = block[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books[j, :k_eff] = cents
-        if k_eff < n_codes:  # degenerate sample: repeat last centroid
-            books[j, k_eff:] = cents[-1]
-    return books
-
-
-def pq_encode(
-    df: DataFrame, id_col: str, vec_col: str, codebooks, out: str = "pq_codes"
-) -> DataFrame:
-    """Encode vectors to ``m`` uint8 codes (nearest centroid per
-    subspace), packed into one BinaryType cell — one Arrow-batched
-    numpy pass, run once at index build."""
-    import numpy as np
-    import pandas as pd
-
-    books = codebooks  # (m, k, sub)
-    m, _, sub = books.shape
-
-    @F.pandas_udf("binary")
-    def _enc(vs):
-        if not len(vs):
-            return pd.Series([], dtype="object")
-        mat = np.stack(vs.to_numpy()).astype("float64", copy=False)
-        out_bytes = []
-        codes = np.empty((len(mat), m), dtype=np.uint8)
-        for j in range(m):
-            block = mat[:, j * sub : (j + 1) * sub]
-            d2 = (
-                (block[:, None, :] - books[j][None, :, :]) ** 2
-            ).sum(axis=2)
-            codes[:, j] = np.argmin(d2, axis=1).astype(np.uint8)
-        for row in codes:
-            out_bytes.append(row.tobytes())
-        return pd.Series(out_bytes)
-
-    return df.select(F.col(id_col), _enc(F.col(vec_col)).alias(out))
-
-
-def cosine_topk_pq(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebooks,
-    k: int = 3,
-    rerank_factor: int = 4,
-) -> DataFrame:
-    """PQ top-k with asymmetric-distance scoring and exact rerank: the
-    compressed corpus is scanned as ``m``-byte codes; each query
-    precomputes a (m × n_codes) lookup table of partial dot products
-    (query subvector · centroid), so scoring a candidate is ``m`` table
-    lookups — no float multiply per pair; the top ``k·rerank_factor``
-    survivors per query re-score exactly from the float column.
-
-    Output schema and exactness contract match :func:`cosine_topk`:
-    returned cosines are EXACT (the PQ pass only selects). Queries
-    broadcast (small by contract); the LUTs ride inside the pandas UDF
-    closure keyed by query id — dimension-sized state, serialized once
-    per executor.
-    """
-    import numpy as np
-    import pandas as pd
-
-    books = codebooks
-    m, _, sub = books.shape
-    qrows = queries.select(id_col, vec_col).collect()
-    luts = {}
-    for r in qrows:
-        qv = np.asarray(r[vec_col], dtype=np.float64)
-        luts[r[id_col]] = np.stack(
-            [books[j] @ qv[j * sub : (j + 1) * sub] for j in range(m)]
-        )  # (m, n_codes)
-
-    @F.pandas_udf(DoubleType())
-    def _adc(qid, code_bytes):
-        if not len(qid):
-            return pd.Series([], dtype="float64")
-        out = np.empty(len(qid))
-        for i, (q, b) in enumerate(zip(qid.to_numpy(), code_bytes.to_numpy())):
-            lut = luts[q]
-            codes = np.frombuffer(b, dtype=np.uint8)
-            out[i] = lut[np.arange(m), codes].sum()
-        return pd.Series(out)
-
-    spark = queries.sparkSession
-    from pyspark.sql.types import StructField as _SF, StructType as _ST
-
-    q = spark.createDataFrame(
-        [(r[id_col],) for r in qrows],
-        _ST([_SF("query_id", queries.schema[id_col].dataType)]),
-    )
-    codes = pq_encode(fan_out(candidates, id_col), id_col, vec_col, books)
-    approx = (
-        F.broadcast(q)
-        .crossJoin(codes.select(F.col(id_col).alias("neighbor_id"), "pq_codes"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc(F.col("query_id"), F.col("pq_codes")).alias("_approx"),
-        )
-    )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.col("_approx").desc(), F.col("neighbor_id").asc()
-    )
-    survivors = approx.withColumn("_arank", F.row_number().over(w_a)).filter(
-        F.col("_arank") <= k * rerank_factor
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm_batch(F.col(vec_col)).alias("_qn"),
-    )
-    exact = (
-        survivors.join(F.broadcast(qv), "query_id")
-        .join(
-            candidates.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("_cv"),
-                _norm_batch(F.col(vec_col)).alias("_cn"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot_batch(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * F.col("_cn")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-
-
-def reduce_embeddings(
-    df: DataFrame, id_col: str, vec_col: str, k: int
-) -> tuple[DataFrame, object]:
-    """PCA dimensionality reduction for an embedding column:
-    ``(id_col, reduced ARRAY<DOUBLE>)`` plus the fitted model (to apply
-    the SAME projection to later batches / the query side — projecting
-    corpus and queries with different fits breaks comparability).
-
-    JVM-side ``pyspark.ml.feature.PCA``: the covariance Gramian
-    accumulates distributed (one pass, map-side partials), the
-    dim×dim eigendecomposition is driver-local — the standard recipe,
-    sound for embedding dims in the hundreds-to-low-thousands. Use it
-    in front of the ANN indexes when the raw dimension dominates
-    scan/shuffle cost: a 768→128 reduction cuts every similarity
-    kernel's bytes 6x, and (per the PCA objective) is the linear
-    projection with least pairwise-distance distortion.
-
-    Deterministic: PCA of a fixed dataset is deterministic up to
-    component SIGN, which cancels in every dot/cosine/distance this
-    engine computes. Cast to double throughout (Spark ML Vectors are
-    float64).
-    """
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    vecs = df.select(
-        F.col(id_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("_v"),
-    )
-    model = PCA(k=k, inputCol="_v", outputCol="_p").fit(vecs)
-    out = model.transform(vecs).select(
-        F.col(id_col), vector_to_array(F.col("_p")).alias("reduced")
-    )
-    return out, model
-
-
-def apply_reduction(
-    model, df: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Project a new batch with an existing :func:`reduce_embeddings`
-    model — same output schema. The model is a dim×k matrix broadcast
-    by Spark ML; the pass is map-only."""
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    vecs = df.select(
-        F.col(id_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("_v"),
-    )
-    return model.transform(vecs).select(
-        F.col(id_col), vector_to_array(F.col("_p")).alias("reduced")
-    )
+    return _rank_top_k(scored, k)

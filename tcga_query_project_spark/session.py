@@ -15,6 +15,24 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: ceiling of the default driver heap
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half the
+    host's physical memory, capped at 16g. In local mode the driver JVM
+    holds every executor too, and a heap ceiling above what the host can
+    back lets the JVM grow until the kernel OOM-kills it. Falls back to
+    the cap where ``/proc/meminfo`` is unavailable (non-Linux hosts)."""
+    try:
+        with open("/proc/meminfo") as f:
+            meminfo = f.read()
+    except OSError:
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    total_kb = int(meminfo.split("MemTotal:", 1)[1].split()[0])
+    return f"{min(MAX_DRIVER_MEMORY_MB, total_kb // 2048)}m"
+
 
 def get_spark(
     app_name: str = "tcga-query-project-spark",
@@ -43,7 +61,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # the engine's catalog spans ~50 distinct plans, each with several

@@ -242,28 +242,6 @@ def test_asof_join_semantics(spark):
     assert out["d"]["asof_ts"] is None and out["d"]["asof_v"] is None
 
 
-def test_cosine_topk_lsh_recall(spark):
-    """LSH-bucketed ANN: same-bucket candidates must reproduce most of
-    the brute-force top-1 neighbors (recall sanity on sf0.001)."""
-    from tcga_query_project_spark.operators import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    brute = {
-        r["query_id"]: r["neighbor_id"]
-        for r in similarity.cosine_topk(emb, emb, "vec_id", "embedding", k=1).collect()
-    }
-    lsh = {
-        r["query_id"]: r["neighbor_id"]
-        for r in similarity.cosine_topk_lsh(
-            emb, "vec_id", "embedding", dim=64, k=1, bits=4, n_tables=8
-        ).collect()
-    }
-    hits = sum(1 for q, n in brute.items() if lsh.get(q) == n)
-    # synthetic near-random vectors are LSH's worst case (top-1 cosine
-    # ~0.5); clustered real embeddings recall far higher
-    assert hits / len(brute) > 0.5
-
-
 def test_bh_adjust_distinct_matches_rowwise(spark):
     """The distinct-p (scale) formulation must agree exactly with the
     row-level windows, including tie groups."""
@@ -369,27 +347,6 @@ def test_salted_agg_matches_plain_agg(spark):
     assert salted == plain
 
 
-def test_cosine_topk_ivf_recall(spark):
-    """IVF ANN: probing n_probe of n_centroids cells must reproduce most
-    brute-force top-1 neighbors; exact rerank means hits are identical
-    pairs, not merely similar."""
-    from tcga_query_project_spark.operators import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    brute = {
-        r["query_id"]: r["neighbor_id"]
-        for r in similarity.cosine_topk(emb, emb, "vec_id", "embedding", k=1).collect()
-    }
-    ivf = {
-        r["query_id"]: r["neighbor_id"]
-        for r in similarity.cosine_topk_ivf(
-            emb, "vec_id", "embedding", k=1, n_centroids=8, n_probe=4, seed=42
-        ).collect()
-    }
-    hits = sum(1 for q, n in brute.items() if ivf.get(q) == n)
-    assert hits / len(brute) > 0.5
-
-
 def test_approx_profile_within_tolerance(spark):
     """Sketch aggregates vs exact answers on sf0.001 events: HLL distinct
     within 5% (default rsd), approx quartiles within the value span of
@@ -456,8 +413,7 @@ def test_cosine_topk_bucketed_recall_and_exactness(spark):
     and same-bucket recall of brute-force top-1 must beat the 1/16
     random-bucket baseline (cosine-similar vectors agree on sign bits
     more often than not — on these near-isotropic synthetic embeddings
-    the edge is modest, ~2.6x baseline; clustered real embeddings give
-    the multi-table variant (cosine_topk_lsh) its recall headroom)."""
+    the edge is modest, ~2.6x baseline)."""
     from pyspark.sql import functions as F
 
     from tcga_query_project_spark.operators import similarity
@@ -832,29 +788,6 @@ def test_embedding_near_dup_blocked_equals_brute_force(spark):
         assert got == expect, f"n_blocks={n_blocks}"
 
 
-def test_embedding_near_dup_bucketed_subset_with_high_recall(spark):
-    from tcga_query_project_spark.operators import dedup
-
-    rows = _neardup_fixture()
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # high threshold: only the planted near-identical pairs qualify
-    expect = _brute_force_pairs(rows, 0.95)
-    assert len(expect) == 10
-    got = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in dedup.embedding_near_dup_bucketed(
-            df, "vec_id", "embedding", 0.95, bits=4, n_tables=4
-        ).collect()
-    }
-    # approximate: never a false positive, and the sign-stable planted
-    # pairs give high recall at 4 tables x 4 bits
-    assert got <= expect
-    assert len(got) >= 8
-    # pairs found in several tables appear once
-    ids = [(a, b) for a, b, _ in got]
-    assert len(ids) == len(set(ids))
-
-
 def test_embedding_near_dup_empty_partner_blocks_no_duplicates(spark):
     """Regression (round-8 embeddings fuzz): vectors sharing one hash
     block, with that block's off-diagonal partner cells all EMPTY,
@@ -879,36 +812,35 @@ def test_embedding_near_dup_empty_partner_blocks_no_duplicates(spark):
 
 
 def test_embedding_near_dup_auto_tunes_bits_and_stays_subset(spark):
-    """The corpus-tuned sign-LSH form (round 8): (a) when the clamp
-    rule resolves to the same width as a fixed-bits run, the pair set
-    is identical (big- vs little-endian bucket ids are a bijection —
-    grouping, not values, is the contract); (b) output is always a
-    subset of the exact all-pairs result; (c) planted near-identical
-    pairs keep high recall through the tuned width."""
+    """The corpus-tuned sign-LSH form: (a) at a pinned width (min_bits
+    == max_bits) output is a subset of the exact all-pairs result with
+    high recall of the planted pairs, each pair once; (b) a tuned-up
+    width stays a subset and keeps high recall of the planted
+    near-identical pairs."""
     from tcga_query_project_spark.operators import dedup
 
     rows = _neardup_fixture()  # 72 vectors, dim 16
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # n=72 -> ceil(log2(72/18)) = 2 -> clamps to min_bits=4: identical
-    # grouping to the fixed bits=4 run
-    auto = {
+    # high threshold: only the planted near-identical pairs qualify
+    expect = _brute_force_pairs(rows, 0.95)
+    assert len(expect) == 10
+    pinned = {
         (r["id_a"], r["id_b"], r["cosine"])
         for r in dedup.embedding_near_dup_auto(
             df, "vec_id", "embedding", 0.95,
-            n_tables=4, target_occupancy=18, min_bits=4, max_bits=4,
+            n_tables=4, min_bits=4, max_bits=4,
         ).collect()
     }
-    fixed = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in dedup.embedding_near_dup_bucketed(
-            df, "vec_id", "embedding", 0.95, bits=4, n_tables=4
-        ).collect()
-    }
-    assert auto == fixed
+    # approximate: never a false positive, and the sign-stable planted
+    # pairs give high recall at 4 tables x 4 bits
+    assert pinned <= expect
+    assert len(pinned) >= 8
+    # pairs found in several tables appear once
+    ids = [(a, b) for a, b, _ in pinned]
+    assert len(ids) == len(set(ids))
     # tuned-up width on the same corpus (force bits=8 via tiny target):
     # still a subset of exact, planted pairs still found (sign patterns
     # of near-identical vectors agree on almost every component)
-    expect = _brute_force_pairs(rows, 0.95)
     tuned = {
         (r["id_a"], r["id_b"], r["cosine"])
         for r in dedup.embedding_near_dup_auto(
@@ -949,45 +881,6 @@ def test_batch_kernels_match_expression_math(spark):
     for r in out:
         assert math.isclose(r["dot_hof"], r["dot_arrow"], rel_tol=1e-12, abs_tol=1e-12)
         assert math.isclose(r["norm_hof"], r["norm_arrow"], rel_tol=1e-12, abs_tol=1e-12)
-
-
-def test_cosine_topk_quantized_recall_and_exact_scores(spark):
-    """int8-quantized top-k: (a) returned cosines are EXACT (selection
-    is approximate, scoring is not) — every returned (query, neighbor,
-    cosine) must appear in the brute-force result; (b) recall@1 stays
-    high on the driver embeddings; (c) codes are 1 byte per dim."""
-    from tcga_query_project_spark.operators import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bounds = similarity.quantization_bounds(emb, "embedding")
-    assert bounds[0] < bounds[1]
-
-    dim = len(emb.first()["embedding"])
-    codes = similarity.quantize_embeddings(emb, "vec_id", "embedding", bounds)
-    assert all(len(r["codes"]) == dim for r in codes.limit(10).collect())
-
-    exact_top1 = {
-        r["query_id"]: (r["neighbor_id"], r["cosine"])
-        for r in similarity.cosine_topk(
-            emb, emb, "vec_id", "embedding", k=1
-        ).collect()
-    }
-    got = similarity.cosine_topk_quantized(
-        emb, emb, "vec_id", "embedding", bounds, k=1, rerank_factor=4
-    ).collect()
-    exact_scores = {
-        (r["query_id"], r["neighbor_id"]): r["cosine"]
-        for r in similarity.cosine_topk(
-            emb, emb, "vec_id", "embedding", k=len(exact_top1)
-        ).collect()
-    }
-    hits = 0
-    for r in got:
-        if exact_top1[r["query_id"]][0] == r["neighbor_id"]:
-            hits += 1
-            assert r["cosine"] == exact_top1[r["query_id"]][1]
-    recall = hits / len(exact_top1)
-    assert recall >= 0.9, f"quantized recall@1 too low: {recall}"
 
 
 def test_char_ngram_lm_scores_in_domain_text_higher(spark):
@@ -1251,67 +1144,6 @@ def test_bm25_ranks_relevant_docs_first(spark):
     assert top[1] > 0 and top[2] > 0
 
 
-def test_ann_index_layout_prunes_and_matches_in_session(spark, tmp_path):
-    """build_ann_index writes the sign-LSH layout; query_ann_index
-    probes it with partition pruning (bucket predicate in
-    PartitionFilters, only probed directories scanned) and returns
-    exactly the in-session cosine_topk_bucketed results for the same
-    query set."""
-    import random
-
-    from tcga_query_project_spark.operators import similarity
-
-    rng = random.Random(13)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    path = str(tmp_path / "ann_index")
-    similarity.build_ann_index(df, path, "vec_id", "embedding", bits=4)
-
-    queries = df.filter(F.col("vec_id") < 20)
-    out = similarity.query_ann_index(
-        spark, path, queries, "vec_id", "embedding", k=3, bits=4
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "bkt" in plan.split("PartitionFilters")[1][:300]
-
-    got = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in out.collect()}
-    ref = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in similarity.cosine_topk_bucketed(
-            df, "vec_id", "embedding", k=3, bits=4,
-            query_filter=F.col("query_id") < 20,
-        ).collect()
-    }
-    assert got == ref and len(got) > 0
-
-    # multi-probe (Hamming-1) recall of brute-force top-1 must be at
-    # least single-probe's — near-boundary queries gain their cross-
-    # hyperplane neighbors
-    brute = {
-        r["query_id"]: r["neighbor_id"]
-        for r in similarity.cosine_topk(
-            queries, df, "vec_id", "embedding", k=1
-        ).collect()
-    }
-    def top1(n_flip):
-        return {
-            r["query_id"]: r["neighbor_id"]
-            for r in similarity.query_ann_index(
-                spark, path, queries, "vec_id", "embedding",
-                k=1, bits=4, n_flip=n_flip,
-            ).collect()
-        }
-    r0 = top1(0)
-    r1 = top1(1)
-    hits0 = sum(1 for q, n in brute.items() if r0.get(q) == n)
-    hits1 = sum(1 for q, n in brute.items() if r1.get(q) == n)
-    assert hits1 >= hits0
-    assert hits1 > len(brute) // 2  # 5 of 16 buckets scanned -> good recall
-
-
 def test_decontaminate_cross_corpus(spark):
     """Train/test decontamination: a training doc that near-duplicates
     an eval doc is caught with its exact Jaccard; clean docs produce no
@@ -1377,46 +1209,6 @@ def test_substring_contamination_catches_embedded_quote(spark):
         corpus, reference, "doc_id", "text", threshold=0.3
     ).collect()
     assert jac == []
-
-
-def test_cosine_topk_pq_recall_and_exactness(spark):
-    """PQ ANN: asymmetric-distance preselection + exact rerank must
-    reproduce most brute-force top-1 neighbors, and every returned
-    cosine must equal the brute-force cosine for that pair (the PQ pass
-    only selects; scores are exact)."""
-    from tcga_query_project_spark.operators import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    dim = len(emb.select("embedding").first()["embedding"])
-    m = 8 if dim % 8 == 0 else 4
-    # near-random testdata vectors need finer quantization than
-    # clustered real embeddings would (measured: m=8/K=32 -> ~0.69
-    # top-1 recall at rerank 16; m=4/K=16 only ~0.27)
-    books = similarity.pq_train(emb, "embedding", m=m, n_codes=32, seed=42)
-    brute = {
-        (r["query_id"], r["neighbor_id"]): r["cosine"]
-        for r in similarity.cosine_topk(
-            emb, emb, "vec_id", "embedding", k=1
-        ).collect()
-    }
-    pq = {
-        r["query_id"]: (r["neighbor_id"], r["cosine"])
-        for r in similarity.cosine_topk_pq(
-            emb, emb, "vec_id", "embedding", books, k=1, rerank_factor=16
-        ).collect()
-    }
-    hits = sum(
-        1 for (q, n) in brute if pq.get(q, (None,))[0] == n
-    )
-    assert hits / len(brute) > 0.5
-    # exactness: wherever PQ found the true neighbor, the cosine is
-    # bit-equal to brute force (both round to 4 decimals)
-    for (q, n), c in brute.items():
-        if pq.get(q, (None,))[0] == n:
-            assert pq[q][1] == c, (q, n)
-    # codes really are m bytes
-    codes = similarity.pq_encode(emb, "vec_id", "embedding", books).first()
-    assert len(codes["pq_codes"]) == m
 
 
 def test_repetition_metrics_golden(spark):
@@ -1827,53 +1619,6 @@ def test_range_join_rejects_reserved_name_collisions(spark):
         )
 
 
-def test_semantic_near_dup_subset_and_exact_copy_recall(spark):
-    """SemDeDup-style pairs: never a false positive vs brute force, and
-    EXACT-copy pairs are always recalled — identical vectors map to the
-    identical k-means cell by construction, so single-probe cell
-    scoring cannot separate them."""
-    import numpy as np
-
-    from tcga_query_project_spark.operators import dedup
-
-    rows = _neardup_fixture()
-    # plant exact copies of ids 0..9 as ids 100..109
-    rows = rows + [(100 + i, list(rows[i][1])) for i in range(10)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    expect = _brute_force_pairs(rows, 0.95)
-    got = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in dedup.semantic_near_dup(
-            df, "vec_id", "embedding", 0.95, n_centroids=8, sample_n=200
-        ).collect()
-    }
-    assert got <= expect
-    copy_pairs = {(i, 100 + i) for i in range(10)}
-    assert copy_pairs <= {(a, b) for a, b, _ in got}
-    # no duplicate pair rows
-    ids = [(a, b) for a, b, _ in got]
-    assert len(ids) == len(set(ids))
-
-
-def test_semantic_dup_clusters_end_to_end(spark):
-    from tcga_query_project_spark.operators import dedup
-
-    rows = _neardup_fixture()
-    rows = rows + [(100 + i, list(rows[i][1])) for i in range(3)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = dedup.semantic_dup_clusters(
-        df, "vec_id", "embedding", 0.999, n_centroids=8, sample_n=200
-    )
-    got = {r["vec_id"]: r for r in out.collect()}
-    assert len(got) == len(rows)
-    for i in range(3):
-        # exact copy joins its original's component; keeper = min id
-        assert got[100 + i]["component"] == got[i]["component"]
-        assert got[100 + i]["keep_id"] == got[i]["keep_id"]
-        assert got[i]["keep_id"] <= i
-        assert got[i]["cluster_size"] >= 2
-
-
 def test_heavy_hitters_exact_topk_partitioning_invariant(spark):
     from tcga_query_project_spark.operators import sketches
 
@@ -2014,45 +1759,6 @@ def test_mergeable_quantile_rollup_tolerance(spark):
             r["approx_quantiles"], np.quantile(sub, [0.25, 0.5, 0.75])
         ):
             assert abs(g - e) < 1.5, (bkt, g, e)
-
-
-def test_pca_reduction_preserves_structure(spark):
-    """k=dim PCA is a rotation (pairwise L2 distances exact); data
-    lying in a 2-D subspace loses nothing at k=2; a later batch
-    projected with the SAME model lands in the same space."""
-    import itertools
-    import random
-
-    import numpy as np
-
-    from tcga_query_project_spark.operators import similarity
-
-    rng = random.Random(4)
-    # rank-2 data embedded in 8 dims via a fixed linear map
-    basis = np.array(
-        [[1.0, 0.5, 0.0, 2.0, 0.0, 1.0, 0.25, 0.0],
-         [0.0, 1.0, 1.5, 0.0, 2.0, 0.0, 0.5, 1.0]]
-    )
-    coords = [(rng.uniform(-3, 3), rng.uniform(-3, 3)) for _ in range(40)]
-    vecs = [tuple((np.array(c) @ basis).tolist()) for c in coords]
-    df = spark.createDataFrame(
-        [(i, list(v)) for i, v in enumerate(vecs)],
-        "id long, emb array<double>",
-    )
-    red2, model = similarity.reduce_embeddings(df, "id", "emb", k=2)
-    got = {r["id"]: np.array(r["reduced"]) for r in red2.collect()}
-    raw = {i: np.array(v) for i, v in enumerate(vecs)}
-    for a, b in itertools.islice(itertools.combinations(range(40), 2), 200):
-        d_raw = np.linalg.norm(raw[a] - raw[b])
-        d_red = np.linalg.norm(got[a] - got[b])
-        assert abs(d_raw - d_red) < 1e-6, (a, b)
-
-    # same model projects a new batch consistently (same subspace)
-    extra = spark.createDataFrame(
-        [(100, list(vecs[0]))], "id long, emb array<double>"
-    )
-    p = similarity.apply_reduction(model, extra, "id", "emb").collect()[0]
-    assert np.allclose(np.array(p["reduced"]), got[0], atol=1e-9)
 
 
 def test_mergeable_quantile_rollup_empty_input_returns_null_total(spark):
