@@ -811,20 +811,18 @@ def test_embedding_near_dup_empty_partner_blocks_no_duplicates(spark):
         ], f"n_blocks={n_blocks}"
 
 
-def test_embedding_near_dup_auto_tunes_bits_and_stays_subset(spark):
-    """The corpus-tuned sign-LSH form: (a) at a pinned width (min_bits
-    == max_bits) output is a subset of the exact all-pairs result with
-    high recall of the planted pairs, each pair once; (b) a tuned-up
-    width stays a subset and keeps high recall of the planted
-    near-identical pairs."""
+def test_embedding_near_dup_bucketed_subset_with_high_recall(spark):
+    """The sign-LSH form at a pinned width (min_bits == max_bits): output
+    is a subset of the exact all-pairs result with high recall of the
+    planted pairs, each pair once."""
     from tcga_query_project_spark.operators import dedup
 
-    rows = _neardup_fixture()  # 72 vectors, dim 16
+    rows = _neardup_fixture()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     # high threshold: only the planted near-identical pairs qualify
     expect = _brute_force_pairs(rows, 0.95)
     assert len(expect) == 10
-    pinned = {
+    got = {
         (r["id_a"], r["id_b"], r["cosine"])
         for r in dedup.embedding_near_dup_auto(
             df, "vec_id", "embedding", 0.95,
@@ -833,11 +831,24 @@ def test_embedding_near_dup_auto_tunes_bits_and_stays_subset(spark):
     }
     # approximate: never a false positive, and the sign-stable planted
     # pairs give high recall at 4 tables x 4 bits
-    assert pinned <= expect
-    assert len(pinned) >= 8
+    assert got <= expect
+    assert len(got) >= 8
     # pairs found in several tables appear once
-    ids = [(a, b) for a, b, _ in pinned]
+    ids = [(a, b) for a, b, _ in got]
     assert len(ids) == len(set(ids))
+
+
+def test_embedding_near_dup_auto_tunes_bits_and_stays_subset(spark):
+    """The corpus-tuned sign-LSH form: a tuned-up width stays a subset
+    of the exact all-pairs result and keeps high recall of the planted
+    near-identical pairs."""
+    from tcga_query_project_spark.operators import dedup
+
+    rows = _neardup_fixture()  # 72 vectors, dim 16
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # high threshold: only the planted near-identical pairs qualify
+    expect = _brute_force_pairs(rows, 0.95)
+    assert len(expect) == 10
     # tuned-up width on the same corpus (force bits=8 via tiny target):
     # still a subset of exact, planted pairs still found (sign patterns
     # of near-identical vectors agree on almost every component)
