@@ -1,34 +1,34 @@
-"""A6: per-gene negative-binomial GLM with Wald tests (applyInPandas).
+"""A6: per-gene negative-binomial GLM with Wald tests.
 
 The reference delegates this to DESeq2's C++ core (``DESeq(data)`` →
 ``results()``; reference vital_status_DESeq.R:51,89,
-BRCA_path_stage_DESeq.R:71,113-122). This module is the engine's only
-deliberate JVM exit: the per-gene model fit is irreducibly iterative
-(IRLS), so it runs as a grouped-map Pandas UDF — one Arrow batch per
-gene group, numpy inside, executors fan the genes out horizontally.
-Everything around it (size factors, BH adjustment, significance bins)
-stays in pure Spark SQL (operators/stats.py).
+BRCA_path_stage_DESeq.R:71,113-122). For the two-level contrast the
+design [1, g] is saturated, so the fit splits into one 1-D root per
+level with closed-form starts and standard errors: :func:`_nb_wald_sql`
+runs it as fused Spark SQL — one aggregate per gene, then a fixed
+count of Newton steps in higher-order functions — with no Python
+worker. The numpy IRLS (:func:`_fit_core`, :func:`_fit_nb_irls`) stays
+as the reference the SQL fit is tested against.
 
-Scope (SURVEY.md §7 "hard parts" #1): v1 (:func:`nb_glm_wald`) fits
-the NB GLM with a method-of-moments per-gene dispersion; v2/v3
-(:func:`nb_glm_wald_shrunk`) adds DESeq2-style empirical-Bayes
-dispersion shrinkage (gene-wise moments → iteratively-refit parametric
-trend with outlier exclusion → data-estimated prior variance
-(:func:`estimate_dispersion_prior_variance`) → Cox-Reid MAP) and
-Cook's-distance outlier handling (p-value withheld past the
-qf(0.99, p, m−p) cutoff below 7 replicates; trimmed-mean count
-replacement + refit at ≥ 7 — DESeq2's minReplicatesForReplace). All
-variants use unshrunken MLE log2 fold changes and DESeq2's Wald
-construction (coefficient / standard error from the observed
-information). :func:`poisson_glm_wald` runs the SAME kernel at
-alpha=0, whose closed-form MLE gives the applyInPandas machinery a
-full cross-engine SQL oracle (catalog ``a6_poisson_wald``).
+Scope (SURVEY.md §7 "hard parts" #1): v1 (:func:`nb_glm_wald`,
+:func:`nb_glm_wald_pairs`) fits the NB GLM with a method-of-moments
+per-gene dispersion; v2/v3 (:func:`nb_glm_wald_shrunk`) adds
+DESeq2-style empirical-Bayes dispersion shrinkage (gene-wise moments →
+iteratively-refit parametric trend with outlier exclusion →
+data-estimated prior variance (:func:`estimate_dispersion_prior_variance`)
+→ Cox-Reid MAP) and Cook's-distance outlier handling (p-value withheld
+past the qf(0.99, p, m−p) cutoff below 7 replicates; trimmed-mean count
+replacement + refit at ≥ 7 — DESeq2's minReplicatesForReplace). The
+shrunk path's MAP search and Cook's refit still run as a grouped-map
+Pandas UDF over the numpy IRLS. All variants use unshrunken MLE log2
+fold changes and DESeq2's Wald construction (coefficient / standard
+error from the observed information). :func:`poisson_glm_wald` runs the
+SQL fit at alpha=0, whose closed-form MLE gives it a plain-SQL
+cross-engine oracle (catalog ``a6_poisson_wald``).
 
-Design for 100 TB: the input is the long expression fact table
-partitioned by gene; ``groupBy(gene).applyInPandas`` shuffles once on
-the gene key, each task fits ~thousands of tiny regressions
-independently, and the output (one row per gene per contrast) is
-dimension-sized. No driver collection, no global state.
+Design for 100 TB: the input is the long expression fact table; the
+fit shuffles once on the gene key, and the output (one row per gene per
+contrast) is dimension-sized. No driver collection, no global state.
 """
 
 from __future__ import annotations
@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from tcga_query_project_spark.functions.scalar import NORMAL_SF_TWO_SIDED_SQL
 
 RESULT_SCHEMA = StructType(
     [
@@ -145,7 +147,9 @@ def _fit_core(y: np.ndarray, grp: np.ndarray, sf: np.ndarray) -> dict:
         "n_a": n_a,
         "n_b": n_b,
     }
-    if n_a == 0 or n_b == 0 or np.all(y == 0):
+    # a level with no rows or a zero count sum has no finite MLE (its
+    # log mean runs to -inf): NULL stats, as in _nb_wald_sql
+    if not (np.sum(y[grp == 0]) > 0 and np.sum(y[grp == 1]) > 0):
         return out
     x = np.column_stack([np.ones_like(grp), grp])
     offset = np.log(sf)
@@ -170,16 +174,6 @@ def _fit_core(y: np.ndarray, grp: np.ndarray, sf: np.ndarray) -> dict:
         pvalue=float(_normal_sf_two_sided(np.array([wald]))[0]),
     )
     return out
-
-
-def _fit_one_gene(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = _fit_core(
-        pdf["count"].to_numpy(dtype=np.float64),
-        (pdf["cond"] == "B").to_numpy(dtype=np.float64),  # 0 = A (ref), 1 = B
-        pdf["size_factor"].to_numpy(dtype=np.float64),
-    )
-    out["gene"] = pdf["gene"].iloc[0]
-    return pd.DataFrame([out])
 
 
 def _prepare_contrast(
@@ -207,6 +201,133 @@ def _prepare_contrast(
     )
 
 
+#: Newton steps of the per-level mean solve in :func:`_nb_wald_sql`: the
+#: smallest count at which the last step moves log q by < 1e-12 on every
+#: gene of the parity grid in tests/test_glm.py.
+NEWTON_STEPS = 6
+
+# Spark SQL text of the fit's per-level stages ({lv} = a or b).
+# ``transform(array(x), v -> ...)[0]`` binds x to v: when Catalyst pushes
+# a filter below these projections it inlines each projected column at
+# every use, so a stage that used its input k times would copy the whole
+# upstream fit k times (a ``pvalue IS NOT NULL`` filter took a second to
+# optimize); bound, each stage copies its input once. try_divide turns a
+# zero derivative (an empty level, an underflowed μ) into NULL rather
+# than an ANSI DIVIDE_BY_ZERO.
+#
+# Newton in b = log q on Σ (y − s·e^b)/(1 + α·s·e^b) = 0: each step adds
+# Σ (y − μ)/(1 + αμ) / Σ μ(1 + αy)/(1 + αμ)².
+_NEWTON_SQL = (
+    "transform(array(_alpha), a -> aggregate(sequence(1, {k}), _b0_{lv},"
+    " (b, i) -> aggregate(_obs_{lv}, named_struct('n', 0D, 'd', 0D),"
+    " (acc, o) -> named_struct("
+    "'n', acc.n + (o.y - o.s * exp(b)) / (1D + a * o.s * exp(b)),"
+    " 'd', acc.d + o.s * exp(b) * (1D + a * o.y)"
+    " / ((1D + a * o.s * exp(b)) * (1D + a * o.s * exp(b)))),"
+    " acc -> b + try_divide(acc.n, acc.d))))[0] AS _b_{lv}"
+)
+# W = Σ μ/(1 + αμ) at the fitted mean
+_WEIGHT_SQL = (
+    "transform(array(exp(_b_{lv})), e -> aggregate(_obs_{lv}, 0D,"
+    " (w, o) -> w + o.s * e / (1D + _alpha * o.s * e)))[0]"
+)
+
+
+def _nb_wald_sql(
+    prepared: DataFrame, keys: list[str], alpha: float | None = None
+) -> DataFrame:
+    """The two-level NB GLM Wald fit of :func:`_fit_core`, as Spark SQL.
+
+    ``prepared``: (keys..., cond ∈ {A, B}, count, size_factor). The
+    design [1, g] is saturated, so the fit splits per level ``L``:
+
+    - one aggregate per key: Σy, Σs, Σy², Σys, Σs² and the (y, s) list
+      of each level;
+    - Poisson start ``q_L = Σy/Σs`` (the α = 0 MLE, in closed form);
+    - moment dispersion ``α = max(0, Σ((y − μ)² − μ) / Σμ²)`` at the
+      Poisson means, from the five sums (``alpha`` pins it instead);
+    - ``log q_L`` after :data:`NEWTON_STEPS` Newton steps;
+    - ``se(β₁) = sqrt(1/W_A + 1/W_B)`` with ``W_L = Σ μ/(1 + αμ)``, and
+      the p-value of ``β₁/se`` from ``NORMAL_SF_TWO_SIDED_SQL``.
+
+    A level with no rows or a zero count sum has no finite MLE: its
+    stats are NULL. The stages are separate projections: inlining the
+    fit into the aggregate's result expressions duplicates the
+    expression tree, which Catalyst then spends seconds optimizing.
+    """
+    aggs = ["avg(`count` / size_factor) AS base_mean"]
+    for lv in ("a", "b"):
+        on = f"cond = '{lv.upper()}'"
+        aggs += [
+            f"count(CASE WHEN {on} THEN 1 END) AS n_{lv}",
+            f"collect_list(CASE WHEN {on} THEN"
+            f" named_struct('y', `count`, 's', size_factor) END) AS _obs_{lv}",
+        ] + [
+            f"sum(CASE WHEN {on} THEN {e} END) AS _{name}_{lv}"
+            for name, e in (
+                ("sy", "`count`"),
+                ("ss", "size_factor"),
+                ("syy", "`count` * `count`"),
+                ("sys", "`count` * size_factor"),
+                ("sss", "size_factor * size_factor"),
+            )
+        ]
+    if alpha is None:
+        q = {lv: f"try_divide(_sy_{lv}, _ss_{lv})" for lv in ("a", "b")}
+        den = " + ".join(f"{q[lv]} * {q[lv]} * _sss_{lv}" for lv in ("a", "b"))
+        num = " + ".join(
+            f"_syy_{lv} - 2D * {q[lv]} * _sys_{lv} + {q[lv]} * {q[lv]} * _sss_{lv}"
+            for lv in ("a", "b")
+        )
+        alpha_sql = (
+            f"CASE WHEN {den} > 0 THEN greatest(({num} - _sy_a - _sy_b) / ({den}), 0D)"
+            " ELSE 0D END"
+        )
+    else:
+        alpha_sql = f"CAST({float(alpha)!r} AS DOUBLE)"
+    out = [*keys, "base_mean", "n_a", "n_b"]
+    fit = (
+        prepared.groupBy(*keys)
+        .agg(*map(F.expr, aggs))
+        .selectExpr(
+            *out,
+            "_obs_a",
+            "_obs_b",
+            f"{alpha_sql} AS _alpha",
+            *(
+                f"CASE WHEN _sy_{lv} > 0 THEN ln(_sy_{lv} / _ss_{lv}) END AS _b0_{lv}"
+                for lv in ("a", "b")
+            ),
+        )
+        .selectExpr(
+            *out,
+            "_obs_a",
+            "_obs_b",
+            "_alpha",
+            *(_NEWTON_SQL.format(lv=lv, k=NEWTON_STEPS) for lv in ("a", "b")),
+        )
+        .selectExpr(
+            *out,
+            "_b_b - _b_a AS _beta",
+            "sqrt(try_divide(1D, {}) + try_divide(1D, {})) AS _se".format(
+                *(_WEIGHT_SQL.format(lv=lv) for lv in ("a", "b"))
+            ),
+        )
+    )
+    return fit.selectExpr(
+        *keys,
+        "base_mean",
+        f"_beta / {_LN2!r}D AS log2_fold_change",
+        f"_se / {_LN2!r}D AS lfc_se",
+        "try_divide(_beta, _se) AS wald_stat",
+        "transform(array(try_divide(_beta, _se)), z -> CASE WHEN z IS NOT NULL THEN "
+        + NORMAL_SF_TWO_SIDED_SQL.format(z="z")
+        + " END)[0] AS pvalue",
+        "n_a",
+        "n_b",
+    )
+
+
 def nb_glm_wald(
     fact: DataFrame,
     gene: str,
@@ -221,29 +342,13 @@ def nb_glm_wald(
 
     ``fact``: long expression table (gene, sample, cond, count);
     ``size_factors``: (sample, size_factor) from stats.size_factors —
-    broadcast onto the fact, then one shuffle keyed by gene into
-    grouped-map Arrow batches.
+    broadcast onto the fact, then one shuffle keyed by gene into the
+    :func:`_nb_wald_sql` aggregate.
     """
     prepared = _prepare_contrast(
         fact, gene, cond, value, size_factors, sample, level_a, level_b
     )
-    return prepared.groupBy("gene").applyInPandas(_fit_one_gene, RESULT_SCHEMA)
-
-
-PAIR_RESULT_SCHEMA = StructType(
-    [StructField("pair", StringType()), *RESULT_SCHEMA.fields]
-)
-
-
-def _fit_one_gene_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = _fit_core(
-        pdf["count"].to_numpy(dtype=np.float64),
-        (pdf["cond"] == "B").to_numpy(dtype=np.float64),
-        pdf["size_factor"].to_numpy(dtype=np.float64),
-    )
-    out["gene"] = pdf["gene"].iloc[0]
-    out["pair"] = pdf["pair"].iloc[0]
-    return pd.DataFrame([out])
+    return _nb_wald_sql(prepared, ["gene"])
 
 
 def nb_glm_wald_pairs(
@@ -262,7 +367,7 @@ def nb_glm_wald_pairs(
     The pair list becomes a broadcast membership table
     (level → pair, role); joining it replicates each fact row once per
     pair its level participates in (×(levels−1) at worst, not ×pairs),
-    then a single ``groupBy(gene, pair)`` grouped-map fits every
+    then a single ``groupBy(pair, gene)`` aggregate fits every
     contrast — one shuffle of the fact table total, versus one full
     scan+shuffle per pair in the loop formulation. Size factors are
     computed once on the whole cohort, matching DESeq2's fit-once /
@@ -288,9 +393,7 @@ def nb_glm_wald_pairs(
             F.col("size_factor").cast("double"),
         )
     )
-    return prepared.groupBy("gene", "pair").applyInPandas(
-        _fit_one_gene_pair, PAIR_RESULT_SCHEMA
-    )
+    return _nb_wald_sql(prepared, ["pair", "gene"])
 
 
 # --- A6 v2: dispersion shrinkage (DESeq2's empirical-Bayes recipe) -------
@@ -880,36 +983,6 @@ def nb_glm_wald_shrunk(
     return prepared.groupBy("gene").applyInPandas(fit_one, SHRUNK_RESULT_SCHEMA)
 
 
-def _fit_one_gene_poisson(pdf: pd.DataFrame) -> pd.DataFrame:
-    y = pdf["count"].to_numpy(dtype=np.float64)
-    grp = (pdf["cond"] == "B").to_numpy(dtype=np.float64)
-    sf = pdf["size_factor"].to_numpy(dtype=np.float64)
-    n_a = int(np.sum(grp == 0))
-    n_b = int(np.sum(grp == 1))
-    out = {
-        "gene": pdf["gene"].iloc[0],
-        "base_mean": float(np.mean(y / sf)),
-        "log2_fold_change": np.nan,
-        "lfc_se": np.nan,
-        "wald_stat": np.nan,
-        "pvalue": np.nan,
-        "n_a": n_a,
-        "n_b": n_b,
-    }
-    x = np.column_stack([np.ones_like(grp), grp])
-    fit = _fit_nb_irls(y, x, np.log(sf), alpha=0.0)
-    if fit is not None and fit[1][1] > 0 and np.isfinite(fit[1][1]):
-        beta, se = fit
-        wald = beta[1] / se[1]
-        out.update(
-            log2_fold_change=float(beta[1] / _LN2),
-            lfc_se=float(se[1] / _LN2),
-            wald_stat=float(wald),
-            pvalue=float(_normal_sf_two_sided(np.array([wald]))[0]),
-        )
-    return pd.DataFrame([out])
-
-
 def poisson_glm_wald(
     fact: DataFrame,
     gene: str,
@@ -923,21 +996,15 @@ def poisson_glm_wald(
     """Per-gene POISSON (alpha = 0) GLM Wald contrast — the
     closed-form-verifiable member of the GLM family: the log-link
     two-group Poisson MLE is ``beta1 = ln((Σ_B y/Σ_B s)/(Σ_A y/Σ_A s))``
-    with ``se = sqrt(1/Σ_A y + 1/Σ_B y)``, so the SAME grouped-map IRLS
-    kernel that powers A6's iterative NB path gets a plain-SQL DuckDB
-    oracle (catalog ``a6_poisson_wald``) — a cross-engine hash check of
-    the applyInPandas machinery itself, which the NB variant (genuinely
-    iterative in its dispersion) cannot have. IRLS's 1e-8 step
-    criterion under quadratic convergence leaves the estimate ~1e-13
-    from the closed form — far inside 6-decimal rounding.
+    with ``se = sqrt(1/Σ_A y + 1/Σ_B y)``. It runs :func:`_nb_wald_sql`
+    with α pinned to 0, so the Newton solve starts at its own root and
+    the plain-SQL DuckDB oracle (catalog ``a6_poisson_wald``) checks
+    the fit's aggregate, weights and p-value end to end.
 
-    Caller contract (mirrored in the oracle): restrict to genes whose
-    count sum is positive in BOTH groups — with a zero group the MLE
-    diverges and the kernel's clipped estimate is not the closed form.
+    A gene with a zero-sum group has no finite MLE and gets NULL
+    stats; the catalog query excludes such genes on both sides.
     """
     prepared = _prepare_contrast(
         fact, gene, cond, value, size_factors, sample, level_a, level_b
     )
-    return prepared.groupBy("gene").applyInPandas(
-        _fit_one_gene_poisson, RESULT_SCHEMA
-    )
+    return _nb_wald_sql(prepared, ["gene"], alpha=0.0)

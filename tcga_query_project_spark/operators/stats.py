@@ -308,8 +308,14 @@ def bh_adjust(
     then ``padj(i) = min_{j>=i} p(j)*n/j`` as a running minimum over the
     descending-rank frame, capped at 1. One window per partition
     (per contrast), no Python.
+
+    NULL-aware: ``n`` counts the non-null p, NULL p rank last (so they
+    never shift a tested row's rank) and get a NULL padj — untested rows
+    ride along instead of being split off and unioned back.
     """
-    w_rank = Window.partitionBy(*partition_cols).orderBy(F.col(p).asc(), tiebreak)
+    w_rank = Window.partitionBy(*partition_cols).orderBy(
+        F.col(p).asc_nulls_last(), tiebreak
+    )
     w_n = Window.partitionBy(*partition_cols)
     w_cummin = (
         Window.partitionBy(*partition_cols)
@@ -318,12 +324,17 @@ def bh_adjust(
     )
     return (
         df.withColumn("_rank", F.row_number().over(w_rank).cast("double"))
-        .withColumn("_n_tests", F.count(F.lit(1)).over(w_n).cast("double"))
+        .withColumn("_n_tests", F.count(p).over(w_n).cast("double"))
         .withColumn(
             out,
-            F.least(
-                F.lit(1.0),
-                F.min(F.col(p) * F.col("_n_tests") / F.col("_rank")).over(w_cummin),
+            F.when(
+                F.col(p).isNotNull(),
+                F.least(
+                    F.lit(1.0),
+                    F.min(F.col(p) * F.col("_n_tests") / F.col("_rank")).over(
+                        w_cummin
+                    ),
+                ),
             ),
         )
         .drop("_rank", "_n_tests")

@@ -112,18 +112,12 @@ def differential_expression(
             .withColumn("p_signif", signif_bin(F.col("padj")))
             .withColumnRenamed("gene", "gene_id")
         )
-    # distinct-p BH form: value-identical to the row-window formulation
-    # (equivalence-tested in test_properties) but with no global
-    # single-partition window — at 60k genes either works; at billions
-    # of tests only this one does.
-    adjusted = stats.bh_adjust_distinct(
-        de.filter(F.col("pvalue").isNotNull()), "pvalue"
-    )
-    missing = de.filter(F.col("pvalue").isNull()).withColumn(
-        "padj", F.lit(None).cast("double")
-    )
+    # The fit has exactly one consumer: a row-window BH over genes. The
+    # distinct-p form (stats.bh_adjust_distinct) saves nothing here —
+    # one test per gene, p-values almost all distinct, so its window is
+    # as large — and its join back would evaluate the fit a second time.
     return (
-        adjusted.unionByName(missing)
+        stats.bh_adjust(de, "pvalue", [], F.col("gene").asc())
         .withColumn("p_signif", signif_bin(F.col("padj")))
         .withColumnRenamed("gene", "gene_id")
     )
@@ -143,7 +137,7 @@ def pairwise_de(
     model ONCE on the full cohort and extracts contrasts, so here the
     cohort/floor/size-factor stages run once and
     ``glm.nb_glm_wald_pairs`` fits every (gene, pair) contrast in one
-    grouped-map shuffle. BH adjustment is per contrast
+    aggregate shuffle. BH adjustment is per contrast
     (``results()`` adjusts within each pair), hence partitioned by
     ``pair``."""
     levels = sorted({lv for p in pairs for lv in p})
@@ -152,17 +146,8 @@ def pairwise_de(
     de = glm.nb_glm_wald_pairs(
         fact, "gene_id", "cond", "count", sf, "barcode", pairs
     )
-    adjusted = stats.bh_adjust(
-        de.filter(F.col("pvalue").isNotNull()),
-        "pvalue",
-        ["pair"],
-        F.col("gene").asc(),
-    )
-    missing = de.filter(F.col("pvalue").isNull()).withColumn(
-        "padj", F.lit(None).cast("double")
-    )
     return (
-        adjusted.unionByName(missing)
+        stats.bh_adjust(de, "pvalue", ["pair"], F.col("gene").asc())
         .withColumn("p_signif", signif_bin(F.col("padj")))
         .withColumnRenamed("gene", "gene_id")
     )

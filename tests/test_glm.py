@@ -1,5 +1,5 @@
-"""A6 NB GLM unit tests (SURVEY.md §5: golden values for the only
-Python-boundary operator)."""
+"""A6 NB GLM unit tests (SURVEY.md §5): golden values, and the SQL fit
+against the numpy reference fit."""
 
 import numpy as np
 import pytest
@@ -69,14 +69,19 @@ def test_null_gene_large_p_and_de_gene_small_p(spark):
 
 
 def test_degenerate_groups_yield_null_stats(spark):
-    # all-zero counts and single-group genes must not crash the fit
+    # all-zero counts, single-group genes and a level whose counts are
+    # all zero (no finite MLE) must not crash the fit: NULL stats in the
+    # SQL fit, NaN in the numpy reference
     rows = [
         ("zero", "s1", "A", 0.0), ("zero", "s2", "B", 0.0),
         ("onegrp", "s1", "A", 5.0), ("onegrp", "s2", "A", 7.0),
+        ("bzero", "s1", "A", 5.0), ("bzero", "s3", "A", 9.0),
+        ("bzero", "s2", "B", 0.0), ("bzero", "s4", "B", 0.0),
     ]
     fact = spark.createDataFrame(rows, "gene string, sample string, cond string, count double")
     sf = spark.createDataFrame(
-        [("s1", 1.0), ("s2", 1.0)], "sample string, size_factor double"
+        [("s1", 1.0), ("s2", 1.0), ("s3", 0.8), ("s4", 1.3)],
+        "sample string, size_factor double",
     )
     out = {
         r["gene"]: r
@@ -86,6 +91,146 @@ def test_degenerate_groups_yield_null_stats(spark):
     }
     assert out["zero"]["pvalue"] is None
     assert out["onegrp"]["pvalue"] is None
+    assert out["bzero"]["log2_fold_change"] is None
+    assert out["bzero"]["lfc_se"] is None and out["bzero"]["pvalue"] is None
+    assert out["bzero"]["n_a"] == 2 and out["bzero"]["n_b"] == 2
+    ref = glm._fit_core(
+        np.array([5.0, 9.0, 0.0, 0.0]),
+        np.array([0.0, 0.0, 1.0, 1.0]),
+        np.array([1.0, 0.8, 1.0, 1.3]),
+    )
+    assert np.isnan(ref["log2_fold_change"]) and np.isnan(ref["pvalue"])
+
+
+def _parity_grid(seed: int = 20):
+    """Seeded genes covering balanced (6/6) and unbalanced (3/9, 10/2)
+    groups, means from mostly-zero counts to hundreds, Poisson and
+    overdispersed (α = 0.3, 2.5) draws, no and four-fold effects, over
+    24 samples whose size factors span [0.3, 3]. Returns the long rows,
+    the size factors and each gene's (y, is_b, s) arrays."""
+    rng = np.random.default_rng(seed)
+    sf = {f"s{i:02d}": float(v) for i, v in enumerate(rng.uniform(0.3, 3.0, 24))}
+    names = sorted(sf)
+    rows, genes = [], {}
+    for n_a, n_b in ((6, 6), (3, 9), (10, 2)):
+        for mean in (0.6, 8.0, 300.0):
+            for disp in (0.0, 0.3, 2.5):
+                for fold in (1.0, 4.0):
+                    g = f"g{len(genes):03d}"
+                    smp = [names[i] for i in rng.choice(12, n_a, replace=False)] + [
+                        names[12 + i] for i in rng.choice(12, n_b, replace=False)
+                    ]
+                    ys = []
+                    for j, s in enumerate(smp):
+                        mu = mean * sf[s] * (fold if j >= n_a else 1.0)
+                        lam = mu if disp == 0 else rng.gamma(1 / disp, mu * disp)
+                        ys.append(float(rng.poisson(lam)))
+                        rows.append((g, s, "A" if j < n_a else "B", ys[-1]))
+                    genes[g] = (
+                        np.array(ys),
+                        np.array([0.0] * n_a + [1.0] * n_b),
+                        np.array([sf[s] for s in smp]),
+                    )
+    return rows, sf, genes
+
+
+def _newton_steps(y, is_b, s, steps):
+    """numpy mirror of glm._newton_log_mean from the Poisson start at
+    the moment dispersion: (α, |Δ log q| per level and step), or
+    (None, None) when a level has no finite MLE."""
+    q = {lv: y[is_b == lv].sum() / s[is_b == lv].sum() for lv in (0.0, 1.0)}
+    if min(y[is_b == lv].sum() for lv in (0.0, 1.0)) <= 0:
+        return None, None
+    mu = s * np.where(is_b == 1.0, q[1.0], q[0.0])
+    alpha = max(np.sum((y - mu) ** 2 - mu) / np.sum(mu**2), 0.0)
+    moves = np.zeros((2, steps))
+    for i, lv in enumerate((0.0, 1.0)):
+        yl, sl, b = y[is_b == lv], s[is_b == lv], np.log(q[lv])
+        for k in range(steps):
+            m = sl * np.exp(b)
+            den = 1.0 + alpha * m
+            nb = b + np.sum((yl - m) / den) / np.sum(m * (1.0 + alpha * yl) / den**2)
+            moves[i, k], b = abs(nb - b), nb
+    return alpha, moves
+
+
+def test_newton_steps_is_smallest_converged_count():
+    # NEWTON_STEPS: the last step moves log q by < 1e-12 on every grid
+    # gene, and one step fewer would not
+    _, _, genes = _parity_grid()
+    k = glm.NEWTON_STEPS
+    worst, alphas = np.zeros(k), []
+    for y, is_b, s in genes.values():
+        alpha, moves = _newton_steps(y, is_b, s, k)
+        if alpha is None:
+            continue
+        alphas.append(alpha)
+        worst = np.maximum(worst, moves.max(axis=0))
+    assert worst[-1] < 1e-12
+    assert worst[-2] >= 1e-12
+    # the grid spans Poisson (α clamped to 0) and high dispersion
+    assert min(alphas) == 0.0 and max(alphas) > 1.0
+
+
+def test_sql_fit_matches_numpy_reference(spark):
+    rows, sf, genes = _parity_grid()
+    fact = spark.createDataFrame(rows, "gene string, sample string, cond string, count double")
+    sfd = spark.createDataFrame(list(sf.items()), "sample string, size_factor double")
+    got = {
+        r["gene"]: r
+        for r in glm.nb_glm_wald(
+            fact, "gene", "cond", "count", sfd, "sample", "A", "B"
+        ).collect()
+    }
+    assert set(got) == set(genes)
+    n_null = 0
+    for g, (y, is_b, s) in genes.items():
+        ref = glm._fit_core(y, is_b, s)
+        assert (got[g]["n_a"], got[g]["n_b"]) == (ref["n_a"], ref["n_b"]), g
+        assert got[g]["base_mean"] == pytest.approx(ref["base_mean"], rel=1e-12), g
+        for k in ("log2_fold_change", "lfc_se", "pvalue"):
+            if np.isnan(ref[k]):
+                assert got[g][k] is None, (g, k)
+                n_null += 1
+            else:
+                assert got[g][k] == pytest.approx(ref[k], rel=1e-6), (g, k)
+    # zero-heavy genes include levels without a finite MLE
+    assert n_null > 0
+
+
+def test_pairs_rows_equal_single_contrast(spark):
+    # nb_glm_wald_pairs' X_vs_Y rows are the nb_glm_wald(X, Y) fit on
+    # the same fact and size factors (equal up to summation order)
+    rng = np.random.default_rng(5)
+    sf_rows = [(f"s{i}", float(v)) for i, v in enumerate(rng.uniform(0.5, 2.0, 18))]
+    rows = []
+    for g in range(8):
+        for i, (smp, f) in enumerate(sf_rows):
+            lv = "XYZ"[i % 3]
+            mu = (5.0 + 20.0 * g) * f * (3.0 if lv == "Z" else 1.0)
+            rows.append((f"g{g}", smp, lv, float(rng.poisson(rng.gamma(4.0, mu / 4.0)))))
+    fact = spark.createDataFrame(rows, "gene string, sample string, cond string, count double")
+    sfd = spark.createDataFrame(sf_rows, "sample string, size_factor double")
+    pairs = glm.nb_glm_wald_pairs(
+        fact, "gene", "cond", "count", sfd, "sample", [("X", "Y"), ("X", "Z")]
+    )
+    for a, b in (("X", "Y"), ("X", "Z")):
+        single = {
+            r["gene"]: r.asDict()
+            for r in glm.nb_glm_wald(
+                fact, "gene", "cond", "count", sfd, "sample", a, b
+            ).collect()
+        }
+        paired = {
+            r["gene"]: r.asDict()
+            for r in pairs.filter(F.col("pair") == f"{a}_vs_{b}").collect()
+        }
+        assert set(paired) == set(single) and len(single) == 8
+        for g, want in single.items():
+            have = paired[g]
+            assert (have["n_a"], have["n_b"]) == (want["n_a"], want["n_b"])
+            for k in ("base_mean", "log2_fold_change", "lfc_se", "wald_stat", "pvalue"):
+                assert have[k] == pytest.approx(want[k], rel=1e-12, abs=1e-300), (g, k)
 
 
 def test_wilcoxon_exact_known_value(spark):

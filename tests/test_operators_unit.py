@@ -118,6 +118,15 @@ def test_bh_adjust_known_values(spark):
     assert abs(v2[1] - 0.003) < 1e-12      # 0.001*3/1
     assert abs(v2[2] - 0.75) < 1e-12       # 0.5*3/2
     assert abs(v2[3] - 0.9) < 1e-12        # min(0.9*3/3, ...) = 0.9
+    # NULL p (untested rows) neither count in n nor take a rank: the
+    # tested rows keep the values above, the NULL rows a NULL padj
+    df3 = spark.createDataFrame(
+        [(1, 0.001), (2, None), (3, 0.5), (4, 0.9), (5, None)], "id int, p double"
+    )
+    v3 = {r["id"]: r["padj"] for r in stats.bh_adjust(df3, "p", [], F.col("id").asc()).collect()}
+    assert v3[2] is None and v3[5] is None
+    for i, j in ((1, 1), (3, 2), (4, 3)):
+        assert abs(v3[i] - v2[j]) < 1e-12
 
 
 def test_wilcoxon_matches_closed_form(spark):

@@ -363,16 +363,15 @@ def test_km_ntile_ordering_is_total_on_fixtures(spark):
 
 
 def test_de_full_composition_differential(spark):
-    """Round-11 verdict item 6: ``tcga_de_full``/``tcga_de_filtered``
-    are rows-only while every STAGE has its own oracle — attest the
-    COMPOSITION end-to-end. R/DESeq2 is not in this image, so the
-    golden is an independent driver-side re-composition over the
-    committed fixture parquet: cohort filter, gene floor, DESeq2
-    median-of-ratios size factors and BH are re-derived here in plain
-    pandas/numpy (separate code path from the engine's joins/windows);
-    only the per-gene NB-GLM kernel (``glm._fit_core``) is shared —
-    itself attested by R-golden unit tests (test_glm) and the
-    ``a6_poisson_wald`` closed-form hash oracle. Any mis-wiring of the
+    """Attest the ``tcga_de_full``/``tcga_de_filtered`` COMPOSITION
+    end-to-end (``tcga_de_filtered`` is rows-only). R/DESeq2 is not in
+    this image, so the golden is an independent driver-side
+    re-composition over the committed fixture parquet: cohort filter,
+    gene floor, DESeq2 median-of-ratios size factors and BH are
+    re-derived here in plain pandas/numpy (separate code path from the
+    engine's joins/windows), and the per-gene fit is the numpy IRLS
+    reference ``glm._fit_core`` (the engine runs the SQL fit, checked
+    against it in test_glm). Any mis-wiring of the
     composition (wrong gene universe after the floor, BH over the
     wrong test set, size factors from the wrong cohort, NULL
     propagation, join key drift) diverges here. Compared on pvalue,
@@ -467,8 +466,8 @@ def test_de_full_composition_differential(spark):
             assert ep is None and fp is None
             assert full[g]["padj"] is None and full[g]["p_signif"] is None
             continue
-        # composition through the Wald stage (cohort+floor+sf+fit):
-        # identical kernel over independently-wired inputs
+        # composition through the Wald stage (cohort+floor+sf+fit): the
+        # SQL fit against the numpy reference, independently wired
         assert ep is not None and abs(ep - lp) <= 1e-6 * max(lp, 1e-12), g
         assert fp is not None and abs(fp - lp) <= 1e-6 * max(lp, 1e-12), g
         # BH tail: tolerance-based value match + identical signif bins

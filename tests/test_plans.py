@@ -86,6 +86,20 @@ def test_events_scan_prunes_props(spark):
         assert all("props" not in s for s in plans.read_schemas(df)), name
 
 
+def test_tcga_de_full_fits_in_sql_once(spark):
+    """The DE pipeline's NB-GLM Wald is fused Spark SQL (no Python
+    worker) and its fit has one consumer. Each use of the floored cohort
+    reads expression twice (the rows, and the floor aggregate they are
+    semi-joined with); the size factors use the cohort twice and the fit
+    once — 6 scans, where three consumers of the fit made it 18."""
+    df = _run(spark, "tcga_de_full")
+    plan = plans.formatted_plan(df, "simple")
+    for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert op not in plan, op
+    # expression is the only scanned table with a gene_id column
+    assert sum("gene_id" in s for s in plans.read_schemas(df)) == 6
+
+
 # Single-partition windows tolerated ONLY over provably-reduced inputs
 # (the lint sees the plan shape, not cardinality). Each entry names the
 # reduction that bounds the window's input and the true 100 TB path.
@@ -99,6 +113,9 @@ GLOBAL_WINDOW_ALLOWED = {
     # BH cummin over DISTINCT p values (stats.bh_adjust_distinct), not
     # over test rows — the window input is the p-value cardinality.
     "tcga_de_pipeline",
+    # row-window BH over the per-gene fit: one row per gene, bounded by
+    # the gene annotation (and as large as the distinct-p window, since
+    # the p-values are almost all distinct)
     "tcga_de_full",
     # same distinct-p BH windows (final padj pass after the theta cut)
     "tcga_de_filtered",

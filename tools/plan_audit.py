@@ -44,6 +44,10 @@ def main() -> None:
     from tcga_query_project_spark.session import get_spark
 
     spark = get_spark("plan-audit")
+    # untruncated scan locations: at the default 100 characters a deep
+    # checkout path cuts the table name out of "Location: ...[path]", so
+    # the scans list would depend on where the repo is checked out
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
     specs = {**BENCH_ONLY, **REGISTRY}
     out: dict[str, dict] = {}
     red: list[str] = []
