@@ -9,15 +9,23 @@ Layout
 ------
 - ``session``     — SparkSession builder (local[*], AQE, UTC).
 - ``schemas``     — fixed StructTypes for the star schema + testdata.
-- ``sources``     — parquet/csv/tsv readers & sinks, checkpoint ladder.
-- ``operators``   — relational / stats / survival / nested / dedup /
-                    similarity / text operator library (DataFrame in,
-                    DataFrame out; built-in functions only in hot paths).
+- ``fixtures``    — seeded reference-shaped TCGA star (genes, samples,
+                    expression) and its committed parquet form.
+- ``sources``     — parquet/csv/tsv readers & sinks, checkpoint ladder
+                    (``io``); GDC acquisition (``ingest``).
+- ``operators``   — DataFrame-in, DataFrame-out operator library:
+                    relational, nested, stats, glm, survival, temporal,
+                    graph, dedup, similarity, sketches, text, bpe,
+                    unigram, fuzzy, sampling, partitioning,
+                    quality_audit, caching (built-in functions only in
+                    hot paths).
 - ``functions``   — scalar expression helpers (significance binning,
                     normal-distribution approximations, portable hashes).
-- ``streaming``   — batch/stream-symmetric time-window operators.
-- ``plans``       — the reference's three entry-point pipelines composed
-                    from the operator library.
+- ``streaming``   — batch/stream-symmetric windows, joins, dedup,
+                    near-dup, quality gate and stateful operators.
+- ``pipelines``   — the reference's three entry-point pipelines (DE,
+                    survival, corpus prep) composed from the operators.
+- ``plans``       — physical-plan inspection and scale lints.
 - ``catalog``     — the driver-facing query registry: every operator as a
                     named query over the testdata tables plus its DuckDB
                     oracle SQL.

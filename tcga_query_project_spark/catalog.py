@@ -3,7 +3,7 @@
 One named query per implemented operator from SURVEY.md §2, each bound
 to the driver's testdata tables with a DuckDB oracle SQL mirror. The
 driver runs both at sf0.01 and compares row count + schema +
-order-insensitive value hash (see BASELINE.md).
+order-insensitive value hash (see tests/oracle_harness.py).
 
 Cross-engine determinism conventions (every query in this file follows
 them; violating any one breaks the value-hash match):
@@ -42,7 +42,6 @@ from tcga_query_project_spark.functions.scalar import (
     SIGNIF_BIN_SQL,
     md5_prefix_long,
     signif_bin,
-    utc_us,
 )
 from tcga_query_project_spark.operators import (
     bpe,
@@ -74,47 +73,12 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 #: Queries benchmarked and unit-tested but NOT submitted to the
-#: correctness driver (it verifies at most 48 entries). Round 5 moved
-#: sk_approx_profile here to free a slot for dd_dup_clusters, which
-#: carries a full oracle — the sketch row was rows-only by design
-#: (engine-specific sketch state) and keeps its tolerance tests in
-#: tests/test_operators_unit.py, so no verification is lost.
-#:
-#: ROTATION (round-8 judge ask #2): because the driver cap is 48 but
-#: 114 queries carry oracles, round 9 rotated eight long-stable driver
-#: slots (r1_pivot_wide, emb_array_stats, cdc_latest_snapshot,
-#: dd_embedding_neardup, j5_anti_join, w6_rolling_range, tj_range_join,
-#: w7_w8_window_suite) here in exchange for eight previously
-#: driver-invisible oracled queries (tj_incremental_agg,
-#: er_entity_clusters, gq_pagerank, qa_ks_drift, pp_weighted_sample,
-#: tx_repetition, dd_embedding_lsh_pairs, tj_funnel). Membership in
-#: either dict changes WHICH harness attests an oracle, never whether
-#: it is attested: tests/test_oracle_parity.py runs every BENCH_ONLY
-#: oracle through the same comparison as the driver, and displaced
-#: queries keep their unit/plan/fuzz coverage unchanged. Expect the
-#: rotation to continue in future rounds.
-#:
-#: Round 10 rotated the (now driver-attested) round-9 eight back out
-#: in exchange for the eight never-driver-attested oracles the round-9
-#: verdict named: dd_jaccard_prefix_join, tx_perplexity,
-#: tx_bigram_backoff, pp_dsir_select, qa_windowed_psi, ab_cuped,
-#: tj_retention, qa_psi_drift.
-#:
-#: Round 11 continued the pattern: the round-10 eight (each now
-#: driver-attested once) swapped back here for the eight the round-10
-#: verdict named — a6_filter_grid, sv_logrank_cohorts,
-#: tx_ctfidf_labels, qa_robust_outliers, tj_markov,
-#: q21_sole_late_supplier, q19_disjunctive_revenue, a13_bootstrap_ci
-#: (the two heaviest TPC-H shapes + the heaviest stable query).
-#:
-#: Round 12 (rotation #5): the round-11 eight (each now driver-attested
-#: in CORRECTNESS_r11.json) swapped back here for the eight the
-#: round-11 verdict named — q9_product_type_profit,
-#: q18_large_volume_customers, q12_priority_lateness, tj_sessionize,
-#: tj_apply_cdc, tx_tfidf, dd_decontaminate, a12_cube_margins
-#: (shape-diverse picks from the 49 never-driver-attested oracles:
-#: three more TPC-H joins/aggs, two temporal, one text, one dedup,
-#: one CUBE).
+#: correctness driver (it verifies at most 48 entries, the alphabetical
+#: prefix of the registry). Membership in either dict changes WHICH
+#: harness attests an oracle, never whether it is attested:
+#: tests/test_oracle_parity.py runs every BENCH_ONLY oracle through the
+#: same comparison as the driver, and a query moved here keeps its
+#: unit/plan/fuzz coverage unchanged.
 BENCH_ONLY: dict[str, QuerySpec] = {}
 
 
@@ -238,11 +202,10 @@ def p4_isin_inlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4: literal IN-list membership (``%in% goi``,
     vital_status_DESeq.R:88).
 
-    BENCH_ONLY since round 7: its driver slot went to
-    ``a6_poisson_wald`` (the GLM cross-check — the hard correctness
-    signal attests the GLM fit itself). No verification is lost: this
-    query keeps its oracle here (tests/test_oracle_parity.py runs BENCH_ONLY through
-    the identical comparison), and the P4 IN-list operator stays
+    BENCH_ONLY: its driver slot serves ``a6_poisson_wald`` (the GLM
+    cross-check). No verification is lost: this query keeps its oracle
+    here (tests/test_oracle_parity.py runs BENCH_ONLY through the
+    identical comparison), and the P4 IN-list operator stays
     driver-visible through ``f_scalar_suite``'s IN-list column and
     ``j3_semi_join_dim``'s tags."""
     return (
@@ -956,8 +919,7 @@ def a6_nb_glm_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
     Wald contrast via ``applyInPandas`` (``DESeq(data)`` +
     ``results()``, vital_status_DESeq.R:51,89) — l_partkey plays the
     gene, l_suppkey the sample, l_linestatus the two-level condition.
-    Round 6 promoted the shrunk variant into this driver slot: the
-    registered query now runs the full estimateDispersions chain
+    The registered query runs the full estimateDispersions chain
     (iteratively-refit dispersion trend, Cox-Reid MAP shrinkage,
     Cook's-distance outlier gate), so its schema exposes
     dispersion_mom/dispersion_map/max_cooks/cooks_outlier. Unit-tested
@@ -1212,12 +1174,12 @@ def w1_ntile_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("W1", "P9", "scale-path"),
 )
 def w1_quantile_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1+P9, the SCALE form (round-6 judge ask #1): same LOW/HIGH
+    """W1+P9, the SCALE form: same LOW/HIGH
     extreme-stratification semantics as ``w1_ntile_extremes``
     (surv_analysis_median_exp.R:131-141) but via
     ``survival.quantile_strata`` — histogram-CDF boundaries + broadcast
     label join, no corpus-sized window partition. This is the
-    BENCHMARKED stratification since round 7 (the ntile form's
+    BENCHMARKED stratification (the ntile form's
     ``PARTITION BY event_type`` ntile was the one superlinear query at
     10x data: one sort task per ~5-value key); the ntile form stays in
     the driver registry as the oracle pin for ntile TIE semantics,
@@ -1670,9 +1632,8 @@ def dd_doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``fingerprint``: md5 over normalized text (portable across
       engines bit-for-bit; stand-in for a rolling hash);
     - ``keep_id``/``n_dups``: exact-dedup lineage via a window over the
-      normalized content (first-arrival keeper + duplicate count —
-      same semantics as dedup.exact_duplicates, kept per-document so
-      the row carries its own dedup verdict);
+      normalized content (first-arrival keeper + duplicate count,
+      kept per-document so the row carries its own dedup verdict);
     - ``simhash``: 16-bit SimHash (portable md5-nibble variant; the
       production path swaps in xxhash64 at 64 bits, same dataflow).
 
@@ -1821,37 +1782,37 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard verification ≥ 0.2. The oracle replays the identical hash
     pipeline (md5 ordering is engine-independent).
 
-    Scale-segment diagnosis (round 8, closing the round-7 watch item —
-    the 10x→30x exec ratio of 3.59x on 3x data): instrumented candidate
-    pairs and band-bucket occupancy at all three points. Root cause was
-    the CURVE'S CORPUS MIX, not the plan: the 10x point was then built
-    in ``suffix`` mode (the documented planted-high-duplication regime:
-    416,359 candidate pairs = 214x on 10x docs BY CONSTRUCTION) while
-    the 30x point used the fair ``interleave`` mode (905,825 pairs), so
-    the segment compared a near-saturated verify stage against a
-    3x-larger corpus with a different pair regime. Measured
-    like-for-like (both points ``interleave``, the construction sf1 now
-    uses): 210,370 → 905,825 candidates and 2.75s → 7.03s exec —
-    **2.56x time on 3x data, sublinear**; per-candidate verify work is
-    flat. The residual superlinear CANDIDATE growth on interleave data
-    (0.39/doc at sf0.1 → 4.2/doc at 10x) is a property of the
-    testdata's closed 31-token vocabulary — the word-3-shingle space is
-    ≤31³, so unrelated-doc Jaccard is bounded away from 0 and chance
-    band collisions grow ~n² — amplified, not created, by vocabulary:
-    ANY corpus accrues chance candidates as n²·P(band collision), with
-    P ≈ b·J^r for band width r. Measured on the native Heaps/Zipf
-    corpus (``tools/gen_native_corpus.py``, 6% planted dups): 0.067 →
-    0.25 → 0.68 candidates/doc at 1×/10×/30× under this query's
-    pinned (8 hashes, r=2); widening to (16, r=4) cuts the chance mass
-    3× (0.038/0.085/0.21). Candidate VOLUME is therefore a
-    corpus+parameter property tuned via ``band_size`` (production
-    corpora run r=4–8 precisely so n²·J^r stays below the planted-dup
-    line); what the engine owes — and what the curve shows — is
-    per-candidate cost that stays flat (the verify stage is one
-    equi-join + grouped intersection, linear in candidates, sublinear
-    segment above) and recall on planted dups unaffected by r. Bucket
-    skew is not a factor at any point (max occupancy 212 → ≤45k join
-    rows from the worst bucket, thousands of buckets per band)."""
+    Scale-segment diagnosis (the 10x→30x exec ratio of 3.59x on 3x
+    data): instrumented candidate pairs and band-bucket occupancy at all
+    three points. Root cause was the CURVE'S CORPUS MIX, not the plan:
+    the 10x point was then built in ``suffix`` mode (the documented
+    planted-high-duplication regime: 416,359 candidate pairs = 214x on
+    10x docs BY CONSTRUCTION) while the 30x point used the fair
+    ``interleave`` mode (905,825 pairs), so the segment compared a
+    near-saturated verify stage against a 3x-larger corpus with a
+    different pair regime. Measured like-for-like (both points
+    ``interleave``, the construction sf1 now uses): 210,370 → 905,825
+    candidates and 2.75s → 7.03s exec — **2.56x time on 3x data,
+    sublinear**; per-candidate verify work is flat. The residual
+    superlinear CANDIDATE growth on interleave data (0.39/doc at sf0.1 →
+    4.2/doc at 10x) is a property of the testdata's closed 31-token
+    vocabulary — the word-3-shingle space is ≤31³, so unrelated-doc
+    Jaccard is bounded away from 0 and chance band collisions grow ~n² —
+    amplified, not created, by vocabulary: ANY corpus accrues chance
+    candidates as n²·P(band collision), with P ≈ b·J^r for band width r.
+    Measured on the native Heaps/Zipf corpus
+    (``tools/gen_native_corpus.py``, 6% planted dups): 0.067 → 0.25 →
+    0.68 candidates/doc at 1×/10×/30× under this query's pinned (8
+    hashes, r=2); widening to (16, r=4) cuts the chance mass 3×
+    (0.038/0.085/0.21). Candidate VOLUME is therefore a corpus+parameter
+    property tuned via ``band_size`` (production corpora run r=4–8
+    precisely so n²·J^r stays below the planted-dup line); what the
+    engine owes — and what the curve shows — is per-candidate cost that
+    stays flat (the verify stage is one equi-join + grouped
+    intersection, linear in candidates, sublinear segment above) and
+    recall on planted dups unaffected by r. Bucket skew is not a factor
+    at any point (max occupancy 212 → ≤45k join rows from the worst
+    bucket, thousands of buckets per band)."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.near_duplicates(
         docs, "doc_id", "text", k=3, num_hashes=8, band_size=2, threshold=0.2
@@ -1912,8 +1873,8 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH embedding near-dup with CORPUS-TUNED bucket width — THE
-    BENCHMARKED SCALE-SAFE FORM of the embedding-dedup family since
-    round 8 (the w1 precedent: the exact form keeps its slot as the
+    BENCHMARKED SCALE-SAFE FORM of the embedding-dedup family (as for
+    w1, the exact form keeps its slot as the
     semantics pin, the scale-safe form carries the scale evidence).
     ``dd_embedding_neardup`` is the DECLARED exact all-pairs baseline,
     O(n²·d) compute by definition; on the full-set scale curve its
@@ -2012,9 +1973,9 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup-streaming-gate", "streaming-batch-equivalent"),
 )
 def dd_band_firstseen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming near-dedup admission gate in batch form (round-6
-    judge ask #7 — bench/oracle visibility for streaming/neardup.py's
-    decision rule): a document passes iff EVERY LSH band signature is
+    """The streaming near-dedup admission gate in batch form (bench and
+    oracle visibility for streaming/neardup.py's decision rule): a
+    document passes iff EVERY LSH band signature is
     first-seen, with arrival order = doc_id. Same minhash family and
     banding as dd_minhash_lsh (the oracle replays the identical hash
     pipeline), but a one-sided gate instead of a verified pair join —
@@ -2087,8 +2048,8 @@ def dd_band_firstseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("decontamination", "cross-corpus"),
 )
 def dd_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test decontamination (dedup.decontaminate), oracle-visible
-    since round 7: every 37th document plays the evaluation/reference
+    """Train/test decontamination (dedup.decontaminate), oracle-visible:
+    every 37th document plays the evaluation/reference
     set, the rest the training corpus; pairs at word-3-gram Jaccard >=
     0.2 are the contaminated (training_doc, eval_doc) hits. Same
     portable minhash family as dd_minhash_lsh but a corpus x BROADCAST
@@ -2129,8 +2090,8 @@ def dd_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup against a PERSISTED index
-    (dedup.build_dedup_index + dedup_against_index), oracle-visible
-    since round 7: even doc_ids play the already-ingested corpus —
+    (dedup.build_dedup_index + dedup_against_index), oracle-visible:
+    even doc_ids play the already-ingested corpus —
     their MinHash state is materialized as a real parquet index
     (signatures + band-partitioned band sigs) in a fresh temp dir —
     and odd doc_ids play the ingest delta, deduped against that index
@@ -2614,8 +2575,8 @@ from tcga_query_project_spark import fixtures as _fx  # noqa: E402
 
 #: Absolute paths of the committed fixture parquet files — embedded in
 #: the pipeline oracles below so DuckDB reads the IDENTICAL bytes the
-#: Spark queries read (round-6: this is what moved the composed TCGA
-#: pipelines from rows-only to full hash-checked oracles).
+#: Spark queries read, so the composed TCGA pipelines carry full
+#: hash-checked oracles instead of rows-only checks.
 _FIXD = _fx.fixtures_parquet_dir()
 
 #: shared oracle CTE prologue over the fixture star schema
@@ -2740,8 +2701,7 @@ def tcga_de_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     secondary Wilcoxon (A4, the reference's ``compare_means``
     cross-check) → BH padj → significance bins (A9), all over the
     COMMITTED fixture parquet so the whole composition hash-checks
-    against the DuckDB oracle (round-6; previously rows-only because
-    the fixtures lived in-session). The NB GLM stage (A6) runs in the
+    against the DuckDB oracle. The NB GLM stage (A6) runs in the
     BENCH_ONLY full pipeline ``tcga_de_full``, which has its own
     oracle, and in its shrunk form in the ``a6_nb_glm_wald`` driver
     slot. ``sf_dir`` unused: the inputs are the reference-shaped star
@@ -2960,7 +2920,7 @@ def tcga_de_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filtering machinery itself is oracle-checked via a6_filter_grid,
     # goldens live in tests/test_pipelines.py, and the composition
     # through the Wald stage is differentially attested in
-    # test_de_full_composition_differential (round-11 verdict item 6)
+    # test_de_full_composition_differential
     tags=("pipeline-A", "A1", "A5", "A6", "A6-filter", "A9"),
 )
 def tcga_de_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3159,13 +3119,13 @@ def tcga_drug_km_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
       cohort-relative size factors, same B tail per drug class.
 
     Sharing one registry slot keeps the catalog at the 48-query driver
-    cap. Round 6: both pipelines now build from the COMMITTED fixture
+    cap. Both pipelines build from the COMMITTED fixture
     parquet and the ENTIRE composition — nested-treatments cohort
     selection, cohort-relative median-of-ratios size factors, median
     split, KM + Greenwood + log CIs — is replayed by the DuckDB oracle
-    and hash-compared (previously rows-only). Floats round to 6 on
+    and hash-compared. Floats round to 6 on
     both sides; the ntile ordering (normalized, barcode) is total —
-    enforced at RUNTIME since round 11 (``ntile_strata(strict=True)``
+    enforced at RUNTIME (``ntile_strata(strict=True)``
     raises on any duplicate order key, so engine-stability no longer
     depends on fixture luck; the fixture assertion in
     tests/test_pipelines.py remains as the fast signal)."""
@@ -3468,7 +3428,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- NULL args but KEEPS the chr(10) separators around them while
       -- Spark concat_ws drops the separator too — the two produce
       -- different LINE STRUCTURES for NULL source/lang unless both
-      -- sides pin NULL -> '' (round-9 NULL-key fuzz finding)
+      -- sides pin NULL -> ''
       SELECT doc_id,
              concat(COALESCE(text, ''), chr(10),
                     'footer ' || COALESCE(source, ''),
@@ -3501,19 +3461,19 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tx_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style cross-document boilerplate-line removal
-    (text.remove_boilerplate_lines), driver-visible since round 7
-    (judge ask #4). The corpus is made multi-line deterministically —
-    each document gains a per-source footer line and a language line,
-    which repeat across >= min_docs documents and so are removed, while
-    original text lines survive unless the same full text occurs in 3+
-    docs (the corpus's planted duplicates). Exercises line splitting,
-    the distinct-doc count gate, and order-preserving reassembly; the
-    oracle replays split -> count-distinct -> filter -> string_agg."""
+    (text.remove_boilerplate_lines), driver-visible. The corpus is made
+    multi-line deterministically — each document gains a per-source
+    footer line and a language line, which repeat across >= min_docs
+    documents and so are removed, while original text lines survive
+    unless the same full text occurs in 3+ docs (the corpus's planted
+    duplicates). Exercises line splitting, the distinct-doc count gate,
+    and order-preserving reassembly; the oracle replays split ->
+    count-distinct -> filter -> string_agg."""
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         # coalesce source/lang explicitly: concat_ws would silently
         # DROP a NULL line (separator included), changing the line
-        # structure vs the oracle's concat (round-9 fuzz finding)
+        # structure vs the oracle's concat
         F.concat_ws(
             "\n",
             F.coalesce(F.col("text"), F.lit("")),
@@ -3557,8 +3517,7 @@ _SQL_TF_CTE = """
 )
 def tx_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF postings (text.tfidf: smoothed sklearn idf), oracle-
-    visible since round 7 (judge ask #4), driver slot since round 12
-    (rotation #5). One explode + term shuffle
+    visible in a driver slot. One explode + term shuffle
     builds the postings; document frequencies are a dimension-sized
     per-term aggregate broadcast back; N attaches as a broadcast
     scalar. The oracle replays the identical tokenize/count/idf
@@ -3590,7 +3549,7 @@ def tx_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("quality-filter", "perplexity", "ccnet"),
 )
 def tx_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM quality score (text.unigram_perplexity, round 9):
+    """CCNet-style LM quality score (text.unigram_perplexity):
     per-document perplexity under the corpus unigram LM — the
     perplexity-filter tier of the LLM data pipeline (Wenzek et al.
     2020 use a KenLM 5-gram; the unigram form is the same dataflow
@@ -3731,7 +3690,7 @@ def tx_ctfidf_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tx_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 ranking against a literal query (text.bm25_scores,
-    k1=1.2, b=0.75), driver-visible since round 7 (judge ask #4). The
+    k1=1.2, b=0.75), driver-visible. The
     query broadcast-filters the postings first, so only matching terms
     flow into the per-doc score aggregation; doc lengths and the
     average length come from the postings, not a second text scan. The
@@ -3789,7 +3748,7 @@ def tx_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tj_diff_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-level snapshot diff (temporal.diff_snapshots), driver-
-    visible since round 7 (judge ask #4): two deterministic snapshots
+    visible: two deterministic snapshots
     derived from orders — 'old' drops every 7th key, 'new' drops every
     5th and perturbs price (every 3rd) and priority (every 11th) — so
     the output exercises added / removed / changed(one col) /
@@ -3855,8 +3814,8 @@ def tj_diff_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cdc-merge", "upsert"),
 )
 def tj_apply_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch CDC MERGE (temporal.apply_cdc), oracle-visible since
-    round 7 (judge ask #4), driver slot since round 12 (rotation #5): snapshot = even order keys; the change log
+    """Batch CDC MERGE (temporal.apply_cdc), oracle-visible in a driver
+    slot: snapshot = even order keys; the change log
     carries TWO versions for every 6th key (latest-wins by ts) with
     deletes planted at 15/12-multiples — exercising untouched /
     inserted / updated / deleted and the latest-entry window. Log keys
@@ -3931,8 +3890,7 @@ def tj_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session's start time — the row-level form of st_session_sliding's
     aggregate (boundary rule pinned against Spark's session_window in
     unit test). Input pre-aggregated to unique (user, ts) so tied
-    timestamps cannot order differently across engines. Driver slot
-    since round 12 (rotation #5)."""
+    timestamps cannot order differently across engines."""
     ev = _t(spark, sf_dir, "events")
     e = (
         ev.filter(F.col("event_type") == "click")
@@ -4117,8 +4075,7 @@ def a12_cube_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cost is one shuffle regardless of how many margins are
     requested (vs 4 self-unioned GROUP BYs re-scanning the corpus).
     grouping_id disambiguates a real NULL group value from a margin
-    row. Complements a10_rollup_totals (ROLLUP). Driver slot since
-    round 12 (rotation #5)."""
+    row. Complements a10_rollup_totals (ROLLUP)."""
     docs = _t(spark, sf_dir, "documents")
     return (
         docs.cube("lang", "source")
@@ -4381,9 +4338,7 @@ def pp_mixture_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tx_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition rules (operators/text.repetition_metrics) over
-    the documents table. Rotated into a driver slot in round 9 (judge
-    ask #2: previously driver-invisible oracles get driver-attested
-    CORRECTNESS rows)."""
+    the documents table."""
     docs = _t(spark, sf_dir, "documents")
     return text.repetition_metrics(docs, "doc_id", "text")
 
@@ -4547,13 +4502,8 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata derived engine-side: byte length, SHA-256 content hash,
     and a size-band classification — the decode-free projection a media
     pipeline runs to prune/route payloads *before* any codec touches
-    them. The decode / feature-extract stage itself is the Arrow-batched
-    ``mapInPandas`` kernel in operators/multimodal.py (real pure-python
-    BMP/PPM/WAV codecs in operators/codecs.py, deterministic byte-level
-    fallback for formats needing native libs; exact-value-tested in
-    tests/test_multimodal.py) — not oracle-checkable in SQL, so this
-    query pins the binary schema + metadata path and the tests pin the
-    kernel."""
+    them. The query pins the binary schema + metadata path; every
+    column is oracle-checkable in SQL."""
     docs = _t(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "UTF-8")
     n_bytes = F.length(payload).cast("long")
@@ -5403,9 +5353,9 @@ _KS_CUTOFF_US = 1_705_363_200_000_000
     ),
     cum AS (
       -- totals as full-frame windows over the same partition key, NOT
-      -- a joined `tot` CTE: the engine's round-9 form keeps NULL group
-      -- keys (a null-unsafe USING join would drop them on both sides
-      -- and parity could never catch it — the round-8 watch item)
+      -- a joined `tot` CTE: the engine's form keeps NULL group keys (a
+      -- null-unsafe USING join would drop them on both sides and
+      -- parity could never catch it)
       SELECT event_type, g,
              CAST(SUM(ref_n) OVER (PARTITION BY event_type ORDER BY g
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -5443,7 +5393,7 @@ _KS_CUTOFF_US = 1_705_363_200_000_000
 )
 def qa_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov drift gate
-    (operators/quality_audit.ks_drift, round 8): per event type, the
+    (operators/quality_audit.ks_drift): per event type, the
     sup-norm distance between the value ECDFs of the first and second
     half of the events window, with the large-sample alpha=0.05
     rejection bound — the edge-free complement to qa_psi_drift (PSI
@@ -5700,9 +5650,8 @@ def tx_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays tokenization, duplicated-gram ranking, coverage and
     reassembly in plain SQL on the gram TEXT (the Spark side groups on
     xxhash64 of the same gram — identical partitioning absent 64-bit
-    collisions). Complements the cross-corpus winnowing check
-    (``text.substring_contamination``) and line-level boilerplate
-    removal: this is the within-corpus exact-substring pass."""
+    collisions). Complements line-level boilerplate removal: this is
+    the within-corpus exact-substring pass."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return text.remove_repeated_spans(docs, "doc_id", "text", k=_RS_K)
 
@@ -5770,10 +5719,10 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity is below half their part's average quantity. The
     correlated scalar subquery decorrelates into a WINDOW aggregate
     over ``PARTITION BY l_partkey`` — ONE fact shuffle, no join, no
-    broadcast. Evolution across rounds, measured: round 6 forced
-    ``F.broadcast`` on the per-part aggregate (judge finding: |part|
-    is fact-proportional under TPC-H scaling, ~2B rows at 100 TB — a
-    forced broadcast OOMs); merely dropping the hint kept a
+    broadcast. Alternatives, measured: a forced ``F.broadcast`` on the
+    per-part aggregate OOMs at scale (|part| is fact-proportional
+    under TPC-H scaling, ~2B rows at 100 TB); merely dropping the hint
+    kept a
     size-estimated broadcast whose build cost made the query the one
     superlinear scale point (0.24s→3.0s on 10x data, 12.4x); the
     window form is 0.47s→0.74s (1.6x) because the fact shuffles once
@@ -5823,9 +5772,9 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked by price. ONE lineitem aggregation serves both the HAVING
     gate and the reported quantity (the reference SQL's separate
     GROUP BY and HAVING subqueries share the plan's exchange);
-    the SF-scaled customer dim is AQE size-decided (the forced
-    broadcast this query shipped with in round 6 was the same latent
-    OOM class as q17's judged hint — at 100 TB customer is ~15B rows);
+    the SF-scaled customer dim is AQE size-decided (a forced broadcast
+    is the same latent OOM class as q17's — at 100 TB customer is ~15B
+    rows);
     the global order is a TakeOrderedAndProject, never a full sort.
     Unique-key tiebreak (o_orderkey) makes the LIMIT deterministic."""
     li = _t(spark, sf_dir, "lineitem")
@@ -5888,7 +5837,7 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a TakeOrderedAndProject. Late = shipped > 80 days after the
     order date (adapted to this schema's columns)."""
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    # ONE fact exchange (round 12; guide §2.4 "share the exchange"):
+    # ONE fact exchange (share the exchange):
     # the per-(order, supplier) aggregate, the per-order rollup, and
     # the rollup attachment are ALL keyed by l_orderkey, so the rollup
     # is computed as a WINDOW over the aggregate's own partitioning
@@ -6047,11 +5996,8 @@ def a6_poisson_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-group MLE has a closed form, so the fit's aggregate, Newton
     solve, weights and p-value hash-match a plain SQL oracle. Genes
     with a zero-sum group are excluded on BOTH sides (the MLE diverges
-    there — caller contract on poisson_glm_wald).
-
-    Promoted from BENCH_ONLY to the driver registry in round 7 (judge
-    ask #3): CORRECTNESS itself now attests the GLM fit; the slot
-    came from the redundantly-covered ``p4_isin_inlist``."""
+    there — caller contract on poisson_glm_wald). In the driver
+    registry, so the driver's correctness check attests the GLM fit."""
     li = _t(spark, sf_dir, "lineitem")
     sf = stats.size_factors(li, "l_partkey", "l_suppkey", "l_quantity")
     fact = li.select(

@@ -18,7 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -204,7 +203,7 @@ def write_config_tsvs(tmp_dir: str) -> dict[str, str]:
 
 
 # -------------------------------------------------------------------------
-# Persisted-parquet form (round 6): the same seeded tables materialized
+# Persisted-parquet form: the same seeded tables materialized
 # as plain parquet FILES committed to the repo, so an engine other than
 # this process's Spark — the driver's DuckDB oracle — can read the
 # identical bytes. The composed TCGA pipeline queries build from these

@@ -1,6 +1,4 @@
 from tcga_query_project_spark.functions.scalar import (  # noqa: F401
-    epoch_us,
     normal_sf_two_sided,
     signif_bin,
-    utc_us,
 )

@@ -7,18 +7,16 @@ friendly. No Python UDFs.
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def qident(name: str) -> str:
     """Backtick-quote an identifier for interpolation into a SQL-string
-    expression (the round-12/13 single-parse builders): backticks in
-    the name double, so ANY column name round-trips — the raw
-    f-string interpolations a backtick-bearing name could break out
-    of (round-12 ADVICE) all route through here.
+    expression (the single-parse builders): backticks in the name
+    double, so ANY column name round-trips — the raw f-string
+    interpolations a backtick-bearing name could break out of all
+    route through here.
     """
     return "`" + name.replace("`", "``") + "`"
 
@@ -80,22 +78,6 @@ NORMAL_SF_TWO_SIDED_SQL = (
     "(1.0/(1.0+0.2316419*ABS({z}))) * (-1.821255978 + (1.0/(1.0+0.2316419*ABS({z}))) * "
     "1.330274429))))), 1.0)"
 )
-
-
-def utc_us(y: int, m: int, d: int, hh: int = 0, mm: int = 0, ss: int = 0) -> int:
-    """Epoch microseconds of a UTC wall-clock instant.
-
-    All timestamp literals in engine queries are epoch integers so query
-    semantics cannot depend on the SparkSession timezone.
-    """
-    dt = _dt.datetime(y, m, d, hh, mm, ss, tzinfo=_dt.timezone.utc)
-    return int(dt.timestamp()) * 1_000_000
-
-
-def epoch_us(ts: Column) -> Column:
-    """Timestamp → epoch microseconds (BIGINT), timezone-independent.
-    DuckDB mirror: ``epoch_us(ts)``."""
-    return F.unix_micros(ts)
 
 
 #: DuckDB mirror of :func:`hash_split_bucket` (catalog determinism

@@ -193,43 +193,6 @@ def _encode_word(
     return syms
 
 
-def bpe_vocab(merges: DataFrame, encoded: DataFrame | None = None) -> DataFrame:
-    """Piece vocabulary: every symbol in the merge table (base
-    characters and EOW from the ``left``/``right`` columns, merged
-    pieces from ``merged``), with dense deterministic ids in
-    lexicographic order — ``(piece STRING, piece_id BIGINT)``.
-
-    The merge table alone CANNOT enumerate base characters that never
-    participated in a merge (a rare character the trainer saw too few
-    times to pair) — an encode can still emit them as single-char
-    pieces. Pass ``encoded`` (a :func:`bpe_encode` output) to also
-    cover every piece actually emitted over that corpus; id assignment
-    stays deterministic (lexicographic over the union). Without
-    ``encoded``, treat vocabulary misses at id-join time as OOV, the
-    ``text.encode_documents`` unk convention.
-
-    The id-assigning window is single-partition but bounded by
-    2·num_merges + distinct emitted symbols (alphabet-plus-merges
-    sized) — dimension-sized by the same contract as
-    ``text.build_vocab``'s post-limit window."""
-    from pyspark.sql.window import Window
-
-    pieces = (
-        merges.select(F.col("left").alias("piece"))
-        .union(merges.select(F.col("right").alias("piece")))
-        .union(merges.select(F.col("merged").alias("piece")))
-    )
-    if encoded is not None:
-        pieces = pieces.union(
-            encoded.select(F.explode("pieces").alias("piece"))
-        )
-    pieces = pieces.distinct()
-    w = Window.orderBy(F.col("piece").asc())
-    return pieces.select(
-        "piece", (F.row_number().over(w) - 1).cast("long").alias("piece_id")
-    )
-
-
 def bpe_encode(
     df: DataFrame,
     merges: DataFrame,
@@ -306,17 +269,3 @@ def bpe_encode(
             )
 
     return df.select(id_col, text_col).mapInPandas(run, out_schema)
-
-
-def bpe_decode_pieces(encoded: DataFrame, id_col: str) -> DataFrame:
-    """Inverse of :func:`bpe_encode` up to whitespace: concatenate
-    pieces and turn each EOW marker into a single space —
-    ``(id_col, text STRING)``. Pure expression work (no UDF)."""
-    return encoded.select(
-        F.col(id_col),
-        F.trim(
-            F.replace(
-                F.concat_ws("", F.col("pieces")), F.lit(EOW), F.lit(" ")
-            )
-        ).alias("text"),
-    )

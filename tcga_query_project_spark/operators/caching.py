@@ -18,8 +18,8 @@ Two sharp edges this module rounds off:
 
 2. **Cache lifetime.** A library function cannot unpersist before its
    caller executes the returned DataFrame, so entries outlive the call.
-   The contract: entries live until ``spark.catalog.clearCache()`` or
-   :func:`release_shared_caches`. Repeated invocations with an
+   The contract: entries live until ``spark.catalog.clearCache()``.
+   Repeated invocations with an
    *identical* input plan do not accumulate entries — Spark's
    CacheManager dedupes cacheQuery by canonicalized logical plan — so a
    long-lived session holds at most one entry per distinct input
@@ -42,7 +42,7 @@ def materialize_shared(df: DataFrame, eager: bool = True) -> DataFrame:
     concurrent) branches, where lazy first-touch population is fine and
     the extra job is pure overhead.
 
-    Lazy MULTI-consumer persists (round-12/13 clarification, ADVICE):
+    Lazy MULTI-consumer persists:
     acceptable when MEASURED faster at the call site and the race cost
     is bounded — there are NO partition-level cache locks; a broadcast
     build racing a streamed scan over a cold cache can compute the same
@@ -62,14 +62,3 @@ def materialize_shared(df: DataFrame, eager: bool = True) -> DataFrame:
         handle.count()
     _SHARED_HANDLES.append(handle)
     return handle
-
-
-def release_shared_caches() -> int:
-    """Unpersist every subtree cached via :func:`materialize_shared`;
-    returns the number of handles released. The explicit release valve
-    for long-lived sessions that cannot ``clearCache()`` globally."""
-    n = 0
-    while _SHARED_HANDLES:
-        _SHARED_HANDLES.pop().unpersist()
-        n += 1
-    return n

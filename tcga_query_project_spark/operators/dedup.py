@@ -49,52 +49,6 @@ def _shingles_sql(k: int) -> str:
     )
 
 
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dedup via hash-groupBy on normalized text: one row per
-    distinct content with the keeper id (min id) and duplicate count.
-    Equivalent semantics to ``dropDuplicates`` but keeps the lineage
-    (which ids collapsed), which a training-data pipeline needs.
-
-    Groups on the md5 of the normalized content so the shuffle carries
-    and compares a fixed 32-char key, not full documents (collision
-    probability ~2^-64 — the standard exact-dedup key at corpus scale).
-    """
-    return (
-        df.select(
-            F.col(id_col), F.md5(normalized_text(F.col(text_col))).alias("_key")
-        )
-        .groupBy("_key")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            (F.count(F.lit(1)) - 1).cast("long").alias("n_dups"),
-        )
-        .select("keep_id", "n_dups")
-    )
-
-
-def shingle_set(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Distinct word k-gram shingles per document (one row per
-    (doc, shingle)). Built with array ``transform`` over the token list
-    — no Python, no explode-then-window.
-
-    The token array is materialized in its own projection first: the
-    lambda below indexes it per shingle, and an inlined tokenizer
-    expression would re-run per element (measured 28x slower at sf0.1).
-
-    ``fan_out`` guards against a single-split scan serializing the
-    tokenize→shingle→hash stage (measured 5x at sf0.1, where
-    documents.parquet arrives as ONE partition); no-op when the scan
-    already parallelizes.
-    """
-    df = fan_out(df, id_col)
-    return df.selectExpr(
-        f"`{id_col}`", _norm_tokens_sql(text_col) + " as _toks"
-    ).selectExpr(
-        f"`{id_col}`",
-        f"explode(array_distinct({_shingles_sql(k)})) as shingle",
-    )
-
-
 #: modulus for the minhash permutation family — smallest prime > 2^32,
 #: so (2·seed+1)·v + seed·1000003 stays within signed-64 range.
 MINHASH_PRIME = 4294967311
@@ -108,8 +62,8 @@ def shingle_rows(
     over a doc-keyed window, concat, distinct — the
     :func:`jaccard_prefix_join` shingle machinery as a reusable helper.
 
-    Output is row-for-row the set :func:`shingle_set` /
-    ``explode(shingle_array(...))`` produce (same normalization, same
+    Output is row-for-row the set ``explode(shingle_array(...))``
+    produces (same normalization, same
     grams, same dedup — equality-tested), but ~30x faster to
     materialize at sf0.1 (0.26s vs 8.8s): Spark evaluates higher-order-
     function lambdas INTERPRETED, and an un-persisted
@@ -197,8 +151,9 @@ def jaccard_pairs_arrays(
     ARRAYS: two equi-joins on document id attach both arrays, then
     ``array_intersect``/sizes compute the measure per row — no
     (doc, shingle)-grain shuffle, and the join payload is one array per
-    document instead of its exploded rows. Value-identical to
-    :func:`jaccard_pairs` (both operate on distinct shingle sets)."""
+    document instead of its exploded rows. Value-identical to the
+    exploded (doc, shingle)-row join the DuckDB oracle replays (both
+    operate on distinct shingle sets)."""
     a = sh_arr.select(
         F.col(id_col).alias("id_a"), F.col("shingles").alias("_sa")
     )
@@ -239,7 +194,7 @@ def minhash_signature(
             "cast(conv(substring(md5(shingle), 1, 8), 16, 10) as bigint)"
         ).alias("_v"),
     )
-    # single-parse SQL aggregates (round 12 — the Column-object loop
+    # single-parse SQL aggregates (the Column-object loop
     # cost ~10 py4j round trips per seed at build time; identical
     # analyzed plan). The offset is a 64-bit literal (L suffix): an
     # IntegerType `i * 1000003` would wrap past int32 for
@@ -270,8 +225,8 @@ def _band_signatures(
     bands = [
         seeds[j : j + band_size] for j in range(0, len(seeds), band_size)
     ]
-    # one SQL-parsed inline() over the per-band struct array (round 12
-    # — replaces a ~50-py4j-call Column forest per build; inline is
+    # one SQL-parsed inline() over the per-band struct array (not a
+    # ~50-py4j-call Column forest per build; inline is
     # explode-then-field-select in one generator, identical output)
     parts = ", ".join(
         "struct(cast({j} as bigint) as band, "
@@ -320,37 +275,6 @@ def lsh_candidates(
     )
 
 
-def jaccard_pairs(
-    pairs: DataFrame, shingles: DataFrame, id_col: str
-) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs: |A∩B| via a shingle
-    equi-join, |A∪B| = |A|+|B|−|A∩B|. Only candidate pairs are scored —
-    the expensive exact measure runs on the LSH-filtered set.
-    """
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).cast("double").alias("_sz"))
-    sa = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("double").alias("_inter"))
-    )
-    return (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .na.fill({"_inter": 0.0})
-        .join(sizes.select(F.col(id_col).alias("id_a"), F.col("_sz").alias("_sza")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("_sz").alias("_szb")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("_inter") / (F.col("_sza") + F.col("_szb") - F.col("_inter")), 6
-            ).alias("jaccard"),
-        )
-    )
-
-
 def near_duplicates(
     df: DataFrame,
     id_col: str,
@@ -363,7 +287,7 @@ def near_duplicates(
     """MinHash-LSH near-duplicate pipeline: shingle → minhash → band →
     candidate join → exact-Jaccard verify → threshold.
 
-    Array-native dataflow (round 2): shingles stay one ARRAY per
+    Array-native dataflow: shingles stay one ARRAY per
     document, signatures are a narrow map over that array
     (:func:`minhash_signature_arrays`), so the FIRST shuffle in the
     pipeline is the LSH band equi-join and the verify stage joins one
@@ -438,7 +362,7 @@ def jaccard_prefix_join(
     attainable overlap: ``1 + min(|A|-i-1, |B|-j-1) >= t/(1+t) *
     (|A|+|B|)`` — measured 193k -> 69k candidates on the bench
     corpus); the exact verify counts intersections through a
-    candidate-keyed postings join (the :func:`jaccard_pairs` shape),
+    candidate-keyed postings join ((doc, token) rows joined on token),
     reusing the cached postings. The persisted spine (postings +
     prefix rows) is flat strings/ints only; both guards (-1e-9 on
     ceil and on the positional bound) only ever ADD candidates, so a
@@ -499,10 +423,10 @@ def jaccard_prefix_join(
             .distinct()
         )
     # the FLAT postings spine: feeds the frequency agg, the key-sort
-    # agg, and BOTH verify sides — persist it. LAZY since round 12:
+    # agg, and BOTH verify sides — persist it. LAZY:
     # the eager count() paid one full extra pass per cache just to
-    # pre-populate (measured 5.0s -> 3.5s wall at sf0.1). Round-13
-    # correction (ADVICE): there are NO partition-level cache locks —
+    # pre-populate (measured 5.0s -> 3.5s wall at sf0.1). There are NO
+    # partition-level cache locks —
     # if AQE broadcasts the rk frequency table, its build can race the
     # streamed scan over cold partitions and double-compute them; that
     # worst case equals the no-persist baseline (each consumer computes
@@ -574,7 +498,7 @@ def jaccard_prefix_join(
         )
     )
     # exact verify: intersection via a candidate-keyed postings join
-    # (the jaccard_pairs shape) against the cached FLAT postings
+    # against the cached FLAT postings
     pa = post.select(F.col("_id").alias("doc_a"), "_tok")
     pb = post.select(F.col("_id").alias("doc_b"), "_tok")
     inter = (
@@ -952,7 +876,7 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
     # bit b (our numbering: b//4 = hex-char index, 3 - b%4 = bit within
     # nibble) is bit (15 - b) of the integer value of the 4-char prefix.
-    # Single-parse SQL aggregates (round 12 — the 16-column Column loop
+    # Single-parse SQL aggregates (the 16-column Column loop
     # cost ~200 py4j round trips per build; identical analyzed plan).
     hashed = toks.selectExpr(
         f"`{id_col}`",
@@ -1008,7 +932,7 @@ def decontaminate(
     Catalyst re-executes the tokenize→shingle pipeline per consumer
     and re-expands the interpreted shingle lambda inside the
     explode's inferred not-empty filter (measured 8.8s → 0.6s at
-    sf0.1 when this was first benchmarked in round 7). At cluster
+    sf0.1). At cluster
     scale the corpus-side persist's role is a parquet checkpoint or
     simply recomputation — the contract is that the BAND JOIN, not
     the shingle pass, is the first shuffle.
@@ -1185,15 +1109,14 @@ def build_dedup_index(
     ``mode`` must be ``overwrite`` or ``errorifexists``: this builder
     derives bands by reading back the signatures store, so an
     ``append`` here would re-band the ENTIRE history on every call
-    (quadratic band growth across appends). Incremental growth goes
-    through :func:`append_to_index`, which bands only the delta.
+    (quadratic band growth across appends).
     """
     if mode not in ("overwrite", "errorifexists", "error"):
         raise ValueError(
             f"build_dedup_index: mode={mode!r} unsupported — full "
-            "(re)builds only; use append_to_index for deltas"
+            "(re)builds only"
         )
-    # shingle ROWS on the codegen gram path (round 12): the signature
+    # shingle ROWS on the codegen gram path: the signature
     # aggregate is this chain's only consumer and wants exploded rows
     # anyway, so the interpreted shingle-array lambda (and the persist
     # that guarded its re-expansion) is pure overhead here — see
@@ -1233,8 +1156,7 @@ def dedup_against_index(
     shingle Jaccard is by-design unavailable and the estimator is the
     standard index-side verify). Clean the delta with an anti-join on
     the returned ids; find delta-internal duplicates separately with
-    :func:`near_duplicates` on the delta (history cannot see them);
-    then :func:`append_to_index` the survivors.
+    :func:`near_duplicates` on the delta (history cannot see them).
 
     num_hashes is read from the stored signature schema — the delta is
     always hashed with the index's own family.
@@ -1249,7 +1171,7 @@ def dedup_against_index(
     # the delta signatures feed TWO consumers (band keys + the
     # agreement verify) — persist, or the whole delta hash pipeline
     # executes twice (near_duplicates contract). The shingle stage
-    # itself runs on the codegen row path (shingle_rows, round 12) —
+    # itself runs on the codegen row path (shingle_rows) —
     # single consumer, no interpreted array lambda.
     sig_n = materialize_shared(
         minhash_signature(
@@ -1289,37 +1211,3 @@ def dedup_against_index(
         )
         .filter(F.col("est_jaccard") >= est_threshold)
     )
-
-
-def append_to_index(
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    index_dir: str,
-    k: int = 3,
-    band_size: int = 2,
-) -> None:
-    """Append delta documents (the post-dedup survivors) to a
-    :func:`build_dedup_index` store — same family, append mode. Caller
-    contract: ids are globally unique across appends (reappending an
-    id creates duplicate index rows, which only cost extra candidate
-    checks, never correctness — the estimator dedups per pair)."""
-    spark = new_docs.sparkSession
-    sig_i = spark.read.parquet(f"{index_dir}/signatures")
-    seeds = sorted(int(c[3:]) for c in sig_i.columns if c.startswith("_mh"))
-    sh = shingle_array(new_docs, id_col, text_col, k)
-    # persist the delta signatures across the two writes: they are
-    # independent jobs, and un-persisted lineage would hash the delta
-    # twice (build_dedup_index avoids this by deriving bands from the
-    # written signatures, but an APPEND cannot read back — it would
-    # re-band the whole history); the delta is ingest-batch-sized, so
-    # the cache is cheap and released before returning
-    sig = minhash_signature_arrays(sh, id_col, len(seeds)).persist()
-    try:
-        bands = _band_signatures(sig, id_col, seeds, band_size)
-        bands.write.mode("append").partitionBy("band").parquet(
-            f"{index_dir}/bands"
-        )
-        sig.write.mode("append").parquet(f"{index_dir}/signatures")
-    finally:
-        sig.unpersist()

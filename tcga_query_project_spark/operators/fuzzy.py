@@ -26,7 +26,7 @@ Caveats, stated rather than hidden: the variant count is O(L^d), so
 this is for SHORT strings (names, titles, codes — not documents; for
 documents use MinHash in :mod:`.dedup`); very common variants (short
 strings sharing a 1-char delete) skew the join key, the standard
-AQE-skew / salting regime of :mod:`.partitioning`.
+AQE skew-join regime.
 
 Reference analog: none (serves the entity-resolution surface of the
 LLM-data-pipeline brief).
@@ -34,15 +34,15 @@ LLM-data-pipeline brief).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def _delete1_sql(s: str) -> str:
     """Array of all strings obtained by deleting exactly ONE character
     — pure expression form: transform over the position sequence.
-    ``s`` is a SQL expression string (round 13 single-parse builders:
-    one parse instead of a py4j round trip per substring op)."""
+    ``s`` is a SQL expression string (one parse instead of a py4j
+    round trip per substring op)."""
     return (
         f"CASE WHEN length({s}) <= 0 THEN CAST(array() AS ARRAY<STRING>) "
         f"ELSE transform(sequence(1, length({s})), "
@@ -58,7 +58,7 @@ def delete_variants_sql(s: str, max_dist: int) -> str:
     entity resolution targets, and O(L^3) variant counts at d=3 stop
     paying for themselves."""
     if max_dist not in (1, 2):
-        raise ValueError("delete_variants supports max_dist 1 or 2")
+        raise ValueError("fuzzy deletion neighborhoods support max_dist 1 or 2")
     v0 = f"array({s})"
     v1 = _delete1_sql(s)
     if max_dist == 1:
@@ -77,15 +77,6 @@ def delete_variants_sql(s: str, max_dist: int) -> str:
         "ELSE CAST(array() AS ARRAY<STRING>) END"
     )
     return f"array_distinct(concat({v0}, {v1}, {v2}))"
-
-
-def delete_variants(name: str, max_dist: int) -> Column:
-    """Column form of :func:`delete_variants_sql` over the column
-    ``name`` (round 13: takes the column NAME — Column objects have no
-    stable SQL rendering to interpolate)."""
-    from tcga_query_project_spark.functions.scalar import qident
-
-    return F.expr(delete_variants_sql(qident(name), max_dist))
 
 
 def _variant_table(
@@ -125,34 +116,6 @@ def fuzzy_pairs(df: DataFrame, col: str, max_dist: int = 2) -> DataFrame:
             F.levenshtein(F.col("name_a"), F.col("name_b")).cast("bigint"),
         )
         .filter(F.col("dist") <= max_dist)
-    )
-
-
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    max_dist: int = 2,
-) -> DataFrame:
-    """Two-table fuzzy equi-join on short string keys: every
-    (left_col, right_col) value pair within Levenshtein ``max_dist``,
-    as ``(left_col, right_col, dist)`` over the deduplicated key
-    domains. Join the output back to the facts on each side to
-    materialize row-level matches (keeps the expensive distance work
-    on the small distinct domain). Includes exact matches (dist 0)."""
-    va = _variant_table(left, left_col, max_dist, "_l")
-    vb = _variant_table(right, right_col, max_dist, "_r")
-    return (
-        va.join(vb, "_variant")
-        .select("_l", "_r")
-        .distinct()
-        .withColumn(
-            "dist", F.levenshtein(F.col("_l"), F.col("_r")).cast("bigint")
-        )
-        .filter(F.col("dist") <= max_dist)
-        .withColumnRenamed("_l", left_col)
-        .withColumnRenamed("_r", right_col)
     )
 
 

@@ -626,7 +626,7 @@ def _fit_core_shrunk(
     robust scale (the estimated prior,
     :func:`estimate_dispersion_prior_variance`, narrows it further).
 
-    Outlier REPLACEMENT (round 6 — DESeq2's minReplicatesForReplace):
+    Outlier REPLACEMENT (DESeq2's minReplicatesForReplace):
     when a gene is flagged AND both groups have ≥ 7 replicates, the
     flagged counts are replaced by their group's 20%-trimmed mean of
     normalized counts re-scaled by the sample's size factor, and the
@@ -906,7 +906,7 @@ def nb_glm_wald_shrunk(
        (``cooks_outlier = 1``) and their p-value withheld (NaN) —
        DESeq2's outlier gate.
 
-    Round 6 closed the two previously-documented simplifications:
+    Two DESeq2 refinements over the plain MAP fit:
     ``prior_sigma2=None`` (default) now ESTIMATES the prior variance
     from the data (:func:`estimate_dispersion_prior_variance` —
     MAD²-around-trend minus trigamma sampling noise, floored at 0.25,

@@ -458,9 +458,8 @@ def triangle_counts(
     # (long, long) edge list ONCE — same lineage discipline as
     # pagerank/connected_components (reliable checkpoint() on a real
     # cluster); a lazy function-scope persist would leak executor
-    # memory with no unpersist point (the round-6 dd_index_dedup
-    # lesson, in cache form). Round-12 note: a lazy variant was
-    # evaluated and rejected — localCheckpoint executes its stages at
+    # memory with no unpersist point. A lazy variant was evaluated and
+    # rejected — localCheckpoint executes its stages at
     # call time even with eager=False, and the persist form only moved
     # the same one-time materialization from build to exec while
     # bloating the static plan metrics.

@@ -17,13 +17,11 @@ Check types (constructors below):
   count(distinct) — the one check that is NOT map-side-only; it adds
   the standard distinct expansion to the single pass);
 - ``in_set(col, values)`` — categorical domain;
-- ``matches(col, regex, min_frac)`` — format conformance floor;
 - ``row_count(lo, hi)`` — batch-size sanity bounds.
 
 Output: one row per check — ``(check STRING, column STRING, metric
-DOUBLE, threshold DOUBLE, passed BOOLEAN)`` — plus
-:func:`audit_passed` for the gate decision. Deterministic; no
-sampling.
+DOUBLE, threshold DOUBLE, passed BOOLEAN)``; the gate passes iff
+every row passed. Deterministic; no sampling.
 
 Reference analog: none (the reference trusts GDC); this serves the
 pipeline-hygiene surface a production ingest needs (the reference's
@@ -103,14 +101,6 @@ def in_set(col: str, values: Sequence[str], min_frac: float = 1.0) -> Check:
     )
 
 
-def matches(col: str, pattern: str, min_frac: float = 1.0) -> Check:
-    # NULL counts as non-conforming (same rationale as in_set)
-    ok = F.coalesce(F.col(col).rlike(pattern), F.lit(False)).cast("double")
-    return Check(
-        "matches", col, F.avg(ok), float(min_frac), at_most=False
-    )
-
-
 def row_count(lo: int, hi: int | None = None) -> tuple[Check, ...]:
     checks = (
         Check(
@@ -168,8 +158,7 @@ def audit(df: DataFrame, checks) -> DataFrame:
                 F.lit(c.threshold).alias("threshold"),
                 # NULL metric (all-null column, empty batch) must FAIL
                 # the check, not vanish from the gate: a NULL
-                # comparison would make audit_passed() silently
-                # approve an empty ingest
+                # comparison would silently approve an empty ingest
                 F.coalesce(
                     (
                         (F.col(f"_m{i}") <= F.lit(c.threshold))
@@ -187,12 +176,6 @@ def audit(df: DataFrame, checks) -> DataFrame:
     )
 
 
-def audit_passed(report: DataFrame) -> bool:
-    """Gate decision: True iff every check passed. (Eager — the report
-    is check-count-sized.)"""
-    return report.filter(~F.col("passed")).limit(1).count() == 0
-
-
 # =====================================================================
 # Distribution drift between snapshots (PSI)
 # =====================================================================
@@ -203,7 +186,7 @@ def _bin_label_sql(col: str, edges: Sequence[float]) -> str:
     ``'b' || (number of edges <= value)`` — a branch-free form whose
     SQL mirror is a sum of boolean casts, so Spark and any oracle
     engine bin identically (NULL → ``'__null__'``). Single parsed SQL
-    string (round 12 — was a per-edge Column loop)."""
+    string (was a per-edge Column loop)."""
     idx = " + ".join(
         f"cast((`{col}` >= {float(e)!r}D) as int)" for e in edges
     )
@@ -411,14 +394,14 @@ def column_profile(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     # exchange reuse fires. Materialize the distribution ONCE — the
     # triangle_counts lineage discipline; distribution-sized, not
     # corpus-sized (reliable checkpoint() on a real cluster).
-    # Round-12 note: evaluated making this lazy (shared persist) — a
+    # Evaluated making this lazy (shared persist) — a
     # DataFrame localCheckpoint executes its AQE stages at call time
     # even with eager=False, and the persist form kept runtime work
     # identical (the subtree executes exactly once per action either
     # way) while replicating the subtree in the static plan metrics;
     # the eager checkpoint stays as the honest-static-plan form.
     counted = counted.localCheckpoint(eager=True)
-    # single-parse SQL aggregates (round 13): same expression trees,
+    # single-parse SQL aggregates: same expression trees,
     # ~5x fewer py4j round trips per build
     nn = "CASE WHEN _v IS NOT NULL THEN _c END"
     stats = counted.groupBy("column").agg(
@@ -472,8 +455,8 @@ def ks_drift(
     round_to: int = 6,
 ) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov drift gate between two snapshots,
-    per group — the sup-norm ECDF complement to :func:`psi_drift`
-    (round 8): PSI measures aggregate bin-share movement and needs
+    per group — the sup-norm ECDF complement to :func:`psi_drift`:
+    PSI measures aggregate bin-share movement and needs
     hand-picked edges; KS is edge-free and maximally sensitive to a
     LOCATION shift anywhere in the distribution (a quality-score or
     doc-length distribution sliding sideways moves D long before any
@@ -494,13 +477,11 @@ def ks_drift(
     values; route NULL-share drift through :func:`psi_drift`'s
     ``'__null__'`` bin); groups with EITHER side empty are dropped
     (no ECDF to compare — deterministic on both engines). NULL GROUP
-    KEYS form their own group, exactly as ``groupBy`` treats them —
-    round 9: the previous form joined cumulative counts to per-group
-    totals on bare ``gcols``, and the null-unsafe equi-join silently
-    dropped NULL-keyed groups from the drift report (the round-8 judge
-    watch item). Totals are now full-frame windows over the SAME
-    partition keys, so there is no join to lose them in — and one
-    shuffle + two broadcasts disappear from the plan.
+    KEYS form their own group, exactly as ``groupBy`` treats them: a
+    join of cumulative counts to per-group totals on bare ``gcols``
+    would silently drop NULL-keyed groups (a null-unsafe equi-join), so
+    totals are full-frame windows over the SAME partition keys — no
+    join to lose them in, and one shuffle + two broadcasts fewer.
 
     Scale shape: one (group, grid-value) count shuffle whose output is
     grid-cardinality-sized, then per-group cumulative AND full-frame

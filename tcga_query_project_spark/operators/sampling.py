@@ -127,17 +127,16 @@ def pack_shards(
        data distribution (unlike range-partitioning's sampled bounds);
     2. per-block token totals aggregate, then roll up a second level
        into SUPERBLOCKS of ``superblock_factor`` blocks; the superblock
-       totals — keyspace/(block_size·superblock_factor) rows (round-6
-       judge ask #5: the single-level form's state grew as
-       corpus/block_size) — are prefix-summed in ONE tiny window task
-       (lazy; round 12 — building the plan no longer executes the
-       upstream chain) unless ``return_total=True``, whose caller needs
-       the grand total as a driver literal and therefore keeps the
-       eager driver collect. Block offsets are then recovered
-       DISTRIBUTEDLY: superblock offset (broadcast) + a within-
-       superblock window cumsum over the block totals — that window
-       partitions by superblock (≤ ``superblock_factor`` rows per
-       partition);
+       totals — keyspace/(block_size·superblock_factor) rows (a
+       single-level form's state would grow as corpus/block_size) — are
+       prefix-summed in ONE tiny window task (lazy: building the plan
+       does not execute the upstream chain) unless
+       ``return_total=True``, whose caller needs the grand total as a
+       driver literal and therefore keeps the eager driver collect.
+       Block offsets are then recovered DISTRIBUTEDLY: superblock offset
+       (broadcast) + a within-superblock window cumsum over the block
+       totals — that window partitions by superblock (≤
+       ``superblock_factor`` rows per partition);
     3. each row's global cumsum = its block offset (broadcast join —
        16 bytes per non-empty block, JVM-side only, never a Python
        list) + a within-block window cumsum — the window partitions by
@@ -195,7 +194,7 @@ def pack_shards(
             sb_offsets or [(0, 0)], "_sb long, _sb_offset long"
         )
     else:
-        # LAZY top level (round 12): the superblock prefix sum is an
+        # LAZY top level: the superblock prefix sum is an
         # exclusive cumsum over superblock TOTALS — at most
         # keyspace/(block_size·superblock_factor) rows, the same bound
         # the eager branch enforced on driver memory, now one tiny
@@ -206,7 +205,7 @@ def pack_shards(
         # sharing still computes a persisted upstream only once per
         # action.
         #
-        # Round 13 (ADVICE): the lazy path enforces the SAME
+        # The lazy path enforces the SAME
         # _MAX_DRIVER_SUPERBLOCKS bound the eager collect does — as a
         # row_number guard inside the one window pass (the single
         # prefix-sum task is exactly the state the cap protects), so a
@@ -268,50 +267,6 @@ def pack_shards(
     if return_total:
         return out, int(run)
     return out
-
-
-def temperature_weights(
-    df: DataFrame,
-    domain_col: str,
-    temperature: float,
-    total_budget: float | None = None,
-) -> dict[str, float]:
-    """Temperature-scaled mixture weights from observed domain sizes —
-    the multilingual/multi-domain rebalancing rule (sampling
-    probability ∝ size^(1/T), mBERT/XLM-R exponent form with
-    T = 1/alpha): T = 1 keeps natural proportions, T → ∞ approaches
-    uniform, pushing mass from head domains to the tail without
-    hand-tuning per-domain weights.
-
-    Returns the ``weights`` dict :func:`sample_mixture` consumes, with
-    per-domain weight = target_share / natural_share, scaled so the
-    expected output row count is ``total_budget`` (default: the input
-    size — pure re-balancing). Weights above 1 oversample (duplicate)
-    tail domains, matching how the temperature rule is actually
-    trained on.
-
-    Eager by design: one dimension-sized aggregate (a weights dict is
-    driver state however it is produced); the heavy re-sampling pass
-    stays lazy inside sample_mixture.
-    """
-    if temperature <= 0:
-        raise ValueError(f"temperature must be > 0, got {temperature}")
-    counts = {
-        r["d"]: r["n"]
-        for r in df.groupBy(F.col(domain_col).alias("d"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-        if r["d"] is not None
-    }
-    total = float(sum(counts.values()))
-    if not total:
-        return {}
-    budget = float(total_budget) if total_budget is not None else total
-    powered = {d: (n / total) ** (1.0 / temperature) for d, n in counts.items()}
-    z = sum(powered.values())
-    return {
-        d: round(budget * (p / z) / counts[d], 6) for d, p in powered.items()
-    }
 
 
 def pps_systematic_sample(
@@ -443,8 +398,7 @@ def dsir_select(
     in-domain docs) than under the raw-corpus distribution, then draw
     ``k`` documents by Gumbel-top-k — sampling WITHOUT replacement
     proportionally to the importance weights, the paper's exact
-    selection rule. This is the principled replacement for a hard
-    classifier threshold when composing a pre-training mixture.
+    selection rule.
 
     ``target_col`` is a boolean column marking the target slice (NULL
     counts as false). Features are the paper's: unigrams AND bigrams of
@@ -518,7 +472,7 @@ def dsir_select(
         id_col, "_is_t", (md5_prefix_long(F.col("_feat")) % b_lit).alias("_b")
     )
     # Reduce the corpus-sized feature stream to per-(doc, bucket)
-    # OCCURRENCE COUNTS in one aggregation (round 12): every consumer
+    # OCCURRENCE COUNTS in one aggregation: every consumer
     # below — bucket counts, totals, per-doc scores — derives from this
     # table's single exchange (ReusedExchange dedups the identical
     # subtree at runtime), so the explode + md5 feature pass runs ONCE
@@ -526,7 +480,7 @@ def dsir_select(
     # Values are unchanged: counts are exact integers, and per-doc
     # Σ c_b·lr_b replaces Σ_occurrences lr_b — fewer FP additions of
     # the same terms (error ≤ 0.5 ulp per product vs (c−1) ulp of
-    # repeated addition), absorbed by the same round-6 grid that
+    # repeated addition), absorbed by the same rounding grid that
     # already absorbs partial-aggregation order nondeterminism.
     doc_bkt = feats.groupBy(id_col, "_is_t", "_b").agg(
         F.count(F.lit(1)).cast("double").alias("_c")

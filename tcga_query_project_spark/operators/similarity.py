@@ -96,8 +96,8 @@ def _rank_top_k(scored: DataFrame, k: int) -> DataFrame:
 
 def array_stats(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Typed-array column profile: dimensionality, L2 norm, mean /
-    min / max component, RMS. The multimodal-metadata pattern: opaque
-    payload + cheap per-row derived features, all expression-level."""
+    min / max component, RMS: cheap per-row derived features, all
+    expression-level."""
     v = F.col(vec_col)
     total = F.aggregate(
         F.transform(v, lambda x: x.cast("double")), F.lit(0.0), lambda acc, x: acc + x

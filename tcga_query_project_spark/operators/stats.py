@@ -29,8 +29,8 @@ def size_factors(
     (their log-geomean is -inf in DESeq2). Then per sample:
     ``sf = exp(median(ln(count) - log_geomean))`` over surviving genes.
 
-    Scale shape (reworked round 10 — this was the fattest spill in
-    BENCH_STRESS at 100x data): the per-sample exact median comes from
+    Scale shape (this was the fattest spill in BENCH_STRESS at 100x
+    data): the per-sample exact median comes from
     a sample-partitioned window sort + middle-rank pick instead of
     ``percentile()``, whose per-group value-map buffers were the 4 GB
     memory-spill (object-hash aggregation holds every distinct ratio
@@ -50,7 +50,7 @@ def size_factors(
     ZERO spill (this form; 56 s inside the full ten-query stress
     sequence, still zero spill — BENCH_STRESS.json).
     """
-    # Single-parse SQL expressions (round 13): identical analyzed plan
+    # Single-parse SQL expressions: identical analyzed plan
     # to the previous Column forest (hash-checked), ~5x fewer py4j
     # round trips per build. Literal spellings matter for plan
     # equality: bare ints stay ints, 0.5D/1.0D are the double literals
@@ -145,7 +145,7 @@ def vst_fitted(
     regression inputs across engines so the DuckDB oracle agrees
     exactly (catalog determinism conventions); None = full precision.
 
-    LAZY since round 12: the trend fit rides the SAME action as the
+    LAZY: the trend fit rides the SAME action as the
     transform — the one-row coefficient table enters as a broadcast
     cross join (exactly how the DuckDB oracle phrases it) and the
     degenerate-trend fallback becomes a CASE on the broadcast columns
@@ -159,7 +159,7 @@ def vst_fitted(
     VALUES are bit-identical either way (same doubles, same
     expression tree).
     """
-    # Single-parse SQL expressions (round 13): identical optimized
+    # Single-parse SQL expressions: identical optimized
     # plan to the previous Column forest (diff-checked in-session),
     # ~10x fewer py4j round trips per build. Double literals spelled
     # with D suffixes to match what the Python floats produced; bare
@@ -608,8 +608,9 @@ def independent_filter_padj(
     2. for each theta: BH over the genes with ``baseMean >= cutoff``
        and non-NULL p; count rejections at ``alpha``.
     3. select theta by the lowess rule (:func:`select_filter_theta`).
-    4. final padj: BH over the kept genes at the chosen cutoff; genes
-       filtered out (or with NULL p) get ``padj`` NULL — DESeq2's NA.
+    4. final padj: BH over the kept genes at the chosen cutoff, one
+       row window over the input; genes filtered out (or with NULL p)
+       get ``padj`` NULL — DESeq2's NA.
 
     Output: the input rows plus ``padj``, ``filter_theta`` and
     ``filter_threshold`` (the chosen quantile and baseMean cutoff,
@@ -628,8 +629,8 @@ def independent_filter_padj(
     collect — both dimension-sized, the same guarded-collect class as
     the k-group log-rank). The rejection grid itself is distributed: a
     broadcast of the 50-row cutoff table against the gene table, BH per
-    theta via the distinct-p formulation (no global row window), one
-    grouped count back. The gene-level results table this consumes is
+    theta via the distinct-p formulation, one grouped count back. The
+    gene-level results table this consumes is
     bounded by the annotation (~60k genes), so the 50x expansion is
     ~3M intermediate rows at worst — flat cost at any cohort size,
     since samples were already aggregated away by the Wald stage.
@@ -664,19 +665,15 @@ def independent_filter_padj(
     # equivalent — lowess is invariant to affine x rescaling)
     j = select_filter_theta(num_rej)
     cutoff = float(rej[j]["_cut"]) if rej else 0.0
-    kept_cond = F.col(base_mean_col) >= F.lit(cutoff)
-    kept = bh_adjust_distinct(tested.filter(kept_cond), p, out=out)
-    # NULL baseMean must land in the dropped branch, not vanish: a bare
-    # `< cutoff` filter is NULL (false) for it, same as the kept side
-    dropped = tested.filter(
-        ~kept_cond | F.col(base_mean_col).isNull()
-    ).withColumn(out, F.lit(None).cast("double"))
-    missing = df.filter(F.col(p).isNull()).withColumn(
-        out, F.lit(None).cast("double")
-    )
+    # one consumer of the input: BH over p masked to the kept genes. The
+    # NULL-aware bh_adjust counts only non-NULL p and gives the rest a
+    # NULL padj, so filtered genes (a NULL baseMean included: the
+    # comparison is NULL) and untested genes come out NULL in place.
+    # Tied p share one padj, so the tiebreak cannot move a value.
+    kept_p = F.when(F.col(base_mean_col) >= F.lit(cutoff), F.col(p))
     return (
-        kept.unionByName(dropped)
-        .unionByName(missing)
+        bh_adjust(df.withColumn("_kept_p", kept_p), "_kept_p", [], F.col(p), out=out)
+        .drop("_kept_p")
         .withColumn("filter_theta", F.lit(round(thetas[j], 6)))
         .withColumn("filter_threshold", F.lit(round(cutoff, 6)))
     )
@@ -767,7 +764,6 @@ POISSON1_CDF = (
 )
 
 
-
 #: The same thresholds as 8-hex-digit STRING literals
 #: (``format(floor(t * 2^32), '08x')``): an 8-char lowercase-hex md5
 #: slice compares lexicographically exactly like its integer value, so
@@ -779,32 +775,11 @@ POISSON1_CDF_HEX = tuple(
 )
 
 
-def poisson1_weight(u: Column) -> Column:
-    """Poisson(1) draw from a uniform ``u`` in [0, 1) by inverse CDF —
-    the per-row resample count of the Poisson bootstrap. Branch chain
-    over 8 fixed thresholds; identical CASE chain in the SQL mirror.
-    (Distribution-reference form; the hot path uses
-    :func:`poisson1_weight_hex` on raw digest slices.)"""
-    w: Column = F.lit(len(POISSON1_CDF))
-    for k in range(len(POISSON1_CDF) - 1, -1, -1):
-        w = F.when(u < F.lit(POISSON1_CDF[k]), F.lit(k)).otherwise(w)
-    return w
-
-
-def poisson1_weight_hex(slice8: Column) -> Column:
-    """Poisson(1) draw from an 8-char lowercase-hex digest slice by
-    STRING comparison against :data:`POISSON1_CDF_HEX` — equivalent to
-    :func:`poisson1_weight` on ``int(slice, 16) / 2^32`` but with no
-    string->integer conversion (fixed-width lowercase hex orders
-    lexicographically as its value; both engines compare ASCII)."""
-    w: Column = F.lit(len(POISSON1_CDF_HEX))
-    for k in range(len(POISSON1_CDF_HEX) - 1, -1, -1):
-        w = F.when(slice8 <= F.lit(POISSON1_CDF_HEX[k]), F.lit(k)).otherwise(w)
-    return w
-
-
 def poisson1_weight_hex_sql(slice_expr: str) -> str:
-    """SQL-string form of :func:`poisson1_weight_hex` (round 12): a
+    """Poisson(1) draw from an 8-char lowercase-hex digest slice by
+    STRING comparison against :data:`POISSON1_CDF_HEX` (fixed-width
+    lowercase hex orders lexicographically as its value; both engines
+    compare ASCII), so no string->integer conversion is needed. A
     searched CASE whose conditions test the thresholds in ascending
     order — exactly the evaluation order of the nested when/otherwise
     chain, one parsed expression instead of ~20 py4j round trips per
@@ -882,7 +857,7 @@ def bootstrap_ci(
     # one digest -> four 8-hex-char slices -> four replicate weights.
     # The four slices are aggregated as EIGHT sum columns per
     # (group, digest group) instead of fanning out one row per
-    # replicate (round 12): the old posexplode quadrupled the generate
+    # replicate: the old posexplode quadrupled the generate
     # output (n_rows x n_boot rows through the hash aggregate — the
     # measured majority of this operator's cost at sf0.1, +1.3s on a
     # 1.4s md5 pass); the wide aggregate keeps the fan-out at
@@ -1033,7 +1008,7 @@ def cuped_ab(
     user-keyed aggregate, the whole readout is two shuffles at any
     event volume.
     """
-    # Single-parse SQL expressions throughout (round 12): the Column-
+    # Single-parse SQL expressions throughout: the Column-
     # object forest here cost ~3,300 py4j round trips per build (~0.7s
     # of driver wall per bench rep) for a query whose execution is a
     # quarter of that. Intermediate named columns hold exactly the

@@ -71,8 +71,7 @@ def asof_join(
         raise ValueError(f"unknown direction: {direction!r}")
     # the _side/_ets/_r_* names are RESERVED (docstring): a left column
     # with one of those names would silently duplicate under the
-    # round-12 select form (withColumn used to replace it) — fail loud
-    # instead (round-12 ADVICE)
+    # select form (withColumn would replace it) — fail loud instead
     reserved = {"_side", "_ets", *(f"_r_{c}" for c in payload_cols)}
     collisions = sorted(set(left.columns) & reserved)
     if collisions:
@@ -91,7 +90,7 @@ def asof_join(
             else f"CAST({col} AS DOUBLE)"
         )
 
-    # Single-parse SQL expressions (round 13 — one parse per side
+    # Single-parse SQL expressions (one parse per side
     # instead of a py4j round trip per column; identical plans,
     # hash-checked). Right payloads travel under reserved names so a
     # left column with the same name never conflates with them in the
@@ -110,7 +109,7 @@ def asof_join(
     # no JOIN ... ON l.k = r.k (incl. DuckDB/pandas ASOF) ever
     # produces. Dropping NULL-key RIGHT rows makes the NULL-key
     # partition all-left: those rows emit with NULL payloads, exactly
-    # the left-join convention (round-9 NULL-group fuzz finding).
+    # the left-join convention (pinned by the NULL-group fuzz grid).
     r_base_cols = {on, "_ets", *(f"_r_{c}" for c in payload_cols), "_side"}
     r_tagged = right.filter(f"{q(on)} IS NOT NULL").selectExpr(
         q(on),
@@ -238,8 +237,7 @@ def range_join(
     """Point-in-interval join: every ``points`` row pairs with every
     ``intervals`` row of the same ``on`` key whose
     ``[start_ts, end_ts]`` (inclusive both ends) contains ``point_ts``
-    — the batch sibling of streaming/joins.interval_join, and the
-    second temporal-join primitive (with as-of) that SURVEY §2.3 notes
+    — the temporal-join primitive (with as-of) that SURVEY §2.3 notes
     Spark lacks as a built-in.
 
     A naive ``ON p.ts BETWEEN i.start AND i.end`` plans as a broadcast
@@ -518,8 +516,8 @@ def maintain_grouped_agg(
       produced by :func:`grouped_agg_snapshot` or any equivalent
       groupBy). ``cnt_x`` counts NON-NULL values: without it the
       maintained SUM cannot distinguish "all values NULL" (SQL SUM =
-      NULL) from "values cancel to zero" (SUM = 0.0) — the round-9
-      NULL-value fuzz finding (a group whose x column is entirely
+      NULL) from "values cancel to zero" (SUM = 0.0) — pinned by the
+      NULL-value fuzz grid (a group whose x column is entirely
       NULL must report sum_x NULL, exactly like a recompute).
     - ``log``: Debezium-shaped rows with before/after images:
       ``op`` in {'I','U','D'}, ``before_<group>``/``before_x`` (valid

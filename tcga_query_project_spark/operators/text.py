@@ -25,26 +25,6 @@ def tokens(text: Column) -> Column:
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
 
 
-def stopword_count(text: Column) -> Column:
-    """Occurrences of whole-token stopwords (duplicates counted), as ONE
-    codegen'd regex pass instead of a per-token lambda.
-
-    Spark's higher-order functions (``filter``/``transform``) evaluate
-    their lambdas interpreted — ~3 µs per token — so counting stopwords
-    via ``size(filter(tokens, isin))`` costs per *token*, not per
-    document. Equivalent formulation: pad the whitespace-normalized text
-    with spaces and count `` (stopword)(?= )`` matches — a token equals
-    a stopword iff the space-delimited run equals it, so the count is
-    identical to the lambda filter's (alternation backtracks past
-    prefix matches like 'a' in 'and'; lookahead keeps adjacent matches
-    from consuming each other's delimiter).
-    """
-    padded = F.concat(
-        F.lit(" "), F.regexp_replace(F.trim(text), r"\s+", " "), F.lit(" ")
-    )
-    pattern = " (" + "|".join(STOPWORDS) + ")(?= )"
-    return F.regexp_count(padded, F.lit(pattern))
-
 #: BPE-ish pre-tokenizer: alphanumeric runs OR single punctuation marks —
 #: the split a subword tokenizer sees before merges. ASCII classes only,
 #: so Java regex (Spark) and RE2 (DuckDB) agree byte-for-byte.
@@ -59,53 +39,6 @@ def bpe_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(BPE_TOKEN_PATTERN), 0)
 
 
-def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Token counting + lexical profile per document: token count,
-    distinct-token count, type-token ratio, mean token length.
-
-    The BPE-ish tokenizer of real pipelines is approximated by the
-    whitespace regex; swapping in a smarter regex changes only
-    :func:`tokens`.
-    """
-    toks = tokens(F.col(text_col))
-    n = F.size(toks).cast("long")
-    n_distinct = F.size(F.array_distinct(toks)).cast("long")
-    total_chars = F.length(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", ""))
-    return df.select(
-        F.col(id_col),
-        n.alias("n_tokens"),
-        n_distinct.alias("n_types"),
-        F.round(n_distinct.cast("double") / n.cast("double"), 6).alias("ttr"),
-        F.round(total_chars.cast("double") / n.cast("double"), 6).alias(
-            "mean_token_len"
-        ),
-    )
-
-
-def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Heuristic quality scoring: length band + stopword ratio +
-    repetition penalty, composed into one [0,1] score. The exact weights
-    are illustrative; the point is the *shape* — a pure-expression
-    per-document score usable as a filter at ingest scale.
-    """
-    toks = tokens(F.col(text_col))
-    n = F.size(toks).cast("double")
-    stop = stopword_count(F.col(text_col)).cast("double")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / n
-    stop_ratio = stop / n
-    length_ok = F.when((n >= 10) & (n <= 1000), 1.0).otherwise(0.0)
-    score = F.round(
-        0.4 * length_ok + 0.3 * F.least(stop_ratio * 4.0, F.lit(1.0)) + 0.3 * ttr, 6
-    )
-    return df.select(
-        F.col(id_col),
-        n.cast("long").alias("n_tokens"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(ttr, 6).alias("ttr"),
-        score.alias("quality_score"),
-    )
-
-
 # language marker words → language code, checked in order; deterministic
 # n-gram-style heuristic (real language ID would swap in a model or a
 # charset n-gram table — the dataflow is identical).
@@ -117,33 +50,16 @@ LANG_MARKERS: list[tuple[str, tuple[str, ...]]] = [
 ]
 
 
-def langid_heuristic(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Language-ID heuristic: first language whose marker-word list
-    intersects the token set; 'und' (undetermined) otherwise."""
-    toks = F.array_distinct(tokens(F.col(text_col)))
-    pred = F.lit("und")
-    for lang, markers in reversed(LANG_MARKERS):
-        # arrays_overlap is a native codegen'd collection function —
-        # same boolean as size(filter(toks, isin(markers))) > 0 without
-        # the interpreted per-token lambda.
-        hit = F.arrays_overlap(toks, F.array(*[F.lit(m) for m in markers]))
-        pred = F.when(hit, F.lit(lang)).otherwise(pred)
-    return df.select(F.col(id_col), pred.alias("pred_lang"))
-
-
 def doc_metrics(
     df: DataFrame, id_col: str, text_col: str, carry_text: bool = False
 ) -> DataFrame:
-    """Fused per-document text-metric projection: token stats
-    (:func:`token_stats`), quality score (:func:`quality_score`),
-    language ID (:func:`langid_heuristic`) and the first token (O3,
+    """Fused per-document text-metric projection: token stats, quality
+    score, language ID and the first token (O3,
     ``treat_tmp$submitter_id[1]`` drug_km_median_exp.R:47) computed from
-    ONE materialized token array in ONE projection — the corpus-prep
-    fusion pattern (pipelines/corpus_prep): composing the standalone
-    operators by join would tokenize 4x and shuffle 3x; this form is a
-    single narrow map over the scan, no shuffle at all.
+    ONE materialized token array in ONE projection — a single narrow map
+    over the scan, no shuffle at all.
     """
-    # Single-parse SQL expressions (round 12): same analyzed plan as
+    # Single-parse SQL expressions: same analyzed plan as
     # the previous Column forest, ~10x fewer py4j round trips per build.
     idq, tq = f"`{id_col}`", f"`{text_col}`"
     toks_df = df.selectExpr(
@@ -152,7 +68,11 @@ def doc_metrics(
     n = "cast(size(_toks) as double)"
     n_types = "cast(size(array_distinct(_toks)) as double)"
     total_chars = f"length(regexp_replace(trim({tq}), '\\\\s+', ''))"
-    # stopword_count as one codegen'd regex pass (see stopword_count)
+    # stopwords counted in ONE codegen'd regex pass, not a per-token
+    # lambda (higher-order functions run interpreted): pad the
+    # whitespace-normalized text with spaces and count `` (stopword)(?= )``
+    # matches — a token equals a stopword iff its space-delimited run
+    # does; the lookahead keeps adjacent matches from sharing a space
     padded = (
         f"concat(' ', regexp_replace(trim({tq}), '\\\\s+', ' '), ' ')"
     )
@@ -181,9 +101,9 @@ def doc_metrics(
     bpe = f"regexp_extract_all({tq}, '{bpe_pat}', 0)"
     # carry_text appends the raw text column AFTER the metric schema —
     # a pure projection passthrough for pipeline callers that need the
-    # payload downstream (pipelines/corpus_prep round 13: carrying text
-    # here removes a corpus-wide re-join by id); the default output
-    # schema (batch == streaming contract) is unchanged.
+    # payload downstream (pipelines/corpus_prep: carrying text here
+    # removes a corpus-wide re-join by id); the default output schema
+    # is unchanged.
     extra = [tq] if carry_text else []
     return toks_df.selectExpr(
         idq,
@@ -201,15 +121,6 @@ def doc_metrics(
     )
 
 
-def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Document fingerprinting: md5 over the whitespace-normalized,
-    lower-cased text. Stand-in for a rolling hash; collision-free enough
-    for exact-dup detection at corpus scale and portable across engines
-    (DuckDB md5 produces identical hex)."""
-    normalized = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    return df.select(F.col(id_col), F.md5(normalized).alias("fingerprint"))
-
-
 def lang_profile(df: DataFrame, lang_col: str, text_col: str) -> DataFrame:
     """Corpus profile per language: documents, total/mean tokens, mean
     chars. Map-side partial aggregation; one small shuffle by lang."""
@@ -223,147 +134,6 @@ def lang_profile(df: DataFrame, lang_col: str, text_col: str) -> DataFrame:
             F.round(F.avg("_n"), 6).alias("mean_tokens"),
             F.round(F.avg("_chars"), 6).alias("mean_chars"),
         )
-    )
-
-
-def winnow_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5, w: int = 4
-) -> DataFrame:
-    """Winnowing document fingerprints (the MOSS scheme; the rolling-
-    hash fingerprinting :func:`fingerprint`'s md5 stands in for, done
-    properly): hash every character ``k``-gram of the normalized text,
-    slide a window of ``w`` consecutive hashes, keep each window's
-    minimum, emit the distinct set.
-
-    Guarantee: any two documents sharing a substring of length
-    >= ``w + k - 1`` share at least one fingerprint — the property that
-    makes the fingerprint set a *local* similarity sketch rather than a
-    whole-document hash. All array expressions over one narrow
-    projection (k-gram hashes materialized once, windows reference
-    them), no explode, no shuffle; xxhash64 is the production 64-bit
-    hash (engine-portable replay is not needed — overlap tests compare
-    fingerprints to fingerprints).
-
-    Output: (id, fingerprints ARRAY<BIGINT>, n_fingerprints).
-    """
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    base = df.select(F.col(id_col), norm.alias("_norm"))
-    # guard: Spark's sequence(1, 0) yields a DESCENDING [1, 0], not an
-    # empty array (same trap dedup.shingle_array guards), so documents
-    # shorter than k need an explicit empty branch — without it every
-    # empty/short doc would hash a partial k-gram and spuriously share
-    # fingerprints.
-    grams = base.select(
-        F.col(id_col),
-        F.when(
-            F.length("_norm") >= k,
-            F.expr(
-                f"transform(sequence(1, length(_norm) - {k - 1}),"
-                f" i -> xxhash64(substring(_norm, i, {k})))"
-            ),
-        )
-        .otherwise(F.array().cast("array<bigint>"))
-        .alias("_h"),
-    )
-    fps = F.when(
-        F.size("_h") >= w,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size("_h") - (w - 1)),
-                lambda j: F.array_min(F.slice(F.col("_h"), j, w)),
-            )
-        ),
-    ).otherwise(F.when(F.size("_h") > 0, F.array(F.array_min("_h"))).otherwise(
-        F.array().cast("array<bigint>")
-    ))
-    return grams.select(
-        F.col(id_col),
-        fps.alias("fingerprints"),
-        F.size(fps).cast("long").alias("n_fingerprints"),
-    )
-
-
-def char_ngram_model(
-    df: DataFrame, text_col: str, n: int = 3
-) -> DataFrame:
-    """Train a character n-gram count model over a corpus: one row per
-    n-gram with its count — the model of a perplexity-style quality
-    gate (the heavier cousin of :func:`quality_score`'s heuristics;
-    real pipelines score against an LM trained on trusted text and drop
-    the tail).
-
-    Shape: normalized text → exploded char n-grams → one map-side
-    combined count aggregation keyed by n-gram. Char-trigram
-    vocabularies are tiny (≤ ~50k over common charsets), so the model
-    BROADCASTS at scoring time no matter how big the training corpus
-    was — train on petabytes, score with a map-side join.
-    """
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    grams = df.select(
-        F.explode(
-            F.when(
-                F.length(norm) >= n,
-                F.expr(
-                    f"transform(sequence(1, length({_norm_sql(text_col)}) - {n - 1}),"
-                    f" i -> substring({_norm_sql(text_col)}, i, {n}))"
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("ngram")
-    )
-    return grams.groupBy("ngram").agg(
-        F.count(F.lit(1)).cast("long").alias("count")
-    )
-
-
-def _norm_sql(text_col: str) -> str:
-    """SQL-expression form of the normalization in char_ngram_model
-    (expr-embedded because the transform lambda references it)."""
-    return f"lower(regexp_replace(trim({text_col}), '\\\\s+', ' '))"
-
-
-def lm_quality_score(
-    docs: DataFrame,
-    model: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-) -> DataFrame:
-    """Per-document mean log-probability under a character n-gram model
-    (add-one smoothed) — higher is more natural relative to the
-    training corpus. Output: (id, n_ngrams, mean_logprob).
-
-    Scale shape: the model aggregates to (V rows) once, broadcasts, and
-    scoring is explode → broadcast join → per-doc aggregation: one
-    shuffle keyed by document id, no model-side shuffle at any corpus
-    size. Documents shorter than ``n`` chars get NULL (no evidence).
-    """
-    totals = model.agg(
-        F.sum("count").alias("_total"), F.count(F.lit(1)).alias("_vocab")
-    ).first()
-    total, vocab = float(totals["_total"]), float(totals["_vocab"])
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    grams = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.when(
-                F.length(norm) >= n,
-                F.expr(
-                    f"transform(sequence(1, length({_norm_sql(text_col)}) - {n - 1}),"
-                    f" i -> substring({_norm_sql(text_col)}, i, {n}))"
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("ngram"),
-    )
-    scored = grams.join(F.broadcast(model), "ngram", "left").select(
-        F.col(id_col),
-        F.log(
-            (F.coalesce(F.col("count"), F.lit(0)) + 1.0)
-            / F.lit(total + vocab)
-        ).alias("_lp"),
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_ngrams"),
-        F.round(F.avg("_lp"), 6).alias("mean_logprob"),
     )
 
 
@@ -702,7 +472,7 @@ def bm25_scores(
     query is literal-sized, so it broadcasts; output is one row per
     matching document, descending score with id tiebreak.
 
-    Scale shape (round 13): the corpus-wide postings NEVER shuffle.
+    Scale shape: the corpus-wide postings NEVER shuffle.
     Document length = Σ_t tf — i.e. the doc's non-empty token count —
     so it computes NARROWLY per input row (size of the token array)
     and aggregates as (id, long) pairs: the exchange carries 16-byte
@@ -776,51 +546,6 @@ def bm25_scores(
     )
 
 
-def substring_contamination(
-    corpus: DataFrame,
-    reference: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 5,
-    w: int = 4,
-    min_shared: int = 2,
-) -> DataFrame:
-    """Substring-level cross-corpus contamination via winnowing
-    fingerprints — the complement to ``dedup.decontaminate``'s
-    whole-document Jaccard: a training document that EMBEDS a benchmark
-    string (a quoted eval question inside an otherwise-novel page)
-    barely moves document Jaccard but is caught here, because any
-    shared substring of length ≥ ``w + k − 1`` chars shares a
-    fingerprint (the winnowing guarantee).
-
-    Returns ``(corpus_id, reference_id, n_shared)`` for pairs sharing
-    at least ``min_shared`` fingerprints (≥ 2 by default — one
-    collision of a 64-bit hash across corpora is noise, two localized
-    matches rarely are).
-
-    Shape: fingerprints are narrow array expressions per side (no
-    shuffle); the reference side (eval sets) explodes to (fingerprint →
-    reference_id) and broadcasts; the corpus explodes against that map
-    and aggregates matches per pair. One corpus-side shuffle
-    (the pair aggregation over MATCHED rows only — at 100 TB nearly
-    everything misses the broadcast hash map and drops at the scan).
-    """
-    fp_c = winnow_fingerprints(corpus, id_col, text_col, k, w).select(
-        F.col(id_col).alias("corpus_id"),
-        F.explode("fingerprints").alias("_fp"),
-    )
-    fp_r = winnow_fingerprints(reference, id_col, text_col, k, w).select(
-        F.col(id_col).alias("reference_id"),
-        F.explode("fingerprints").alias("_fp"),
-    )
-    return (
-        fp_c.join(F.broadcast(fp_r), "_fp")
-        .groupBy("corpus_id", "reference_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-
-
 def repetition_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021, "Scaling
     Language Models: ... Gopher", Appendix A1.1): the published
@@ -865,7 +590,7 @@ def repetition_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     All ratio denominators go through nullif so ANSI mode never
     divides by zero.
     """
-    # Single-parse SQL expressions throughout (round 12): this
+    # Single-parse SQL expressions throughout: this
     # builder's Column/lambda forest cost ~2,300 py4j round trips per
     # build. The SQL strings inline shared subtrees (srt, the norm
     # tokenizer) exactly where the Column version's expression reuse
@@ -1132,45 +857,6 @@ def build_vocab(
     )
 
 
-def encode_documents(
-    df: DataFrame,
-    vocab: DataFrame,
-    id_col: str,
-    text_col: str,
-    unk_id: int = -1,
-) -> DataFrame:
-    """Map each document to its token-id sequence using a
-    :func:`build_vocab` table: ``(id, token_ids ARRAY<BIGINT>,
-    n_unk BIGINT)``; out-of-vocabulary tokens become ``unk_id``.
-
-    Plan: posexplode (keep token order) → BROADCAST join against the
-    vocab (dimension-sized) → one groupBy re-assembling the ordered id
-    array via sort_values-free ``array_sort(collect_list(struct(pos,
-    id)))``. One corpus shuffle total; the vocab never shuffles.
-    """
-    ex = df.select(
-        F.col(id_col),
-        F.posexplode(tokens(F.col(text_col))).alias("_pos", "token"),
-    )
-    joined = ex.join(F.broadcast(vocab.select("token", "vocab_id")),
-                     "token", "left")
-    tid = F.coalesce(F.col("vocab_id"), F.lit(int(unk_id))).cast("long")
-    return (
-        joined.select(
-            F.col(id_col),
-            F.struct(F.col("_pos"), tid.alias("_tid")).alias("_pt"),
-            (F.col("vocab_id").isNull()).cast("long").alias("_unk"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list("_pt")), lambda s: s["_tid"]
-            ).alias("token_ids"),
-            F.sum("_unk").alias("n_unk"),
-        )
-    )
-
-
 def remove_boilerplate_lines(
     df: DataFrame,
     id_col: str,
@@ -1278,7 +964,7 @@ def repeated_span_cuts(
     norm = F.regexp_replace(
         F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " "
     )
-    # Shuffle DOC rows, not token rows (round 13, guide §2.3): the
+    # Shuffle DOC rows, not token rows (guide §2.3): the
     # doc-keyed gram window needs hash(id) clustering either way, but
     # an explicit repartition BEFORE the posexplode puts the exchange
     # under the generator, so it carries one (id, token-array) row per
@@ -1362,7 +1048,7 @@ def remove_repeated_spans(
     joined = base.select(
         F.col(id_col), F.split(F.col("_norm"), " ").alias("_ts")
     ).join(per_doc, id_col)
-    # single-parse SQL form of the rebuild lambdas (round 13): same
+    # single-parse SQL form of the rebuild lambdas: same
     # expression tree as the previous Column/lambda forest
     kept = (
         "filter(transform(_ts, (t, j) -> struct(t AS tok, j + 1 AS p)), "
@@ -1377,53 +1063,3 @@ def remove_repeated_spans(
         "n_grams_cut",
     )
     return touched.unionByName(untouched)
-
-
-def compression_ratio(
-    df: DataFrame, id_col: str, text_col: str, level: int = 6
-) -> DataFrame:
-    """Per-document zlib compression ratio — the classic cheap
-    redundancy detector (used as a quality signal alongside the Gopher
-    rules: templated/boilerplate/keyword-stuffed text compresses far
-    below prose, and binary-ish noise compresses above it).
-    ``ratio = deflate_bytes / utf8_bytes``: English prose lands
-    ~0.3-0.5; heavy repetition approaches 0; incompressible noise
-    approaches (slightly exceeds) 1. NULL/empty text -> NULL ratio.
-
-    Output: ``(id_col, n_bytes BIGINT, ratio DOUBLE [rounded 6])``.
-
-    This is the ONE Python-side op in this module (everything else is
-    JVM expressions): there is no codec expression in Spark SQL, so it
-    runs as an Arrow-batched ``mapInPandas`` projection — zero
-    shuffles, linear scan, stdlib zlib, no per-row Python overhead
-    beyond the batch loop. DEFLATE output is bit-stable for a given
-    (input, level, strategy) within a zlib build — and the ratio
-    consumer is a threshold, not a hash — so cross-run determinism is
-    what matters, and holds. Unit-tested ordering invariant:
-    repetitive < prose < noise."""
-    import zlib as _zlib  # stdlib; named here for the executor closure
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, n_bytes bigint, ratio double"
-    lvl = int(level)
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, sizes, ratios = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                ids.append(rid)
-                if text is None or text == "":
-                    sizes.append(0)
-                    ratios.append(None)
-                    continue
-                raw = text.encode("utf-8")
-                comp = _zlib.compress(raw, lvl)
-                sizes.append(len(raw))
-                ratios.append(round(len(comp) / len(raw), 6))
-            yield pd.DataFrame(
-                {id_col: ids, "n_bytes": sizes, "ratio": ratios}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)

@@ -50,7 +50,6 @@ import math
 from collections import defaultdict
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from tcga_query_project_spark.operators.bpe import word_histogram
 
@@ -343,16 +342,3 @@ def unigram_encode(
             )
 
     return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
-
-
-def unigram_decode_pieces(encoded: DataFrame, id_col: str) -> DataFrame:
-    """Reconstruct each document's pre-token text: concat pieces, split
-    on the word-boundary marker, rejoin with single spaces —
-    ``(id_col, text STRING)``. Round-trips the pre-tokenized form
-    (whitespace runs normalize to one space, by the pre-tokenizer's
-    contract, same as BPE decode)."""
-    joined = F.array_join(F.col("pieces"), "")
-    text = F.trim(
-        F.regexp_replace(joined, F.lit(MARKER), F.lit(" "))
-    )
-    return encoded.select(id_col, text.alias("text"))

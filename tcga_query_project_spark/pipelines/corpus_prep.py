@@ -57,22 +57,21 @@ def corpus_clean(
     # digest collides with probability ~2^-64 — the standard exact-dedup
     # key). Grouping is identical to grouping by the text.
     #
-    # Round 13 (guide §8/§2.3 — decide with small rows, never shuffle
-    # the payload): the first-arrival decision needs only (id, key), so
-    # ONLY (id, key) goes through the content exchange; the full text
-    # stays on the scan side and the decision re-attaches as a
-    # broadcast ANTI join on the LOSERS (rn > 1) — the duplicate rows
-    # an exact-dedup pass removes are the sparse minority by contract
-    # (a corpus that is mostly copies is what upstream crawl dedup
-    # exists for), so the loser id list is the small side even when
-    # the survivor set is corpus-sized. Keeping rows with id NOT IN
-    # losers is row-identical to keeping rn == 1 whenever ids are
-    # unique (they are the primary key; with duplicated ids both forms
-    # were already tie-ambiguous). If duplication is ever dense enough
-    # that loser ids outgrow a broadcast, drop the broadcast() hint
-    # below and the planner falls back to a shuffled anti join — the
-    # same id-keyed text shuffle the old window form paid for EVERY
-    # input.
+    # Decide with small rows, never shuffle the payload: the
+    # first-arrival decision needs only (id, key), so ONLY (id, key)
+    # goes through the content exchange; the full text stays on the scan
+    # side and the decision re-attaches as a broadcast ANTI join on the
+    # LOSERS (rn > 1) — the duplicate rows an exact-dedup pass removes
+    # are the sparse minority by contract (a corpus that is mostly
+    # copies is what upstream crawl dedup exists for), so the loser id
+    # list is the small side even when the survivor set is corpus-sized.
+    # Keeping rows with id NOT IN losers is row-identical to keeping
+    # rn == 1 whenever ids are unique (they are the primary key; with
+    # duplicated ids both forms were already tie-ambiguous). If
+    # duplication is ever dense enough that loser ids outgrow a
+    # broadcast, drop the broadcast() hint below and the planner falls
+    # back to a shuffled anti join — the same id-keyed text shuffle the
+    # old window form paid for EVERY input.
     w = Window.partitionBy("_key").orderBy(F.col(id_col).asc())
     losers = (
         docs.select(
@@ -88,12 +87,10 @@ def corpus_clean(
         .join(F.broadcast(losers), id_col, "left_anti")
         .select(id_col, text_col)
     )
-    # the fused feature projection is text.doc_metrics — the SAME code
-    # path the streaming pipeline (streaming/pipeline.corpus_clean_stream)
-    # runs, so batch and stream outputs share one schema:
+    # the fused feature projection is text.doc_metrics, one schema:
     # (id, first_token, n_tokens, n_tokens_bpe, n_types, ttr,
     #  mean_token_len, stopword_ratio, quality_score, pred_lang, split)
-    # keep_text=True (round 13, pipeline callers only): the features
+    # keep_text=True (pipeline callers only): the features
     # are a pure projection, so the payload rides along for free and
     # prepare_training_corpus no longer re-joins the corpus by id to
     # recover it (two exchanges gone at any scale). The default output
@@ -141,7 +138,7 @@ def prepare_training_corpus(
     decontaminate_threshold: float = 0.5,
 ) -> DataFrame:
     """The FULL training-data path, raw corpus → trainer-ready shard
-    plan, composing every round-5 stage in the order a production
+    plan, composing every corpus stage in the order a production
     pipeline runs them:
 
     1. exact dedup + fused quality/language features + filters
@@ -178,7 +175,7 @@ def prepare_training_corpus(
 
     # keep_text=True: the cleaned frame carries the payload out of the
     # feature projection, so the old corpus-wide re-join by id (docs ⋈
-    # cleaned — two exchanges of text at any scale) is gone (round 13).
+    # cleaned — two exchanges of text at any scale) is gone.
     base = corpus_clean(
         docs, id_col, text_col, min_quality=min_quality, langs=langs,
         decontaminate_against=decontaminate_against,
@@ -189,7 +186,7 @@ def prepare_training_corpus(
         # metrics over the SURVIVORS only — the n-gram explode is the
         # costliest stage, so docs already dropped by dedup/quality/
         # language must not flow through it. The gate re-attaches as a
-        # broadcast ANTI join on the FAILERS (round 13, guide §8):
+        # broadcast ANTI join on the FAILERS (guide §8):
         # repetition_metrics is total (a row per input, passes_gopher
         # never NULL), so inner-join + filter(passes) ≡ anti-join on
         # NOT passes — and the failer id list is the sparse side, so
@@ -216,16 +213,16 @@ def prepare_training_corpus(
         stride=stride,
         carry_cols=("copy_idx", "split", "pred_lang"),
     )
-    # pack_shards consumes the chain twice (block-totals aggregate +
-    # the row-level offset join); without a persist the final shard
-    # plan would re-execute dedup→gopher→scrub→mixture→chunk a second
-    # time (measured 2x wall at sf0.1). Both consumers now sit inside
-    # ONE lazy query (pack_shards' prefix sum went distributed in
-    # round 12), so the lazily-populated cache is filled by whichever
-    # subtree touches a partition first — one upstream execution
-    # total, zero jobs at plan-build time. Lifetime / release:
-    # operators/caching.py contract; at cluster scale this is the
-    # parquet checkpoint between prep and packing.
+    # pack_shards consumes the chain twice (block-totals aggregate + the
+    # row-level offset join); without a persist the final shard plan
+    # would re-execute dedup→gopher→scrub→mixture→chunk a second time
+    # (measured 2x wall at sf0.1). Both consumers now sit inside ONE
+    # lazy query (pack_shards' prefix sum is distributed), so the
+    # lazily-populated cache is filled by whichever subtree touches a
+    # partition first — one upstream execution total, zero jobs at
+    # plan-build time. Lifetime / release: operators/caching.py
+    # contract; at cluster scale this is the parquet checkpoint between
+    # prep and packing.
     from tcga_query_project_spark.operators.caching import materialize_shared
 
     chunks = materialize_shared(chunks, eager=False)

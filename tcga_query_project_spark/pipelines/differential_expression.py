@@ -96,9 +96,8 @@ def differential_expression(
     (:func:`stats.independent_filter_padj` — lowess-selected baseMean
     quantile cutoff, filtered genes padj=NULL, plus the
     ``filter_theta``/``filter_threshold`` metadata columns). The pinned
-    driver oracle runs with it OFF (the plain-BH form below), matching
-    the round-9 state; the flag is the ``results()`` default-fidelity
-    path."""
+    driver oracle runs with it OFF (the plain-BH form below); the flag
+    is the ``results()`` default-fidelity path."""
     fact = prepare_cohort(
         expression, samples, group_col, [level_a, level_b], min_total
     )

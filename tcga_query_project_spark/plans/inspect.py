@@ -84,8 +84,8 @@ def scale_lint(df: DataFrame) -> list[str]:
     # formatted mode prints the exchange's partitioning in the operator
     # detail footer ("Arguments: SinglePartition, ..."), NOT inline as
     # "Exchange SinglePartition" — so this check reads the simple-mode
-    # tree (a round-1 lint checked only the formatted text and was
-    # blind to every global window). Flag only a Window whose subtree
+    # tree (the formatted text alone is blind to every global
+    # window). Flag only a Window whose subtree
     # REACHES a SinglePartition exchange before any other exchange —
     # mere co-occurrence (partitioned window + unrelated global
     # aggregate) is fine.

@@ -315,8 +315,8 @@ def default_fetcher(
     transport: Transport | None = None,
 ) -> FetchFn:
     """Live fetcher when the portal answers, hermetic simulator when it
-    does not (this container has no network — the simulator keeps the
-    whole dataflow testable; round-11 verdict residue #1)."""
+    does not (the simulator keeps the whole dataflow testable without
+    network access)."""
     if gdc_portal_reachable(endpoint, transport=transport):
         return gdc_http_fetcher(endpoint, transport=transport)
     return simulated_gdc_fetcher()

@@ -44,7 +44,7 @@ _SCHEMA_MEMO: dict[tuple[str, int], StructType] = {}
 
 def _schema_memo_key(path: str) -> tuple | None:
     """Memo key = (abs path, root mtime_ns, sorted child names + their
-    mtimes). Round-12 ADVICE: the root mtime alone misses in-place file
+    mtimes). The root mtime alone misses in-place file
     rewrites (``cp`` over an existing part file) and rewrites inside
     subdirectories — neither bumps the parent directory's mtime, and a
     stale explicit schema would then silently null out columns added
@@ -94,10 +94,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reference's "download everything, then subset in RAM" pattern.
     """
     return read_parquet_memo(spark, os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_tables(spark: SparkSession, sf_dir: str, names: list[str]) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,101 +217,6 @@ def write_csv_single(df: DataFrame, path: str, null_fill: str | None = "") -> No
     out.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
 
-def write_jsonl(df: DataFrame, path: str, shards: int | None = None) -> None:
-    """JSONL sink — the interchange format of LLM training-data
-    pipelines (one JSON object per line, gzip-splittable, schema
-    carried per record). Sharded by default (one file per partition);
-    pass ``shards`` to repartition first, e.g. to match a downstream
-    loader's worker count.
-    """
-    out = df.repartition(shards) if shards else df
-    out.write.mode("overwrite").json(path)
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """JSONL source with production corrupt-record handling: PERMISSIVE
-    mode parks unparseable lines in ``corrupt_col`` (null columns
-    otherwise) instead of failing the job — at 100 TB some lines ARE
-    broken, and a full-job abort on line 3 of shard 48,191 is not an
-    option. Callers split the result:
-
-    ``df = df.cache()``  (required before touching the corrupt column:
-    Spark forbids queries whose only referenced columns are the
-    internal corrupt-record column — cache/materialize first)
-    ``good = df.filter(col(corrupt_col).isNull()).drop(corrupt_col)``
-    ``bad  = df.filter(col(corrupt_col).isNotNull())``  → quarantine.
-
-    With an explicit ``schema`` the scan also avoids the inference
-    pass (one full read of the data) — always pass one in production.
-    """
-    from pyspark.sql.types import StringType, StructField
-
-    if schema is None:
-        # inference only adds the corrupt column if it HAPPENS to hit a
-        # bad record — on clean input the documented quarantine recipe
-        # would then crash on an unresolved column. Infer once, strip
-        # any inferred corrupt column, and fall through to the explicit
-        # schema path so the column always exists.
-        inferred = spark.read.json(path).schema
-        schema = StructType(
-            [f for f in inferred.fields if f.name != corrupt_col]
-        )
-    if isinstance(schema, str):
-        full = f"{schema}, {corrupt_col} STRING"
-    else:
-        full = StructType(
-            [*schema.fields, StructField(corrupt_col, StringType())]
-        )
-    return (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .schema(full)
-        .json(path)
-    )
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dest: str,
-    target_file_mb: int = 256,
-) -> int:
-    """Small-files compaction: rewrite a parquet dataset into files of
-    roughly ``target_file_mb`` each and return the output file count.
-
-    Streaming sinks and per-trigger micro-batches leave thousands of
-    KB-scale files; at 100 TB the scan's task-scheduling and footer
-    overhead then dominates I/O. Sizing uses the dataset's actual
-    on-disk bytes via the Hadoop FileSystem API (so s3a://, hdfs://,
-    and local paths all size correctly — an os-level listing would see
-    zero bytes on remote stores and silently funnel everything into one
-    file), and the rewrite is one repartition — run it as the
-    maintenance job between ingest and query, writing to a new location
-    (atomic swap by path rename at the orchestrator level; never
-    compact in place).
-    """
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(src)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    it = fs.listFiles(jpath, True)
-    total = 0
-    while it.hasNext():
-        status = it.next()
-        if status.getPath().getName().endswith(".parquet"):
-            total += status.getLen()
-    target_bytes = target_file_mb * 1024 * 1024
-    n_files = max(1, -(-total // target_bytes))  # ceiling division
-    spark.read.parquet(src).repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(dest)
-    return n_files
-
-
 def write_training_shards(
     packed: DataFrame,
     out_dir: str,
@@ -332,8 +233,7 @@ def write_training_shards(
     does not skew), sort within partitions, then ``partitionBy(shard)``
     on write — each task emits one file per shard it holds. At 100 TB
     this is the single unavoidable output shuffle, and the files come
-    out at ~budget tokens each, which is precisely the compaction
-    target :func:`compact_parquet` would otherwise have to restore.
+    out at ~budget tokens each, so no compaction pass is needed.
     """
     (
         packed.repartition(F.col("shard"))

@@ -15,45 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    within: str = "1 hour",
-    watermark: str | None = None,
-    right_suffix: str = "_r",
-) -> DataFrame:
-    """Inner join of two event streams on ``key`` where the right event
-    falls in ``[left_ts, left_ts + within]``.
-
-    Right-side columns (except the key) get ``right_suffix``. With
-    ``watermark`` set and streaming inputs, state for a left row is
-    dropped once the watermark passes ``left_ts + within`` — the
-    bounded-state contract; on batch inputs the same expression is a
-    plain equi+range join.
-    """
-    if watermark is not None and left.isStreaming:
-        left = left.withWatermark(left_ts, watermark)
-    if watermark is not None and right.isStreaming:
-        right = right.withWatermark(right_ts, watermark)
-    # every right column (key included) gets the suffix so the interval
-    # condition can live IN the join condition — required for streaming
-    # state eviction (a post-join filter would leave the equi-join's
-    # state unbounded at the analyzer's eyes).
-    r = right.select(
-        *[F.col(c).alias(c + right_suffix) for c in right.columns]
-    )
-    rts = F.col(right_ts + right_suffix)
-    cond = (
-        (F.col(key) == F.col(key + right_suffix))
-        & (rts >= F.col(left_ts))
-        & (rts <= F.col(left_ts) + F.expr(f"INTERVAL {within}"))
-    )
-    return left.join(r, cond, "inner").drop(key + right_suffix)
-
-
 def enrich_with_scd2(
     stream: DataFrame,
     dim: DataFrame,

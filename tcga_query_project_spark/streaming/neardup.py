@@ -134,15 +134,14 @@ def _band_sigs_expr(shingles: Column, num_hashes: int, band_size: int) -> Column
 #: JVM-normalized string (``trim(lower(trim(text)))`` is pre-projected
 #: into the kernel's input frame, so case mapping never happens in
 #: Python — Python str.lower() and Spark lower() can diverge on
-#: non-ASCII code points across Unicode versions, the round-8 advisor
-#: finding). Two Java-split semantics remain mirrored here and are
-#: easy to get wrong: Java regex ``\s`` is the ASCII class
-#: [ \t\n\x0B\f\r] (not Python's unicode-aware \s), and Java ``split``
-#: with limit -1 KEEPS leading and trailing empty tokens
-#: ('foo bar\n' -> ['foo','bar','']). The round-8 review caught a
-#: kernel that Java-trimmed and dropped boundary empties: a doc with
-#: trailing non-space whitespace then counted fewer tokens than the
-#: plan-level routing gate and could vanish from the stream entirely.
+#: non-ASCII code points across Unicode versions). Two Java-split
+#: semantics remain mirrored here and are easy to get wrong: Java regex
+#: ``\s`` is the ASCII class [ \t\n\x0B\f\r] (not Python's unicode-aware
+#: \s), and Java ``split`` with limit -1 KEEPS leading and trailing
+#: empty tokens ('foo bar\n' -> ['foo','bar','']). A kernel that
+#: Java-trims and drops boundary empties is wrong: a doc with trailing
+#: non-space whitespace then counted fewer tokens than the plan-level
+#: routing gate and could vanish from the stream entirely.
 _JAVA_WS_SPLIT = r"[ \t\n\x0b\f\r]+"
 
 

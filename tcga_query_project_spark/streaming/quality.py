@@ -28,9 +28,8 @@ shared code, not by parallel implementation.
 
 Replay safety: ``foreachBatch`` is at-least-once, so the report sink
 partitions by ``batch_id`` and writes with dynamic partition overwrite
-(the idempotent-foreachBatch recipe ``streaming/audit.py`` documents):
-a replayed batch recomputes deterministically and replaces its own
-partition.
+(the idempotent-foreachBatch recipe): a replayed batch recomputes
+deterministically and replaces its own partition.
 
 At 100 TB/day: the row-scaled data crosses exactly one shuffle (the
 windowed count), whose output is (windows x features x bins) — KBs.

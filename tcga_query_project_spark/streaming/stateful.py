@@ -30,53 +30,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-RUNNING_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [StructField("n", LongType()), StructField("total", DoubleType())]
-)
-
-
-def _update_running(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Accumulate (count, sum) per key across micro-batches; emit the
-    updated running totals once per batch the key appears in."""
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in batches:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"key": [key[0]], "n_events": [n], "total_value": [total]})
-
-
-def running_totals(stream: DataFrame, key: str, value: str) -> DataFrame:
-    """Incrementally-maintained per-key running totals over an unbounded
-    stream — the custom-stateful analogue of ``groupBy(key).agg``:
-    unlike a streaming aggregation, the state transition is arbitrary
-    Python, so the same harness hosts CUSUM detectors, incremental KM
-    at-risk tables, or seen-set dedup.
-
-    Emits one row per (key, micro-batch-with-activity) in update mode;
-    the latest row per key is the current total.
-    """
-    renamed = stream.select(
-        stream[key].alias("key").cast("long"), stream[value].alias("value")
-    )
-    return renamed.groupBy("key").applyInPandasWithState(
-        _update_running,
-        outputStructType=RUNNING_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 TOTALS_TWS_SCHEMA = StructType(
     [
@@ -117,15 +70,14 @@ def running_totals_tws(
     protobuf (``google.protobuf``) — environments without it can build
     the plan but the query fails at start; the timer test skips there.
 
-    Throughput bound (round-9 profile, STREAM_BENCH.json ``profile``):
-    like transition_pairs, wall time is dominated by the per-(key,
-    micro-batch) Python invocation plus transformWithState's
-    state-server round-trips (timers + value state over protobuf), not
-    by the kernel body — a do-nothing applyInPandasWithState kernel
-    already costs ~65% of this pipeline's wall on the same input. The
-    matched-batch ``running_totals_tws_10x`` row is the amortized
-    figure; RocksDB is required by the API here (one column family per
-    named state), not a tuning choice.
+    Throughput bound (profiled): like transition_pairs, wall time is
+    dominated by the per-(key, micro-batch) Python invocation plus
+    transformWithState's state-server round-trips (timers + value state
+    over protobuf), not by the kernel body — a do-nothing
+    applyInPandasWithState kernel already costs ~65% of this pipeline's
+    wall on the same input. The matched-batch ``running_totals_tws_10x``
+    row is the amortized figure; RocksDB is required by the API here
+    (one column family per named state), not a tuning choice.
     """
     import re as _re
 
@@ -218,118 +170,6 @@ def running_totals_tws(
     )
 
 
-CUSUM_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("n_seen", LongType()),
-        StructField("cusum_pos", DoubleType()),
-        StructField("cusum_neg", DoubleType()),
-        StructField("drifted", LongType()),
-    ]
-)
-
-
-def cusum_drift_tws(
-    stream: DataFrame,
-    key: str,
-    value: str,
-    target: float,
-    slack: float = 0.5,
-    threshold: float = 5.0,
-) -> DataFrame:
-    """Per-key CUSUM changepoint detector on ``transformWithState`` —
-    the canonical "arbitrary state transition" the windowed aggs cannot
-    express (the statistic is a running RECURRENCE, not an aggregate):
-
-        ``S⁺ ← max(0, S⁺ + (x − target − slack))``
-        ``S⁻ ← max(0, S⁻ + (target − x − slack))``
-
-    One ``drifted = 1`` row is emitted the first time either side
-    crosses ``threshold`` (a sustained shift of the key's value level
-    away from ``target``), after which both sides reset — the detector
-    re-arms, so a later second drift alarms again. Ordinary batches
-    emit ``drifted = 0`` rows carrying the running sums, so the sink
-    sees detector health, not just alarms.
-
-    Scale shape: identical to :func:`running_totals_tws` — state is
-    three doubles + a count per key, sharded by the grouping key across
-    the state store; within-batch rows apply in Arrow-batch order (the
-    recurrence is order-sensitive; upstream should provide per-key
-    batch order, e.g. a sorted file source or repartition+sortWithin).
-
-    Runtime dependency: same as running_totals_tws (protobuf state
-    server + RocksDB multi-column-family provider).
-    """
-    from pyspark.sql import functions as F  # noqa: F401  (parity w/ sibling)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _CusumProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "cusum", "n long, sp double, sn double"
-            )
-
-        def handleInputRows(self, key_t, rows, timerValues):
-            n, sp, sn = self._st.get() if self._st.exists() else (0, 0.0, 0.0)
-            drift_rows = []
-            for pdf in rows:
-                # positional binding: upstream select order is (key,
-                # value) — see running_totals_tws on Arrow batch names
-                pdf.columns = ["key", "value"][: len(pdf.columns)]
-                for x in pdf["value"].to_numpy(dtype="float64"):
-                    n += 1
-                    sp = max(0.0, sp + (x - target - slack))
-                    sn = max(0.0, sn + (target - x - slack))
-                    if sp > threshold or sn > threshold:
-                        drift_rows.append((n, sp, sn))
-                        sp, sn = 0.0, 0.0  # re-arm
-            self._st.update((n, sp, sn))
-            out = [
-                pd.DataFrame(
-                    {
-                        "key": [key_t[0]],
-                        "n_seen": [dn],
-                        "cusum_pos": [dsp],
-                        "cusum_neg": [dsn],
-                        "drifted": [1],
-                    }
-                )
-                for dn, dsp, dsn in drift_rows
-            ]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "key": [key_t[0]],
-                        "n_seen": [n],
-                        "cusum_pos": [sp],
-                        "cusum_neg": [sn],
-                        "drifted": [0],
-                    }
-                )
-            )
-            yield from out
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            yield from ()
-
-        def close(self) -> None:
-            pass
-
-    renamed = stream.select(
-        stream[key].alias("key").cast("long"),
-        stream[value].alias("value").cast("double"),
-    )
-    return renamed.groupBy("key").transformWithStateInPandas(
-        _CusumProcessor(),
-        outputStructType=CUSUM_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 TRANSITION_SCHEMA = StructType(
     [
         StructField("key", LongType()),
@@ -355,8 +195,8 @@ def _emit_transitions(
 
     Per-call constants matter more than asymptotics here: this kernel
     runs once per (key, micro-batch) — 24k invocations for 1.5k users
-    over 16 triggers — on typically single-digit-row frames, and the
-    round-9 profile (STREAM_BENCH.json ``profile`` note) showed the
+    over 16 triggers — on typically single-digit-row frames, and a
+    profile showed the
     pandas ops (concat + mergesort + Series iteration) were ~5s of the
     15.7s pipeline. numpy lexsort over raw arrays and a skipped concat
     for the common single-frame case cut the per-call cost; the
@@ -432,16 +272,16 @@ def transition_pairs(
     Emits ``(key, from_type, to_type)`` in append mode; NULL event
     types are real states, exactly as in the batch form.
 
-    Throughput bound (round-9 profile, STREAM_BENCH.json ``profile``):
-    the pipeline is bounded by applyInPandasWithState's per-(key,
-    micro-batch) Python invocation (~0.3 ms each), not by state-store
-    traffic (~5% of wall; RocksDB measured SLOWER at this state size).
-    Small micro-batches therefore measure the invocation boundary —
-    the matched-batch ``transition_pairs_10x`` row reports the
-    amortized operator throughput. At cluster scale the same bound
-    argues for sizing triggers so each key sees FEW large batches, and
-    for JVM-native operators (windowed agg, dropDuplicates) wherever
-    the state transition doesn't need Python.
+    Throughput bound (profiled): the pipeline is bounded by
+    applyInPandasWithState's per-(key, micro-batch) Python invocation
+    (~0.3 ms each), not by state-store traffic (~5% of wall; RocksDB
+    measured SLOWER at this state size). Small micro-batches therefore
+    measure the invocation boundary — the matched-batch
+    ``transition_pairs_10x`` row reports the amortized operator
+    throughput. At cluster scale the same bound argues for sizing
+    triggers so each key sees FEW large batches, and for JVM-native
+    operators (windowed agg, dropDuplicates) wherever the state
+    transition doesn't need Python.
     """
     renamed = stream.select(
         stream[user_col].cast("long").alias("key"),

@@ -85,59 +85,3 @@ def session_agg(
         .withColumn("session_end_us", F.unix_micros(F.col("_w.end")))
         .drop("_w")
     )
-
-
-def continuous_aggregate(
-    stream: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    aggs: list[Column],
-    minute_path: str,
-    checkpoint_path: str,
-    watermark: str = "10 minutes",
-):
-    """Hypertable-style continuous aggregate, streaming form: the
-    1-minute tumbling aggregation runs incrementally (watermarked
-    state, append mode) and lands as parquet via ``foreachBatch``; any
-    coarser resolution (hour/day) is then a cheap batch re-aggregation
-    over the minute partials — raw events are scanned exactly once no
-    matter how many resolutions exist (the batch twin of this pattern
-    is the st_rollup_hierarchy catalog query).
-
-    Returns the started StreamingQuery; callers own its lifecycle.
-    ``foreachBatch`` (not the parquet sink) so each micro-batch appends
-    atomically and the downstream rollup can read a consistent
-    directory between triggers.
-    """
-    minute = tumbling_agg(
-        stream, ts_col, "1 minute", keys, aggs, watermark=watermark
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(minute_path)
-
-    return (
-        minute.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def rollup_minutes(
-    spark, minute_path: str, keys: list[str], bucket_us: int = 3_600_000_000
-) -> DataFrame:
-    """The coarse-resolution follow-on of :func:`continuous_aggregate`:
-    re-aggregate persisted minute partials into ``bucket_us`` buckets
-    (hourly by default). Assumes the partials carry ``window_start_us``,
-    ``n`` and ``sv`` columns (count + sum re-aggregate losslessly;
-    avg/var must be derived from them, never averaged directly)."""
-    minutes = spark.read.parquet(minute_path)
-    bucket = (
-        F.col("window_start_us") - F.col("window_start_us") % F.lit(bucket_us)
-    )
-    return minutes.groupBy(bucket.alias("window_start_us"), *keys).agg(
-        F.sum("n").cast("long").alias("n_events"),
-        F.round(F.sum("sv"), 4).alias("total_value"),
-    )

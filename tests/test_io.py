@@ -61,56 +61,6 @@ def test_write_bucketed_elides_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bucketed_expr_test")
 
 
-def test_jsonl_roundtrip_and_corrupt_record_quarantine(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from tcga_query_project_spark.sources import io
-
-    df = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "gamma")], "id long, text string"
-    )
-    out = str(tmp_path / "docs.jsonl")
-    io.write_jsonl(df, out, shards=2)
-    back = io.read_jsonl(spark, out, "id LONG, text STRING")
-    good = back.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    assert sorted((r["id"], r["text"]) for r in good.collect()) == [
-        (1, "alpha"), (2, "beta"), (3, "gamma")
-    ]
-
-    # inject a broken line into a new shard; the read must not fail,
-    # the broken line must land in quarantine, good rows still parse
-    broken_dir = tmp_path / "broken"
-    broken_dir.mkdir()
-    (broken_dir / "part-0.json").write_text(
-        '{"id": 10, "text": "ok"}\n{definitely not json\n'
-    )
-    mixed = io.read_jsonl(spark, str(broken_dir), "id LONG, text STRING")
-    # PERMISSIVE corrupt-record capture requires caching/materializing
-    # the raw parse (Spark requirement: corrupt column cannot be the
-    # only queried column without it)
-    mixed = mixed.cache()
-    bad = mixed.filter(F.col("_corrupt_record").isNotNull())
-    ok = mixed.filter(F.col("_corrupt_record").isNull())
-    assert bad.count() == 1
-    assert [r["id"] for r in ok.collect()] == [10]
-    mixed.unpersist()
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from tcga_query_project_spark.sources import io
-
-    src = str(tmp_path / "fragmented")
-    dest = str(tmp_path / "compacted")
-    df = spark.range(0, 10_000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.mode("overwrite").parquet(src)  # 64 tiny files
-    n = io.compact_parquet(spark, src, dest, target_file_mb=256)
-    assert n == 1  # tiny dataset → one right-sized file
-    import glob
-    files = glob.glob(f"{dest}/*.parquet")
-    assert len(files) == 1
-    assert spark.read.parquet(dest).count() == 10_000
-
-
 def test_gdc_ingest_star_layout_prunes_and_elides(spark, tmp_path):
     """S4 ingest side, end-to-end: chunked executor-side fetch ->
     star-schema normalize -> layout-aware write. The written layout
@@ -253,101 +203,6 @@ def test_read_events_normalizes_any_encoding(spark, tmp_path):
     assert got_us == (epoch_us // 1_000_000) * 1_000_000
 
 
-def test_write_zordered_narrows_stats_on_every_dim(spark, tmp_path):
-    """Z-order clustering: every output file's min-max footer range is
-    narrow on BOTH curve columns (the multi-column data-skipping a
-    single-column sort cannot give — its second column spans the whole
-    domain in every file), and the rows round-trip unchanged."""
-    import glob
-    import random
-
-    import pyarrow.parquet as pq
-
-    from tcga_query_project_spark.operators.partitioning import (
-        write_zordered,
-    )
-
-    rng = random.Random(3)
-    rows = [
-        (rng.randrange(0, 1024), rng.randrange(0, 1024), i)
-        for i in range(40_000)
-    ]
-    df = spark.createDataFrame(rows, "x long, y long, id long")
-    zpath = str(tmp_path / "z")
-    write_zordered(df, zpath, ["x", "y"], n_files=8, bits=10)
-
-    def span_fracs(path, col):
-        fracs = []
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.read_metadata(f)
-            names = [md.schema.column(k).name for k in range(md.num_columns)]
-            j = names.index(col)
-            los, his = [], []
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(j).statistics
-                los.append(st.min)
-                his.append(st.max)
-            fracs.append((max(his) - min(los)) / 1023)
-        return fracs
-
-    zx, zy = span_fracs(zpath, "x"), span_fracs(zpath, "y")
-    assert sum(zx) / len(zx) < 0.75, zx
-    assert sum(zy) / len(zy) < 0.75, zy
-
-    # single-column sort baseline: files cover the FULL y domain
-    xpath = str(tmp_path / "xsort")
-    (
-        df.repartitionByRange(8, "x")
-        .sortWithinPartitions("x")
-        .write.parquet(xpath)
-    )
-    by = span_fracs(xpath, "y")
-    assert min(by) > 0.9, by
-
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(zpath).collect()
-    )
-    assert got == sorted(rows)
-
-
-def test_write_zordered_degenerate_inputs(spark, tmp_path):
-    """Empty input and an all-null curve column must still write
-    (unclustered fallback), not abort the maintenance job."""
-    from tcga_query_project_spark.operators.partitioning import (
-        write_zordered,
-    )
-
-    empty = spark.createDataFrame([], "x long, y long")
-    p1 = str(tmp_path / "empty")
-    write_zordered(empty, p1, ["x", "y"])
-    assert spark.read.parquet(p1).count() == 0
-
-    nully = spark.createDataFrame(
-        [(None, 1), (None, 2)], "x long, y long"
-    )
-    p2 = str(tmp_path / "nully")
-    write_zordered(nully, p2, ["x", "y"])
-    assert spark.read.parquet(p2).count() == 2
-
-
-def test_zorder_rejects_key_overflow():
-    """bits * dims > 63 would overflow the signed-64 Morton key into
-    the sign bit (negative keys, broken curve order) — must raise, not
-    silently wrap."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tcga_query_project_spark.operators.partitioning import (
-        zorder_value,
-    )
-
-    cols = [F.col(f"c{i}") for i in range(7)]
-    with pytest.raises(ValueError, match="63"):
-        zorder_value(cols, bits=10)  # 70 bits
-    # 7 dims at 9 bits (63) is the legal maximum
-    zorder_value(cols, bits=9)
-
-
 def _warc_record(rtype, uri, rid, body: bytes, extra=""):
     head = (
         f"WARC/1.0\r\n"
@@ -368,208 +223,3 @@ def _http_html(html: str) -> bytes:
         b"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
         b"Content-Length: " + str(len(body)).encode() + b"\r\n\r\n" + body
     )
-
-
-def test_warc_ingest_end_to_end(spark, tmp_path):
-    """WARC ingest: plain and member-gzipped archives parse to records
-    (framing, type filter, HTTP header split); html_to_text strips
-    script/style/tags/entities as a pure-expression pass; the
-    documents-shaped output feeds downstream corpus operators."""
-    import gzip
-
-    from tcga_query_project_spark.sources import warc
-
-    page1 = (
-        "<html><head><title>T</title><style>p{color:red}</style>"
-        "<script>var x = '<p>not text</p>';</script></head>"
-        "<body><h1>Heading&nbsp;One</h1><p>First paragraph &amp; more.</p>"
-        "<p>Second   paragraph.</p><!-- hidden --></body></html>"
-    )
-    page2 = "<html><body><p>Autre page.</p></body></html>"
-    rec_info = _warc_record("warcinfo", "", "aaa", b"robots: classic\r\n")
-    rec1 = _warc_record(
-        "response", "http://example.com/a", "bbb", _http_html(page1)
-    )
-    rec_req = _warc_record(
-        "request", "http://example.com/b", "ccc", b"GET /b HTTP/1.1\r\n"
-    )
-    rec2 = _warc_record(
-        "response", "http://example.com/b", "ddd", _http_html(page2)
-    )
-    plain = rec_info + rec1 + rec_req
-    # member-gzip: each record its own gzip member (Common Crawl layout)
-    gz = gzip.compress(rec_info) + gzip.compress(rec2) + gzip.compress(rec_req)
-    d = tmp_path / "warcs"
-    d.mkdir()
-    (d / "a.warc").write_bytes(plain)
-    (d / "b.warc.gz").write_bytes(gz)
-
-    recs = warc.read_warc(spark, str(d)).collect()
-    by_uri = {r["target_uri"]: r for r in recs}
-    assert set(by_uri) == {"http://example.com/a", "http://example.com/b"}
-    assert all(r["warc_type"] == "response" for r in recs)
-    a = by_uri["http://example.com/a"]
-    assert a["content_type"].startswith("text/html")
-    assert bytes(a["payload"]).decode().startswith("<html>")  # headers cut
-
-    docs = warc.warc_to_documents(spark, str(d)).collect()
-    texts = {r["source"]: r["text"] for r in docs}
-    t1 = texts["http://example.com/a"]
-    assert "not text" not in t1 and "color:red" not in t1  # script/style
-    assert "Heading One" in t1 and "First paragraph & more." in t1
-    assert "Second paragraph." in t1
-    assert "<" not in t1 and "hidden" not in t1
-    assert texts["http://example.com/b"] == "Autre page."
-    for r in docs:
-        assert r["n_chars"] == len(r["text"]) and r["doc_id"] is not None
-
-
-def test_warc_lf_only_headers_and_corrupt_member(spark, tmp_path):
-    """Round-7 hardening (advisor findings): (1) an LF-only WARC header
-    block over a CRLF HTTP payload must split at the EARLIER
-    terminator — preferring \\r\\n\\r\\n anywhere downstream used to
-    merge WARC+HTTP headers (HTTP Content-Length overwrote the WARC
-    one and the page was silently dropped); (2) a truncated gzip
-    member must not fail the archive — records from intact members
-    before it still parse."""
-    import gzip
-
-    from tcga_query_project_spark.sources import warc
-
-    html = "<html><body><p>LF framed page.</p></body></html>"
-    http = _http_html(html)
-    lf_head = (
-        "WARC/1.0\n"
-        "WARC-Type: response\n"
-        "WARC-Record-ID: <urn:uuid:eee>\n"
-        "WARC-Target-URI: http://example.com/lf\n"
-        "WARC-Date: 2024-01-01T00:00:00Z\n"
-        f"Content-Length: {len(http)}\n"
-        "\n"
-    ).encode()
-    lf_rec = lf_head + http + b"\n\n"
-    recs = list(warc.parse_warc_records(lf_rec))
-    assert len(recs) == 1
-    headers, payload = recs[0]
-    # WARC framing intact: the HTTP headers did NOT leak into the WARC
-    # header dict and the payload is the FULL HTTP message
-    assert headers["content-length"] == str(len(http))
-    assert headers["warc-type"] == "response"
-    assert payload == http
-    hh, body = warc.split_http_response(payload)
-    assert hh["content-type"].startswith("text/html")
-    assert body == html.encode()
-    # LF-only HTTP headers over a body containing \r\n\r\n: split at
-    # the earlier LF-LF boundary
-    tricky = b"HTTP/1.1 200 OK\nContent-Type: text/plain\n\nA\r\n\r\nB"
-    hh2, body2 = warc.split_http_response(tricky)
-    assert hh2["content-type"] == "text/plain" and body2 == b"A\r\n\r\nB"
-
-    # corrupt member: good gzip member + truncated member
-    good = _warc_record(
-        "response", "http://example.com/ok", "fff", _http_html(html)
-    )
-    bad = gzip.compress(good)[: 40]  # truncated mid-member
-    d = tmp_path / "warcs2"
-    d.mkdir()
-    (d / "mixed.warc.gz").write_bytes(gzip.compress(good) + bad)
-    out = warc.read_warc(spark, str(d)).collect()
-    assert [r["target_uri"] for r in out] == ["http://example.com/ok"]
-
-
-def test_url_normalization_and_dedup(spark):
-    """normalize_url canonicalizes scheme/host case, fragments, default
-    ports and trailing slashes (query preserved — it selects content);
-    dedup_by_url keeps exactly one row per canonical URL, smallest id."""
-    from tcga_query_project_spark.sources import warc
-
-    pairs = [
-        ("HTTP://Example.COM/Path#frag", "http://example.com/Path"),
-        ("https://example.com:443/a/", "https://example.com/a"),
-        ("http://example.com:80/", "http://example.com"),
-        ("http://example.com/a?b=1#x", "http://example.com/a?b=1"),
-        ("http://example.com/A", "http://example.com/A"),  # path case kept
-        ("http://example.com:8080/a", "http://example.com:8080/a"),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in pairs], "url string")
-    got = [
-        r["n"] for r in df.select(warc.normalize_url(F.col("url")).alias("n")).collect()
-    ]
-    assert got == [e for _, e in pairs]
-
-    docs = spark.createDataFrame(
-        [
-            (1, "http://example.com/a#one"),
-            (2, "HTTP://EXAMPLE.com/a"),
-            (3, "http://example.com/b"),
-        ],
-        "doc_id long, url string",
-    )
-    kept = sorted(
-        r["doc_id"] for r in warc.dedup_by_url(docs, "url", "doc_id").collect()
-    )
-    assert kept == [1, 3]
-
-
-def test_warc_negative_content_length_terminates_and_salvages():
-    """A hostile record declaring a NEGATIVE Content-Length must not
-    loop forever (pos would move backward onto the same magic) — the
-    parser resyncs past it and still yields the following good
-    record."""
-    from tcga_query_project_spark.sources import warc
-
-    bad = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: response\r\n"
-        b"Content-Length: -60\r\n"
-        b"\r\n"
-    )
-    good_payload = b"hello"
-    good = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: response\r\n"
-        b"Content-Length: 5\r\n"
-        b"\r\n"
-    ) + good_payload
-    recs = list(warc.parse_warc_records(b"junk" + bad + good))
-    assert len(recs) == 1
-    assert recs[0][1] == good_payload
-
-
-def test_warc_salvage_keeps_records_before_a_fault(spark, tmp_path):
-    """read_warc must keep the records parsed BEFORE a mid-file fault
-    (record-by-record salvage), not discard the whole archive."""
-    from tcga_query_project_spark.sources import warc as warc_mod
-
-    good = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: resource\r\n"
-        b"WARC-Target-URI: http://a/\r\n"
-        b"Content-Type: text/plain\r\n"
-        b"Content-Length: 2\r\n"
-        b"\r\n"
-        b"ok\r\n\r\n"
-    )
-    # second record has an undecodable header region that makes the
-    # int() parse raise? int parse is guarded; instead simulate a
-    # fault by monkeypatching the generator to raise after one yield
-    orig = warc_mod.parse_warc_records
-
-    def exploding(data):
-        gen = orig(data)
-        yield next(gen)
-        raise RuntimeError("simulated mid-archive fault")
-
-    warc_path = tmp_path / "x.warc"
-    warc_path.write_bytes(good + good)
-    try:
-        warc_mod.parse_warc_records = exploding
-        df = warc_mod.read_warc(
-            spark, str(warc_path), warc_types=("resource",),
-            http_body=False,
-        )
-        rows = df.collect()
-    finally:
-        warc_mod.parse_warc_records = orig
-    assert len(rows) == 1  # the record before the fault survived
-    assert bytes(rows[0]["payload"]) == b"ok"

@@ -300,62 +300,6 @@ def test_vst_fitted_monotone_and_log_like(spark):
         assert abs((v_hi - v_lo) - expected) < 0.5
 
 
-def test_salted_join_matches_plain_join(spark):
-    """salted_join must be row-identical to the plain equi-join under
-    heavy key skew (one key holding ~90% of rows), for inner and left."""
-    from tcga_query_project_spark.operators.partitioning import salted_join
-
-    left_rows = [("hot", i) for i in range(450)] + [
-        (k, i) for i, k in enumerate(["a", "b", "c", "orphan"] * 10)
-    ]
-    left = spark.createDataFrame(left_rows, "k string, v int")
-    right = spark.createDataFrame(
-        [("hot", 1), ("a", 2), ("b", 3), ("c", 4), ("unused", 9)],
-        "k string, label int",
-    )
-    for how in ("inner", "left"):
-        plain = sorted(
-            tuple(r) for r in left.join(right, "k", how).select("k", "v", "label").collect()
-        )
-        salted = sorted(
-            tuple(r)
-            for r in salted_join(left, right, "k", how, salt=8)
-            .select("k", "v", "label")
-            .collect()
-        )
-        assert salted == plain, how
-
-
-def test_salted_agg_matches_plain_agg(spark):
-    """Two-phase salted aggregation must equal the direct groupBy for
-    every re-aggregable kind, including a single giant group."""
-    from tcga_query_project_spark.operators.partitioning import salted_agg
-
-    rows = [("hot", float(i)) for i in range(1000)] + [("cold", 5.0), ("cold", -2.0)]
-    df = spark.createDataFrame(rows, "k string, v double")
-    plain = {
-        r["k"]: (r["s"], r["n"], r["lo"], r["hi"])
-        for r in df.groupBy("k")
-        .agg(
-            F.sum("v").alias("s"),
-            F.count("v").alias("n"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-        )
-        .collect()
-    }
-    salted = {
-        r["k"]: (r["s"], r["n"], r["lo"], r["hi"])
-        for r in salted_agg(
-            df,
-            ["k"],
-            {"s": ("sum", "v"), "n": ("count", "v"), "lo": ("min", "v"), "hi": ("max", "v")},
-            salt=8,
-        ).collect()
-    }
-    assert salted == plain
-
-
 def test_approx_profile_within_tolerance(spark):
     """Sketch aggregates vs exact answers on sf0.001 events: HLL distinct
     within 5% (default rsd), approx quartiles within the value span of
@@ -381,27 +325,6 @@ def test_approx_profile_within_tolerance(spark):
         ap = approx[et]
         assert abs(ap["approx_distinct"] - ex["nd"]) <= max(2, 0.05 * ex["nd"])
         assert abs(ap["approx_quartiles"][1] - ex["med"]) <= 0.05 * max(ex["med"], 1.0)
-
-
-def test_mergeable_distinct_rollup(spark):
-    """Sketch rollup: per-bucket HLL sketches union into the global
-    estimate — the merge happens on sketch bytes, and the total must
-    track the exact global distinct (which per-bucket exact counts
-    cannot produce by summing)."""
-    from tcga_query_project_spark.operators import sketches
-    from tcga_query_project_spark.sources.io import read_events
-
-    ev = read_events(spark, "/root/testdata/sf0.001")
-    per_bucket, total = sketches.mergeable_distinct_rollup(
-        ev, F.date_trunc("day", "ts"), "user_id"
-    )
-    exact_total = ev.select("user_id").distinct().count()
-    est = total.collect()[0]["approx_distinct_total"]
-    assert abs(est - exact_total) <= max(2, 0.05 * exact_total)
-    # per-bucket estimates exist and sum to >= the global distinct
-    rows = per_bucket.collect()
-    assert len(rows) > 1
-    assert sum(r["approx_distinct"] for r in rows) >= est * 0.95
 
 
 def test_lsh_candidates_rejects_missing_signature_columns(spark):
@@ -454,11 +377,13 @@ def test_minhash_array_form_equals_exploded_form(spark):
     """The array-native minhash/jaccard dataflow (narrow-map signatures,
     array_intersect verify) must be value-identical to the exploded
     (doc, shingle)-row formulation the DuckDB oracle replays."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from tcga_query_project_spark.operators import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sh_rows = dedup.shingle_set(docs, "doc_id", "text", 3)
     sh_arr = dedup.shingle_array(docs, "doc_id", "text", 3)
+    sh_rows = sh_arr.select("doc_id", F.explode("shingles").alias("shingle"))
 
     sig_old = dedup.minhash_signature(sh_rows, "doc_id", 8)
     sig_new = dedup.minhash_signature_arrays(sh_arr, "doc_id", 8)
@@ -469,80 +394,17 @@ def test_minhash_array_form_equals_exploded_form(spark):
     assert old == new
 
     cand = dedup.lsh_candidates(sig_new, "doc_id", 2)
-    jac_old = {(r["id_a"], r["id_b"]): r["jaccard"]
-               for r in dedup.jaccard_pairs(cand, sh_rows, "doc_id").collect()}
+    sets = {r["doc_id"]: set(r["shingles"]) for r in sh_arr.collect()}
+
+    def exact(a, b):  # |A∩B| / |A∪B|, rounded half-up to 6 places like F.round
+        inter = len(sets[a] & sets[b])
+        ratio = Decimal(inter) / Decimal(len(sets[a]) + len(sets[b]) - inter)
+        return float(ratio.quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    jac_old = {(r["id_a"], r["id_b"]): exact(r["id_a"], r["id_b"]) for r in cand.collect()}
     jac_new = {(r["id_a"], r["id_b"]): r["jaccard"]
                for r in dedup.jaccard_pairs_arrays(cand, sh_arr, "doc_id").collect()}
     assert jac_old == jac_new
-
-
-def test_winnow_fingerprints_shared_substring_guarantee(spark):
-    """Winnowing guarantee: documents sharing a substring of length
-    >= w + k - 1 share at least one fingerprint; disjoint-alphabet
-    documents share none; fingerprinting is deterministic."""
-    from tcga_query_project_spark.operators import text as tx
-
-    k, w = 5, 4
-    shared = "the quick brown fox jumps over the lazy dog"
-    rows = [
-        (1, "PREFIX one " + shared + " SUFFIX alpha"),
-        (2, "totally different opening " + shared + " and closing words"),
-        (3, "zzzz qqqq xxxx vvvv kkkk wwww pppp"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: set(r["fingerprints"])
-        for r in tx.winnow_fingerprints(df, "doc_id", "text", k, w).collect()
-    }
-    assert out[1] & out[2], "shared substring must yield a shared fingerprint"
-    assert not (out[1] & out[3])
-    out2 = {
-        r["doc_id"]: set(r["fingerprints"])
-        for r in tx.winnow_fingerprints(df, "doc_id", "text", k, w).collect()
-    }
-    assert out == out2
-    # short doc: fewer than w k-grams still yields its single min
-    short = spark.createDataFrame([(9, "abcdef")], "doc_id long, text string")
-    row = tx.winnow_fingerprints(short, "doc_id", "text", k, w).collect()[0]
-    assert row["n_fingerprints"] == 1
-
-
-def test_median_split_threshold_matches_ntile_when_tie_free(spark):
-    """The scale-path median split (aggregate + broadcast label, no
-    global window) agrees with ntile(2) exactly on tie-free values —
-    odd and even counts."""
-    from tcga_query_project_spark.operators import survival as sv
-
-    for n in (10, 11):
-        df = spark.createDataFrame(
-            [(i, float(i * 7 % 97)) for i in range(n)], "id int, v double"
-        )
-        via_ntile = {
-            r["id"]: r["stratum"]
-            for r in sv.ntile_strata(df, "v", 2, [], F.col("id").asc()).collect()
-        }
-        # exact=True (small-cohort mode): interpolated median reproduces
-        # ntile(2) membership exactly on tie-free values
-        via_threshold = {
-            r["id"]: r["stratum"]
-            for r in sv.median_split_threshold(df, "v", exact=True).collect()
-        }
-        assert via_ntile == via_threshold, n
-        # default (approx, the actual scale path): a valid value-ordered
-        # 2-partition — every LOW value <= every HIGH value, both sides
-        # within one of ntile's balance
-        approx = sv.median_split_threshold(df, "v").collect()
-        lows = [r["v"] for r in approx if r["stratum"] == "LOW"]
-        highs = [r["v"] for r in approx if r["stratum"] == "HIGH"]
-        assert lows and highs and max(lows) <= min(highs)
-        assert abs(len(lows) - len(highs)) <= 2
-    # ties at the median: all tied rows land LOW (documented divergence)
-    tied = spark.createDataFrame(
-        [(1, 1.0), (2, 5.0), (3, 5.0), (4, 9.0)], "id int, v double"
-    )
-    labs = {r["id"]: r["stratum"]
-            for r in sv.median_split_threshold(tied, "v", exact=True).collect()}
-    assert labs == {1: "LOW", 2: "LOW", 3: "LOW", 4: "HIGH"}
 
 
 def test_quantile_strata_matches_ntile_when_tie_free(spark):
@@ -903,46 +765,6 @@ def test_batch_kernels_match_expression_math(spark):
         assert math.isclose(r["norm_hof"], r["norm_arrow"], rel_tol=1e-12, abs_tol=1e-12)
 
 
-def test_char_ngram_lm_scores_in_domain_text_higher(spark):
-    """LM quality gate: a model trained on English-looking text assigns
-    a higher mean log-prob to English than to keyboard mash; short docs
-    (< n chars) get no rows; smoothing keeps unseen n-grams finite."""
-    from tcga_query_project_spark.operators import text as T
-
-    train = spark.createDataFrame(
-        [
-            (i, s)
-            for i, s in enumerate(
-                [
-                    "the cat sat on the mat and the dog ran to the park",
-                    "it is a truth universally acknowledged that a reader wants text",
-                    "the quick brown fox jumps over the lazy dog in the sun",
-                ]
-            )
-        ],
-        "doc_id long, text string",
-    )
-    model = T.char_ngram_model(train, "text", n=3)
-    assert model.filter(F.col("ngram") == "the").count() == 1
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat ran to the mat"),          # in-domain
-            (2, "zqxvj wkpfb qzzxw jvvkq pzewq"),   # mash
-            (3, "ab"),                               # shorter than n
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in T.lm_quality_score(docs, model, "doc_id", "text", n=3).collect()
-    }
-    assert 3 not in out  # no n-grams -> no row
-    assert out[1]["mean_logprob"] > out[2]["mean_logprob"]
-    assert out[2]["mean_logprob"] > float("-inf")
-    assert out[1]["n_ngrams"] == len("the cat ran to the mat") - 2
-
-
 def test_scd2_intervals_collapse_and_close(spark):
     """SCD2 from a change log: no-op changes collapse, intervals chain
     with valid_to = next valid_from, last version is open/current, and
@@ -976,36 +798,6 @@ def test_scd2_intervals_collapse_and_close(spark):
     )
     r = {x["cust"]: x["tier"] for x in asof.collect()}
     assert r[1] == "plat"
-
-
-def test_skew_profile_and_stratified_cap(spark):
-    """skew_profile surfaces the hot key with its share; stratified_cap
-    keeps exactly cap rows per stratum, deterministically (same keep-set
-    under any input partitioning)."""
-    from tcga_query_project_spark.operators.partitioning import (
-        skew_profile,
-        stratified_cap,
-    )
-
-    rows = [(i, "hot" if i % 10 < 8 else f"cold{i % 10}") for i in range(1000)]
-    df = spark.createDataFrame(rows, "id long, k string")
-    prof = skew_profile(df, "k", top=2).collect()
-    assert prof[0]["k"] == "hot"
-    assert prof[0]["n_rows"] == 800
-    assert abs(prof[0]["share"] - 0.8) < 1e-9
-
-    capped = stratified_cap(df, ["k"], cap=50, tiebreak="id")
-    counts = {r["k"]: r["n"] for r in capped.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts["hot"] == 50
-    assert counts["cold8"] == 50  # cold strata (100 rows) cap too
-    under = stratified_cap(df, ["k"], cap=500, tiebreak="id")
-    n_under = {r["k"]: r["n"] for r in under.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert n_under["cold9"] == 100  # below cap -> untouched
-    kept_a = sorted(r["id"] for r in capped.filter(F.col("k") == "hot").collect())
-    # determinism under different partitioning: same keep-set
-    capped2 = stratified_cap(df.repartition(7), ["k"], cap=50, tiebreak="id")
-    kept_b = sorted(r["id"] for r in capped2.filter(F.col("k") == "hot").collect())
-    assert kept_a == kept_b
 
 
 def test_tfidf_hand_worked(spark):
@@ -1202,35 +994,6 @@ def test_decontaminate_cross_corpus(spark):
     assert sorted(r["doc_id"] for r in clean.collect()) == [2, 3]
 
 
-def test_substring_contamination_catches_embedded_quote(spark):
-    """Winnowing cross-corpus check: a training doc EMBEDDING a
-    benchmark question (tiny Jaccard vs the whole doc) is caught via
-    shared fingerprints; unrelated docs are not."""
-    from tcga_query_project_spark.operators import dedup, text
-
-    quote = "what is the capital city of the republic of france"
-    filler_a = " ".join(f"unique{i} prose{i} token{i}" for i in range(40))
-    filler_b = " ".join(f"tail{i} filler{i} word{i}" for i in range(40))
-    train = [
-        (1, filler_a + " " + quote + " " + filler_b),
-        (2, "completely unrelated content about gardening and soil quality " * 5),
-    ]
-    evals = [(100, quote)]
-    corpus = spark.createDataFrame(train, "doc_id long, text string")
-    reference = spark.createDataFrame(evals, "doc_id long, text string")
-    out = text.substring_contamination(
-        corpus, reference, "doc_id", "text"
-    ).collect()
-    assert [(r["corpus_id"], r["reference_id"]) for r in out] == [(1, 100)]
-    assert out[0]["n_shared"] >= 2
-    # the same pair is INVISIBLE to whole-document Jaccard at any
-    # sane threshold — that's why both operators exist
-    jac = dedup.decontaminate(
-        corpus, reference, "doc_id", "text", threshold=0.3
-    ).collect()
-    assert jac == []
-
-
 def test_repetition_metrics_golden(spark):
     """Hand-worked Gopher rules, incl. the line-duplication family the
     synthetic corpus (no newlines) never exercises."""
@@ -1387,13 +1150,6 @@ def test_build_vocab_and_encode(spark):
             vocab.orderBy("vocab_id").collect()]
     # apple 3, banana 3 (tie -> alpha), cherry/durian freq 1 dropped
     assert rows == [("apple", 3, 0), ("banana", 3, 1)]
-
-    enc = {
-        r["doc_id"]: r
-        for r in t.encode_documents(docs, vocab, "doc_id", "text").collect()
-    }
-    assert enc[1]["token_ids"] == [0, 1, 0, -1] and enc[1]["n_unk"] == 1
-    assert enc[2]["token_ids"] == [1, 0, 1, -1] and enc[2]["n_unk"] == 1
 
     import pytest as _pytest
 
@@ -1680,28 +1436,9 @@ def test_heavy_hitters_matches_full_aggregation_on_zipf(spark):
     ]
 
 
-def test_approx_set_overlap_close_to_exact(spark):
-    from tcga_query_project_spark.operators import sketches
-
-    rows = [("train", i) for i in range(1000)] + [
-        ("test", i) for i in range(500, 1500)
-    ]
-    df = spark.createDataFrame(rows, "split string, fp long")
-    out = sketches.approx_set_overlap(df, "split", "fp").collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["label_a"], r["label_b"]) == ("test", "train")
-    assert abs(r["approx_a"] - 1000) / 1000 < 0.05
-    assert abs(r["approx_b"] - 1000) / 1000 < 0.05
-    assert abs(r["approx_intersection"] - 500) / 500 < 0.10
-    assert abs(r["approx_union"] - 1500) / 1500 < 0.05
-    assert abs(r["approx_jaccard"] - 1 / 3) < 0.05
-
-
 def test_dedup_index_build_query_append(spark, tmp_path):
     """Incremental dedup: history is hashed once into a persisted
-    index; deltas dedup against it by band join + signature agreement,
-    and survivors append so the NEXT delta sees them."""
+    index; deltas dedup against it by band join + signature agreement."""
     from tcga_query_project_spark.operators import dedup
 
     a = (
@@ -1730,72 +1467,14 @@ def test_dedup_index_build_query_append(spark, tmp_path):
     assert (100, 1) in got and got[(100, 1)] == 1.0  # exact copy of A
     assert all(i != 101 for i, _ in got)             # novel doc clean
 
-    # append the survivor; a later re-arrival of it must now be caught
-    survivors = delta.filter("doc_id = 101")
-    dedup.append_to_index(survivors, "doc_id", "text", idx)
-    delta2 = spark.createDataFrame(
-        [(200, novel)], "doc_id long, text string"
-    )
-    hits2 = dedup.dedup_against_index(delta2, "doc_id", "text", idx).collect()
-    got2 = {(r["doc_id"], r["matched_id"]) for r in hits2}
-    assert (200, 101) in got2
-
     # append mode on the full builder would re-band the entire history
-    # every call (quadratic band growth) — deltas must go through
-    # append_to_index instead
+    # every call (quadratic band growth)
     import pytest
 
-    with pytest.raises(ValueError, match="append_to_index"):
+    with pytest.raises(ValueError, match="mode='append' unsupported"):
         dedup.build_dedup_index(
             corpus, "doc_id", "text", idx, mode="append"
         )
-
-
-def test_mergeable_quantile_rollup_tolerance(spark):
-    """Bucket quantiles and the merged GLOBAL quantiles track the exact
-    answers; the global estimate comes from sketch bytes only."""
-    import numpy as np
-
-    from tcga_query_project_spark.operators import sketches
-
-    rng = np.random.default_rng(8)
-    vals = rng.normal(loc=50, scale=10, size=6000)
-    rows = [(int(i % 4), float(v)) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "b int, v double")
-    per_bucket, total = sketches.mergeable_quantile_rollup(
-        df, F.col("b"), "v", quantiles=(0.25, 0.5, 0.75)
-    )
-    exact_global = np.quantile(vals, [0.25, 0.5, 0.75])
-    got_total = total.collect()[0]
-    assert got_total["n_rows"] == 6000
-    for g, e in zip(got_total["approx_quantiles"], exact_global):
-        assert abs(g - e) < 1.0, (g, e)  # ~0.1 sigma rank tolerance
-    pb = {r["bucket"]: r for r in per_bucket.collect()}
-    assert set(pb) == {0, 1, 2, 3}
-    for bkt, r in pb.items():
-        sub = vals[np.arange(len(vals)) % 4 == bkt]
-        assert r["n_rows"] == len(sub)
-        for g, e in zip(
-            r["approx_quantiles"], np.quantile(sub, [0.25, 0.5, 0.75])
-        ):
-            assert abs(g - e) < 1.5, (bkt, g, e)
-
-
-def test_mergeable_quantile_rollup_empty_input_returns_null_total(spark):
-    """A filtered-to-empty slice must yield a NULL total, not an ANSI
-    INVALID_ARRAY_INDEX crash from the fold seed."""
-    from tcga_query_project_spark.operators import sketches
-
-    df = spark.createDataFrame([], "b int, v double")
-    per_bucket, total = sketches.mergeable_quantile_rollup(
-        df, F.col("b"), "v"
-    )
-    assert per_bucket.count() == 0
-    row = total.collect()[0]
-    assert row["n_rows"] is None
-    assert row["approx_quantiles"] is None or all(
-        x is None for x in row["approx_quantiles"]
-    )
 
 
 def test_apply_cdc_merge_semantics(spark):
@@ -2049,6 +1728,25 @@ def test_remove_repeated_spans_long_span_fully_recovered(spark):
     assert out[2] == ("second unrelated opening closing two", 12)
 
 
+def cap_reference(rows, n_strata, cap, salt):
+    """The window-form keep-set in plain Python: per stratum (the first
+    ``n_strata`` fields after the id, NULL a stratum like any value),
+    the ``cap`` rows smallest in (md5_prefix_long(salt || id), id)."""
+    import hashlib
+
+    def h(i):
+        return int(hashlib.md5(f"{salt}{i}".encode()).hexdigest()[:8], 16)
+
+    strata = {}
+    for row in rows:
+        strata.setdefault(tuple(row[1 : 1 + n_strata]), []).append(row)
+    return [
+        row
+        for members in strata.values()
+        for row in sorted(members, key=lambda r: (h(r[0]), r[0]))[:cap]
+    ]
+
+
 def test_stratified_cap_scaled_matches_simple_form(spark):
     """stratified_cap_scaled must produce the IDENTICAL keep-set to the
     window-only form under the shared portable md5 order — across a
@@ -2057,7 +1755,6 @@ def test_stratified_cap_scaled_matches_simple_form(spark):
     generous slack (prefilter path) and zero slack/margin (forces the
     deficiency fallback, including the zero-survivor branch)."""
     from tcga_query_project_spark.operators.partitioning import (
-        stratified_cap,
         stratified_cap_scaled,
     )
 
@@ -2071,7 +1768,7 @@ def test_stratified_cap_scaled_matches_simple_form(spark):
     def keep(res):
         return sorted((r["k"], r["id"]) for r in res.collect())
 
-    expected = keep(stratified_cap(df, ["k"], cap=50, tiebreak="id", salt="s1"))
+    expected = sorted((k, i) for i, k in cap_reference(rows, 1, 50, "s1"))
     # sanity: hot capped, warm exactly at cap, cold untouched
     by_k = {}
     for k, i in expected:
@@ -2103,7 +1800,6 @@ def test_stratified_cap_scaled_keeps_null_strata(spark):
     NULL-stratum row. Covers both the over-cap path (NULL stratum is
     the hot one) and the pass-through path (NULL stratum under cap)."""
     from tcga_query_project_spark.operators.partitioning import (
-        stratified_cap,
         stratified_cap_scaled,
     )
 
@@ -2112,10 +1808,15 @@ def test_stratified_cap_scaled_keeps_null_strata(spark):
             ((r["k"] is None, r["k"] or ""), r["id"]) for r in res.collect()
         )
 
+    def ref(rows, cap):
+        return sorted(
+            ((k is None, k or ""), i) for i, k in cap_reference(rows, 1, cap, "nz")
+        )
+
     # NULL stratum over cap, named stratum under cap
     rows = [(i, None) for i in range(300)] + [(1000 + i, "en") for i in range(9)]
     df = spark.createDataFrame(rows, "id long, k string")
-    expected = keep(stratified_cap(df, ["k"], cap=40, tiebreak="id", salt="nz"))
+    expected = ref(rows, 40)
     by_k = {}
     for k, _ in expected:
         by_k[k] = by_k.get(k, 0) + 1
@@ -2133,7 +1834,7 @@ def test_stratified_cap_scaled_keeps_null_strata(spark):
     # NULL stratum under cap (pass-through branch), named over cap
     rows2 = [(i, "en") for i in range(300)] + [(1000 + i, None) for i in range(9)]
     df2 = spark.createDataFrame(rows2, "id long, k string")
-    expected2 = keep(stratified_cap(df2, ["k"], cap=40, tiebreak="id", salt="nz"))
+    expected2 = ref(rows2, 40)
     assert keep(
         stratified_cap_scaled(df2, ["k"], cap=40, tiebreak="id", salt="nz")
     ) == expected2
@@ -2149,8 +1850,8 @@ def test_stratified_cap_scaled_keeps_null_strata(spark):
             (r["k"] or "", r["src"] or "", r["id"]) for r in res.collect()
         )
 
-    expected3 = keep2(
-        stratified_cap(df3, ["k", "src"], cap=30, tiebreak="id", salt="nz")
+    expected3 = sorted(
+        (k or "", src or "", i) for i, k, src in cap_reference(rows3, 2, 30, "nz")
     )
     assert keep2(
         stratified_cap_scaled(df3, ["k", "src"], cap=30, tiebreak="id", salt="nz")
@@ -2221,13 +1922,10 @@ def test_robust_outliers_degenerate_and_null_groups(spark):
 def test_bootstrap_weights_are_poisson1(spark):
     """The hash-drawn weights must actually BE Poisson(1): mean 1,
     P(0) ~ e^-1, within sampling tolerance on 40k draws."""
-    from tcga_query_project_spark.functions.scalar import md5_prefix_long
-
-    df = spark.range(40000)
-    u = md5_prefix_long(F.concat(F.lit("t"), F.col("id").cast("string"))) / F.lit(
-        4294967296.0
+    df = spark.range(40000).select(
+        F.substring(F.md5(F.concat(F.lit("t"), F.col("id").cast("string"))), 1, 8).alias("s")
     )
-    w = stats.poisson1_weight(u)
+    w = F.expr(stats.poisson1_weight_hex_sql("s"))
     row = df.select(w.alias("w")).agg(
         F.avg("w").alias("mu"),
         F.avg((F.col("w") == 0).cast("double")).alias("p0"),
@@ -2319,11 +2017,11 @@ def test_bootstrap_ci_null_values_and_null_group(spark):
 
 def test_poisson_hex_weight_equals_double_form(spark):
     """The hex-string comparison draw must equal the double-uniform
-    draw on the same 32-bit value, for every threshold boundary."""
+    inverse-CDF draw on the same 32-bit value, for every threshold
+    boundary."""
     from tcga_query_project_spark.operators.stats import (
         POISSON1_CDF,
-        poisson1_weight,
-        poisson1_weight_hex,
+        poisson1_weight_hex_sql,
     )
 
     # probe each threshold's floor value, its neighbors, and extremes
@@ -2335,11 +2033,11 @@ def test_poisson_hex_weight_equals_double_form(spark):
     rows = [(format(v, "08x"), v / 2**32) for v in sorted(probes)]
     df = spark.createDataFrame(rows, "slice8 string, u double")
     got = df.select(
-        poisson1_weight_hex(F.col("slice8")).alias("wh"),
-        poisson1_weight(F.col("u")).alias("wu"),
+        F.expr(poisson1_weight_hex_sql("slice8")).alias("wh"), "u"
     ).collect()
     for r in got:
-        assert r["wh"] == r["wu"]
+        wu = next((k for k, t in enumerate(POISSON1_CDF) if r["u"] < t), len(POISSON1_CDF))
+        assert r["wh"] == wu
 
 
 # =====================================================================
@@ -2519,43 +2217,6 @@ def test_resample_all_null_value_bucket_keeps_total_null(spark):
     assert out[1] == (1, None, 10)  # NULL total, NOT 0; carried holds
     assert out[2] == (0, 0, 10)  # true gap -> 0
     assert out[3] == (1, 0, 0)  # genuine zero sum
-
-
-def test_compression_ratio_orders_redundancy(spark):
-    """The signal the filter relies on: repetition << prose < noise;
-    NULL/empty -> NULL; deterministic across partitionings."""
-    import random
-
-    from tcga_query_project_spark.operators import text as tx
-
-    rng = random.Random(5)
-    noise = "".join(chr(rng.randrange(33, 127)) for _ in range(2000))
-    rows = [
-        (1, "spam " * 400),
-        (2, ("the quick brown fox jumps over the lazy dog and then "
-             "discusses compression ratios at considerable length ") * 8),
-        (3, noise),
-        (4, None),
-        (5, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {
-        r["doc_id"]: r
-        for r in tx.compression_ratio(df, "doc_id", "text").collect()
-    }
-    assert got[1]["ratio"] < 0.05          # pure repetition
-    assert 0.1 < got[2]["ratio"] < 0.6     # prose
-    assert got[3]["ratio"] > 0.8           # noise barely compresses
-    assert got[1]["ratio"] < got[2]["ratio"] < got[3]["ratio"]
-    assert got[4]["ratio"] is None and got[5]["ratio"] is None
-    assert got[2]["n_bytes"] == len(rows[1][1].encode())
-    again = {
-        r["doc_id"]: r["ratio"]
-        for r in tx.compression_ratio(
-            df.repartition(4), "doc_id", "text"
-        ).collect()
-    }
-    assert again == {k: v["ratio"] for k, v in got.items()}
 
 
 # =====================================================================

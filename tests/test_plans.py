@@ -88,16 +88,19 @@ def test_events_scan_prunes_props(spark):
 
 def test_tcga_de_full_fits_in_sql_once(spark):
     """The DE pipeline's NB-GLM Wald is fused Spark SQL (no Python
-    worker) and its fit has one consumer. Each use of the floored cohort
-    reads expression twice (the rows, and the floor aggregate they are
-    semi-joined with); the size factors use the cohort twice and the fit
-    once — 6 scans, where three consumers of the fit made it 18."""
-    df = _run(spark, "tcga_de_full")
-    plan = plans.formatted_plan(df, "simple")
-    for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert op not in plan, op
-    # expression is the only scanned table with a gene_id column
-    assert sum("gene_id" in s for s in plans.read_schemas(df)) == 6
+    worker) and its fit has one consumer, with and without independent
+    filtering. Each use of the floored cohort reads expression twice
+    (the rows, and the floor aggregate they are semi-joined with); the
+    size factors use the cohort twice and the fit once — 6 scans, where
+    three consumers of the fit made it 18 (and the filtered form's four
+    made it 24)."""
+    for name in ("tcga_de_full", "tcga_de_filtered"):
+        df = _run(spark, name)
+        plan = plans.formatted_plan(df, "simple")
+        for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert op not in plan, (name, op)
+        # expression is the only scanned table with a gene_id column
+        assert sum("gene_id" in s for s in plans.read_schemas(df)) == 6, name
 
 
 # Single-partition windows tolerated ONLY over provably-reduced inputs
@@ -106,8 +109,8 @@ def test_tcga_de_full_fits_in_sql_once(spark):
 GLOBAL_WINDOW_ALLOWED = {
     # ntile(2) over the per-user cohort AGGREGATE (one row per user,
     # orders below raw events); oracle pins ntile tie semantics. The
-    # billion-user path is survival.median_split_threshold (aggregate +
-    # broadcast label, equivalence-tested).
+    # billion-user path is survival.quantile_strata (aggregate +
+    # broadcast label).
     "w2_km_curve",
     "w3_w4_survival_tests",
     # BH cummin over DISTINCT p values (stats.bh_adjust_distinct), not
@@ -117,7 +120,8 @@ GLOBAL_WINDOW_ALLOWED = {
     # the gene annotation (and as large as the distinct-p window, since
     # the p-values are almost all distinct)
     "tcga_de_full",
-    # same distinct-p BH windows (final padj pass after the theta cut)
+    # the same row-window BH over the per-gene fit, masked to the genes
+    # the theta cut keeps
     "tcga_de_filtered",
     # vocab_id assignment runs on the POST-LIMIT frame (<= max_size
     # rows): a vocabulary is dimension-sized by definition — it has to
@@ -270,28 +274,6 @@ def test_bucketed_join_elides_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bt_lineitem")
         spark.sql("DROP TABLE IF EXISTS bt_orders")
-
-
-def test_partitioned_write_prunes_partitions(spark, tmp_path):
-    """Hive-partitioned layout + equality filter → partition pruning:
-    the filter lands in PartitionFilters and non-matching directories
-    are never read."""
-    from tcga_query_project_spark.operators import partitioning
-    from tcga_query_project_spark.sources.io import read_events
-
-    ev = read_events(spark, SF_SMALL).drop("ts")
-    out = str(tmp_path / "events_by_type")
-    partitioning.write_partitioned(ev, out, ["event_type"])
-    back = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    back.write.format("noop").mode("overwrite").save()
-    plan = plans.formatted_plan(back)
-    assert "PartitionFilters" in plan
-    import re
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "event_type" in m.group(1), plan
-    # pruning is real: only the matching partition's rows come back
-    expected = ev.filter(F.col("event_type") == "click").count()
-    assert back.count() == expected
 
 
 def test_aqe_skew_join_split_engages(spark):
@@ -564,7 +546,7 @@ def test_contamination_ops_broadcast_reference(spark):
     """Scale shape of the cross-corpus contamination ops: the reference
     (eval-set) side must broadcast — no cartesian product, no shuffle
     of the corpus for candidate generation beyond its signature agg."""
-    from tcga_query_project_spark.operators import dedup, text
+    from tcga_query_project_spark.operators import dedup
 
     corpus = spark.createDataFrame(
         [(i, f"some training document number {i} with words " * 3)
@@ -575,13 +557,10 @@ def test_contamination_ops_broadcast_reference(spark):
         [(100, "an eval question about words and documents here")],
         "doc_id long, text string",
     )
-    for out in (
-        dedup.decontaminate(corpus, ref, "doc_id", "text"),
-        text.substring_contamination(corpus, ref, "doc_id", "text"),
-    ):
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-        assert "CartesianProduct" not in plan
+    out = dedup.decontaminate(corpus, ref, "doc_id", "text")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_q13_outer_join_preserved(spark):

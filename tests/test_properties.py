@@ -119,23 +119,6 @@ def test_wilcoxon_invariant_under_monotone_transform(spark, a, b):
         assert abs(base["p_value"] - trans["p_value"]) < 1e-12
 
 
-@given(
-    n1=st.integers(min_value=1, max_value=12),
-    n2=st.integers(min_value=1, max_value=12),
-)
-@settings(max_examples=30, deadline=None)
-def test_exact_u_null_distribution_invariants(n1, n2):
-    """Pure-Python DP invariants: the U null distribution sums to
-    C(n1+n2, n1) and is symmetric about n1*n2/2."""
-    import math
-
-    from tcga_query_project_spark.operators.exact_tests import _u_null_counts
-
-    counts = _u_null_counts(n1, n2)
-    assert counts.sum() == math.comb(n1 + n2, n1)
-    assert (counts == counts[::-1]).all()
-
-
 texts = st.lists(
     st.text(
         alphabet=st.sampled_from(list("ab c")),
@@ -145,33 +128,6 @@ texts = st.lists(
     min_size=1,
     max_size=12,
 )
-
-
-@given(docs=texts)
-@settings(**SETTINGS)
-def test_winnow_fingerprints_properties(spark, docs):
-    """Winnowing invariants on arbitrary text: deterministic; identical
-    normalized text → identical fingerprint set; docs shorter than k
-    (after whitespace normalization) → empty set."""
-    from tcga_query_project_spark.operators import text as tx
-
-    k, w = 5, 4
-    rows = [(i, t) for i, t in enumerate(docs)] + [
-        (len(docs) + i, t) for i, t in enumerate(docs)  # duplicate block
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: (tuple(sorted(r["fingerprints"])), r["n_fingerprints"])
-        for r in tx.winnow_fingerprints(df, "doc_id", "text", k, w).collect()
-    }
-    for i, t in enumerate(docs):
-        # duplicate rows agree exactly
-        assert out[i] == out[len(docs) + i]
-        norm = " ".join(t.split()).lower()
-        if len(norm) < k:
-            assert out[i][1] == 0, (t, out[i])
-        else:
-            assert out[i][1] >= 1
 
 
 @given(ids=st.lists(st.integers(min_value=0, max_value=10**9),
@@ -232,64 +188,6 @@ def test_scd2_intervals_tile_the_timeline(spark, data):
             assert prev["valid_to"] == nxt["valid_from"]  # chained
             assert not prev["is_current"]
             assert prev["attr"] != nxt["attr"]  # real change between versions
-
-
-@given(
-    st.integers(min_value=1, max_value=9),
-    st.integers(min_value=1, max_value=9),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_bmp_roundtrip_any_shape(w, h, seed):
-    """encode_bmp/decode_bmp round-trip every (h, w, 3) uint8 image
-    exactly — odd widths exercise the 4-byte row padding, 1-pixel
-    edges the header arithmetic."""
-    import numpy as np
-
-    from tcga_query_project_spark.operators import codecs
-
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    back = codecs.decode_bmp(codecs.encode_bmp(px))
-    assert back is not None and np.array_equal(back, px)
-    # PPM round-trip on the same pixels
-    assert np.array_equal(codecs.decode_ppm(codecs.encode_ppm(px)), px)
-
-
-@given(
-    st.integers(min_value=1, max_value=64),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=30, deadline=None)
-def test_wav_roundtrip_any_signal(n, seed):
-    """encode_wav/decode_wav round-trips arbitrary [-1, 1] signals to
-    16-bit quantization accuracy, preserving rate and length."""
-    import numpy as np
-
-    from tcga_query_project_spark.operators import codecs
-
-    rng = np.random.default_rng(seed)
-    x = rng.uniform(-1.0, 1.0, size=n)
-    rate, back = codecs.decode_wav(codecs.encode_wav(16000, x))
-    assert rate == 16000 and len(back) == n
-    # encode scales by 32767 (peak-preserving), decode by 32768 (the
-    # PCM convention): error bound = half a code step + the 1/32768
-    # scale mismatch
-    assert np.abs(back - x).max() <= 1.5 / 32768 + 1e-9
-
-
-@given(st.binary(min_size=0, max_size=200))
-@settings(max_examples=60, deadline=None)
-def test_codecs_total_on_arbitrary_bytes(payload):
-    """Decoders never raise on arbitrary bytes — they return None (the
-    kernels' fallback contract depends on this totality)."""
-    from tcga_query_project_spark.operators import codecs
-
-    assert codecs.decode_bmp(payload) is None or payload[:2] == b"BM"
-    r = codecs.decode_ppm(payload)
-    assert r is None or payload[:1] == b"P"
-    w = codecs.decode_wav(payload)
-    assert w is None or payload[:4] == b"RIFF"
 
 
 @given(st.integers(min_value=0, max_value=2**31 - 1))
@@ -566,100 +464,13 @@ def test_heavy_hitters_exact_under_any_partitioning(spark, counts, parts):
     assert got == want
 
 
-# ---- codec + URL properties (no Spark job per example: pure python,
-# so these afford real hypothesis example counts) ----------------------
-
-import numpy as np
-from hypothesis import HealthCheck as _HC
-from hypothesis import given as _given
-from hypothesis import settings as _settings
-from hypothesis import strategies as _st
-from hypothesis.extra.numpy import arrays as _arrays
-
-_PURE = dict(max_examples=40, deadline=None)
-
-
-@_given(
-    img=_arrays(
-        np.uint8,
-        _st.tuples(
-            _st.integers(1, 12), _st.integers(1, 12), _st.just(3)
-        ),
-    )
+@given(
+    sizes=st.lists(st.integers(0, 60), min_size=1, max_size=5),
+    cap=st.integers(1, 40),
+    slack=st.sampled_from([0.0, 0.5, 1.25]),
+    margin=st.sampled_from([0, 4, 64]),
 )
-@_settings(**_PURE)
-def test_png_roundtrip_exact_for_any_array(img):
-    """PNG is lossless: encode→decode is the identity for EVERY uint8
-    RGB array, any dimensions."""
-    from tcga_query_project_spark.operators import codecs
-
-    assert np.array_equal(codecs.decode_png(codecs.encode_png(img)), img)
-
-
-@_given(
-    img=_arrays(
-        np.uint8,
-        _st.tuples(
-            _st.integers(1, 20), _st.integers(1, 20), _st.just(3)
-        ),
-    ),
-    mode=_st.sampled_from(["444", "420"]),
-)
-@_settings(max_examples=15, deadline=None)
-def test_jpeg_roundtrip_total_and_shaped(img, mode):
-    """JPEG encode→decode is TOTAL on arbitrary uint8 content (never
-    raises, shape preserved) and error-bounded at max quality on
-    uniform images (DC-only blocks survive quantization)."""
-    from tcga_query_project_spark.operators import jpeg
-
-    dec = jpeg.decode_jpeg(jpeg.encode_jpeg(img, quality=90, subsampling=mode))
-    assert dec is not None and dec.shape == img.shape
-
-    flat = np.full_like(img, int(img[0, 0, 0]))
-    dflat = jpeg.decode_jpeg(jpeg.encode_jpeg(flat, quality=100))
-    assert np.abs(dflat.astype(int) - flat.astype(int)).max() <= 3
-
-
-_url = _st.builds(
-    lambda scheme, host, port, path, q, frag: (
-        f"{scheme}://{host}{port}{path}{q}{frag}"
-    ),
-    _st.sampled_from(["http", "HTTP", "https", "HTTPS"]),
-    _st.from_regex(r"[A-Za-z][A-Za-z0-9.-]{0,10}", fullmatch=True),
-    _st.sampled_from(["", ":80", ":443", ":8080"]),
-    _st.sampled_from(["", "/", "/a", "/a/", "/A/b", "/a/b/"]),
-    _st.sampled_from(["", "?x=1", "?b=2&a=1"]),
-    _st.sampled_from(["", "#frag", "#a/b?c"]),
-)
-
-
-@_given(url=_url)
-@_settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[_HC.function_scoped_fixture],
-)
-def test_normalize_url_idempotent(spark, url):
-    """Canonicalization is idempotent: normalize(normalize(u)) ==
-    normalize(u) — the property that makes it a safe dedup key (keys
-    stay stable if a stage runs twice)."""
-    from tcga_query_project_spark.sources.warc import normalize_url
-
-    df = spark.createDataFrame([(url,)], "u string")
-    once = df.select(normalize_url(F.col("u")).alias("n"))
-    twice = once.select(normalize_url(F.col("n")).alias("n2"))
-    r = once.join(twice).collect()[0]
-    assert r["n"] == r["n2"], url
-
-
-@_given(
-    sizes=_st.lists(_st.integers(0, 60), min_size=1, max_size=5),
-    cap=_st.integers(1, 40),
-    slack=_st.sampled_from([0.0, 0.5, 1.25]),
-    margin=_st.sampled_from([0, 4, 64]),
-)
-@_settings(max_examples=8, deadline=None,
-           suppress_health_check=[_HC.function_scoped_fixture])
+@settings(**SETTINGS)
 def test_stratified_cap_scaled_equals_simple_for_any_mix(
     spark, sizes, cap, slack, margin
 ):
@@ -668,9 +479,9 @@ def test_stratified_cap_scaled_equals_simple_for_any_mix(
     distributed-selection form keeps EXACTLY the window form's rows —
     the threshold machinery is a pure optimization, never a sampler."""
     from tcga_query_project_spark.operators.partitioning import (
-        stratified_cap,
         stratified_cap_scaled,
     )
+    from tests.test_operators_unit import cap_reference
 
     rows = [
         (k * 1000 + i, f"s{k}")
@@ -680,10 +491,7 @@ def test_stratified_cap_scaled_equals_simple_for_any_mix(
     if not rows:
         return
     df = spark.createDataFrame(rows, "id long, k string")
-    want = sorted(
-        (r["k"], r["id"])
-        for r in stratified_cap(df, ["k"], cap, "id", salt="px").collect()
-    )
+    want = sorted((k, i) for i, k in cap_reference(rows, 1, cap, "px"))
     got = sorted(
         (r["k"], r["id"])
         for r in stratified_cap_scaled(

@@ -31,7 +31,6 @@ def test_metrics_and_verdicts(spark):
             qa.in_range("score", 0.0, 100.0),              # min fails, max fails
             qa.unique("id"),                               # fails: dup 4
             qa.in_set("lang", ["en", "fr", "de"], 0.8),    # passes: 4/5
-            qa.matches("email", r"^[^@]+@[^@]+\.[a-z]+$", 0.8),  # 4/5 passes
             qa.row_count(3, 10),                           # passes
         ],
     )
@@ -47,11 +46,9 @@ def test_metrics_and_verdicts(spark):
     assert not rows[("unique", "id")]["passed"]
     assert rows[("in_set", "lang")]["metric"] == 0.8
     assert rows[("in_set", "lang")]["passed"]
-    assert rows[("matches", "email")]["metric"] == 0.8
-    assert rows[("matches", "email")]["passed"]
     assert rows[("row_count_at_least", "*")]["metric"] == 5.0
     assert rows[("row_count_at_least", "*")]["passed"]
-    assert not qa.audit_passed(report)
+    assert not all(r["passed"] for r in rows.values())
 
 
 def test_clean_batch_passes_gate(spark):
@@ -67,7 +64,6 @@ def test_clean_batch_passes_gate(spark):
             qa.row_count(1),
         ],
     )
-    assert qa.audit_passed(report)
     assert all(r["passed"] for r in report.collect())
 
 
@@ -82,7 +78,7 @@ def test_empty_batch_fails_not_vanishes(spark):
     assert not rows["min_at_least"]["passed"]
     assert not rows["max_at_most"]["passed"]
     assert not rows["row_count_at_least"]["passed"]
-    assert not qa.audit_passed(report)
+    assert not all(r["passed"] for r in rows.values())
 
 
 def test_single_job_plan(spark):
@@ -102,59 +98,6 @@ def test_single_job_plan(spark):
     )
     plan = report._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan ExistingRDD") + plan.count("LocalTableScan") == 1
-
-
-def test_streaming_gate_routes_batches_whole(spark, tmp_path):
-    """Two micro-batches (maxFilesPerTrigger=1): the clean one lands in
-    accept, the faulty one lands — complete — in quarantine, and the
-    audit log carries per-batch check rows."""
-    from tcga_query_project_spark.streaming.audit import audited_ingest
-
-    src = str(tmp_path / "src")
-    schema = "id long, lang string, v double"
-    good = [(1, "en", 10.0), (2, "fr", 20.0)]
-    bad = [(3, None, -4.0), (4, "en", 5.0)]  # null lang + out-of-range
-    spark.createDataFrame(good, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame(bad, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    checks = [
-        qa.not_null("lang"),
-        qa.in_range("v", 0.0, 100.0),
-        qa.row_count(1),
-    ]
-    accept = str(tmp_path / "accept")
-    quar = str(tmp_path / "quar")
-    rep = str(tmp_path / "report")
-    q = audited_ingest(
-        stream, checks, accept, quar, rep, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-
-    accepted = {r["id"] for r in spark.read.parquet(accept).collect()}
-    quarantined = {r["id"] for r in spark.read.parquet(quar).collect()}
-    assert accepted == {1, 2}
-    assert quarantined == {3, 4}  # whole batch, including the clean row
-    report = spark.read.parquet(rep)
-    # 4 checks (in_range expands to two) x 2 batches
-    assert report.count() == 8
-    by_batch = {
-        r["batch_id"]: r["n_fail"]
-        for r in report.groupBy("batch_id")
-        .agg(F.sum((~F.col("passed")).cast("int")).alias("n_fail"))
-        .collect()
-    }
-    # faulty batch fails exactly not_null (0.5 null frac) and
-    # min_at_least (-4 < 0); max and row_count pass
-    assert sorted(by_batch.values()) == [0, 2]
 
 
 def test_raw_metric_comparison_not_rounded(spark):
@@ -185,51 +128,6 @@ def test_unique_semantics_nulls_and_empty(spark):
     empty = spark.createDataFrame([], "id long")
     r3 = qa.audit(empty, [qa.unique("id")]).collect()[0]  # no ANSI throw
     assert not r3["passed"]
-
-
-def test_streaming_gate_survives_all_null_metric_batch(spark, tmp_path):
-    """An empty micro-batch audited with only avg/min/max-style checks
-    yields all-None metrics; the gate must quarantine that batch, not
-    crash on Row schema inference (ADVICE r5: explicit report schema)."""
-    from tcga_query_project_spark.streaming.audit import audited_ingest
-
-    src = str(tmp_path / "src")
-    schema = "id long, v double"
-    spark.createDataFrame([(1, 10.0)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    # second file: zero rows -> an empty micro-batch
-    spark.createDataFrame([], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    accept = str(tmp_path / "accept")
-    quar = str(tmp_path / "quar")
-    rep = str(tmp_path / "report")
-    q = audited_ingest(
-        stream,
-        [qa.in_range("v", 0.0, 100.0)],  # no row_count: metrics all None
-        accept,
-        quar,
-        rep,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-
-    report = spark.read.parquet(rep)
-    n_batches = report.select("batch_id").distinct().count()
-    assert n_batches == 2  # the degenerate batch was audited, not fatal
-    none_metrics = report.filter(F.col("metric").isNull())
-    assert none_metrics.count() > 0
-    # fail-closed: the empty batch's checks all fail -> quarantined
-    assert not any(r["passed"] for r in none_metrics.collect())
-    assert {r["id"] for r in spark.read.parquet(accept).collect()} == {1}
 
 
 # =====================================================================
@@ -303,57 +201,6 @@ def test_psi_requires_features(spark):
     df = spark.range(3)
     with _pt.raises(ValueError):
         qa.psi_drift(df, df)
-
-
-def test_streaming_drift_monitor_per_batch_psi(spark, tmp_path):
-    """Two micro-batches against a static reference: the matching
-    batch logs drifted=false, the shifted batch drifted=true, and each
-    batch's PSI equals the batch-mode psi_drift on the same rows
-    (stream == batch)."""
-    from tcga_query_project_spark.streaming.audit import drift_monitor
-
-    schema = "id long, cat string"
-    ref_rows = [(i, "x" if i % 2 else "y") for i in range(100)]
-    same = [(i, "x" if i % 2 else "y") for i in range(50)]
-    shifted = [(i, "x") for i in range(50)]  # all one category
-    ref = spark.createDataFrame(ref_rows, schema)
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame(same, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame(shifted, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    rep = str(tmp_path / "rep")
-    q = drift_monitor(
-        stream,
-        ref,
-        categorical=["cat"],
-        report_path=rep,
-        checkpoint_path=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-
-    report = spark.read.parquet(rep).collect()
-    assert len(report) == 2  # one 'cat' row per batch
-    by_drift = {bool(r["drifted"]): r for r in report}
-    assert by_drift[False]["psi"] == 0.0
-    assert by_drift[True]["psi"] > 0.2
-    # stream == batch: the drifted batch's PSI equals batch mode
-    batch_psi = (
-        qa.psi_drift(
-            ref, spark.createDataFrame(shifted, schema), categorical=["cat"]
-        )
-        .first()["psi"]
-    )
-    assert by_drift[True]["psi"] == batch_psi
 
 
 # ---------------------------------------------------------------------------

@@ -274,50 +274,6 @@ def test_prepare_training_corpus_decontaminates(spark):
     assert {r["doc_id"] for r in out.collect()} == {2}
 
 
-def test_temperature_weights_rebalance(spark):
-    """T=1 keeps natural proportions (all weights 1); higher T moves
-    mass from the head domain to the tail (head weight < 1 < tail
-    weight) while preserving the expected total; an explicit budget
-    rescales everything proportionally."""
-    from tcga_query_project_spark.operators.sampling import (
-        sample_mixture,
-        temperature_weights,
-    )
-
-    rows = (
-        [(i, "en") for i in range(800)]
-        + [(i + 1000, "fr") for i in range(150)]
-        + [(i + 2000, "sw") for i in range(50)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-
-    w1 = temperature_weights(df, "lang", temperature=1.0)
-    assert all(abs(v - 1.0) < 1e-6 for v in w1.values())
-
-    w3 = temperature_weights(df, "lang", temperature=3.0)
-    assert w3["en"] < 1.0 < w3["sw"]
-    assert w3["sw"] > w3["fr"] > w3["en"]
-    # expected output size == input size (pure rebalancing)
-    expected = sum(
-        w3[lang] for _, lang in rows
-    )
-    assert abs(expected - len(rows)) < 1e-3
-
-    half = temperature_weights(df, "lang", temperature=3.0, total_budget=500)
-    for d in w3:
-        assert abs(half[d] - w3[d] * 0.5) < 1e-5
-
-    # composes with the deterministic sampler: realized counts track
-    # the expected rebalanced shares
-    out = sample_mixture(df, "lang", w3, "doc_id")
-    got = {
-        r["lang"]: r["n"]
-        for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    for lang, n_in in (("en", 800), ("fr", 150), ("sw", 50)):
-        assert abs(got[lang] - w3[lang] * n_in) <= 0.2 * max(w3[lang] * n_in, 10)
-
-
 # ---------------------------------------------------------------------------
 # pps_systematic_sample (integer-grid weighted sampling)
 # ---------------------------------------------------------------------------

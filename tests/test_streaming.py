@@ -78,47 +78,6 @@ def test_sliding_stream_equals_batch(spark, events_stream):
     assert _sorted_rows(s, cols) == _sorted_rows(b, cols)
 
 
-def test_stateful_running_totals_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState: state must persist across micro-batches —
-    two files processed one-per-trigger; the last emitted row per key
-    equals the batch groupBy totals over both files."""
-    from tcga_query_project_spark.streaming.stateful import running_totals
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    half1 = [(1, 10.0), (1, 5.0), (2, 1.0)]
-    half2 = [(1, 2.5), (2, 4.0), (3, 7.0)]
-    schema = "user_id long, value double"
-    spark.createDataFrame(half1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(half2, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = running_totals(stream, "user_id", "value")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_stateful")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM t_stateful").collect()
-    # update mode: several rows per key; the final totals must match the
-    # batch aggregation over the union of both files
-    final = {}
-    for r in rows:
-        final[r["key"]] = (r["n_events"], r["total_value"])
-    assert final[1] == (3, 17.5)
-    assert final[2] == (2, 5.0)
-    assert final[3] == (1, 7.0)
-    # state crossed micro-batches: key 1 must have been emitted twice
-    assert sum(1 for r in rows if r["key"] == 1) == 2
-
-
 def test_transform_with_state_totals_and_timer_close(spark, tmp_path):
     """transformWithState: running totals accumulate across
     micro-batches, and the event-time timer publishes a final closed=1
@@ -314,41 +273,6 @@ def test_stream_dedup_drops_duplicates(spark, tmp_path_factory):
     assert sd.exact_dedup_stream(doubled, ["event_id"]).count() == want
 
 
-def test_stream_stream_interval_join_equals_batch(spark, events_stream):
-    """Stream-stream inner interval join (purchases within 1h after a
-    click, same user) must reproduce the batch join exactly once the
-    stream drains."""
-    from tcga_query_project_spark.streaming import joins as sj
-
-    batch, stream = events_stream
-
-    def split(df):
-        return (
-            df.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id"),
-            df.filter(F.col("event_type") == "purchase").select("user_id", "ts", "event_id"),
-        )
-
-    bl, br = split(batch)
-    sl, sr = split(stream)
-    cols = ["user_id", "event_id", "event_id_r"]
-
-    b = sj.interval_join(bl, br, "user_id", within="1 hour").select(*cols)
-    s_df = sj.interval_join(sl, sr, "user_id", within="1 hour", watermark="2 hours")
-    assert s_df.isStreaming
-    q = (
-        s_df.select(*cols)
-        .writeStream.format("memory")
-        .queryName("t_ssjoin")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    s = spark.sql("SELECT * FROM t_ssjoin")
-    assert _sorted_rows(s, cols) == _sorted_rows(b, cols)
-    assert len(_sorted_rows(b, cols)) > 0
-
-
 def test_rollup_hierarchy_equals_direct_tumbling(spark):
     """st_rollup_hierarchy computes hourly aggregates FROM minute
     partials; dropping the standalone tumbling-hourly query is only
@@ -385,128 +309,6 @@ def test_rollup_hierarchy_equals_direct_tumbling(spark):
     # (hash-portability convention), so allow <=5e-5 per contributing
     # minute of drift vs the direct hourly sum
     assert (rolled["total_value"] - direct["total_value"]).abs().max() < 0.01
-
-
-def test_corpus_clean_stream_equals_batch_features(spark, tmp_path_factory):
-    """Streaming corpus prep over a stream carrying every document
-    TWICE must emit exactly the batch pipeline's output once — the
-    watermark dedup collapses the duplicates, the fused features and
-    filters are stateless and identical to batch.
-
-    The base corpus is pre-deduped by content key with a deterministic
-    keeper (min doc_id): content-duplicates in the raw table carry
-    *different raw text* under the same normalized key, so keeper
-    choice (first-arrival in a stream vs min-id in batch) legitimately
-    changes feature rows — the documented batch/stream divergence. With
-    a unique-key base, doubling the stream makes every duplicate group
-    byte-identical and the comparison exact."""
-    from pyspark.sql.window import Window
-
-    from tcga_query_project_spark.operators.dedup import normalized_text
-    from tcga_query_project_spark.streaming import pipeline as sp
-
-    raw = spark.read.parquet(f"{SF}/documents.parquet")
-    w = Window.partitionBy("_key").orderBy(F.col("doc_id").asc())
-    base = (
-        raw.withColumn("_key", normalized_text(F.col("text")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_key", "_rn")
-        # base offset keeps every synthetic event time safely above the
-        # initial (epoch-0) watermark — a ts AT the watermark is late
-        .withColumn(
-            "ingest_ts",
-            F.timestamp_micros((F.col("doc_id") + 1_000_000) * 1_000_000),
-        )
-    )
-    doubled = base.unionAll(base)
-    path = str(tmp_path_factory.mktemp("docs_stream"))
-    doubled.write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(doubled.schema).parquet(path)
-
-    out = sp.corpus_clean_stream(stream)
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_corpus")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    feature_cols = [
-        "doc_id", "first_token", "n_tokens", "n_tokens_bpe", "n_types",
-        "ttr", "mean_token_len", "stopword_ratio", "quality_score",
-        "pred_lang",
-    ]
-    streamed = sorted(
-        tuple(r[c] for c in feature_cols)
-        for r in spark.sql("SELECT * FROM t_corpus").collect()
-    )
-    # same operator, batch scope, un-doubled input — the contract is
-    # that the doubled stream collapses to exactly this
-    batch_out = sorted(
-        tuple(r[c] for c in feature_cols)
-        for r in sp.corpus_clean_stream(base, ts_col="ingest_ts").collect()
-    )
-    assert streamed == batch_out
-    assert len(streamed) > 0
-
-
-def test_continuous_aggregate_stream_rollup_equals_batch(spark, tmp_path_factory):
-    """The streaming continuous-aggregate (incremental minute partials
-    via foreachBatch) rolled up to hours must equal the batch hourly
-    aggregation over raw events — the hypertable pattern's correctness
-    contract, across the stream/batch boundary."""
-    base = tmp_path_factory.mktemp("contagg")
-    src = str(base / "src")
-    batch = read_events(spark, SF)
-    batch.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-
-    aggs = [
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("value").alias("sv"),
-    ]
-    q = sw.continuous_aggregate(
-        stream, "ts", ["event_type"], aggs,
-        minute_path=str(base / "minutes"),
-        checkpoint_path=str(base / "ckpt"),
-        watermark="1 minute",
-    )
-    q.awaitTermination(120)
-    hourly = sw.rollup_minutes(spark, str(base / "minutes"), ["event_type"])
-    # append-mode contract: a window emits only once the watermark
-    # passes its END — the stream's final minute window(s) stay open and
-    # are correctly withheld. Mirror that exactly: batch minute partials
-    # restricted to emitted windows (end <= max(ts) - watermark), then
-    # rolled up.
-    wm_us = (
-        batch.agg(F.max(F.unix_micros("ts"))).collect()[0][0] - 60_000_000
-    )
-    batch_minutes = sw.tumbling_agg(
-        batch, "ts", "1 minute", ["event_type"], aggs
-    ).filter(F.col("window_start_us") + 60_000_000 <= wm_us)
-    direct = (
-        batch_minutes.groupBy(
-            (
-                F.col("window_start_us")
-                - F.col("window_start_us") % F.lit(3_600_000_000)
-            ).alias("window_start_us"),
-            "event_type",
-        )
-        .agg(
-            F.sum("n").cast("long").alias("n_events"),
-            F.round(F.sum("sv"), 4).alias("total_value"),
-        )
-    )
-    cols = ["window_start_us", "event_type", "n_events", "total_value"]
-    got = _sorted_rows(hourly.select(*cols), cols)
-    want = _sorted_rows(direct, cols)
-    assert len(got) == len(want) > 0
-    for g, w in zip(got, want):
-        assert g[:3] == w[:3]
-        assert abs(g[3] - w[3]) < 1e-6, (g, w)
 
 
 def test_near_dup_dedup_stream_bands(spark, tmp_path):
@@ -571,67 +373,6 @@ def test_near_dup_dedup_stream_bands(spark, tmp_path):
         ).collect()
     )
     assert bpassed == passed
-
-
-def test_cusum_drift_detector_across_microbatches(spark, tmp_path):
-    """CUSUM on transformWithState: a level shift sustained across
-    micro-batches fires exactly one alarm (then re-arms), a stable key
-    never alarms, and the recurrence state carries across batches —
-    the alarm here NEEDS both files' evidence to cross the threshold."""
-    pytest.importorskip("google.protobuf")
-    from tcga_query_project_spark.streaming.stateful import cusum_drift_tws
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "user_id long, value double"
-    # key 1: stable at the target (10). key 2: shifted to 13 — each
-    # sample adds 13-10-0.5=2.5; threshold 8 needs 4 samples, split
-    # 2+2 across files so the alarm requires cross-batch state.
-    half1 = [(1, 10.0), (1, 10.2), (2, 13.0), (2, 13.0)]
-    half2 = [(1, 9.8), (1, 10.1), (2, 13.0), (2, 13.0)]
-    spark.createDataFrame(half1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(half2, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = cusum_drift_tws(stream, "user_id", "value", target=10.0,
-                          slack=0.5, threshold=8.0)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t_cusum")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    rows = spark.sql("SELECT * FROM t_cusum").collect()
-    alarms = [r for r in rows if r["drifted"] == 1]
-    assert [(r["key"], r["n_seen"]) for r in alarms] == [(2, 4)]
-    # the alarm row carries the crossing statistic (4 * 2.5 = 10 > 8)
-    assert abs(alarms[0]["cusum_pos"] - 10.0) < 1e-9
-    # stable key: only health rows, re-armed state stays small
-    k1 = [r for r in rows if r["key"] == 1]
-    assert all(r["drifted"] == 0 for r in k1)
-    assert all(r["cusum_pos"] < 8.0 and r["cusum_neg"] < 8.0 for r in k1)
-    # detector re-armed after the alarm: key 2's final health row resets
-    k2_health = [r for r in rows if r["key"] == 2 and r["drifted"] == 0]
-    assert k2_health and k2_health[-1]["cusum_pos"] < 8.0
 
 
 def test_streaming_minhash_values_match_batch_family(spark):

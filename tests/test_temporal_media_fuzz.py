@@ -1,8 +1,5 @@
-"""Operator-level fuzz grids for the temporal-join edge semantics and
-the multimodal chunk/reassemble pair (round-11 verdict item 7: the
-r9-r11 grids — NULL keys, CC chains, prefix sums — each caught real
-divergences; the tj_* direction/tie/interval edges and the chunk
-machinery had none yet).
+"""Operator-level fuzz grids for the temporal-join edge semantics: the
+tj_* direction, tie and interval edges.
 
 Unlike the catalog-level fuzz (Spark vs DuckDB SQL), these grids
 compare each operator against a BRUTE-FORCE pure-Python oracle that
@@ -24,15 +21,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
-from tcga_query_project_spark.operators import multimodal, temporal
+from tcga_query_project_spark.operators import temporal
 
 FUZZ_EXAMPLES = int(os.environ.get("SPARK_GRAFT_FUZZ_EXAMPLES", "5"))
 FUZZ_DERANDOMIZE = os.environ.get("SPARK_GRAFT_FUZZ_SOAK", "") == ""
@@ -242,85 +232,3 @@ def test_fuzz_interval_edges_match_brute_force(spark, bucket_width, tables):
         ).collect()
     }
     assert got == _brute_range(point_rows, interval_rows)
-
-
-# ---------------------------------------------------------------------------
-# multimodal chunk / reassemble
-# ---------------------------------------------------------------------------
-
-_MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("payload", BinaryType()),
-])
-
-
-def _media_df(spark, payloads):
-    return spark.createDataFrame(
-        [(int(i), bytearray(p)) for i, p in payloads], _MEDIA_SCHEMA
-    )
-
-
-@settings(**_SETTINGS)
-@given(
-    payloads=st.lists(
-        st.binary(min_size=0, max_size=40), min_size=0, max_size=6
-    ),
-    chunk_bytes=st.integers(1, 7),
-)
-def test_fuzz_chunk_reassemble_roundtrip(spark, payloads, chunk_bytes):
-    """chunk -> reassemble is the identity for ANY payload bytes —
-    zero-byte payloads included (they travel as one empty chunk), and
-    for chunk sizes that divide the payload exactly (the off-by-one
-    boundary: len % chunk_bytes == 0 must NOT emit a trailing empty
-    chunk)."""
-    rows = list(enumerate(payloads))
-    media = _media_df(spark, rows)
-    chunks = multimodal.chunk_payloads(media, chunk_bytes=chunk_bytes)
-    crows = chunks.collect()
-    for r in crows:
-        assert len(bytes(r["chunk"] or b"")) <= chunk_bytes
-        expect_n = max(
-            1, -(-len(payloads[r["media_id"]]) // chunk_bytes)
-        )
-        assert r["n_chunks"] == expect_n
-    got = {
-        r["media_id"]: bytes(r["payload"] or b"")
-        for r in multimodal.reassemble_payloads(chunks).collect()
-    }
-    assert got == {i: bytes(p) for i, p in rows}
-
-
-@settings(**_SETTINGS)
-@given(
-    payload=st.binary(min_size=5, max_size=40),
-    drop_idx=st.integers(0, 10),
-    dup_idx=st.integers(0, 10),
-)
-def test_fuzz_missing_and_redelivered_chunks(spark, payload, drop_idx,
-                                             dup_idx):
-    """Completeness-gate semantics under delivery faults: a DUPLICATED
-    chunk row still reassembles byte-identically (at-least-once
-    redelivery), but a duplicate can never mask a MISSING chunk —
-    groups with any index absent are dropped, never emitted corrupt."""
-    chunk_bytes = 3
-    media = _media_df(spark, [(1, payload)])
-    chunks = multimodal.chunk_payloads(media, chunk_bytes=chunk_bytes)
-    n = chunks.collect()[0]["n_chunks"]
-
-    # redelivered duplicate of one chunk: reassembles, bytes identical
-    dup = chunks.unionByName(
-        chunks.filter(F.col("chunk_idx") == dup_idx % n)
-    )
-    got = multimodal.reassemble_payloads(dup).collect()
-    assert len(got) == 1 and bytes(got[0]["payload"]) == payload
-
-    if n > 1:
-        # one chunk missing: the whole group is quarantined (dropped)
-        missing = chunks.filter(F.col("chunk_idx") != drop_idx % n)
-        assert multimodal.reassemble_payloads(missing).count() == 0
-        # duplicate of a SURVIVING chunk + a missing one: the distinct-
-        # index gate must still drop it (a row count would be fooled)
-        masked = missing.unionByName(
-            missing.limit(1)
-        )
-        assert multimodal.reassemble_payloads(masked).count() == 0
