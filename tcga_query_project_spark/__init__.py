@@ -14,11 +14,11 @@ Layout
 - ``sources``     — parquet/csv/tsv readers & sinks, checkpoint ladder
                     (``io``); GDC acquisition (``ingest``).
 - ``operators``   — DataFrame-in, DataFrame-out operator library:
-                    relational, nested, stats, glm, survival, temporal,
-                    graph, dedup, similarity, sketches, text, bpe,
-                    unigram, fuzzy, sampling, partitioning,
-                    quality_audit, caching (built-in functions only in
-                    hot paths).
+                    relational, nested, stats, exact_tests, glm,
+                    survival, temporal, graph, dedup, similarity,
+                    sketches, text, classifier, bpe, unigram, fuzzy,
+                    sampling, partitioning, quality_audit, caching
+                    (built-in functions only in hot paths).
 - ``functions``   — scalar expression helpers (significance binning,
                     normal-distribution approximations, portable hashes).
 - ``streaming``   — batch/stream-symmetric windows, joins, dedup,

@@ -1,8 +1,7 @@
 """Trained document-quality classifier (CCNet / GPT-3 recipe).
 
-The third tier of the quality surface, next to the heuristic score
-(``text.quality_score``: length/punctuation/stopword ratios) and the
-corpus-likelihood score (``text.lm_quality_score``: char-trigram LM):
+The supervised tier of the quality surface, next to the heuristic
+score (``text.quality_score``: length/punctuation/stopword ratios):
 a SUPERVISED linear classifier over hashed bag-of-words features —
 "does this document look like the high-quality reference corpus?" —
 the filter the GPT-3 and CCNet pipelines ran over Common Crawl

@@ -14,8 +14,7 @@ TCGA count data — use the exact PERMUTATION distribution of the
 midrank sum over all C(n, n_a) group assignments (the distribution
 ``coin::wilcox_test(distribution="exact")`` computes; base R's
 ``wilcox.test`` refuses ties and silently falls back to the normal
-approximation, which is precisely the gap this path closes — round-9
-verdict item 7). Groups with n_a*n_b above ``max_exact`` OR n_a+n_b
+approximation, which is precisely the gap this path closes). Groups with n_a*n_b above ``max_exact`` OR n_a+n_b
 above ``max_exact_n`` fall back to the tie-corrected normal
 approximation; the ``method`` column records which path ran
 (``exact`` / ``exact-tie-perm`` / ``normal-approx`` / ``degenerate``).
@@ -179,7 +178,7 @@ def _wilcoxon_one_gene(max_exact: int, max_exact_n: int):
         # BOTH gates must pass for an exact path: n1*n2 bounds the
         # tie-free U-table width, n1+n2 bounds the tie-perm subset-sum
         # table (n1*n2 alone admits 2500-vs-1 splits whose pooled n
-        # makes the midrank DP arbitrarily large — round-10 advice).
+        # makes the midrank DP arbitrarily large).
         small = n1 * n2 <= max_exact and n1 + n2 <= max_exact_n
         if small and not has_ties:
             out["p_value"] = _exact_p_two_sided(u, n1, n2)

@@ -41,6 +41,38 @@ def approx_profile(
     )
 
 
+def mergeable_distinct_rollup(
+    df: DataFrame, bucket_col, key_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The sketch-rollup pattern: build one HLL sketch per bucket, then
+    merge sketches — NOT rows — for the grand total.
+
+    Returns ``(per_bucket, total)``. ``per_bucket`` holds a binary
+    sketch + its estimate per bucket; ``total`` unions the bucket
+    sketches into one global estimate. This is how a continuous
+    aggregate keeps distinct-counts: the raw data is read once per
+    bucket, ever; late rollups touch only sketch bytes. (Exact distinct
+    cannot roll up: distinct-per-day does not sum to distinct-per-month.)
+    """
+    per_bucket = df.groupBy(bucket_col.alias("bucket")).agg(
+        F.hll_sketch_agg(key_col).alias("sketch"),
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+    )
+    total = per_bucket.agg(
+        F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(
+            "approx_distinct_total"
+        )
+    )
+    return (
+        per_bucket.select(
+            "bucket",
+            F.hll_sketch_estimate("sketch").alias("approx_distinct"),
+            "n_rows",
+        ),
+        total,
+    )
+
+
 def heavy_hitters(
     df: DataFrame, key_col: str, k: int = 10, capacity: int = 1024
 ) -> DataFrame:
@@ -100,3 +132,111 @@ def heavy_hitters(
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
     return exact.orderBy(F.col("freq").desc(), F.col(key_col).asc()).limit(k)
+
+
+def approx_set_overlap(
+    df: DataFrame, set_col: str, key_col: str
+) -> DataFrame:
+    """Approximate distinct-set algebra between labelled subsets via
+    theta sketches (Datasketches, mergeable): one sketch per value of
+    ``set_col``, then pairwise |A|, |B|, |A∩B|, |A∪B| and Jaccard
+    estimates from SKETCH BYTES only — the raw rows are read exactly
+    once, ever.
+
+    The 100 TB use: estimate train/test fingerprint contamination (or
+    shard overlap, or day-over-day key churn) BEFORE paying for the
+    exact anti-join — the sketch pass is one map-side aggregation, and
+    the pairwise stage touches kilobytes. Exact counterpart:
+    ``dedup.decontaminate`` / an anti-join. Output one row per
+    unordered label pair (a < b).
+    """
+    sk = df.groupBy(F.col(set_col).alias("label")).agg(
+        F.theta_sketch_agg(key_col).alias("sk")
+    )
+    a = sk.select(
+        F.col("label").alias("label_a"), F.col("sk").alias("_ska")
+    )
+    b = sk.select(
+        F.col("label").alias("label_b"), F.col("sk").alias("_skb")
+    )
+    pairs = a.join(F.broadcast(b), F.col("label_a") < F.col("label_b"))
+    inter = F.theta_sketch_estimate(
+        F.theta_intersection(F.col("_ska"), F.col("_skb"))
+    )
+    union = F.theta_sketch_estimate(
+        F.theta_union(F.col("_ska"), F.col("_skb"))
+    )
+    return pairs.select(
+        "label_a",
+        "label_b",
+        F.theta_sketch_estimate("_ska").alias("approx_a"),
+        F.theta_sketch_estimate("_skb").alias("approx_b"),
+        inter.alias("approx_intersection"),
+        union.alias("approx_union"),
+        F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias(
+            "approx_jaccard"
+        ),
+    )
+
+
+def mergeable_quantile_rollup(
+    df: DataFrame,
+    bucket_col,
+    value_col: str,
+    quantiles: tuple[float, ...] = (0.25, 0.5, 0.75),
+) -> tuple[DataFrame, DataFrame]:
+    """KLL-sketch quantile rollup — the quantile counterpart of
+    :func:`mergeable_distinct_rollup`: one KLL sketch per bucket, then
+    the GLOBAL quantiles come from merging bucket sketches, never from
+    re-reading rows. (Exact quantiles cannot roll up: a per-day median
+    says nothing about the month's median; the sketch's rank error
+    survives merging by construction — Karnin, Lang & Liberty, "KLL",
+    FOCS 2016; Spark's Datasketches build.)
+
+    Returns ``(per_bucket, total)``: ``per_bucket`` has one
+    ``approx_quantiles ARRAY<DOUBLE>`` row per bucket (+ ``n_rows``),
+    ``total`` one global row. The global merge folds the
+    dimension-sized bucket-sketch array with the binary
+    ``kll_sketch_merge`` scalar (Spark 4.1 ships no KLL union
+    aggregate) — sketch bytes only, kilobytes of work.
+    """
+    qs = [float(q) for q in quantiles]
+    per_bucket_sk = df.groupBy(bucket_col.alias("bucket")).agg(
+        F.kll_sketch_agg_double(F.col(value_col).cast("double")).alias("sk"),
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+    )
+    per_bucket = per_bucket_sk.select(
+        "bucket",
+        F.array(
+            *[
+                F.kll_sketch_get_quantile_double("sk", F.lit(q))
+                for q in qs
+            ]
+        ).alias("approx_quantiles"),
+        "n_rows",
+    )
+    merged = per_bucket_sk.agg(
+        F.collect_list("sk").alias("_a"),
+        F.sum("n_rows").alias("n_rows"),
+    ).select(
+        # F.get (0-based, null-safe) as the fold seed: element_at
+        # throws INVALID_ARRAY_INDEX under ANSI when a filtered-to-
+        # empty input leaves collect_list empty — the total must come
+        # back NULL, not crash the rollup
+        F.aggregate(
+            F.slice("_a", 2, 1 << 30),
+            F.get("_a", 0),
+            lambda acc, x: F.kll_sketch_merge_double(acc, x),
+        ).alias("_m"),
+        "n_rows",
+    )
+    total = merged.select(
+        F.array(
+            *[
+                F.kll_sketch_get_quantile_double("_m", F.lit(q))
+                for q in qs
+            ]
+        ).alias("approx_quantiles"),
+        "n_rows",
+    )
+    return per_bucket, total

@@ -75,6 +75,25 @@ def test_fuzzy_pairs_includes_duplicates_once_and_skips_null(spark):
     assert all(r["name_a"] is not None and r["name_b"] is not None for r in rows)
 
 
+def test_fuzzy_join_two_tables(spark):
+    left = spark.createDataFrame(
+        [("acme corp",), ("globex",)], "vendor string"
+    )
+    right = spark.createDataFrame(
+        [("acme corp.",), ("acme  corp",), ("initech",), ("globex",)],
+        "supplier string",
+    )
+    got = {
+        (r["vendor"], r["supplier"], r["dist"])
+        for r in fuzzy.fuzzy_join(left, right, "vendor", "supplier", 2).collect()
+    }
+    assert got == {
+        ("acme corp", "acme corp.", 1),
+        ("acme corp", "acme  corp", 1),
+        ("globex", "globex", 0),
+    }
+
+
 def test_resolve_entities_transitive_chain(spark):
     """'bolt' ~ 'bolte' ~ 'boltte': ends are distance 2 apart pairwise
     chained — one entity through transitive closure; canonical is the
@@ -91,3 +110,15 @@ def test_resolve_entities_transitive_chain(spark):
         "boltte": ("bolt", 3),
         "zzz widget": ("zzz widget", 1),
     }
+
+
+def test_delete_variants_cost_bound(spark):
+    """Variant count for a 12-char string at d=2 is 1 + 12 + 66 = 79
+    before dedup — the documented O(L^2) map-side bound."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([("abcdefghijkl",)], "s string")
+    n = df.select(
+        F.size(fuzzy.delete_variants("s", 2)).alias("n")
+    ).first()["n"]
+    assert n == 79  # all distinct for an all-distinct-chars string

@@ -233,6 +233,192 @@ def test_pairs_rows_equal_single_contrast(spark):
                 assert have[k] == pytest.approx(want[k], rel=1e-12, abs=1e-300), (g, k)
 
 
+def test_wilcoxon_exact_known_value(spark):
+    # R: wilcox.test(1:3, 4:6) → exact two-sided p = 0.1, U = 0
+    from tcga_query_project_spark.operators import exact_tests
+
+    rows = [("g", "A", 1.0), ("g", "A", 2.0), ("g", "A", 3.0),
+            ("g", "B", 4.0), ("g", "B", 5.0), ("g", "B", 6.0)]
+    df = spark.createDataFrame(rows, "gene string, lab string, v double")
+    out = exact_tests.wilcoxon_exact(df, "gene", "lab", "v", "A", "B").collect()[0]
+    assert out["method"] == "exact"
+    assert out["u_stat"] == 0.0
+    assert abs(out["p_value"] - 0.1) < 1e-12
+
+
+def test_wilcoxon_exact_agrees_with_normal_for_large_n(spark):
+    # for moderately large tie-free samples the exact p and the SQL
+    # normal approximation must be close
+    import numpy as np
+    from tcga_query_project_spark.operators import exact_tests, stats as sqlstats
+
+    rng = np.random.default_rng(11)
+    a = rng.permutation(np.arange(0.0, 30.0))[:15]
+    b = rng.permutation(np.arange(100.0, 130.0, 1.5))[:15] - 94.75  # .25/.75 fractions → tie-free vs integer a
+    rows = [("g", "A", float(v)) for v in a] + [("g", "B", float(v)) for v in b]
+    df = spark.createDataFrame(rows, "gene string, lab string, v double")
+    ex = exact_tests.wilcoxon_exact(df, "gene", "lab", "v", "A", "B").collect()[0]
+    ap = sqlstats.wilcoxon_rank_sum(df, "gene", "lab", "v", "A", "B").collect()[0]
+    assert ex["method"] == "exact"
+    assert ex["u_stat"] == ap["u_stat"]
+    assert abs(ex["p_value"] - ap["p_value"]) < 0.02
+
+
+def test_wilcoxon_exact_ties_use_tie_permutation(spark):
+    # tied small samples get the exact midrank-permutation
+    # distribution (coin::wilcox_test(distribution="exact") semantics)
+    # instead of falling back to normal-approx. Hand enumeration for
+    # A={1,2}, B={2,3}: midranks 1, 2.5, 2.5, 4; the C(4,2)=6 subsets
+    # have doubled sums {7,7,10,10,13,13} -> W_A=2*(1+2.5)=7 ->
+    # lower = P(W<=7) = 2/6, upper = P(W>=7) = 6/6 -> p = 2*(2/6) = 2/3
+    from tcga_query_project_spark.operators import exact_tests
+
+    rows = [("g", "A", 1.0), ("g", "A", 2.0), ("g", "B", 2.0), ("g", "B", 3.0)]
+    df = spark.createDataFrame(rows, "gene string, lab string, v double")
+    out = exact_tests.wilcoxon_exact(df, "gene", "lab", "v", "A", "B").collect()[0]
+    assert out["method"] == "exact-tie-perm"
+    assert abs(out["p_value"] - 2.0 / 3.0) < 1e-12
+
+
+def test_wilcoxon_tie_perm_matches_brute_force_enumeration(spark):
+    # the DP vs literal enumeration of every C(n, n1) assignment of the
+    # observed midranks — the exact distribution by definition — over
+    # several tied fixtures, including heavy (count-data-like) ties
+    from itertools import combinations
+
+    import numpy as np
+
+    from tcga_query_project_spark.operators import exact_tests
+
+    fixtures = [
+        ([1.0, 2.0, 2.0], [2.0, 3.0]),
+        ([0.0, 0.0, 1.0, 5.0], [0.0, 1.0, 1.0]),
+        ([3.0, 3.0, 3.0], [3.0, 3.0, 3.0]),  # all tied -> p = 1
+        ([1.0, 4.0, 4.0, 7.0, 9.0], [2.0, 4.0, 7.0, 7.0]),
+        # n1 < n2: exercises the non-mirrored DP branch (A is the
+        # smaller arm), vs the n1 >= n2 fixtures above which run the
+        # complement-mirror path
+        ([1.0, 2.0], [2.0, 3.0, 3.0, 5.0]),
+        # heavily skewed split: small-arm DP keeps the table at 2 rows
+        ([0.0] * 4 + [1.0] * 5 + [2.0] * 3, [1.0]),
+    ]
+    for ai, (a, b) in enumerate(fixtures):
+        pooled = np.array(a + b)
+        n1, n = len(a), len(pooled)
+        # midranks
+        order = np.argsort(pooled, kind="mergesort")
+        rank_vals = np.arange(1, n + 1, dtype=float)
+        sv = pooled[order]
+        i = 0
+        while i < n:
+            j = i
+            while j + 1 < n and sv[j + 1] == sv[i]:
+                j += 1
+            rank_vals[i : j + 1] = rank_vals[i : j + 1].mean()
+            i = j + 1
+        ranks = np.empty(n)
+        ranks[order] = rank_vals
+        w_obs = ranks[:n1].sum()
+        sums = [sum(ranks[list(c)]) for c in combinations(range(n), n1)]
+        lo = sum(1 for s in sums if s <= w_obs + 1e-9) / len(sums)
+        hi = sum(1 for s in sums if s >= w_obs - 1e-9) / len(sums)
+        want = min(1.0, 2.0 * min(lo, hi))
+        rows = [("g", "A", float(v)) for v in a] + [
+            ("g", "B", float(v)) for v in b
+        ]
+        df = spark.createDataFrame(rows, "gene string, lab string, v double")
+        out = exact_tests.wilcoxon_exact(
+            df, "gene", "lab", "v", "A", "B"
+        ).collect()[0]
+        assert out["method"] == "exact-tie-perm", ai
+        assert abs(out["p_value"] - want) < 1e-12, (ai, out["p_value"], want)
+
+
+def test_wilcoxon_tie_perm_equals_mann_whitney_when_tie_free():
+    # on tie-free data the midrank-permutation distribution IS the
+    # shifted Mann-Whitney null — the two exact paths must agree
+    import numpy as np
+
+    from tcga_query_project_spark.operators.exact_tests import (
+        _exact_p_two_sided,
+        _tie_perm_p_two_sided,
+    )
+
+    rng = np.random.default_rng(3)
+    for n1, n2 in [(3, 3), (4, 6), (5, 5)]:
+        vals = rng.permutation(np.arange(1.0, n1 + n2 + 1.0))
+        ranks = np.empty(n1 + n2)
+        ranks[np.argsort(vals)] = np.arange(1, n1 + n2 + 1, dtype=float)
+        u = ranks[:n1].sum() - n1 * (n1 + 1) / 2.0
+        assert abs(
+            _tie_perm_p_two_sided(ranks, n1) - _exact_p_two_sided(u, n1, n2)
+        ) < 1e-12
+
+
+def test_wilcoxon_skewed_split_bounded_and_mirror_invariant(spark):
+    # the tie-perm DP must run over the SMALLER
+    # arm so a skewed gate-admitted split (here 60-vs-1, product 60 <=
+    # 2500) allocates a 2-row table, not a 61-row x sum one; and the
+    # mirrored two-sided p must equal the unmirrored one computed by
+    # literal enumeration
+    from itertools import combinations
+
+    import numpy as np
+
+    from tcga_query_project_spark.operators import exact_tests
+
+    rng = np.random.default_rng(17)
+    a = [float(v) for v in rng.integers(0, 5, size=60)]  # heavy ties
+    b = [2.0]
+    rows = [("g", "A", v) for v in a] + [("g", "B", v) for v in b]
+    df = spark.createDataFrame(rows, "gene string, lab string, v double")
+    out = exact_tests.wilcoxon_exact(df, "gene", "lab", "v", "A", "B").collect()[0]
+    assert out["method"] == "exact-tie-perm"
+    # brute force over the 1-element arm: W_B ranges over each midrank;
+    # mirror to A via W_A = T - W_B
+    pooled = np.array(a + b)
+    n = len(pooled)
+    order = np.argsort(pooled, kind="mergesort")
+    rank_vals = np.arange(1, n + 1, dtype=float)
+    sv = pooled[order]
+    i = 0
+    while i < n:
+        j = i
+        while j + 1 < n and sv[j + 1] == sv[i]:
+            j += 1
+        rank_vals[i : j + 1] = rank_vals[i : j + 1].mean()
+        i = j + 1
+    ranks = np.empty(n)
+    ranks[order] = rank_vals
+    w_obs = ranks[:60].sum()
+    sums = [sum(ranks[list(c)]) for c in combinations(range(n), 60)]
+    lo = sum(1 for s in sums if s <= w_obs + 1e-9) / len(sums)
+    hi = sum(1 for s in sums if s >= w_obs - 1e-9) / len(sums)
+    want = min(1.0, 2.0 * min(lo, hi))
+    assert abs(out["p_value"] - want) < 1e-12
+
+
+def test_wilcoxon_total_n_gate_falls_back_to_normal(spark):
+    # product gate passes (200*10=2000 <= 2500) but n=210 > max_exact_n
+    # default 200 -> normal-approx, never the big DP table
+    import numpy as np
+
+    from tcga_query_project_spark.operators import exact_tests
+
+    rng = np.random.default_rng(23)
+    rows = [("g", "A", float(v)) for v in rng.integers(0, 8, size=200)] + [
+        ("g", "B", float(v)) for v in rng.integers(0, 8, size=10)
+    ]
+    df = spark.createDataFrame(rows, "gene string, lab string, v double")
+    out = exact_tests.wilcoxon_exact(df, "gene", "lab", "v", "A", "B").collect()[0]
+    assert out["method"] == "normal-approx"
+    # raising the n gate flips it back to the exact path
+    out2 = exact_tests.wilcoxon_exact(
+        df, "gene", "lab", "v", "A", "B", max_exact_n=250
+    ).collect()[0]
+    assert out2["method"] == "exact-tie-perm"
+
+
 def test_independent_filter_rejects_single_point_grid(spark):
     import pytest as _pytest
 

@@ -130,6 +130,23 @@ texts = st.lists(
 )
 
 
+@given(
+    n1=st.integers(min_value=1, max_value=12),
+    n2=st.integers(min_value=1, max_value=12),
+)
+@settings(max_examples=30, deadline=None)
+def test_exact_u_null_distribution_invariants(n1, n2):
+    """Pure-Python DP invariants: the U null distribution sums to
+    C(n1+n2, n1) and is symmetric about n1*n2/2."""
+    import math
+
+    from tcga_query_project_spark.operators.exact_tests import _u_null_counts
+
+    counts = _u_null_counts(n1, n2)
+    assert counts.sum() == math.comb(n1 + n2, n1)
+    assert (counts == counts[::-1]).all()
+
+
 @given(ids=st.lists(st.integers(min_value=0, max_value=10**9),
                     min_size=1, max_size=50, unique=True))
 @settings(**SETTINGS)
