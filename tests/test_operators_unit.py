@@ -390,8 +390,9 @@ def test_mergeable_distinct_rollup(spark):
     cannot produce by summing)."""
     from tcga_query_project_spark.operators import sketches
     from tcga_query_project_spark.sources.io import read_events
+    from tests.conftest import SF_SMALL
 
-    ev = read_events(spark, "/root/testdata/sf0.001")
+    ev = read_events(spark, SF_SMALL)
     per_bucket, total = sketches.mergeable_distinct_rollup(
         ev, F.date_trunc("day", "ts"), "user_id"
     )
