@@ -590,7 +590,7 @@ def band_firstseen_gate(
     )
 
 
-#: Arrow output schema shared by the embedding near-dup kernels.
+#: Arrow output schema of the exact blocked near-dup's grouped-map kernel.
 _PAIR_SCHEMA = "id_a long, id_b long, cosine double"
 
 
@@ -670,8 +670,9 @@ def embedding_near_dup(
     √(2·parallelism) for CPU balance, or larger to bound per-task
     memory: n = 1e6 docs at B = 1024 is ~1k-row blocks — fine. When
     exactness is not required, :func:`embedding_near_dup_auto` drops
-    the quadratic term entirely (sign-LSH candidates, same kernel as
-    per-bucket verify).
+    the quadratic term entirely (sign-LSH candidates, each verified by
+    a Spark SQL dot product: sparse candidates have no dense block for
+    a matmul to amortize over).
     """
     # Each row emits its grid cells in ONE narrow pass — for block b:
     # 'a' role in cells (b, j) for j >= b, 'b' role in cells (i, b) for
@@ -682,7 +683,6 @@ def embedding_near_dup(
     # a NULL vector can never clear a positive cosine threshold, and it
     # would crash the numpy kernel (inhomogeneous array); the SQL
     # convention drops it via the norms join — mirror that up front.
-    # Same guard in embedding_near_dup_auto.
     df = df.filter(F.col(vec_col).isNotNull())
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
     a_cells = F.transform(
@@ -747,15 +747,17 @@ def embedding_near_dup_auto(
     max_bits: int = 16,
 ) -> DataFrame:
     """Approximate embedding near-dup: sign-LSH candidate generation
-    with the exact matmul kernel as the per-bucket verify stage, the
-    bucket width TUNED TO THE CORPUS in-plan — never quadratic in the
-    corpus.
+    with an exact cosine verify in Spark SQL, the bucket width TUNED TO
+    THE CORPUS in-plan — never quadratic in the corpus.
 
     Table ``t`` buckets each vector by the sign pattern of its ``bits``
     components starting at ``t·bits``; two vectors are candidates if
-    they share a bucket in ANY table. Each (table, bucket) group is
-    scored by one numpy matmul and pairs are deduped across tables.
-    Output ⊆ the exact :func:`embedding_near_dup` result. A FIXED
+    they share a bucket in ANY table. The candidates are a self
+    equi-join on (table, bucket), deduped across tables, and each pair
+    is verified once as ``round(dot / (norm_a · norm_b), 4)`` — the
+    oracle's formula, with each norm computed once per vector — by
+    array expressions, with no Python worker. Output ⊆ the exact
+    :func:`embedding_near_dup` result. A FIXED
     ``bits`` is only a constant-factor reduction of quadratic
     (Σ bucket² ≈ n²·T/2^bits), so the width follows the corpus size
     (``min_bits == max_bits`` pins it):
@@ -795,7 +797,9 @@ def embedding_near_dup_auto(
     # differs across engines (Spark skips NULLs, DuckDB returns NULL) —
     # keeping the argument strictly positive sidesteps both divergences
     # on an empty corpus (where no rows flow anyway).
-    df = df.filter(F.col(vec_col).isNotNull())  # see embedding_near_dup
+    # a NULL vector never clears the threshold, and the oracle's count
+    # (COUNT(embedding)) leaves it out of the bits
+    df = df.filter(F.col(vec_col).isNotNull())
     cnt = df.agg(
         F.greatest(F.count(F.lit(1)), F.lit(1)).cast("double").alias("_n")
     )
@@ -832,23 +836,50 @@ def embedding_near_dup_auto(
         F.broadcast(cnt.select(bits_col.alias("_bits")))
     )
     rows = prepared.select(
-        F.col(id_col), F.col(vec_col), F.explode(tables).alias("_tb")
+        F.col(id_col), F.explode(tables).alias("_tb")
     ).select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col(id_col).cast("long").alias("_id"),
         F.col("_tb.tbl").alias("_tbl"),
         F.col("_tb.bkt").alias("_bkt"),
-        F.lit("a").alias("_role"),
     )
-
-    def kernel(pdf):
-        return _pair_kernel_pdf(pdf, id_col, vec_col, threshold)
-
-    # every (table, bucket) group is a diagonal block for the pair
-    # kernel; a pair found in several tables carries the same rounded
-    # cosine in each, so plain distinct dedups it
-    scored = rows.groupBy("_tbl", "_bkt").applyInPandas(kernel, _PAIR_SCHEMA)
-    return scored.distinct()
+    # a pair sharing a bucket in several tables is verified once
+    a, b = rows.alias("a"), rows.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a._tbl") == F.col("b._tbl"))
+            & (F.col("a._bkt") == F.col("b._bkt"))
+            & (F.col("a._id") < F.col("b._id")),
+        )
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .distinct()
+    )
+    dvec = F.col(vec_col).cast("array<double>")
+    sides = df.select(
+        F.col(id_col).cast("long").alias("_id"),
+        dvec.alias("_v"),
+        F.sqrt(
+            F.aggregate(dvec, F.lit(0.0), lambda acc, x: acc + x * x)
+        ).alias("_n"),
+    )
+    va = sides.toDF("id_a", "_va", "_na")
+    vb = sides.toDF("id_b", "_vb", "_nb")
+    dot = F.aggregate(
+        F.zip_with("_va", "_vb", lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    # dot / (na * nb), as the oracle computes it. try_divide: an
+    # all-zero or dim-0 vector has norm 0, and 0/0 is NULL here as in
+    # DuckDB (plain division raises DIVIDE_BY_ZERO under ANSI), so the
+    # threshold drops the pair on both engines.
+    cosine = F.round(F.try_divide(dot, F.col("_na") * F.col("_nb")), 4)
+    return (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .select("id_a", "id_b", cosine.alias("cosine"))
+        .filter(F.col("cosine") >= F.lit(float(threshold)))
+    )
 
 
 # --- SimHash --------------------------------------------------------------

@@ -38,13 +38,15 @@ Scale notes (100 TB corpus):
 - Convergence is detected with an order-insensitive digest
   (count + sum of xxhash64 over edges) — two scalar aggregates, no
   driver-side edge collection.
-- Small graphs short-circuit: the first digest yields the exact edge
-  count for free, and below ``local_threshold`` edges the component
-  labelling comes from driver-side union-find on the collected pairs
-  (the GraphFrames ``broadcastThreshold`` pattern) — a dedup pair
-  graph is orders of magnitude smaller than its corpus, and one
-  distributed round costs more wall-clock in shuffle-stage scheduling
-  than union-find costs on a million edges.
+- Small graphs short-circuit: one bounded collect of at most
+  ``local_threshold + 1`` distinct edges decides the path before any
+  checkpoint or digest runs, and a graph that fits is labelled by
+  driver-side union-find on those same rows (the GraphFrames
+  ``broadcastThreshold`` pattern) — a dedup pair graph is orders of
+  magnitude smaller than its corpus, and one distributed round costs
+  more wall-clock in shuffle-stage scheduling than union-find costs on
+  a million edges. The labels come back as a ``pyarrow.Table`` frame
+  (a ``LocalTableScan``, no Python worker).
 
 Reference analog: none (the reference pipeline, vital_status_DESeq.R,
 has no graph step); this operator serves the LLM-data-pipeline dedup
@@ -53,6 +55,7 @@ surface the brief adds.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -130,6 +133,18 @@ def _union_find_local(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return {x: find(x) for x in parent}
 
 
+def _collect_at_most(e: DataFrame, limit: int) -> list | None:
+    """The rows of ``e`` when it holds at most ``limit`` of them, else
+    None — decided by one bounded collect (``limit + 1`` rows at most
+    reach the driver). The small-graph gate of both iterative graph
+    operators: a graph that passes is solved on the driver and returned
+    as a ``pyarrow.Table`` frame, which Spark plans as a
+    ``LocalTableScan`` (a Python list would go through a Python worker
+    when the result is read)."""
+    rows = e.limit(limit + 1).collect()
+    return rows if len(rows) <= limit else None
+
+
 def connected_components(
     edges: DataFrame,
     src: str,
@@ -150,9 +165,12 @@ def connected_components(
     not stabilized by then (indicates data corruption, e.g. NaN ids).
 
     ``local_threshold``: when the deduplicated edge list has at most
-    this many edges (known exactly from the first convergence digest —
-    no extra job), solve with driver-side union-find on the collected
-    pairs instead of iterating distributed rounds. Each distributed
+    this many edges (decided by one ``limit(local_threshold + 1)``
+    collect, whose rows are the union-find input when they fit), solve
+    with driver-side union-find instead of iterating distributed
+    rounds. A larger graph pays that collect too (``local_threshold
+    + 1`` rows, dropped) and one recomputation of the edge list, which
+    the distributed path then checkpoints as before. Each distributed
     round costs ~6 shuffle stages of pure scheduling latency however
     small the data, so a tiny graph pays seconds for work union-find
     does in microseconds; 1M edges is ~16 MB of (long, long) — far
@@ -161,13 +179,6 @@ def connected_components(
     GraphFrames' ``broadcastThreshold``; set 0 to force the
     distributed path (tests do, to pin both paths' equivalence).
     """
-    # Lazy checkpoints: marking the round's result for checkpoint and
-    # letting the digest aggregate materialize it costs ONE Spark action
-    # per round instead of two (eager checkpoint job + digest job) —
-    # the digest both truncates lineage and detects convergence in the
-    # same pass. Halves per-round fixed cost; matters because the edge
-    # list is tiny relative to the corpus, so round latency is
-    # scheduling overhead, not data.
     e = (
         edges.select(
             F.col(src).cast("long").alias("u"),
@@ -176,11 +187,26 @@ def connected_components(
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    out_schema = e.select(
-        F.col("u").alias("id"), F.col("v").alias("component")
-    )
+    small = _collect_at_most(e, local_threshold)
+    if small is not None:
+        comp = _union_find_local([(r["u"], r["v"]) for r in small])
+        return edges.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "id": pa.array(list(comp), pa.int64()),
+                    "component": pa.array(list(comp.values()), pa.int64()),
+                }
+            )
+        )
+    # Lazy checkpoints: marking the round's result for checkpoint and
+    # letting the digest aggregate materialize it costs ONE Spark action
+    # per round instead of two (eager checkpoint job + digest job) —
+    # the digest both truncates lineage and detects convergence in the
+    # same pass. Halves per-round fixed cost; matters because the edge
+    # list is tiny relative to the corpus, so round latency is
+    # scheduling overhead, not data.
+    e = e.localCheckpoint(eager=False)
 
     def digest(df: DataFrame) -> tuple:
         # decimal(38,0) accumulator: a sum of 64-bit hashes overflows
@@ -195,18 +221,6 @@ def connected_components(
         return (row["n"], row["h"])
 
     prev = digest(e)
-    if prev[0] == 0:
-        return out_schema.limit(0)
-    if prev[0] <= local_threshold:
-        # e is checkpointed, so this collect re-reads materialized
-        # blocks — no recomputation of the (possibly expensive)
-        # pair-generation subtree.
-        comp = _union_find_local([(r["u"], r["v"]) for r in e.collect()])
-        spark = edges.sparkSession
-        return spark.createDataFrame(
-            [(int(k), int(v)) for k, v in sorted(comp.items())],
-            schema="id bigint, component bigint",
-        )
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         cur = digest(e)
@@ -232,8 +246,19 @@ def _pagerank_local(spark, pairs, damping: float, n_iter: int):
     hatch (same recurrence as the distributed loop; accumulation order
     differs only at float ulp, inside every consumer's rounding)."""
     nodes = sorted({u for u, _ in pairs} | {v for _, v in pairs})
+
+    def frame(rank: list[float]) -> DataFrame:
+        return spark.createDataFrame(
+            pa.table(
+                {
+                    "node": pa.array(nodes, pa.int64()),
+                    "rank": pa.array(rank, pa.float64()),
+                }
+            )
+        )
+
     if not nodes:
-        return spark.createDataFrame([], schema="node bigint, rank double")
+        return frame([])
     idx = {nd: i for i, nd in enumerate(nodes)}
     n = len(nodes)
     out: dict[int, list[int]] = {}
@@ -251,10 +276,7 @@ def _pagerank_local(spark, pairs, damping: float, n_iter: int):
             for j in targets:
                 nxt[j] += share
         rank = nxt
-    return spark.createDataFrame(
-        [(int(nd), float(rank[i])) for nd, i in idx.items()],
-        schema="node bigint, rank double",
-    )
+    return frame(rank)
 
 
 def pagerank(
@@ -302,8 +324,9 @@ def pagerank(
     - Self-loops and duplicate edges are dropped (simple-graph
       semantics); NULL endpoints are dropped.
     - ``local_threshold``: when the deduplicated edge list is at most
-      this many edges (known from the one count that also
-      materializes the persisted edges), iterate driver-side instead —
+      this many edges (decided by the same bounded collect as
+      :func:`connected_components`, whose rows feed the driver-side
+      iteration), iterate driver-side instead —
       n_iter distributed rounds cost ~4 shuffle-stage schedulings each
       however small the graph (measured 4.7 s for a 5000-node graph at
       sf0.1), while sparse power iteration on 1M collected edges is
@@ -325,17 +348,17 @@ def pagerank(
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition("src")
-        .persist()
     )
     if local_threshold:
-        n_edges = e.count()
-        if n_edges <= local_threshold:
-            pairs = [(r["src"], r["dst"]) for r in e.collect()]
-            e.unpersist()
+        small = _collect_at_most(e, local_threshold)
+        if small is not None:
             return _pagerank_local(
-                edges.sparkSession, pairs, damping, n_iter
+                edges.sparkSession,
+                [(r["src"], r["dst"]) for r in small],
+                damping,
+                n_iter,
             )
+    e = e.repartition("src").persist()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

@@ -10,6 +10,7 @@ fit (A6), in :mod:`tcga_query_project_spark.operators.glm`.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -627,7 +628,11 @@ def independent_filter_padj(
     EAGER CONTRACT: this runs two Spark jobs at call time (one scalar
     aggregate for the zero fraction, one ``n_theta``-row rejection-grid
     collect — both dimension-sized, the same guarded-collect class as
-    the k-group log-rank). The rejection grid itself is distributed: a
+    the k-group log-rank). An input not already cached is persisted
+    for the two jobs, so they compute it once between them, and
+    released before returning: the returned plan, and any other query
+    over the same input, never reads that cache. The rejection grid
+    itself is distributed: a
     broadcast of the 50-row cutoff table against the gene table, BH per
     theta via the distinct-p formulation, one grouped count back. The
     gene-level results table this consumes is
@@ -640,25 +645,36 @@ def independent_filter_padj(
         # express the lowess selection — fail loudly, not with a
         # ZeroDivisionError mid-plan (genefilter's default is 50)
         raise ValueError(f"n_theta must be >= 2, got {n_theta}")
-    tested = df.filter(F.col(p).isNotNull())
-    frac0_row = tested.agg(
-        F.coalesce(
-            F.avg(
-                F.when(F.col(base_mean_col) == 0.0, 1.0).otherwise(0.0)
-            ),
-            F.lit(0.0),
-        ).alias("f0")
-    ).collect()[0]
-    lower = float(frac0_row["f0"])
-    upper = 0.95 if lower < 0.95 else 1.0
-    thetas = [
-        lower + (upper - lower) * i / (n_theta - 1) for i in range(n_theta)
-    ]
-    rej = (
-        rejection_grid(df, base_mean_col, p, thetas, alpha=alpha)
-        .orderBy("_ti")
-        .collect()
-    )
+    # the two collects share one computation of the input (for the DE
+    # pipeline, the whole NB-GLM fit): the first populates the cache
+    # and the second reads it
+    persisted = df.storageLevel == StorageLevel.NONE
+    if persisted:
+        df.persist()
+    try:
+        tested = df.filter(F.col(p).isNotNull())
+        frac0_row = tested.agg(
+            F.coalesce(
+                F.avg(
+                    F.when(F.col(base_mean_col) == 0.0, 1.0).otherwise(0.0)
+                ),
+                F.lit(0.0),
+            ).alias("f0")
+        ).collect()[0]
+        lower = float(frac0_row["f0"])
+        upper = 0.95 if lower < 0.95 else 1.0
+        thetas = [
+            lower + (upper - lower) * i / (n_theta - 1)
+            for i in range(n_theta)
+        ]
+        rej = (
+            rejection_grid(df, base_mean_col, p, thetas, alpha=alpha)
+            .orderBy("_ti")
+            .collect()
+        )
+    finally:
+        if persisted:
+            df.unpersist()
     num_rej = [float(r["_nrej"]) for r in rej]
     # lowess over the ACTUAL theta spacing (evenly spaced by
     # construction, so index-based x in select_filter_theta is affine-

@@ -116,6 +116,32 @@ def test_duplicate_and_reversed_edges_are_harmless(spark):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
+def test_cc_local_path_runs_one_job(spark):
+    """The small-graph gate is one bounded collect: no checkpoint or
+    digest job before it, and a label frame that needs no job to build.
+    AQE submits each shuffle map stage as a job of its own, and a limit
+    collect scans partitions in rounds, so the count runs with AQE off
+    and one shuffle partition, where one action is one job."""
+    sc = spark.sparkContext
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    df = spark.createDataFrame([(1, 2), (2, 3), (2, 1), (10, 11)], "a long, b long")
+    group = "cc_local_path_jobs"
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    sc.setJobGroup(group, "connected_components local path")
+    try:
+        out = connected_components(df, "a", "b")
+    finally:
+        sc.setJobGroup("none", "")
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert {r["id"]: r["component"] for r in out.collect()} == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
+    }
+
+
 def test_dup_clusters_golden(spark):
     """Three near-identical long docs (A~B, B~C transitively), one
     near-pair of short docs, one singleton. Keeper = longest text,

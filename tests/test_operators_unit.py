@@ -812,6 +812,25 @@ def test_embedding_near_dup_auto_tunes_bits_and_stays_subset(spark):
     assert len(tuned) >= 7  # 10 planted pairs, recall stays high
 
 
+def test_embedding_near_dup_auto_zero_norm_vectors_yield_no_pairs(spark):
+    """All-zero and dim-0 vectors share every sign bucket, so they reach
+    the verify as candidates with a 0/0 cosine. Under ANSI a plain
+    division raises DIVIDE_BY_ZERO; the verify must drop them instead,
+    as the DuckDB oracle's NULL quotient does."""
+    from tcga_query_project_spark.operators import dedup
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    for dim in (0, 8):
+        df = spark.createDataFrame(
+            [(i, [0.0] * dim) for i in range(1, 5)],
+            "vec_id long, embedding array<double>",
+        )
+        rows = dedup.embedding_near_dup_auto(
+            df, "vec_id", "embedding", 0.35
+        ).collect()
+        assert rows == [], f"dim={dim}"
+
+
 def test_batch_kernels_match_expression_math(spark):
     """The Arrow-batched scoring kernels (_dot_batch/_norm_batch) must
     agree with the higher-order-function expressions they replaced —

@@ -103,6 +103,14 @@ def test_tcga_de_full_fits_in_sql_once(spark):
         assert sum("gene_id" in s for s in plans.read_schemas(df)) == 6, name
 
 
+def test_embedding_lsh_pairs_verify_in_sql(spark):
+    """The sign-LSH near-dup verifies its candidate pairs with Spark SQL
+    array expressions: no grouped-map kernel and no Python worker."""
+    plan = plans.formatted_plan(_run(spark, "dd_embedding_lsh_pairs"), "simple")
+    for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert op not in plan, op
+
+
 # Single-partition windows tolerated ONLY over provably-reduced inputs
 # (the lint sees the plan shape, not cardinality). Each entry names the
 # reduction that bounds the window's input and the true 100 TB path.
@@ -174,8 +182,9 @@ EAGER_BUILD_ALLOWED = {
     # column profiler: localCheckpoint of the (column, value) counts
     # consumed by both the roll-up and the mode resolution
     "qa_column_profile",
-    # connected components: iterative large-star/small-star with
-    # localCheckpoint truncation + converged-frontier collect guard
+    # connected components: one bounded edge collect decides the path
+    # (driver union-find for small graphs; otherwise large-star/
+    # small-star rounds with localCheckpoint truncation and digests)
     "dd_dup_clusters",
     "er_entity_clusters",
     # dedup index build (corpus hashed once into the persisted index)
