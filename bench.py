@@ -363,9 +363,9 @@ def _run_session(headline: list[str], session_idx: int) -> dict:
     # timings at this scale carry 1-3 s of session noise (GC pauses from
     # accumulated broadcasts, AQE re-planning jitter) that isolated runs
     # don't show; every execution is a full distributed run through the
-    # noop sink. The timer starts BEFORE spec.build so operators that
-    # eagerly materialize shared caches at build time (bucketed ANN,
-    # IVF) are charged for that population inside the measurement.
+    # noop sink. The timer starts BEFORE spec.build so queries with
+    # eager build-time jobs (tests/test_plans.py EAGER_BUILD_ALLOWED)
+    # are charged for that work inside the measurement.
     times: dict[str, float] = {}
     times_median: dict[str, float] = {}
     times_exec: dict[str, float] = {}

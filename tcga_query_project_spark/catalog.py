@@ -1387,10 +1387,10 @@ def w3_w4_survival_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise). Lazily populated — the subject table is cheap enough
     that the broadcast-vs-stream first-touch race costs less than a
     dedicated populate job at any measured SF; caching contract
-    (lifetime + release valve) in operators/caching.py."""
+    (lifetime) in operators/caching.py."""
     from tcga_query_project_spark.operators.caching import materialize_shared
 
-    subj = materialize_shared(_survival_subjects(spark, sf_dir), eager=False)
+    subj = materialize_shared(_survival_subjects(spark, sf_dir))
     km = survival.km_curve(subj, "time_s", "status", ["stratum"]).withColumn(
         "survival", F.round("survival", 6)
     )
@@ -1824,9 +1824,9 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH prm AS (
       -- COUNT(embedding), not COUNT(*): the operator filters NULL
-      -- vectors before counting (they can never clear the threshold
-      -- and would crash the numpy kernel), so bits derive from the
-      -- non-NULL corpus on both sides
+      -- vectors before counting (they can never clear the
+      -- threshold), so bits derive from the non-NULL corpus on both
+      -- sides
       SELECT GREATEST(4, LEAST(16,
                CAST(CEIL(LOG2(GREATEST(COUNT(embedding), 1) / 16.0))
                     AS BIGINT))) AS bits
@@ -2158,9 +2158,11 @@ def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 decimals so the threshold decision is FP-portable). Exact
     all-pairs semantics, executed as a distributed blocked matmul
     (disjoint id-blocks x applyInPandas numpy kernel — nothing on the
-    driver); dedup.embedding_near_dup_auto (dd_embedding_lsh_pairs) is
-    the sub-quadratic sign-LSH variant for corpora where exactness can
-    be traded."""
+    driver): dense all-pairs is the one shape where a matmul beats the
+    package's Spark SQL cosine (``similarity.cosine``), which scores the
+    sparse and broadcast pairs. dedup.embedding_near_dup_auto
+    (dd_embedding_lsh_pairs) is the sub-quadratic sign-LSH variant for
+    corpora where exactness can be traded."""
     emb = _t(spark, sf_dir, "embeddings")
     return dedup.embedding_near_dup(emb, "vec_id", "embedding", 0.35)
 
@@ -2203,9 +2205,11 @@ def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for 10 query vectors against the whole
-    embeddings table — the ANN baseline (LSH-bucketed variant in
-    operators/similarity.py is the scale path). Ranking happens on the
-    4-decimal-rounded cosine so tie order is FP-portable."""
+    embeddings table — the ANN baseline: ``similarity.cosine_topk`` at
+    ``bits=0`` (one bucket), the operator ann_lsh_bucketed runs at
+    ``bits=4``. Pairs are scored in Spark SQL with no Python worker.
+    Ranking happens on the 4-decimal-rounded cosine so tie order is
+    FP-portable."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     return similarity.cosine_topk(q, emb, "vec_id", "embedding", k=5)
@@ -4563,23 +4567,20 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed (LSH) ANN — the scale path next to ann_cosine_topk's
-    brute force: deterministic sign-LSH bucket (axis-aligned hyperplanes
+    brute force, and the same operator (``similarity.cosine_topk``) at
+    ``bits=4``: deterministic sign-LSH bucket (axis-aligned hyperplanes
     on the leading 4 components, operators/similarity.sign_bucket),
-    candidate generation via equi-join on bucket id, exact cosine
-    re-rank of candidates only — each of the 50 query vectors scores
-    ~1/16th of the corpus instead of all of it. Recall < 1 by
-    construction (the ANN trade-off); the bucketing is deterministic and
-    mirrored verbatim in the oracle, so the *result* is exact and
+    candidate generation via equi-join on bucket id, exact Spark SQL
+    cosine re-rank of candidates only — each of the 50 query vectors
+    scores ~1/16th of the corpus instead of all of it. Nothing is
+    cached and nothing runs at build time. Recall < 1 by construction
+    (the ANN trade-off); the bucketing is deterministic and partitions
+    the vectors exactly as the oracle's CASE sum does (bucket ids
+    differ, the grouping does not), so the *result* is exact and
     hash-checkable."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk_bucketed(
-        emb,
-        "vec_id",
-        "embedding",
-        k=3,
-        bits=4,
-        query_filter=F.col("query_id") < 50,
-    )
+    q = emb.filter(F.col("vec_id") < 50)
+    return similarity.cosine_topk(q, emb, "vec_id", "embedding", k=3, bits=4)
 
 
 @register_bench_only(

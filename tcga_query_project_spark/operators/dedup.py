@@ -19,6 +19,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tcga_query_project_spark.operators.partitioning import fan_out
+from tcga_query_project_spark.operators.similarity import (
+    cosine,
+    sign_bucket,
+    vector_side,
+)
 from tcga_query_project_spark.operators.text import tokens
 
 
@@ -295,14 +300,14 @@ def near_duplicates(
     arrays feed three branches (signatures + both verify sides) and are
     persisted (memory, spill-to-disk) so tokenize/shingle runs once; at
     cluster scale the same role is played by a parquet checkpoint.
-    Caching contract (lifetime + release valve): operators/caching.py;
+    Caching contract (lifetime): operators/caching.py;
     lazy population — all three consumers execute inside one job here,
     so first-touch fill is cheapest. Results are value-identical to the
     exploded formulation (the DuckDB oracle replays that one).
     """
     from tcga_query_project_spark.operators.caching import materialize_shared
 
-    sh = materialize_shared(shingle_array(df, id_col, text_col, k), eager=False)
+    sh = materialize_shared(shingle_array(df, id_col, text_col, k))
     sig = minhash_signature_arrays(sh, id_col, num_hashes)
     cand = lsh_candidates(sig, id_col, band_size)
     return jaccard_pairs_arrays(cand, sh, id_col).filter(
@@ -424,7 +429,7 @@ def jaccard_prefix_join(
         )
     # the FLAT postings spine: feeds the frequency agg, the key-sort
     # agg, and BOTH verify sides — persist it. LAZY:
-    # the eager count() paid one full extra pass per cache just to
+    # an eager count() paid one full extra pass per cache just to
     # pre-populate (measured 5.0s -> 3.5s wall at sf0.1). There are NO
     # partition-level cache locks —
     # if AQE broadcasts the rk frequency table, its build can race the
@@ -432,7 +437,7 @@ def jaccard_prefix_join(
     # worst case equals the no-persist baseline (each consumer computes
     # the spine once), so lazy stays a measured win with a bounded
     # downside. See caching.materialize_shared's contract note.
-    post = materialize_shared(post0, eager=False)
+    post = materialize_shared(post0)
     # rarest-first global order as a sortable string key: zero-padded
     # corpus count + the element itself (fixed 12-digit count field)
     rk = (
@@ -461,8 +466,7 @@ def jaccard_prefix_join(
             "_id",
             s.alias("_s"),
             F.posexplode(F.slice("_keys", 1, p_len)).alias("_pos", "_rkey"),
-        ),
-        eager=False,
+        )
     )
     a = pre.select(
         F.col("_id").alias("doc_a"),
@@ -566,9 +570,7 @@ def band_firstseen_gate(
         materialize_shared,
     )
 
-    sh = materialize_shared(
-        shingle_array(df, id_col, text_col, k), eager=False
-    )
+    sh = materialize_shared(shingle_array(df, id_col, text_col, k))
     sig = minhash_signature_arrays(sh, id_col, num_hashes)
     seeds = sorted(int(c[3:]) for c in sig.columns if c.startswith("_mh"))
     bands = _band_signatures(sig, id_col, seeds, band_size)
@@ -659,9 +661,12 @@ def embedding_near_dup(
     Distributed blocked matmul, nothing on the driver: rows hash into
     ``n_blocks`` disjoint blocks, a tiny broadcast grid enumerates the
     B(B+1)/2 unordered block pairs, and each pair becomes one
-    ``applyInPandas`` group scored by a single vectorized numpy matmul
-    (~100x faster than per-pair interpreted array expressions — 4M
-    pairs x 64 dims took 31 s that way, well under a second here).
+    ``applyInPandas`` group scored by a single vectorized numpy matmul.
+    Dense all-pairs is the one shape where that beats the package's
+    Spark SQL cosine (:func:`similarity.cosine`): at sf0.1 (2,000
+    vectors, ~2M pairs, 4,143 kept) this kernel takes 0.89 s and the
+    SQL cross join 5.6 s over 4 partitions (17 s on the single scan
+    split), warm medians on a 4-core host.
 
     Scale accounting: all-pairs-above-threshold is inherently
     O(n²·d) compute — the blocked grid distributes it evenly (each
@@ -754,9 +759,10 @@ def embedding_near_dup_auto(
     components starting at ``t·bits``; two vectors are candidates if
     they share a bucket in ANY table. The candidates are a self
     equi-join on (table, bucket), deduped across tables, and each pair
-    is verified once as ``round(dot / (norm_a · norm_b), 4)`` — the
-    oracle's formula, with each norm computed once per vector — by
-    array expressions, with no Python worker. Output ⊆ the exact
+    is verified once by :func:`similarity.cosine`, ``round(dot /
+    (norm_a · norm_b), 4)`` — the oracle's formula, with each norm
+    computed once per vector — in array expressions, with no Python
+    worker. Output ⊆ the exact
     :func:`embedding_near_dup` result. A FIXED
     ``bits`` is only a constant-factor reduction of quadratic
     (Σ bucket² ≈ n²·T/2^bits), so the width follows the corpus size
@@ -769,9 +775,8 @@ def embedding_near_dup_auto(
     corpus size and verify work is ≈ n·occupancy·T — linear. The
     corpus count enters as a broadcast one-row aggregate (cross-join
     scalar, the q22/tfidf pattern — no driver job, no eager build), and
-    the bucket fold runs over a dynamic ``sequence(1, bits)`` (big-
-    endian fold ``acc·2 + sign-bit``; bucket ids are opaque — grouping,
-    not values, is the contract). Everything stays engine-portable:
+    :func:`similarity.sign_bucket` folds a dynamic ``sequence(1, bits)``
+    per table. Everything stays engine-portable:
     the DuckDB oracle replays count → bits → buckets → exact verify
     with the identical rule. Cross-engine safety of ceil(log2(x)) is a
     CLAMP argument, not an exactness one: Spark computes log2 as
@@ -799,7 +804,9 @@ def embedding_near_dup_auto(
     # on an empty corpus (where no rows flow anyway).
     # a NULL vector never clears the threshold, and the oracle's count
     # (COUNT(embedding)) leaves it out of the bits
-    df = df.filter(F.col(vec_col).isNotNull())
+    df = df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
+    )
     cnt = df.agg(
         F.greatest(F.count(F.lit(1)), F.lit(1)).cast("double").alias("_n")
     )
@@ -810,35 +817,21 @@ def embedding_near_dup_auto(
             F.ceil(F.log2(F.col("_n") / F.lit(float(target_occupancy)))),
         ),
     )
-    vec = F.col(vec_col)
+    bits = F.col("_bits")
     tables = F.transform(
         F.sequence(F.lit(0), F.lit(n_tables - 1)),
         lambda t: F.struct(
             t.cast("long").alias("tbl"),
-            F.aggregate(
-                F.sequence(F.lit(1), F.col("_bits")),
-                F.lit(0).cast("long"),
-                # F.get, not element_at: a tuned width past the vector
-                # dimension reads NULL (→ bit 0) instead of throwing
-                # under ANSI — same as SQL list indexing out of bounds
-                lambda acc, p: acc * 2
-                + F.when(
-                    F.get(
-                        vec, (t * F.col("_bits") + p - 1).cast("int")
-                    ).cast("double")
-                    > 0,
-                    F.lit(1),
-                ).otherwise(F.lit(0)).cast("long"),
-            ).alias("bkt"),
+            sign_bucket(F.col(vec_col), bits, start=t * bits).alias("bkt"),
         ),
     )
-    prepared = fan_out(df.select(F.col(id_col), vec), id_col).crossJoin(
+    prepared = fan_out(df, id_col).crossJoin(
         F.broadcast(cnt.select(bits_col.alias("_bits")))
     )
     rows = prepared.select(
         F.col(id_col), F.explode(tables).alias("_tb")
     ).select(
-        F.col(id_col).cast("long").alias("_id"),
+        F.col(id_col).alias("_id"),
         F.col("_tb.tbl").alias("_tbl"),
         F.col("_tb.bkt").alias("_bkt"),
     )
@@ -854,31 +847,21 @@ def embedding_near_dup_auto(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
-    dvec = F.col(vec_col).cast("array<double>")
-    sides = df.select(
-        F.col(id_col).cast("long").alias("_id"),
-        dvec.alias("_v"),
-        F.sqrt(
-            F.aggregate(dvec, F.lit(0.0), lambda acc, x: acc + x * x)
-        ).alias("_n"),
-    )
-    va = sides.toDF("id_a", "_va", "_na")
-    vb = sides.toDF("id_b", "_vb", "_nb")
-    dot = F.aggregate(
-        F.zip_with("_va", "_vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # dot / (na * nb), as the oracle computes it. try_divide: an
-    # all-zero or dim-0 vector has norm 0, and 0/0 is NULL here as in
-    # DuckDB (plain division raises DIVIDE_BY_ZERO under ANSI), so the
-    # threshold drops the pair on both engines.
-    cosine = F.round(F.try_divide(dot, F.col("_na") * F.col("_nb")), 4)
+    sides = vector_side(df, id_col, vec_col)
+    cos = cosine(F.col("_va"), F.col("_na"), F.col("_vb"), F.col("_nb"))
+    # the threshold goes through a generator so that it stays above the
+    # join: a plain filter on the cosine is pushed into the join
+    # condition, and the dot product is then evaluated twice per pair
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cosine.alias("cosine"))
-        .filter(F.col("cosine") >= F.lit(float(threshold)))
+        cand.join(sides.toDF("id_a", "_va", "_na"), "id_a")
+        .join(sides.toDF("id_b", "_vb", "_nb"), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.explode(
+                F.filter(F.array(cos), lambda c: c >= F.lit(float(threshold)))
+            ).alias("cosine"),
+        )
     )
 
 
@@ -972,12 +955,8 @@ def decontaminate(
         materialize_shared,
     )
 
-    sh_c = materialize_shared(
-        shingle_array(corpus, id_col, text_col, k), eager=False
-    )
-    sh_r = materialize_shared(
-        shingle_array(reference, id_col, text_col, k), eager=False
-    )
+    sh_c = materialize_shared(shingle_array(corpus, id_col, text_col, k))
+    sh_r = materialize_shared(shingle_array(reference, id_col, text_col, k))
     sig_c = minhash_signature_arrays(sh_c, id_col, num_hashes)
     sig_r = minhash_signature_arrays(sh_r, id_col, num_hashes)
     seeds = list(range(1, num_hashes + 1))
@@ -1207,8 +1186,7 @@ def dedup_against_index(
     sig_n = materialize_shared(
         minhash_signature(
             shingle_rows(new_docs, id_col, text_col, k), id_col, len(seeds)
-        ),
-        eager=False,
+        )
     )
     bands_n = _band_signatures(sig_n, id_col, seeds, band_size).select(
         F.col(id_col), "band", "band_sig"

@@ -1,32 +1,38 @@
 """Similarity search over embedding columns (north-star; SURVEY.md §2.10).
 
 ``embeddings(vec_id, embedding ARRAY<FLOAT>, label)`` — cosine top-k
-with a brute-force baseline (:func:`cosine_topk`) and a sign-LSH
-bucketed scale path (:func:`cosine_topk_bucketed`), plus the per-row
-array profile (:func:`array_stats`).
+(:func:`cosine_topk`: brute force at ``bits=0``, single-probe sign-LSH
+buckets above it) and the per-row array profile (:func:`array_stats`).
 
-Top-k pair scoring runs in Arrow-batched pandas UDFs (einsum over the
-batch); the HOF forms ``_dot``/``_norm`` are kept for single-row
-derived columns and as the oracle-mirrorable reference semantics.
-The SQL form is not the slower one everywhere: verifying sparse
-threshold candidates, the ``aggregate(zip_with(...))`` dot product
-beat both the Arrow UDF and a grouped-map numpy kernel (the top-k
-scorers here were not re-measured). Warm medians over the sign-LSH
-near-dup candidates of the perfbench native corpus (64-dim vectors,
-seed 9; ``local[4]`` on a 4-core, 15 GB host):
+Every sparse or broadcast cosine pair in the package is scored by one
+Spark SQL form: :func:`vector_side` gives each vector its norm once, and
+:func:`cosine` is ``round(try_divide(dot, na·nb), 4)`` with ``dot =
+aggregate(zip_with(...))``, the oracles' ``dot / (nrm_a · nrm_b)``.
+``try_divide`` makes a zero-norm vector's cosine NULL under ANSI, as
+DuckDB's division does, so it ranks last in a top-k and never clears a
+threshold. :func:`sign_bucket` is the one sign-LSH bucket expression.
+Build+exec warm medians of 5 runs after one warm-up (a range: two fresh
+sessions), cache cleared before each run, ``get_spark(cpus=4)`` on a
+4-core, 15 GB host, against the Arrow-batched pandas UDF scorers and
+eager bucket cache this form replaced (same rows):
 
-- 800 vectors (1,042 pairs): SQL 1.31 s wall / 3.5 s CPU; ``_dot_batch``
-  on the same candidates 1.76 s / 5.3 s; per-bucket numpy kernel
-  1.96 s / 3.6 s.
-- 8,000 vectors (26,621 pairs): SQL 1.74 s / 5.2 s; ``_dot_batch``
-  2.24 s / 7.8 s; numpy kernel 3.10 s / 10.7 s.
+============================  ===============  ===============
+query, scale                  Arrow UDFs       Spark SQL
+============================  ===============  ===============
+``ann_cosine_topk``, sf0.1    1.16–1.23 s      0.96–1.05 s
+``ann_lsh_bucketed``, sf0.1   1.25–1.51 s      0.71–0.76 s
+``ann_cosine_topk``, sf0.01   1.10 s           0.82 s
+``ann_lsh_bucketed``, sf0.01  1.23 s           0.60 s
+exact all-pairs, sf0.1        0.89 s (numpy)   5.6 s
+============================  ===============  ===============
 
-The SQL form matched the DuckDB oracle exactly at both sizes, and the
-other two returned the same pair counts.
+The last row (2,000 vectors, ~2M pairs, 4,143 kept; SQL over 4
+partitions) is dense all-pairs, where :func:`dedup.embedding_near_dup`'s
+blocked numpy matmul amortizes over whole blocks; it keeps that kernel.
 
 Scale notes: brute force is O(|Q|·|C|) — right answer for small query
-sets against a broadcast candidate side. The bucketed path buckets by
-sign pattern on the leading components, so candidate generation is an
+sets against a broadcast query side. The bucketed form buckets by sign
+pattern on the leading components, so candidate generation is an
 equi-join on bucket id, cutting the cross product by ~2^bits.
 """
 
@@ -35,94 +41,75 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.sql.types import DoubleType
 
-from tcga_query_project_spark.operators.caching import (
-    materialize_shared as _materialize_shared,
-)
 from tcga_query_project_spark.operators.partitioning import fan_out
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def vector_side(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(id, v, norm)``: each vector as ``array<double>`` with its L2
+    norm, computed once per vector rather than once per pair."""
+    v = F.col(vec_col).cast("array<double>")
+    return df.select(
+        F.col(id_col).alias("id"),
+        v.alias("v"),
+        F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)).alias(
+            "norm"
+        ),
     )
 
 
-@F.pandas_udf(DoubleType())
-def _dot_batch(a, b):
-    """Arrow-batched row-wise dot product.
-
-    Spark evaluates higher-order-function lambdas interpreted (outside
-    whole-stage codegen) — measured ~3 µs per lambda call, which makes
-    per-pair ``aggregate(zip_with(...))`` the bottleneck of every
-    similarity query (2.6M lambda evals for a 20k-pair top-k). One
-    einsum over the Arrow batch does the same math in float64 at memory
-    bandwidth. Used for PAIR scoring; single-row norms stay expression-
-    level where they feed oracle-checked columns."""
-    import numpy as np
-    import pandas as pd
-
-    if not len(a):
-        return pd.Series([], dtype="float64")
-    ma = np.stack(a.to_numpy()).astype("float64", copy=False)
-    mb = np.stack(b.to_numpy()).astype("float64", copy=False)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-
-@F.pandas_udf(DoubleType())
-def _norm_batch(a):
-    """Arrow-batched row-wise L2 norm (same rationale as _dot_batch)."""
-    import numpy as np
-    import pandas as pd
-
-    if not len(a):
-        return pd.Series([], dtype="float64")
-    m = np.stack(a.to_numpy()).astype("float64", copy=False)
-    return pd.Series(np.sqrt(np.einsum("ij,ij->i", m, m)))
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+def cosine(va: Column, na: Column, vb: Column, nb: Column) -> Column:
+    """Cosine of two :func:`vector_side` rows, rounded to 4 decimals for
+    FP portability; NULL when either norm is 0 (0/0 raises
+    ``DIVIDE_BY_ZERO`` under ANSI, and is NULL in DuckDB)."""
+    dot = F.aggregate(
+        F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
+    return F.round(F.try_divide(dot, na * nb), 4)
 
 
-def _rank_top_k(scored: DataFrame, k: int) -> DataFrame:
-    """Keep each query's ``k`` best ``(query_id, neighbor_id, cosine)``
-    rows, ranked by cosine with a deterministic tiebreak on neighbor
-    id."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+def sign_bucket(
+    vec: Column, bits: int | Column = 4, start: int | Column = 0
+) -> Column:
+    """Axis-aligned hyperplane LSH bucket: the sign pattern of components
+    ``start+1 .. start+bits``, folded big-endian (``acc·2 + bit``).
+    Deterministic, model-free and expressible verbatim in any SQL
+    engine. Bucket ids are opaque: the grouping is the contract, not the
+    values. ``bits`` and ``start`` may be Columns (a width tuned in-plan).
+    A component past the vector's end reads NULL through the null-safe
+    ``F.get`` (``element_at`` throws under ANSI) and gives bit 0, as SQL
+    list indexing does. ``bits=0`` is one constant bucket."""
+    bits = F.lit(bits) if isinstance(bits, int) else bits
+    start = F.lit(start) if isinstance(start, int) else start
+    fold = F.aggregate(
+        F.sequence(F.lit(1), bits),
+        F.lit(0).cast("long"),
+        lambda acc, p: acc * 2
+        + F.when(F.get(vec, (start + p - 1).cast("int")).cast("double") > 0, 1)
+        .otherwise(0)
+        .cast("long"),
     )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    # Spark's sequence(1, 0) is [1, 0], not empty. The coalesce also
+    # makes the bucket non-nullable, so a join on it infers no
+    # isnotnull filter that would evaluate the fold a second time.
+    return F.coalesce(F.when(bits > 0, fold), F.lit(0).cast("long"))
 
 
 def array_stats(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Typed-array column profile: dimensionality, L2 norm, mean /
     min / max component, RMS: cheap per-row derived features, all
     expression-level."""
-    v = F.col(vec_col)
-    total = F.aggregate(
-        F.transform(v, lambda x: x.cast("double")), F.lit(0.0), lambda acc, x: acc + x
-    )
+    v = F.col("v")
     dim_d = F.size(v).cast("double")
-    return df.select(
-        F.col(id_col),
+    total = F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x)
+    return vector_side(df, id_col, vec_col).select(
+        F.col("id").alias(id_col),
         F.size(v).cast("long").alias("dim"),
-        F.round(_norm(v), 6).alias("l2_norm"),
+        F.round("norm", 6).alias("l2_norm"),
         F.round(total / dim_d, 6).alias("mean_val"),
-        F.round(F.array_min(v).cast("double"), 6).alias("min_val"),
-        F.round(F.array_max(v).cast("double"), 6).alias("max_val"),
-        F.round(_norm(v) / F.sqrt(dim_d), 6).alias("rms"),
+        F.round(F.array_min(v), 6).alias("min_val"),
+        F.round(F.array_max(v), 6).alias("max_val"),
+        F.round(F.col("norm") / F.sqrt(dim_d), 6).alias("rms"),
     )
 
 
@@ -132,110 +119,39 @@ def cosine_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
+    bits: int = 0,
 ) -> DataFrame:
-    """Brute-force cosine top-k: every query row scored against every
-    candidate (self-matches excluded), ranked per query with a
-    deterministic tiebreak on candidate id.
+    """Cosine top-k of each query row among the candidates that share
+    its :func:`sign_bucket` (self-matches excluded), ranked per query
+    by cosine with a deterministic tiebreak on candidate id; NULL
+    cosines (zero-norm vectors) rank last.
+
+    ``bits=0`` puts every vector in one bucket: brute force. ``bits>0``
+    is single-probe sign-LSH — candidate generation is an equi-join on
+    bucket id and each query exactly scores ~|candidates|/2^bits rows.
+    Recall is then < 1 by construction (the ANN trade); the bucket
+    assignment is deterministic, so results are reproducible across
+    engines.
 
     The query side is expected to be small — Spark broadcasts it, so the
     candidate scan never shuffles; the only shuffle is the tiny per-query
-    top-k window.
+    top-k window. At 100 TB: bucket the corpus once (write it bucketed by
+    bucket id) and broadcast the query side per bucket.
     """
-    # the query norm is computed once per query on the BROADCAST side
-    # (|Q| rows), never per pair; the candidate norm stays fused with
-    # the dot in the one streamed Python stage, so the big side crosses
-    # the Arrow boundary exactly once.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm_batch(F.col(vec_col)).alias("_qn"),
+    q = vector_side(queries, id_col, vec_col).select(
+        F.col("id").alias("query_id"),
+        F.col("v").alias("_qv"),
+        F.col("norm").alias("_qn"),
+        sign_bucket(F.col("v"), bits).alias("_bkt"),
     )
     # the candidate side carries the per-pair dot-product work; a
     # single-split scan would run it on one core (fan_out is a no-op
     # once the scan itself parallelizes).
-    c = fan_out(candidates, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot_batch(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * _norm_batch(F.col("_cv"))),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    return _rank_top_k(scored, k)
-
-
-def sign_bucket(vec: Column, bits: int = 4) -> Column:
-    """Axis-aligned hyperplane LSH bucket: bit b is the sign of
-    component b+1. The simplest member of the hyperplane family —
-    deterministic, model-free, and expressible verbatim in any SQL
-    engine (which is why the catalog's oracle-checked bucketed-ANN query
-    uses it)."""
-    bucket = F.lit(0).cast("long")
-    for b in range(bits):
-        bucket = bucket + F.when(
-            F.element_at(vec, b + 1).cast("double") > 0, F.lit(1 << b)
-        ).otherwise(F.lit(0)).cast("long")
-    return bucket
-
-
-def cosine_topk_bucketed(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 3,
-    bits: int = 4,
-    query_filter: Column | None = None,
-) -> DataFrame:
-    """Bucketed ANN with deterministic sign-LSH: candidates = rows in
-    the query's own bucket (single-probe). Candidate generation is an
-    equi-join on bucket id — the corpus is scanned once, bucketed once,
-    and each query exactly-scores only ~|corpus|/2^bits rows. Recall is
-    by construction < 1 (that is the ANN trade); the bucket assignment
-    is deterministic, so results are reproducible across engines.
-
-    At 100 TB: bucket the corpus ONCE (write bucketed/partitioned by
-    bucket id), broadcast the query side per bucket; the per-bucket
-    top-k never sees other buckets' rows.
-    """
-    # both the query and candidate branches read this subtree; persist +
-    # eagerly populate so the bucket assignment + norm stage runs once,
-    # not per branch, and the broadcast build never races a cold cache
-    # (the in-memory cache plays the role the bucketed table layout
-    # plays at cluster scale; caching contract: see _materialize_shared).
-    # Eager, not lazy: the broadcast build's first touch would
-    # serialize the population the eager count parallelizes across all
-    # cores.
-    based = _materialize_shared(
-        fan_out(df.select(F.col(id_col), F.col(vec_col)), id_col).select(
-            F.col(id_col),
-            F.col(vec_col),
-            sign_bucket(F.col(vec_col), bits).alias("_bkt"),
-            _norm_batch(F.col(vec_col)).alias("_nrm"),
-        )
-    )
-    q = based.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.col("_nrm").alias("_qn"),
-        "_bkt",
-    )
-    if query_filter is not None:
-        q = q.filter(query_filter)
-    c = based.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.col("_nrm").alias("_cn"),
-        "_bkt",
+    c = vector_side(fan_out(candidates, id_col), id_col, vec_col).select(
+        F.col("id").alias("neighbor_id"),
+        F.col("v").alias("_cv"),
+        F.col("norm").alias("_cn"),
+        sign_bucket(F.col("v"), bits).alias("_bkt"),
     )
     scored = (
         F.broadcast(q)
@@ -244,11 +160,14 @@ def cosine_topk_bucketed(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                _dot_batch(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * F.col("_cn")),
-                4,
-            ).alias("cosine"),
+            cosine(F.col("_qv"), F.col("_qn"), F.col("_cv"), F.col("_cn")).alias(
+                "cosine"
+            ),
         )
     )
-    return _rank_top_k(scored, k)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )

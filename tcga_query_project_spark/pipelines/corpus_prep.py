@@ -225,7 +225,7 @@ def prepare_training_corpus(
     # prep and packing.
     from tcga_query_project_spark.operators.caching import materialize_shared
 
-    chunks = materialize_shared(chunks, eager=False)
+    chunks = materialize_shared(chunks)
     return pack_shards(
         chunks,
         id_col,

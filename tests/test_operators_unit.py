@@ -433,8 +433,8 @@ def test_cosine_topk_bucketed_recall_and_exactness(spark):
         r["query_id"]: r["neighbor_id"]
         for r in similarity.cosine_topk(emb, emb, "vec_id", "embedding", k=1).collect()
     }
-    bucketed = similarity.cosine_topk_bucketed(
-        emb, "vec_id", "embedding", k=1, bits=4
+    bucketed = similarity.cosine_topk(
+        emb, emb, "vec_id", "embedding", k=1, bits=4
     ).collect()
     got = {r["query_id"]: r["neighbor_id"] for r in bucketed}
     hits = sum(1 for q, n in brute.items() if got.get(q) == n)
@@ -449,6 +449,65 @@ def test_cosine_topk_bucketed_recall_and_exactness(spark):
         key = (r["query_id"], r["neighbor_id"])
         if key in pair_cos:
             assert abs(pair_cos[key] - r["cosine"]) < 1e-9
+
+
+def test_cosine_topk_zero_vector_ranks_last(spark, tmp_path):
+    """A zero-norm vector's cosine is NULL (0/0 raises DIVIDE_BY_ZERO
+    under ANSI; the scorer uses try_divide) and ranks after every scored
+    neighbor, brute force and bucketed alike (at bits=2 the zero vector
+    shares bucket 0 with vectors 2, 3 and 5). Brute force equals the
+    DuckDB oracle over the same frame, where 0/0 is NULL too."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tcga_query_project_spark.catalog import BENCH_ONLY, REGISTRY
+    from tcga_query_project_spark.operators import similarity
+    from tests.oracle_harness import compare
+
+    vecs = {
+        1: [0, 0, 0, 0],
+        2: [-1, -2, 3, 1],
+        3: [-2, -1, 1, 0],
+        4: [1, 2, 0, 1],
+        5: [-1, -1, -1, -1],
+        6: [2, -1, 1, 1],
+    }
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(list(vecs), pa.int64()),
+                "embedding": pa.array(
+                    [[float(x) for x in v] for v in vecs.values()],
+                    pa.list_(pa.float32()),
+                ),
+            }
+        ),
+        path,
+    )
+    emb = spark.read.parquet(path)
+    q = emb.filter(F.col("vec_id") < 10)
+    for bits in (0, 2):
+        got = similarity.cosine_topk(
+            q, emb, "vec_id", "embedding", k=5, bits=bits
+        ).toPandas()
+        null = got["cosine"].isna()
+        assert null.any() and (~null).any(), bits
+        for qid, g in got.groupby("query_id"):
+            is_null = g["cosine"].isna()
+            if is_null.any() and (~is_null).any():
+                assert g.loc[~is_null, "rank"].max() < g.loc[is_null, "rank"].min(), (
+                    bits,
+                    qid,
+                )
+        if bits == 0:
+            con = duckdb.connect()
+            con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+            oracle = {**BENCH_ONLY, **REGISTRY}["ann_cosine_topk"].oracle
+            want = con.execute(oracle).df()
+            problems = compare(got, want)
+            assert not problems, problems
 
 
 def test_minhash_array_form_equals_exploded_form(spark):
@@ -829,37 +888,6 @@ def test_embedding_near_dup_auto_zero_norm_vectors_yield_no_pairs(spark):
             df, "vec_id", "embedding", 0.35
         ).collect()
         assert rows == [], f"dim={dim}"
-
-
-def test_batch_kernels_match_expression_math(spark):
-    """The Arrow-batched scoring kernels (_dot_batch/_norm_batch) must
-    agree with the higher-order-function expressions they replaced —
-    same float64 math, different evaluation engine. Guards the
-    vectorized path against silent drift (e.g. a dtype downcast)."""
-    import random
-
-    from tcga_query_project_spark.operators import similarity
-
-    rng = random.Random(7)
-    rows = [
-        (i, [rng.uniform(-2, 2) for _ in range(17)])
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, "id long, v array<float>")
-    pairs = df.alias("a").join(
-        df.select(F.col("id").alias("id2"), F.col("v").alias("w")).alias("b"),
-        F.col("id") < F.col("id2"),
-    )
-    out = pairs.select(
-        similarity._dot(F.col("v"), F.col("w")).alias("dot_hof"),
-        similarity._dot_batch(F.col("v"), F.col("w")).alias("dot_arrow"),
-        similarity._norm(F.col("v")).alias("norm_hof"),
-        similarity._norm_batch(F.col("v")).alias("norm_arrow"),
-    ).collect()
-    assert len(out) == 50 * 49 / 2
-    for r in out:
-        assert math.isclose(r["dot_hof"], r["dot_arrow"], rel_tol=1e-12, abs_tol=1e-12)
-        assert math.isclose(r["norm_hof"], r["norm_arrow"], rel_tol=1e-12, abs_tol=1e-12)
 
 
 def test_scd2_intervals_collapse_and_close(spark):

@@ -104,11 +104,16 @@ def test_tcga_de_full_fits_in_sql_once(spark):
 
 
 def test_embedding_lsh_pairs_verify_in_sql(spark):
-    """The sign-LSH near-dup verifies its candidate pairs with Spark SQL
-    array expressions: no grouped-map kernel and no Python worker."""
-    plan = plans.formatted_plan(_run(spark, "dd_embedding_lsh_pairs"), "simple")
-    for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert op not in plan, op
+    """The cosine top-k queries and the sign-LSH near-dup score their
+    pairs with the one Spark SQL cosine: no Python worker, no cached
+    subtree, and the dot product evaluated once per pair (a threshold
+    pushed into the join condition evaluates it twice)."""
+    for name in ("ann_cosine_topk", "ann_lsh_bucketed", "dd_embedding_lsh_pairs"):
+        plan = plans.formatted_plan(_run(spark, name), "simple")
+        for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython",
+                   "InMemoryTableScan"):
+            assert op not in plan, (name, op)
+        assert plan.count("zip_with(") == 1, name
 
 
 # Single-partition windows tolerated ONLY over provably-reduced inputs
@@ -174,8 +179,6 @@ EAGER_BUILD_ALLOWED = {
     # IRLS GLM: per-gene grouped-map fit needs the trend/dispersion
     # priors fitted first (first/collect on gene-cardinality aggregates)
     "a6_nb_glm_wald",
-    # persisted-index ANN: builds + caches the bucketed index once
-    "ann_lsh_bucketed",
     # triangle counting: localCheckpoint of the oriented edge list
     # (13 static scans -> 0; multiply-consumed frontier)
     "gq_triangles",

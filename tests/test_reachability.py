@@ -40,7 +40,6 @@ ALLOWED: dict[str, str] = {
     f"{PKG}.plans.inspect": "plan assertions behind tests/test_plans.py",
     # Reference implementations the engine paths are compared against.
     f"{PKG}.operators.glm:_fit_core": "numpy IRLS reference for the SQL NB-GLM Wald fit",
-    f"{PKG}.operators.similarity:_dot": "plain-Python reference for the Arrow cosine kernels",
     f"{PKG}.operators.survival:logrank_test_k": "k-group log-rank reference for the two-group query path",
     f"{PKG}.streaming.neardup:_band_sigs_expr": "expression reference for the near-dup kernel's bands",
     f"{PKG}.streaming.neardup:_shingle_expr": "expression reference for the near-dup kernel's shingles",
