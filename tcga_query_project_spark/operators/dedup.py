@@ -849,19 +849,14 @@ def embedding_near_dup_auto(
     )
     sides = vector_side(df, id_col, vec_col)
     cos = cosine(F.col("_va"), F.col("_na"), F.col("_vb"), F.col("_nb"))
-    # the threshold goes through a generator so that it stays above the
-    # join: a plain filter on the cosine is pushed into the join
-    # condition, and the dot product is then evaluated twice per pair
+    # the threshold filter is pushed into the join condition, so a pair
+    # that passes pays the dot product twice; under 1% of candidates
+    # pass at sf0.01-0.1, and evaluating it once did not measure faster
     return (
         cand.join(sides.toDF("id_a", "_va", "_na"), "id_a")
         .join(sides.toDF("id_b", "_vb", "_nb"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.explode(
-                F.filter(F.array(cos), lambda c: c >= F.lit(float(threshold)))
-            ).alias("cosine"),
-        )
+        .select("id_a", "id_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= F.lit(float(threshold)))
     )
 
 

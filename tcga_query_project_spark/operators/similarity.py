@@ -11,16 +11,17 @@ aggregate(zip_with(...))``, the oracles' ``dot / (nrm_a · nrm_b)``.
 ``try_divide`` makes a zero-norm vector's cosine NULL under ANSI, as
 DuckDB's division does, so it ranks last in a top-k and never clears a
 threshold. :func:`sign_bucket` is the one sign-LSH bucket expression.
-Build+exec warm medians of 5 runs after one warm-up (a range: two fresh
-sessions), cache cleared before each run, ``get_spark(cpus=4)`` on a
+Build+exec, cache cleared before each run, ``get_spark(cpus=4)`` on a
 4-core, 15 GB host, against the Arrow-batched pandas UDF scorers and
-eager bucket cache this form replaced (same rows):
+eager bucket cache this form replaced (same rows). Each figure is a warm
+median of 5 runs after one warm-up; at sf0.1, the median of that over 6
+fresh-session pairs, the two forms interleaved:
 
 ============================  ===============  ===============
 query, scale                  Arrow UDFs       Spark SQL
 ============================  ===============  ===============
-``ann_cosine_topk``, sf0.1    1.16–1.23 s      0.96–1.05 s
-``ann_lsh_bucketed``, sf0.1   1.25–1.51 s      0.71–0.76 s
+``ann_cosine_topk``, sf0.1    1.04 s           0.67 s
+``ann_lsh_bucketed``, sf0.1   1.28 s           0.57 s
 ``ann_cosine_topk``, sf0.01   1.10 s           0.82 s
 ``ann_lsh_bucketed``, sf0.01  1.23 s           0.60 s
 exact all-pairs, sf0.1        0.89 s (numpy)   5.6 s
