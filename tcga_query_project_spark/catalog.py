@@ -41,6 +41,7 @@ from tcga_query_project_spark.functions.scalar import (
     HASH_SPLIT_BUCKET_SQL,
     SIGNIF_BIN_SQL,
     md5_prefix_long,
+    normal_sf_two_sided,
     signif_bin,
 )
 from tcga_query_project_spark.operators import (
@@ -1362,9 +1363,9 @@ def w2_km_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT med.stratum, med.median_time_s,
            ROUND(chi2_raw, 6) AS chi2,
-           ROUND("""
+           CASE WHEN chi2_raw IS NOT NULL THEN ROUND("""
     + NORMAL_SF_TWO_SIDED_SQL.format(z="SQRT(chi2_raw)")
-    + """, 6) AS p_value
+    + """, 6) END AS p_value
     FROM med CROSS JOIN chi
     """,
     tags=("W3", "W4"),
@@ -5554,37 +5555,35 @@ def tj_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("W3", "survival", "fan-out"),
 )
 def sv_logrank_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3 at fleet scale: the distributed per-cohort log-rank fan-out
-    (``survival.logrank_test_k_by`` — the 100 TB survival path: ONE
-    applyInPandas exchange keyed by cohort, no driver loop; shuffle
-    budget pinned in tests/test_plans.py) run over 25 l_partkey-hash
-    cohorts of lineitem, l_linestatus as the 2-level group, l_quantity
-    as survival time, deep-discount as the event. Reference analog:
-    surv_analysis_median_exp.R:98-168 looped over genes; this is that
-    loop as a single grouped job. The χ² statistic comes from the numpy
-    covariance-form kernel (algebraically the SQL soe²/sv form at k=2);
-    the display p-value is recomputed from the 6-decimal-ROUNDED χ² via
-    the shared Abramowitz-Stegun tail on BOTH sides so the hashed
-    floats cannot depend on erfc-vs-polynomial last-ulp divergence."""
-    from tcga_query_project_spark.functions.scalar import (
-        normal_sf_two_sided,
-    )
-
+    """W3 at fleet scale: the per-cohort log-rank fan-out —
+    ``survival.logrank_test`` keyed on ``cohort``, one exchange, no
+    driver loop (budget pinned in tests/test_plans.py) — over 25
+    l_partkey-hash cohorts of lineitem: l_linestatus is the 2-level
+    group, l_quantity the survival time, deep discount the event.
+    Reference analog: the per-gene loop of
+    surv_analysis_median_exp.R:98-168 as one grouped job. ``dof`` comes
+    from a window on the ``cohort`` column, so the test reuses its
+    exchange. p is recomputed from the 6-decimal-ROUNDED χ² via the
+    shared Abramowitz-Stegun tail on BOTH sides, so the hashed floats
+    cannot depend on last-ulp divergence."""
     li = _t(spark, sf_dir, "lineitem")
     tidy = li.select(
         (F.col("l_partkey") % 25).alias("cohort"),
         F.col("l_linestatus").alias("grp"),
         F.col("l_quantity").cast("double").alias("time_s"),
         (F.col("l_discount") > 0.05).cast("int").alias("status"),
+    ).withColumn(
+        "dof",
+        F.size(F.collect_set("grp").over(Window.partitionBy("cohort"))) - 1,
     )
-    res = survival.logrank_test_k_by(
-        tidy, "time_s", "status", "grp", by=["cohort"]
+    res = survival.logrank_test(
+        tidy, "time_s", "status", "grp", extra_partition=["cohort", "dof"]
     )
     chi2r = F.round("chi2", 6)
     return res.select(
         "cohort",
         chi2r.alias("chi2"),
-        F.col("df").cast("long").alias("dof"),
+        F.col("dof").cast("long").alias("dof"),
         F.round(normal_sf_two_sided(F.sqrt(chi2r)), 6).alias("p_value"),
     )
 

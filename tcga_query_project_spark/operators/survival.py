@@ -8,19 +8,14 @@ The reference delegates to the R ``survival``/``survminer`` packages:
 stratum, cumulative windows ordered by time, all JVM-side. The
 reference's per-gene plot loop disappears: partitioning by
 (gene, stratum) computes every gene's curve in one pass
-(SURVEY.md §3.2).
+(SURVEY.md §3.2). Every comparison in the reference is a two-group
+median split, so :func:`logrank_test` is the one log-rank.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from tcga_query_project_spark.functions.scalar import NORMAL_SF_TWO_SIDED_SQL
 
@@ -327,311 +322,62 @@ def logrank_test(
     and hypergeometric variance ``v = d·(n1/n)·(1-n1/n)·(n-d)/(n-1)``;
     ``chi2 = (Σ(d1-e1))² / Σv``, p from chi²(1) = two-sided normal tail
     of sqrt(chi2). Groups are ordered by name; "group 1" is the first.
+    A one-group partition (Σv = 0) gets NULL chi2 and p; a partition
+    without events gets no row. ``extra_partition`` runs one test per
+    key (e.g. per gene) in one pass.
 
-    ``extra_partition`` computes many independent tests (e.g. per gene)
-    in one pass.
-
-    Scale note: built entirely from equi-joins on (partition, time) plus
-    cumulative windows — no time-range theta join (which Spark would plan
-    as a nested-loop join). The grid × group expansion is |distinct
-    times| × |groups| rows, already reduced from subject level.
+    Risk-set form, no time × group grid: n(t) is the partition's total
+    minus its removals before t, for all subjects and for group 1.
+    Keyed on ``extra_partition``, the group-1 window's shuffle is the
+    plan's only one; without it, group 1 is a broadcast one-row min.
     """
     part = list(extra_partition or [])
     partq = [f"`{c}`" for c in part]
-    tq, gq = f"`{time}`", f"`{group}`"
-
-    # Removals (deaths d_g + any-cause exits r_g) per (group, time).
-    per_gt = df.groupBy(*part, group, time).agg(
-        F.expr(f"cast(sum(`{status}`) as double)").alias("_d_g"),
-        F.expr("cast(count(1) as double)").alias("_r_g"),
+    tq, gq, sq = f"`{time}`", f"`{group}`", f"`{status}`"
+    pby = f"partition by {', '.join(partq)}" if part else ""
+    over_p = f"({pby})"
+    over_prev = (
+        f"({pby} order by {tq} asc"
+        " rows between unbounded preceding and 1 preceding)"
     )
-    # Common time grid: every observed time, for every group.
-    times = per_gt.select(*part, time).distinct()
-    groups_df = per_gt.select(*part, group).distinct()
-    grid = times.join(groups_df, part) if part else times.crossJoin(groups_df)
-    cells = grid.join(per_gt, [*part, group, time], "left").na.fill(
-        {"_d_g": 0.0, "_r_g": 0.0}
-    )
-    # n_g(t) = group total − removals strictly before t; "group 1" =
-    # lexicographically first label within the partition. One
-    # selectExpr pass (the Column-object forest cost ~0.4s
-    # of py4j chatter per build; identical analyzed plan).
-    pg = ", ".join([*partq, gq])
-    over_p = f"(partition by {', '.join(partq)})" if part else "()"
-    at_risk = cells.selectExpr(
-        "*",
-        f"sum(_r_g) over (partition by {pg})"
-        f" - coalesce(sum(_r_g) over (partition by {pg} order by {tq} asc"
-        " rows between unbounded preceding and 1 preceding), 0.0D)"
-        " as _n_g",
-        f"cast(({gq} = min({gq}) over {over_p}) as int) as _is_g1",
-    )
-    per_t = (
-        at_risk.groupBy(*part, time)
-        .agg(
-            F.expr("sum(_n_g)").alias("_n"),
-            F.expr("sum(_d_g)").alias("_d"),
-            F.expr("sum(_n_g * _is_g1)").alias("_n1"),
-            F.expr("sum(_d_g * _is_g1)").alias("_d1"),
+    if part:
+        flagged = df.selectExpr(
+            "*", f"cast(({gq} = min({gq}) over {over_p}) as int) as _is1"
         )
-        .filter(F.col("_d") > 0)
+    else:
+        g1 = df.agg(F.min(group).alias("_g1"))
+        flagged = df.crossJoin(F.broadcast(g1)).selectExpr(
+            "*", f"cast(({gq} = _g1) as int) as _is1"
+        )
+    per_t = flagged.groupBy(*part, time).agg(
+        F.expr("cast(count(1) as double)").alias("_r"),
+        F.expr(f"cast(sum({sq}) as double)").alias("_d"),
+        F.expr("cast(sum(_is1) as double)").alias("_r1"),
+        F.expr(f"cast(sum(_is1 * {sq}) as double)").alias("_d1"),
     )
-    terms = per_t.selectExpr(
+    at_risk = per_t.selectExpr(
         *partq,
-        "_d1 - _d * _n1 / _n as _oe",
-        "case when _n > 1 then _d * (_n1 / _n) * (1.0D - _n1 / _n)"
-        " * (_n - _d) / (_n - 1.0D) else 0.0D end as _v",
+        "_d",
+        "_d1",
+        f"sum(_r) over {over_p} - coalesce(sum(_r) over {over_prev}, 0.0D)"
+        " as _n",
+        f"sum(_r1) over {over_p} - coalesce(sum(_r1) over {over_prev}, 0.0D)"
+        " as _n1",
+    ).filter(F.col("_d") > 0)
+    stats = at_risk.groupBy(*part).agg(
+        F.expr("sum(_d1 - _d * _n1 / _n)").alias("_sum_oe"),
+        F.expr(
+            "sum(case when _n > 1 then _d * (_n1 / _n) * (1.0D - _n1 / _n)"
+            " * (_n - _d) / (_n - 1.0D) else 0.0D end)"
+        ).alias("_sum_v"),
     )
-    agg_cols = [
-        F.sum("_oe").alias("_sum_oe"),
-        F.sum("_v").alias("_sum_v"),
-    ]
-    stats = terms.groupBy(*part).agg(*agg_cols) if part else terms.agg(*agg_cols)
     return stats.selectExpr(
         *partq,
         "case when _sum_v > 0 then _sum_oe * _sum_oe / _sum_v end as chi2",
     ).selectExpr(
         *partq,
         "chi2",
-        NORMAL_SF_TWO_SIDED_SQL.format(z="sqrt(chi2)") + " as p_value",
+        "case when chi2 is not null then "
+        + NORMAL_SF_TWO_SIDED_SQL.format(z="sqrt(chi2)")
+        + " end as p_value",
     )
-
-
-def logrank_test_k(
-    df: DataFrame, time: str, status: str, group: str
-) -> DataFrame:
-    """k-group log-rank (Mantel-Cox) test — the multi-arm
-    generalization of :func:`logrank_test` (the reference's BRCA
-    stage/subtype cohorts have 5 levels; ``survdiff`` computes exactly
-    this). Full covariance form, not the Σ(O−E)²/E approximation:
-
-    per event time t: ``E_g = d·n_g/n`` and
-    ``V_gh = d·(n−d)/(n−1) · (n_g/n)·(δ_gh − n_h/n)``; summing over
-    times gives the vector ``u = O−E`` and matrix ``V`` (k−1 free
-    components); ``chi2 = u' V⁻ u`` on χ²(k−1).
-
-    Execution shape: everything per-time is groupBy/window SQL; the
-    k-vector and k×k matrix of SUMS (k² + k numbers — bytes, for any
-    real k) are collected and the tiny quadratic form is solved with a
-    pseudo-inverse driver-side. P-value: exact χ²(1) tail at df=1
-    (matching :func:`logrank_test` bit-for-bit), Wilson-Hilferty normal
-    approximation for df>1. Degenerate inputs (fewer than two groups,
-    no events, zero total variance) return NULL chi2/p — never a
-    fabricated "not significant". **Eager contract**: calling this runs
-    the aggregation jobs immediately (like stats.vst_fitted; the
-    per-time table is persisted across the two collects so both read
-    one snapshot) and returns a one-row DataFrame (chi2, df, p_value).
-    For a per-gene (or any per-cohort) multi-arm sweep use
-    :func:`logrank_test_k_by` — the distributed fan-out that runs the
-    identical math once per cohort in a single grouped job.
-    """
-    import math
-
-    import numpy as np
-
-    per_gt = df.groupBy(group, time).agg(
-        F.sum(F.col(status)).cast("double").alias("_d_g"),
-        F.count(F.lit(1)).cast("double").alias("_r_g"),
-    )
-    times = per_gt.select(time).distinct()
-    groups_df = per_gt.select(group).distinct()
-    grid = times.crossJoin(groups_df)
-    cells = grid.join(per_gt, [group, time], "left").na.fill(
-        {"_d_g": 0.0, "_r_g": 0.0}
-    )
-    w_tot = Window.partitionBy(group)
-    w_prev = (
-        Window.partitionBy(group)
-        .orderBy(F.col(time).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    at_risk = cells.withColumn(
-        "_n_g",
-        F.sum("_r_g").over(w_tot)
-        - F.coalesce(F.sum("_r_g").over(w_prev), F.lit(0.0)),
-    )
-    from pyspark import StorageLevel
-
-    w_t = Window.partitionBy(time)
-    per = (
-        at_risk.withColumn("_n", F.sum("_n_g").over(w_t))
-        .withColumn("_d", F.sum("_d_g").over(w_t))
-        .filter(F.col("_d") > 0)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # u_g = Σ_t (d_g − d·n_g/n), per group (k rows)
-    u_rows = (
-        per.groupBy(group)
-        .agg(
-            F.sum(
-                F.col("_d_g") - F.col("_d") * F.col("_n_g") / F.col("_n")
-            ).alias("_u")
-        )
-        .orderBy(group)
-        .collect()
-    )
-    # V_gh = Σ_t d(n−d)/(n−1) · (n_g/n)(δ_gh − n_h/n): a self-join of the
-    # per-(time, group) table on time gives the (g, h) pairs per time
-    a = per.select(
-        F.col(time).alias("_t"), F.col(group).alias("_g"),
-        F.col("_n_g").alias("_ng"), "_n", "_d",
-    )
-    b = per.select(
-        F.col(time).alias("_t"), F.col(group).alias("_h"),
-        F.col("_n_g").alias("_nh"),
-    )
-    scale = F.when(
-        F.col("_n") > 1,
-        F.col("_d") * (F.col("_n") - F.col("_d")) / (F.col("_n") - 1.0),
-    ).otherwise(0.0)
-    v_rows = (
-        a.join(b, "_t")
-        .select(
-            "_g",
-            "_h",
-            (
-                scale
-                * (F.col("_ng") / F.col("_n"))
-                * (
-                    F.when(F.col("_g") == F.col("_h"), 1.0).otherwise(0.0)
-                    - F.col("_nh") / F.col("_n")
-                )
-            ).alias("_v"),
-        )
-        .groupBy("_g", "_h")
-        .agg(F.sum("_v").alias("_v"))
-        .collect()
-    )
-    per.unpersist(blocking=False)
-    labels = [r[group] for r in u_rows]
-    idx = {g: i for i, g in enumerate(labels)}
-    k = len(labels)
-    spark = df.sparkSession
-    schema = "chi2 double, df long, p_value double"
-    if k < 2:
-        return spark.createDataFrame([(None, max(k - 1, 0), None)], schema)
-    u = np.array([r["_u"] for r in u_rows])
-    V = np.zeros((k, k))
-    for r in v_rows:
-        V[idx[r["_g"]], idx[r["_h"]]] = r["_v"]
-    dof = k - 1
-    uu, VV = u[:-1], V[:-1, :-1]
-    # zero total variance (no events / all-tied removals): undefined,
-    # mirror logrank_test's NULL rather than fabricating chi2=0
-    if float(np.abs(VV).sum()) <= 0.0:
-        return spark.createDataFrame([(None, dof, None)], schema)
-    chi2 = float(uu @ np.linalg.pinv(VV) @ uu)
-    return spark.createDataFrame(
-        [(chi2, dof, _chi2_pvalue(chi2, dof))], schema
-    )
-
-
-def _chi2_pvalue(chi2: float, dof: int) -> float:
-    """Upper-tail χ²(dof) p-value: exact at df=1 (two-sided normal tail
-    of √chi2, matching :func:`logrank_test` bit-for-bit),
-    Wilson-Hilferty normal approximation for df>1."""
-    import math
-
-    if dof == 1:
-        p = math.erfc(math.sqrt(max(chi2, 0.0)) / math.sqrt(2.0))
-    else:
-        # Wilson-Hilferty: (chi2/df)^(1/3) ~ N(1 - 2/(9df), 2/(9df))
-        h = 2.0 / (9.0 * dof)
-        z = ((max(chi2, 0.0) / dof) ** (1.0 / 3.0) - (1.0 - h)) / math.sqrt(h)
-        p = 0.5 * math.erfc(z / math.sqrt(2.0))
-    return min(p, 1.0)
-
-
-def _logrank_k_arrays(times, status, groups):
-    """Covariance-form k-group log-rank on numpy arrays — the per-cohort
-    kernel behind :func:`logrank_test_k_by`, algebraically identical to
-    the SQL form in :func:`logrank_test_k` (same u/V sums, same
-    pseudo-inverse solve, same degenerate-input NULLs).
-
-    Returns (chi2 | None, dof, p | None)."""
-    import numpy as np
-
-    labels = np.unique(groups)
-    k = len(labels)
-    if k < 2:
-        return None, max(k - 1, 0), None
-    dof = k - 1
-    # event times only (d > 0); n_g(t) = subjects in g with time >= t
-    ev_times = np.unique(times[status > 0])
-    if len(ev_times) == 0:
-        return None, dof, None
-    T = len(ev_times)
-    d_g = np.zeros((T, k))
-    n_g = np.zeros((T, k))
-    for j, g in enumerate(labels):
-        in_g = groups == g
-        tg = np.sort(times[in_g])
-        # at-risk: count of times >= t  (searchsorted on the sorted arr)
-        n_g[:, j] = len(tg) - np.searchsorted(tg, ev_times, side="left")
-        te = np.sort(times[in_g & (status > 0)])
-        d_g[:, j] = np.searchsorted(te, ev_times, side="right") - np.searchsorted(
-            te, ev_times, side="left"
-        )
-    n = n_g.sum(axis=1)
-    d = d_g.sum(axis=1)
-    keep = d > 0
-    n_g, d_g, n, d = n_g[keep], d_g[keep], n[keep], d[keep]
-    if len(n) == 0:
-        return None, dof, None
-    p_g = n_g / n[:, None]
-    u = (d_g - d[:, None] * p_g).sum(axis=0)
-    scale = np.where(n > 1, d * (n - d) / np.maximum(n - 1, 1.0), 0.0)
-    # V = Σ_t scale_t · (diag(p_t) − p_t p_tᵀ)
-    V = np.einsum("t,tg,gh->gh", scale, p_g, np.eye(k)) - np.einsum(
-        "t,tg,th->gh", scale, p_g, p_g
-    )
-    uu, VV = u[:-1], V[:-1, :-1]
-    if float(np.abs(VV).sum()) <= 0.0:
-        return None, dof, None
-    chi2 = float(uu @ np.linalg.pinv(VV) @ uu)
-    return chi2, dof, _chi2_pvalue(chi2, dof)
-
-
-def logrank_test_k_by(
-    df: DataFrame, time: str, status: str, group: str, by: list[str]
-) -> DataFrame:
-    """Distributed per-cohort k-group log-rank: one χ²(k−1) test per
-    ``by``-key (e.g. per gene), all cohorts in ONE grouped job — the
-    fan-out :func:`logrank_test_k`'s eager driver-side solve cannot do.
-
-    Execution shape: ``applyInPandas`` over the ``by`` columns — the
-    shuffle carries tidy (time, status, group) rows keyed by cohort,
-    each Python task receives whole cohorts (one patient table each,
-    small by construction: cohort size = study subjects, not corpus
-    size) and runs the numpy covariance-form kernel per cohort. A 60k-
-    gene sweep is 60k independent k×k solves spread across the cluster;
-    no driver loop, no collect. Lazy (plans like any DataFrame op),
-    unlike the eager one-cohort form.
-
-    Output: one row per cohort — ``by`` columns + (chi2, df, p_value),
-    NULLs for degenerate cohorts (singleton group set, no events, zero
-    variance) exactly like the one-cohort form.
-    """
-    import numpy as np
-    import pandas as pd
-
-    by_fields = [df.schema[c] for c in by]
-    out_schema = StructType(
-        list(by_fields)
-        + [
-            StructField("chi2", DoubleType()),
-            StructField("df", LongType()),
-            StructField("p_value", DoubleType()),
-        ]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        chi2, dof, p = _logrank_k_arrays(
-            pdf[time].to_numpy(dtype=np.float64),
-            pdf[status].to_numpy(dtype=np.float64),
-            pdf[group].to_numpy(),
-        )
-        row = {c: [pdf[c].iloc[0]] for c in by}
-        row.update({"chi2": [chi2], "df": [dof], "p_value": [p]})
-        return pd.DataFrame(row)
-
-    return df.groupBy(*by).applyInPandas(fn, out_schema)

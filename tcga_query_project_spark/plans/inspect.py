@@ -2,9 +2,10 @@
 
 Everything reads ``df.explain`` text (public API, stable enough for the
 properties asserted here: operator presence, pushed filters, read
-schemas, exchange counts). With AQE on, run an action first and the
-captured plan is the *final* adaptive plan — what actually executed,
-not the static guess.
+schemas, exchange counts). With AQE on, run an action on ``df`` itself
+first (``df.collect()``; a sink write runs a separate QueryExecution)
+and the captured plan is the *final* adaptive plan — what actually
+executed, not the static guess.
 """
 
 from __future__ import annotations
@@ -16,14 +17,49 @@ import re
 from pyspark.sql import DataFrame
 
 
+_NODE_ID = re.compile(r"\((\d+)\)(?=,|\s*$)")
+_DETAIL_HEADER = re.compile(r"^\((\d+)\) ")
+
+
+def _final_only(text: str) -> str:
+    """Drop every AQE ``Initial Plan`` tree from explain text, and in
+    formatted mode the node details only those trees reference. A final
+    adaptive plan prints its Final Plan and then its Initial Plan, so
+    without this cut each shuffle would be counted twice."""
+    kept: list[str] = []
+    dropped: set[str] = set()
+    cut = None  # indent of the Initial Plan marker being skipped
+    for line in text.splitlines():
+        indent = len(line) - len(line.lstrip())
+        if cut is not None and line.strip() and indent > cut:
+            dropped.update(_NODE_ID.findall(line))
+            continue
+        cut = indent if line.strip() == "+- == Initial Plan ==" else None
+        if cut is None:
+            kept.append(line)
+    dropped -= {i for line in kept for i in _NODE_ID.findall(line)}
+    out: list[str] = []
+    skipping = False
+    for line in kept:
+        m = _DETAIL_HEADER.match(line)
+        if m:
+            skipping = m.group(1) in dropped
+        if not skipping:
+            out.append(line)
+        elif not line.strip():
+            skipping = False
+    return "\n".join(out) + "\n"
+
+
 def formatted_plan(df: DataFrame, mode: str = "formatted") -> str:
     """The explain output as a string (``mode``: simple / extended /
-    formatted / cost). After an action on ``df``, reflects the final
-    AQE plan."""
+    formatted / cost). After an action on ``df``, it holds the final
+    AQE plan only: the Initial Plan that explain prints after it is
+    cut."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode=mode)
-    return buf.getvalue()
+    return _final_only(buf.getvalue())
 
 
 def has_operator(df: DataFrame, op: str) -> bool:

@@ -152,6 +152,10 @@ def test_logrank_identical_groups_is_null_chi2_zero(spark):
     out = survival.logrank_test(df, "time", "status", "grp").collect()[0]
     assert abs(out["chi2"]) < 1e-12
     assert out["p_value"] > 0.999
+    # a single group is undefined, not "not significant"
+    one = df.filter(F.col("grp") == "a")
+    deg = survival.logrank_test(one, "time", "status", "grp").collect()[0]
+    assert deg["chi2"] is None and deg["p_value"] is None
 
 
 def test_ntile_strata_median_split(spark):
@@ -651,98 +655,6 @@ def test_km_log_ci_hand_worked(spark):
     assert abs(km[2.0]["ci_lower"] - s * math.exp(-z * math.sqrt(gw))) < 1e-12
     # curve at 0 → CI undefined
     assert km[5.0]["ci_lower"] is None and km[5.0]["ci_upper"] is None
-
-
-def test_logrank_k_group_matches_two_group_and_null(spark):
-    """k-group log-rank: for k=2 the quadratic form reduces to the
-    two-group statistic exactly; identical k=3 groups give chi2 ~ 0 with
-    p ~ 1; separated groups give small p."""
-    rows2 = []
-    for g, times in [("a", [1, 2, 4, 6, 8]), ("b", [3, 5, 7, 9, 11])]:
-        for i, t in enumerate(times):
-            rows2.append((g, float(t), 1 if i % 2 == 0 else 0))
-    df2 = spark.createDataFrame(rows2, "grp string, time double, status int")
-    two = survival.logrank_test(df2, "time", "status", "grp").collect()[0]
-    kform = survival.logrank_test_k(df2, "time", "status", "grp").collect()[0]
-    assert kform["df"] == 1
-    assert abs(kform["chi2"] - two["chi2"]) < 1e-9
-    # df=1 uses the exact chi2(1) tail; the 2-group form uses the A&S
-    # polynomial normal tail (abs err ~7.5e-8) — agree to that accuracy
-    assert abs(kform["p_value"] - two["p_value"]) < 1e-6
-
-    # degenerate: a single group is undefined, not "not significant"
-    one = spark.createDataFrame(
-        [("a", 1.0, 1), ("a", 2.0, 1)], "grp string, time double, status int"
-    )
-    deg = survival.logrank_test_k(one, "time", "status", "grp").collect()[0]
-    assert deg["chi2"] is None and deg["p_value"] is None
-
-    rows3 = []
-    for g in ["a", "b", "c"]:
-        for t, s in [(1.0, 1), (2.0, 1), (3.0, 0), (4.0, 1)]:
-            rows3.append((g, t, s))
-    df3 = spark.createDataFrame(rows3, "grp string, time double, status int")
-    null3 = survival.logrank_test_k(df3, "time", "status", "grp").collect()[0]
-    assert null3["df"] == 2
-    assert abs(null3["chi2"]) < 1e-9
-    assert null3["p_value"] > 0.99
-
-    sep = []
-    for g, base in [("a", 1.0), ("b", 10.0), ("c", 100.0)]:
-        for i in range(8):
-            sep.append((g, base + i * 0.5, 1))
-    dfs = spark.createDataFrame(sep, "grp string, time double, status int")
-    out = survival.logrank_test_k(dfs, "time", "status", "grp").collect()[0]
-    assert out["p_value"] < 1e-4
-
-
-def test_logrank_k_by_fans_out_per_gene_in_one_job(spark):
-    """logrank_test_k_by: a k=3 log-rank across 100 genes runs as ONE
-    grouped job and equals the eager one-cohort operator gene-for-gene
-    (spot-checked exactly on a sample; all 100 rows well-formed)."""
-    import random
-
-    rng = random.Random(11)
-    rows = []
-    for gene in range(100):
-        shift = (gene % 7) * 0.8
-        for g_i, grp in enumerate(["a", "b", "c"]):
-            for _ in range(12):
-                t = rng.expovariate(1.0 / (5.0 + g_i * shift)) + 0.1
-                s = 1 if rng.random() < 0.75 else 0
-                rows.append((gene, grp, round(t, 3), s))
-    df = spark.createDataFrame(
-        rows, "gene long, grp string, time double, status int"
-    )
-    swept = {
-        r["gene"]: r
-        for r in survival.logrank_test_k_by(
-            df, "time", "status", "grp", by=["gene"]
-        ).collect()
-    }
-    assert len(swept) == 100
-    assert all(r["df"] == 2 for r in swept.values())
-    assert all(
-        r["chi2"] is not None and r["p_value"] is not None
-        for r in swept.values()
-    )
-    # exact agreement with the eager per-cohort solve on a sample
-    for gene in (0, 3, 41, 99):
-        one = survival.logrank_test_k(
-            df.filter(F.col("gene") == gene), "time", "status", "grp"
-        ).collect()[0]
-        assert abs(swept[gene]["chi2"] - one["chi2"]) < 1e-9, gene
-        assert abs(swept[gene]["p_value"] - one["p_value"]) < 1e-12, gene
-
-    # degenerate cohorts inside the sweep: single-group gene -> NULLs
-    deg = df.filter((F.col("gene") == 0) & (F.col("grp") == "a")).withColumn(
-        "gene", F.lit(999).cast("long")
-    )
-    both = survival.logrank_test_k_by(
-        df.unionByName(deg), "time", "status", "grp", by=["gene"]
-    )
-    deg_row = both.filter(F.col("gene") == 999).collect()[0]
-    assert deg_row["chi2"] is None and deg_row["p_value"] is None
 
 
 def _brute_force_pairs(rows, threshold):

@@ -3,7 +3,8 @@ properties that make the catalog queries viable at 100 TB, pinned so a
 refactor that silently loses pushdown / pruning / a broadcast / the
 top-k operator fails CI, not production.
 
-Each test runs the query first (noop sink) so the captured plan is the
+Each test runs the query first (``collect()`` on the DataFrame itself,
+whose QueryExecution AQE then finalizes) so the captured plan is the
 FINAL adaptive plan — the one that executed."""
 
 import pytest
@@ -26,7 +27,7 @@ def _run(spark, name):
     # merged lookup: plan pins outlive driver-slot rotation (round 9
     # moved several pinned queries to BENCH_ONLY)
     df = {**BENCH_ONLY, **REGISTRY}[name].build(spark, SF_SMALL)
-    df.write.format("noop").mode("overwrite").save()
+    df.collect()
     return df
 
 
@@ -91,16 +92,23 @@ def test_tcga_de_full_fits_in_sql_once(spark):
     worker) and its fit has one consumer, with and without independent
     filtering. Each use of the floored cohort reads expression twice
     (the rows, and the floor aggregate they are semi-joined with); the
-    size factors use the cohort twice and the fit once — 6 scans, where
-    three consumers of the fit made it 18 (and the filtered form's four
-    made it 24)."""
+    size factors use the cohort twice and the fit once — 6 scans in the
+    static plan, where three consumers of the fit made it 18 (and the
+    filtered form's four made it 24). At run time AQE reuses the floor
+    aggregate's broadcast for the second and third use, so the final
+    plan reads expression 4 times."""
+    def expression_scans(df):
+        # expression is the only scanned table with a gene_id column
+        return sum("gene_id" in s for s in plans.read_schemas(df))
+
     for name in ("tcga_de_full", "tcga_de_filtered"):
-        df = _run(spark, name)
+        df = _LOOKUP()[name].build(spark, SF_SMALL)
+        assert expression_scans(df) == 6, name
+        df.collect()
         plan = plans.formatted_plan(df, "simple")
         for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
             assert op not in plan, (name, op)
-        # expression is the only scanned table with a gene_id column
-        assert sum("gene_id" in s for s in plans.read_schemas(df)) == 6, name
+        assert expression_scans(df) == 4, name
 
 
 def test_embedding_lsh_pairs_verify_in_sql(spark):
@@ -280,7 +288,7 @@ def test_bucketed_join_elides_shuffle(spark):
         a = spark.table("bt_lineitem")
         b = spark.table("bt_orders")
         joined = a.join(b, a.l_orderkey == b.o_orderkey)
-        joined.write.format("noop").mode("overwrite").save()
+        joined.collect()
         assert plans.count_exchanges(joined) == 0, plans.formatted_plan(joined)
         assert plans.has_operator(joined, "SortMergeJoin")
         # value parity with the plain (shuffling) join
@@ -303,7 +311,7 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     out = str(tmp_path / "events_by_type")
     partitioning.write_partitioned(ev, out, ["event_type"])
     back = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    back.write.format("noop").mode("overwrite").save()
+    back.collect()
     plan = plans.formatted_plan(back)
     assert "PartitionFilters" in plan
     import re
@@ -438,7 +446,7 @@ def test_q17_no_forced_broadcast_of_fact_aggregate(spark):
     assert "strategy=broadcast" not in logical, (
         "forced broadcast hint found in q17's logical plan:\n" + logical
     )
-    df.write.format("noop").mode("overwrite").save()
+    df.collect()
     assert not plans.has_operator(df, "CartesianProduct")
     # the window decorrelation means NO join at all (and exactly one
     # fact exchange): a refactor back to agg+join reintroduces either
@@ -491,9 +499,10 @@ def test_headline_shuffle_budgets(spark):
         # three result joins; a 7th exchange means an asof direction
         # stopped sharing its hash(key) exchange
         "tj_asof_directions": 6,
-        # per-cohort log-rank fan-out: ONE applyInPandas exchange keyed
-        # by cohort — a second exchange means the fan-out regressed to
-        # a re-shuffled post-pass
+        # per-cohort log-rank fan-out: ONE exchange keyed by cohort,
+        # reused by the dof window, the risk-set counts and the
+        # per-cohort sums — a second exchange means a step stopped
+        # reusing the cohort partitioning
         "sv_logrank_cohorts": 1,
         # decorrelated scalar subquery: ONE per-part agg exchange, the
         # probe side is a broadcast-join map pass
@@ -563,23 +572,6 @@ def test_headline_shuffle_budgets(spark):
         assert plans.count_exchanges(df) <= budget, name
 
 
-def test_logrank_k_by_single_shuffle(spark):
-    """The distributed per-cohort log-rank fan-out must plan as ONE
-    exchange (the cohort-key shuffle into applyInPandas) — a 60k-gene
-    sweep is one grouped job, not a driver loop."""
-    from tcga_query_project_spark.operators import survival
-
-    df = spark.createDataFrame(
-        [(g, "a" if i % 3 else "b", float(i % 7 + 1), i % 2)
-         for g in range(5) for i in range(12)],
-        "gene long, grp string, time double, status int",
-    )
-    out = survival.logrank_test_k_by(df, "time", "status", "grp", by=["gene"])
-    from tcga_query_project_spark.plans import inspect as plans
-
-    assert plans.count_exchanges(out) <= 1
-
-
 def test_contamination_ops_broadcast_reference(spark):
     """Scale shape of the cross-corpus contamination ops: the reference
     (eval-set) side must broadcast — no cartesian product, no shuffle
@@ -608,7 +600,7 @@ def test_q13_outer_join_preserved(spark):
     left outer join to inner (which a post-join WHERE on the right
     side would license)."""
     df = _LOOKUP()["q13_customer_distribution"].build(spark, SF_SMALL)
-    df.write.format("noop").mode("overwrite").save()
+    df.collect()
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftOuter" in optimized, optimized
     # and the zero bucket actually materializes at this SF
@@ -622,7 +614,7 @@ def test_q19_disjunction_pushed_to_both_scans(spark):
     lineitem) — losing this reads the full fact at 100 TB and filters
     post-join."""
     df = _LOOKUP()["q19_disjunctive_revenue"].build(spark, SF_SMALL)
-    df.write.format("noop").mode("overwrite").save()
+    df.collect()
     plan = plans.formatted_plan(df)
     assert "l_quantity" in " ".join(
         s for s in plan.splitlines() if "DataFilters" in s and "l_partkey" in s

@@ -130,23 +130,6 @@ texts = st.lists(
 )
 
 
-@given(
-    n1=st.integers(min_value=1, max_value=12),
-    n2=st.integers(min_value=1, max_value=12),
-)
-@settings(max_examples=30, deadline=None)
-def test_exact_u_null_distribution_invariants(n1, n2):
-    """Pure-Python DP invariants: the U null distribution sums to
-    C(n1+n2, n1) and is symmetric about n1*n2/2."""
-    import math
-
-    from tcga_query_project_spark.operators.exact_tests import _u_null_counts
-
-    counts = _u_null_counts(n1, n2)
-    assert counts.sum() == math.comb(n1 + n2, n1)
-    assert (counts == counts[::-1]).all()
-
-
 @given(ids=st.lists(st.integers(min_value=0, max_value=10**9),
                     min_size=1, max_size=50, unique=True))
 @settings(**SETTINGS)
@@ -207,42 +190,78 @@ def test_scd2_intervals_tile_the_timeline(spark, data):
             assert prev["attr"] != nxt["attr"]  # real change between versions
 
 
+def _logrank_reference(times, status, groups):
+    """Two-group log-rank chi2 in plain numpy (test-local oracle): group
+    1 is the first label; None when the variance sum is zero."""
+    import numpy as np
+
+    t, d, g = np.array(times), np.array(status, dtype=float), np.array(groups)
+    g1 = g == np.unique(g)[0]
+    oe = v = 0.0
+    for u in np.unique(t[d > 0]):
+        at = t >= u
+        n, n1 = at.sum(), (at & g1).sum()
+        dt, d1 = d[t == u].sum(), d[(t == u) & g1].sum()
+        oe += d1 - dt * n1 / n
+        if n > 1:
+            v += dt * (n1 / n) * (1 - n1 / n) * (n - dt) / (n - 1)
+    return oe * oe / v if v > 0 else None
+
+
 @given(st.integers(min_value=0, max_value=2**31 - 1))
 @settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_logrank_k_by_equals_eager_on_random_cohorts(spark, seed):
-    """logrank_test_k_by's numpy kernel vs the eager SQL-form solve on
-    randomized cohorts: heavy ties (integer times), censoring, group
-    imbalance, and 2-4 groups — chi2/p agree to 1e-9 or are both NULL."""
+def test_logrank_by_cohort_matches_numpy_reference(spark, seed):
+    """logrank_test with ``extra_partition=["cohort"]`` vs a numpy
+    two-group reference on randomized cohorts: heavy ties (integer
+    times), censoring, group imbalance, single-group cohorts (NULL chi2
+    and p) and no-event cohorts (no row)."""
+    import math
     import random
+    from collections import defaultdict
 
     rng = random.Random(seed)
-    k = rng.randint(2, 4)
     rows = []
-    for gi in range(k):
-        n_g = rng.randint(2, 15)
-        for _ in range(n_g):
-            t = float(rng.randint(1, 8))  # integer times -> heavy ties
-            s = 1 if rng.random() < 0.7 else 0
-            rows.append((0, f"g{gi}", t, s))
+    for cohort in range(rng.randint(2, 6)):
+        no_events = rng.random() < 0.2
+        for gi in range(rng.randint(1, 2)):
+            for _ in range(rng.randint(1, 15)):
+                t = float(rng.randint(1, 8))  # integer times -> heavy ties
+                s = 0 if no_events else int(rng.random() < 0.7)
+                rows.append((cohort, f"g{gi}", t, s))
     df = spark.createDataFrame(
         rows, "cohort long, grp string, time double, status int"
     )
-    from tcga_query_project_spark.operators import survival
-
-    eager = survival.logrank_test_k(df, "time", "status", "grp").collect()[0]
-    swept = survival.logrank_test_k_by(
-        df, "time", "status", "grp", by=["cohort"]
-    ).collect()[0]
-    assert swept["df"] == eager["df"]
-    if eager["chi2"] is None:
-        assert swept["chi2"] is None and swept["p_value"] is None
-    else:
-        assert abs(swept["chi2"] - eager["chi2"]) < 1e-9
-        assert abs(swept["p_value"] - eager["p_value"]) < 1e-12
+    by = defaultdict(list)
+    for r in rows:
+        by[r[0]].append(r)
+    want = {
+        c: _logrank_reference([r[2] for r in rs], [r[3] for r in rs], [r[1] for r in rs])
+        for c, rs in by.items()
+        if any(r[3] for r in rs)
+    }
+    got = {
+        r["cohort"]: r
+        for r in survival.logrank_test(
+            df, "time", "status", "grp", extra_partition=["cohort"]
+        ).collect()
+    }
+    assert set(got) == set(want)
+    for c, chi2 in want.items():
+        if chi2 is None:
+            assert got[c]["chi2"] is None and got[c]["p_value"] is None, c
+            continue
+        assert math.isclose(got[c]["chi2"], chi2, rel_tol=1e-9, abs_tol=1e-12), c
+        # the engine's two-sided normal tail (Abramowitz-Stegun 26.2.17)
+        z = math.sqrt(chi2)
+        t = 1.0 / (1.0 + 0.2316419 * z)
+        poly = t * (0.319381530 + t * (-0.356563782 + t * (
+            1.781477937 + t * (-1.821255978 + t * 1.330274429))))
+        p = min(2.0 * math.exp(-z * z / 2.0) / 2.5066282746310002 * poly, 1.0)
+        assert math.isclose(got[c]["p_value"], p, rel_tol=1e-9, abs_tol=1e-12), c
 
 
 def test_repetition_metrics_matches_python_reference(spark):

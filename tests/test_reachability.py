@@ -40,7 +40,6 @@ ALLOWED: dict[str, str] = {
     f"{PKG}.plans.inspect": "plan assertions behind tests/test_plans.py",
     # Reference implementations the engine paths are compared against.
     f"{PKG}.operators.glm:_fit_core": "numpy IRLS reference for the SQL NB-GLM Wald fit",
-    f"{PKG}.operators.survival:logrank_test_k": "k-group log-rank reference for the two-group query path",
     f"{PKG}.streaming.neardup:_band_sigs_expr": "expression reference for the near-dup kernel's bands",
     f"{PKG}.streaming.neardup:_shingle_expr": "expression reference for the near-dup kernel's shingles",
     # Paper entry points that have no catalog query yet.
@@ -55,7 +54,6 @@ ALLOWED: dict[str, str] = {
     f"{PKG}.sources.io:write_training_shards": "training-shard sink of the corpus pipeline",
     # Tested operators awaiting a catalog query (ROADMAP open item 3: wire
     # each into a query or delete it with its tests).
-    f"{PKG}.operators.exact_tests": "exact small-n Wilcoxon, compare_means(method='wilcox')'s small-sample path",
     f"{PKG}.operators.classifier": "supervised tier of the corpus quality filter",
     f"{PKG}.operators.fuzzy:delete_variants": "column form of the deletion neighbourhood fuzzy_pairs builds on",
     f"{PKG}.operators.fuzzy:fuzzy_join": "two-table form of fuzzy_pairs",
