@@ -18,6 +18,9 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #: ceiling of the default driver heap
 MAX_DRIVER_MEMORY_MB = 16 * 1024
 
+#: idle poll of py4j's object-release thread, in seconds (py4j's own is 1)
+PY4J_RELEASE_POLL_S = 0.02
+
 
 def default_driver_memory() -> str:
     """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half the
@@ -32,6 +35,40 @@ def default_driver_memory() -> str:
         return f"{MAX_DRIVER_MEMORY_MB}m"
     total_kb = int(meminfo.split("MemTotal:", 1)[1].split()[0])
     return f"{min(MAX_DRIVER_MEMORY_MB, total_kb // 2048)}m"
+
+
+def prompt_py4j_release() -> None:
+    """Release a JVM object as soon as Python drops its handle.
+
+    py4j caches each bound ``JavaMember`` on its ``JavaObject``, and the
+    member points back, so every handle that had a method called sits
+    in a reference cycle. A finished query's ``Dataset`` handle then
+    waits for Python's cycle collector (for a long-lived handle, the
+    rare full collection), and until then its plan pins the broadcast
+    relations of its joins in the driver heap. After that, PySpark's
+    pinned-thread gateway (py4j ``ClientServer``) sends the release
+    from a worker thread that sleeps a whole second whenever its queue
+    is empty. Left alone, finished plans are freed in bursts, seconds
+    or minutes late. Building the member on each access (one small
+    object next to a socket round trip) removes the cycle, and a short
+    poll removes the second. Both settings are process-wide; the worker
+    reads the poll constant on every sleep, so they also hold for a
+    gateway that is already running."""
+    from py4j import clientserver, java_gateway
+
+    clientserver.DEFAULT_WORKER_SLEEP_TIME = PY4J_RELEASE_POLL_S
+    cls = java_gateway.JavaObject
+    if getattr(cls.__getattr__, "uncached", False):
+        return
+    cached = cls.__getattr__
+
+    def __getattr__(self, name):
+        member = cached(self, name)
+        self._methods.pop(name, None)
+        return member
+
+    __getattr__.uncached = True
+    cls.__getattr__ = __getattr__
 
 
 def get_spark(
@@ -76,4 +113,5 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    prompt_py4j_release()
     return builder.getOrCreate()

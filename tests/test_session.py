@@ -34,3 +34,24 @@ def test_default_driver_memory_falls_back_without_meminfo(monkeypatch):
 
     monkeypatch.setattr(session, "open", missing, raising=False)
     assert session.default_driver_memory() == "16384m"
+
+
+def test_dataset_handle_released_without_cycle_collector(spark):
+    """A ``Dataset`` handle that had a method called is freed when its
+    last reference goes, with the cycle collector off, and py4j's
+    release worker polls at the engine's period."""
+    import gc
+    import weakref
+
+    from py4j import clientserver
+
+    jdf = spark.range(5)._jdf
+    assert jdf.count() == 5
+    handle = weakref.ref(jdf)
+    gc.disable()
+    try:
+        del jdf
+        assert handle() is None
+    finally:
+        gc.enable()
+    assert clientserver.DEFAULT_WORKER_SLEEP_TIME == session.PY4J_RELEASE_POLL_S
