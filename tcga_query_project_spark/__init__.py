@@ -16,13 +16,13 @@ Layout
 - ``operators``   — DataFrame-in, DataFrame-out operator library:
                     relational, nested, stats, glm, survival,
                     temporal, graph, dedup, similarity, sketches,
-                    text, classifier, bpe, unigram, fuzzy, sampling,
+                    text, bpe, unigram, fuzzy, sampling,
                     partitioning, quality_audit, caching
                     (built-in functions only in hot paths).
 - ``functions``   — scalar expression helpers (significance binning,
                     normal-distribution approximations, portable hashes).
-- ``streaming``   — batch/stream-symmetric windows, joins, dedup,
-                    near-dup, quality gate and stateful operators.
+- ``streaming``   — batch/stream-symmetric windows and SCD2 joins,
+                    and the windowed PSI drift helpers.
 - ``pipelines``   — the reference's three entry-point pipelines (DE,
                     survival, corpus prep) composed from the operators.
 - ``plans``       — physical-plan inspection and scale lints.

@@ -1974,14 +1974,12 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup-streaming-gate", "streaming-batch-equivalent"),
 )
 def dd_band_firstseen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming near-dedup admission gate in batch form (bench and
-    oracle visibility for streaming/neardup.py's decision rule): a
-    document passes iff EVERY LSH band signature is
-    first-seen, with arrival order = doc_id. Same minhash family and
-    banding as dd_minhash_lsh (the oracle replays the identical hash
-    pipeline), but a one-sided gate instead of a verified pair join —
-    one (band, band_sig)-keyed aggregation of min-ids, the exact state
-    the stream holds per band key."""
+    """The band-first-seen near-dedup admission gate: a document
+    passes iff EVERY LSH band signature is first-seen, with arrival
+    order = doc_id. Same minhash family and banding as dd_minhash_lsh
+    (the oracle replays the identical hash pipeline), but a one-sided
+    gate instead of a verified pair join — one (band, band_sig)-keyed
+    aggregation of min-ids."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.band_firstseen_gate(
         docs, "doc_id", "text", k=3, num_hashes=8, band_size=2
@@ -2369,8 +2367,7 @@ def tx_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pp_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star end-to-end corpus prep (pipelines/corpus_prep): exact
     dedup (first-arrival-wins window on normalized content) → ONE fused
-    feature projection (text.doc_metrics — the same code path the
-    streaming pipeline runs, so batch and stream share one schema) →
+    feature projection (text.doc_metrics) →
     quality ≥ 0.4, English only → deterministic train/val/test split.
     The composed form has exactly one content shuffle; composing the
     standalone operators by join would tokenize 4x and shuffle 3x."""
@@ -5547,9 +5544,9 @@ def tj_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM st
     )
     SELECT ks.cohort, chi.chi2, ks.dof,
-           ROUND("""
+           CASE WHEN chi.chi2 IS NOT NULL THEN ROUND("""
     + NORMAL_SF_TWO_SIDED_SQL.format(z="SQRT(chi.chi2)")
-    + """, 6) AS p_value
+    + """, 6) END AS p_value
     FROM ks JOIN chi USING (cohort)
     """,
     tags=("W3", "survival", "fan-out"),
@@ -5565,7 +5562,9 @@ def sv_logrank_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a window on the ``cohort`` column, so the test reuses its
     exchange. p is recomputed from the 6-decimal-ROUNDED χ² via the
     shared Abramowitz-Stegun tail on BOTH sides, so the hashed floats
-    cannot depend on last-ulp divergence."""
+    cannot depend on last-ulp divergence. A one-group cohort has a NULL
+    χ² and a NULL p on both sides (the tail's LEAST(…, 1.0) would
+    otherwise turn a NULL into 1.0)."""
     li = _t(spark, sf_dir, "lineitem")
     tidy = li.select(
         (F.col("l_partkey") % 25).alias("cohort"),
@@ -5584,7 +5583,9 @@ def sv_logrank_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cohort",
         chi2r.alias("chi2"),
         F.col("dof").cast("long").alias("dof"),
-        F.round(normal_sf_two_sided(F.sqrt(chi2r)), 6).alias("p_value"),
+        F.when(
+            chi2r.isNotNull(), F.round(normal_sf_two_sided(F.sqrt(chi2r)), 6)
+        ).alias("p_value"),
     )
 
 
@@ -6921,8 +6922,8 @@ def pp_stratified_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one window over PARTITION BY lang) puts corpus/|langs| in a single
     sort task at 100 TB — the same low-cardinality-partition defect the
     W1 ntile fix removed. The oracle replays the exact keep-set with
-    the same md5-prefix order (QUALIFY row_number <= cap); both forms
-    and the oracle agree row-for-row
+    the same md5-prefix order (QUALIFY row_number <= cap); the operator
+    also equals a plain per-stratum sort row-for-row
     (tests/test_operators_unit.py::test_stratified_cap_scaled_matches_simple_form).
     """
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -7121,13 +7122,11 @@ _PSI_VALUE_BIN_SQL = """CASE WHEN value IS NULL THEN '__null__'
     tags=("quality-gate", "psi", "windowed-drift", "streaming-batch-form"),
 )
 def qa_windowed_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed PSI drift report — the BATCH FORM of the streaming
-    monitor (streaming/quality.start_windowed_psi), composed from the
-    same three shared pieces it runs per micro-batch: binned_features
-    projection, a 1-day event-time window count, baseline_counts on
-    the pre-cutoff slice, psi_report_for_batch's outer-merge +
-    psi_from_counts algebra (stream == batch by shared code —
-    tests/test_streaming.py::test_windowed_psi_stream_equals_batch).
+    """Windowed PSI drift report, composed from three shared pieces:
+    the binned_features projection with a 1-day event-time window
+    count, baseline_counts on the pre-cutoff slice, and
+    psi_report_for_batch's outer-merge + psi_from_counts algebra (the
+    same algebra the batch gate quality_audit.psi_drift uses).
     Reference = events before the Jan-16 cutoff (qa_ks_drift's), cur =
     daily windows after; features: event_type (categorical), value
     (edges 0/50/200). NULL ts has no window and drops from both sides;

@@ -208,7 +208,8 @@ def write_config_tsvs(tmp_dir: str) -> dict[str, str]:
 # this process's Spark — the driver's DuckDB oracle — can read the
 # identical bytes. The composed TCGA pipeline queries build from these
 # files (never from in-session createDataFrame), which is what makes
-# their oracle hash-comparison possible at all.
+# their oracle hash-comparison possible at all. tools/persist_fixtures.py
+# regenerates them.
 # -------------------------------------------------------------------------
 
 
@@ -218,92 +219,6 @@ def fixtures_parquet_dir() -> str:
     return os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "fixtures_data"
     )
-
-
-def persist_fixtures_parquet(out_dir: str | None = None) -> dict[str, str]:
-    """Write genes/samples/expression as single parquet files (pyarrow,
-    no Spark session needed). Content is fully determined by the module
-    seeds; regenerating overwrites byte-compatible values."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out_dir = out_dir or fixtures_parquet_dir()
-    os.makedirs(out_dir, exist_ok=True)
-
-    paths: dict[str, str] = {}
-
-    genes = gene_table()
-    p = os.path.join(out_dir, "genes.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "gene_id": pa.array(genes["gene_id"], pa.string()),
-                "gene_name": pa.array(genes["gene_name"], pa.string()),
-            }
-        ),
-        p,
-    )
-    paths["genes"] = p
-
-    samp = samples_table()
-    treat_type = pa.list_(
-        pa.struct(
-            [
-                ("submitter_id", pa.string()),
-                ("treatment_type", pa.string()),
-                ("therapeutic_agents", pa.string()),
-            ]
-        )
-    )
-    treatments = pa.array(
-        [
-            [
-                {
-                    "submitter_id": t[0],
-                    "treatment_type": t[1],
-                    "therapeutic_agents": t[2],
-                }
-                for t in row
-            ]
-            for row in samp["treatments"]
-        ],
-        treat_type,
-    )
-    cols = {
-        name: pa.array(samp[name], pa.string())
-        for name in [
-            "barcode",
-            "submitter_id",
-            "short_letter_code",
-            "vital_status",
-            "days_to_death",
-            "paper_days_to_last_followup",
-            "ajcc_pathologic_stage",
-            "paper_brca_subtype_pam50",
-            "sample_type",
-        ]
-    }
-    cols["treatments"] = treatments
-    p = os.path.join(out_dir, "samples.parquet")
-    pq.write_table(pa.table(cols), p)
-    paths["samples"] = p
-
-    expr = expression_table()
-    p = os.path.join(out_dir, "expression.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "gene_id": pa.array(expr["gene_id"], pa.string()),
-                "barcode": pa.array(expr["barcode"], pa.string()),
-                "count": pa.array(expr["count"], pa.int64()),
-            }
-        ),
-        p,
-    )
-    paths["expression"] = p
-    return paths
 
 
 def read_fixtures_parquet(spark: SparkSession) -> dict[str, DataFrame]:

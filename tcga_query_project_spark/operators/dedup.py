@@ -349,8 +349,7 @@ def jaccard_prefix_join(
     bytewise sort of ``lpad(count)||token`` strings, identical across
     engines for ASCII corpora (the fuzz grid's domain); non-ASCII
     tokens could order differently between UTF-16 (Spark) and UTF-8
-    (DuckDB) comparisons — same caveat as the streaming near-dup
-    kernel, and only the ORDER is affected, never set membership.
+    (DuckDB) comparisons — only the ORDER is affected, never set membership.
 
     Scale shape — ALL FLAT TABLES, nothing nested is ever persisted
     (Spark's in-memory columnar cache handles array<string> columns
@@ -531,20 +530,16 @@ def band_firstseen_gate(
     num_hashes: int = 8,
     band_size: int = 2,
 ) -> DataFrame:
-    """Batch form of the STREAMING near-dedup admission gate
-    (streaming/neardup.py ``near_dup_dedup_stream``): a document passes
-    iff EVERY one of its LSH band signatures is first-seen — the
-    conservative one-sided rule the stream applies per micro-batch,
-    here with "arrival order" = ascending ``id_col`` (the stream's
-    dropDuplicatesWithinWatermark keeps the first-processed row per
-    band key; batch replays that with a per-band-key min-id claim).
+    """Near-dedup admission gate: a document passes iff EVERY one of
+    its LSH band signatures is first-seen, with "arrival order" =
+    ascending ``id_col`` (a per-band-key min-id claim).
 
     Same decision semantics, different trade than
     :func:`near_duplicates`: no candidate verify, so an LSH
     false-positive on even one band rejects a unique document — the
     fail-closed direction (never admits a near-dup the bands can see).
     Documents with no bands (< ``k`` tokens after normalization) pass
-    trivially, exactly like the stream's empty band array.
+    trivially.
 
     Output: one row per input document — ``(id, n_bands BIGINT,
     passed BOOLEAN)``; filter ``passed`` for the admitted corpus.
@@ -552,8 +547,7 @@ def band_firstseen_gate(
     Scale shape: shingle/minhash are narrow per-doc work (one signature
     aggregation shuffle); the gate itself is a MIN window over ONE
     band-keyed exchange — each band-key partition holds that key's
-    occurrence list (the stream's state is the same one min-id per
-    band key) — followed by a per-doc all() aggregation. The band rows
+    occurrence list — followed by a per-doc all() aggregation. The band rows
     are consumed ONCE: a first draft aggregated min-ids and joined
     them back, which made Catalyst execute the whole tokenize→shingle→
     minhash pipeline twice (measured 10s vs 0.6s at sf0.1); the window

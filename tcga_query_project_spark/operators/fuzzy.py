@@ -34,7 +34,7 @@ LLM-data-pipeline brief).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -79,15 +79,6 @@ def delete_variants_sql(s: str, max_dist: int) -> str:
     return f"array_distinct(concat({v0}, {v1}, {v2}))"
 
 
-def delete_variants(name: str, max_dist: int) -> Column:
-    """Column form of :func:`delete_variants_sql` over the column
-    ``name`` (it takes the column NAME: Column objects have no stable
-    SQL rendering to interpolate)."""
-    from tcga_query_project_spark.functions.scalar import qident
-
-    return F.expr(delete_variants_sql(qident(name), max_dist))
-
-
 def _variant_table(
     df: DataFrame, col: str, max_dist: int, out: str
 ) -> DataFrame:
@@ -125,34 +116,6 @@ def fuzzy_pairs(df: DataFrame, col: str, max_dist: int = 2) -> DataFrame:
             F.levenshtein(F.col("name_a"), F.col("name_b")).cast("bigint"),
         )
         .filter(F.col("dist") <= max_dist)
-    )
-
-
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    max_dist: int = 2,
-) -> DataFrame:
-    """Two-table fuzzy equi-join on short string keys: every
-    (left_col, right_col) value pair within Levenshtein ``max_dist``,
-    as ``(left_col, right_col, dist)`` over the deduplicated key
-    domains. Join the output back to the facts on each side to
-    materialize row-level matches (keeps the expensive distance work
-    on the small distinct domain). Includes exact matches (dist 0)."""
-    va = _variant_table(left, left_col, max_dist, "_l")
-    vb = _variant_table(right, right_col, max_dist, "_r")
-    return (
-        va.join(vb, "_variant")
-        .select("_l", "_r")
-        .distinct()
-        .withColumn(
-            "dist", F.levenshtein(F.col("_l"), F.col("_r")).cast("bigint")
-        )
-        .filter(F.col("dist") <= max_dist)
-        .withColumnRenamed("_l", left_col)
-        .withColumnRenamed("_r", right_col)
     )
 
 

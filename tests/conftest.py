@@ -1,28 +1,6 @@
 import os
-import sys
 
 import pytest
-
-# transformWithState's state-server protocol needs google.protobuf in
-# the driver AND every Spark Python worker. When the environment ships
-# no protobuf site-package, expose the machine's vendored pure-python
-# runtime via tests/_vendor (see tests/_vendor/google/__init__.py) —
-# on sys.path for this process, on PYTHONPATH for the workers the JVM
-# spawns. Must happen before the SparkSession is created.
-_VENDOR = os.path.join(os.path.dirname(__file__), "_vendor")
-try:
-    import google.protobuf  # noqa: F401
-except ImportError:
-    if os.path.isdir(
-        os.environ.get(
-            "SPARK_GRAFT_PROTOBUF_HOME",
-            "/usr/lib/google-cloud-sdk/platform/google_appengine/google",
-        )
-    ):
-        sys.path.insert(0, _VENDOR)
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            p for p in (_VENDOR, os.environ.get("PYTHONPATH")) if p
-        )
 
 from tcga_query_project_spark.session import get_spark
 

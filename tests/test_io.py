@@ -201,120 +201,3 @@ def test_read_events_normalizes_any_encoding(spark, tmp_path):
     out = io.read_events(spark, d).collect()[0]
     got_us = int(out["ts"].replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
     assert got_us == (epoch_us // 1_000_000) * 1_000_000
-
-
-def test_write_zordered_narrows_stats_on_every_dim(spark, tmp_path):
-    """Z-order clustering: every output file's min-max footer range is
-    narrow on BOTH curve columns (the multi-column data-skipping a
-    single-column sort cannot give — its second column spans the whole
-    domain in every file), and the rows round-trip unchanged."""
-    import glob
-    import random
-
-    import pyarrow.parquet as pq
-
-    from tcga_query_project_spark.operators.partitioning import (
-        write_zordered,
-    )
-
-    rng = random.Random(3)
-    rows = [
-        (rng.randrange(0, 1024), rng.randrange(0, 1024), i)
-        for i in range(40_000)
-    ]
-    df = spark.createDataFrame(rows, "x long, y long, id long")
-    zpath = str(tmp_path / "z")
-    write_zordered(df, zpath, ["x", "y"], n_files=8, bits=10)
-
-    def span_fracs(path, col):
-        fracs = []
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.read_metadata(f)
-            names = [md.schema.column(k).name for k in range(md.num_columns)]
-            j = names.index(col)
-            los, his = [], []
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(j).statistics
-                los.append(st.min)
-                his.append(st.max)
-            fracs.append((max(his) - min(los)) / 1023)
-        return fracs
-
-    zx, zy = span_fracs(zpath, "x"), span_fracs(zpath, "y")
-    assert sum(zx) / len(zx) < 0.75, zx
-    assert sum(zy) / len(zy) < 0.75, zy
-
-    # single-column sort baseline: files cover the FULL y domain
-    xpath = str(tmp_path / "xsort")
-    (
-        df.repartitionByRange(8, "x")
-        .sortWithinPartitions("x")
-        .write.parquet(xpath)
-    )
-    by = span_fracs(xpath, "y")
-    assert min(by) > 0.9, by
-
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(zpath).collect()
-    )
-    assert got == sorted(rows)
-
-
-def test_write_zordered_degenerate_inputs(spark, tmp_path):
-    """Empty input and an all-null curve column must still write
-    (unclustered fallback), not abort the maintenance job."""
-    from tcga_query_project_spark.operators.partitioning import (
-        write_zordered,
-    )
-
-    empty = spark.createDataFrame([], "x long, y long")
-    p1 = str(tmp_path / "empty")
-    write_zordered(empty, p1, ["x", "y"])
-    assert spark.read.parquet(p1).count() == 0
-
-    nully = spark.createDataFrame(
-        [(None, 1), (None, 2)], "x long, y long"
-    )
-    p2 = str(tmp_path / "nully")
-    write_zordered(nully, p2, ["x", "y"])
-    assert spark.read.parquet(p2).count() == 2
-
-
-def test_zorder_rejects_key_overflow():
-    """bits * dims > 63 would overflow the signed-64 Morton key into
-    the sign bit (negative keys, broken curve order) — must raise, not
-    silently wrap."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tcga_query_project_spark.operators.partitioning import (
-        zorder_value,
-    )
-
-    cols = [F.col(f"c{i}") for i in range(7)]
-    with pytest.raises(ValueError, match="63"):
-        zorder_value(cols, bits=10)  # 70 bits
-    # 7 dims at 9 bits (63) is the legal maximum
-    zorder_value(cols, bits=9)
-
-
-def _warc_record(rtype, uri, rid, body: bytes, extra=""):
-    head = (
-        f"WARC/1.0\r\n"
-        f"WARC-Type: {rtype}\r\n"
-        f"WARC-Record-ID: <urn:uuid:{rid}>\r\n"
-        f"WARC-Target-URI: {uri}\r\n"
-        f"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-        f"{extra}"
-        f"Content-Length: {len(body)}\r\n"
-        f"\r\n"
-    ).encode()
-    return head + body + b"\r\n\r\n"
-
-
-def _http_html(html: str) -> bytes:
-    body = html.encode()
-    return (
-        b"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
-        b"Content-Length: " + str(len(body)).encode() + b"\r\n\r\n" + body
-    )

@@ -304,62 +304,6 @@ def test_vst_fitted_monotone_and_log_like(spark):
         assert abs((v_hi - v_lo) - expected) < 0.5
 
 
-def test_salted_join_matches_plain_join(spark):
-    """salted_join must be row-identical to the plain equi-join under
-    heavy key skew (one key holding ~90% of rows), for inner and left."""
-    from tcga_query_project_spark.operators.partitioning import salted_join
-
-    left_rows = [("hot", i) for i in range(450)] + [
-        (k, i) for i, k in enumerate(["a", "b", "c", "orphan"] * 10)
-    ]
-    left = spark.createDataFrame(left_rows, "k string, v int")
-    right = spark.createDataFrame(
-        [("hot", 1), ("a", 2), ("b", 3), ("c", 4), ("unused", 9)],
-        "k string, label int",
-    )
-    for how in ("inner", "left"):
-        plain = sorted(
-            tuple(r) for r in left.join(right, "k", how).select("k", "v", "label").collect()
-        )
-        salted = sorted(
-            tuple(r)
-            for r in salted_join(left, right, "k", how, salt=8)
-            .select("k", "v", "label")
-            .collect()
-        )
-        assert salted == plain, how
-
-
-def test_salted_agg_matches_plain_agg(spark):
-    """Two-phase salted aggregation must equal the direct groupBy for
-    every re-aggregable kind, including a single giant group."""
-    from tcga_query_project_spark.operators.partitioning import salted_agg
-
-    rows = [("hot", float(i)) for i in range(1000)] + [("cold", 5.0), ("cold", -2.0)]
-    df = spark.createDataFrame(rows, "k string, v double")
-    plain = {
-        r["k"]: (r["s"], r["n"], r["lo"], r["hi"])
-        for r in df.groupBy("k")
-        .agg(
-            F.sum("v").alias("s"),
-            F.count("v").alias("n"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-        )
-        .collect()
-    }
-    salted = {
-        r["k"]: (r["s"], r["n"], r["lo"], r["hi"])
-        for r in salted_agg(
-            df,
-            ["k"],
-            {"s": ("sum", "v"), "n": ("count", "v"), "lo": ("min", "v"), "hi": ("max", "v")},
-            salt=8,
-        ).collect()
-    }
-    assert salted == plain
-
-
 def test_approx_profile_within_tolerance(spark):
     """Sketch aggregates vs exact answers on sf0.001 events: HLL distinct
     within 5% (default rsd), approx quartiles within the value span of
@@ -385,28 +329,6 @@ def test_approx_profile_within_tolerance(spark):
         ap = approx[et]
         assert abs(ap["approx_distinct"] - ex["nd"]) <= max(2, 0.05 * ex["nd"])
         assert abs(ap["approx_quartiles"][1] - ex["med"]) <= 0.05 * max(ex["med"], 1.0)
-
-
-def test_mergeable_distinct_rollup(spark):
-    """Sketch rollup: per-bucket HLL sketches union into the global
-    estimate — the merge happens on sketch bytes, and the total must
-    track the exact global distinct (which per-bucket exact counts
-    cannot produce by summing)."""
-    from tcga_query_project_spark.operators import sketches
-    from tcga_query_project_spark.sources.io import read_events
-    from tests.conftest import SF_SMALL
-
-    ev = read_events(spark, SF_SMALL)
-    per_bucket, total = sketches.mergeable_distinct_rollup(
-        ev, F.date_trunc("day", "ts"), "user_id"
-    )
-    exact_total = ev.select("user_id").distinct().count()
-    est = total.collect()[0]["approx_distinct_total"]
-    assert abs(est - exact_total) <= max(2, 0.05 * exact_total)
-    # per-bucket estimates exist and sum to >= the global distinct
-    rows = per_bucket.collect()
-    assert len(rows) > 1
-    assert sum(r["approx_distinct"] for r in rows) >= est * 0.95
 
 
 def test_lsh_candidates_rejects_missing_signature_columns(spark):
@@ -835,36 +757,6 @@ def test_scd2_intervals_collapse_and_close(spark):
     )
     r = {x["cust"]: x["tier"] for x in asof.collect()}
     assert r[1] == "plat"
-
-
-def test_skew_profile_and_stratified_cap(spark):
-    """skew_profile surfaces the hot key with its share; stratified_cap
-    keeps exactly cap rows per stratum, deterministically (same keep-set
-    under any input partitioning)."""
-    from tcga_query_project_spark.operators.partitioning import (
-        skew_profile,
-        stratified_cap,
-    )
-
-    rows = [(i, "hot" if i % 10 < 8 else f"cold{i % 10}") for i in range(1000)]
-    df = spark.createDataFrame(rows, "id long, k string")
-    prof = skew_profile(df, "k", top=2).collect()
-    assert prof[0]["k"] == "hot"
-    assert prof[0]["n_rows"] == 800
-    assert abs(prof[0]["share"] - 0.8) < 1e-9
-
-    capped = stratified_cap(df, ["k"], cap=50, tiebreak="id")
-    counts = {r["k"]: r["n"] for r in capped.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts["hot"] == 50
-    assert counts["cold8"] == 50  # cold strata (100 rows) cap too
-    under = stratified_cap(df, ["k"], cap=500, tiebreak="id")
-    n_under = {r["k"]: r["n"] for r in under.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert n_under["cold9"] == 100  # below cap -> untouched
-    kept_a = sorted(r["id"] for r in capped.filter(F.col("k") == "hot").collect())
-    # determinism under different partitioning: same keep-set
-    capped2 = stratified_cap(df.repartition(7), ["k"], cap=50, tiebreak="id")
-    kept_b = sorted(r["id"] for r in capped2.filter(F.col("k") == "hot").collect())
-    assert kept_a == kept_b
 
 
 def test_tfidf_hand_worked(spark):
@@ -1503,24 +1395,6 @@ def test_heavy_hitters_matches_full_aggregation_on_zipf(spark):
     ]
 
 
-def test_approx_set_overlap_close_to_exact(spark):
-    from tcga_query_project_spark.operators import sketches
-
-    rows = [("train", i) for i in range(1000)] + [
-        ("test", i) for i in range(500, 1500)
-    ]
-    df = spark.createDataFrame(rows, "split string, fp long")
-    out = sketches.approx_set_overlap(df, "split", "fp").collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["label_a"], r["label_b"]) == ("test", "train")
-    assert abs(r["approx_a"] - 1000) / 1000 < 0.05
-    assert abs(r["approx_b"] - 1000) / 1000 < 0.05
-    assert abs(r["approx_intersection"] - 500) / 500 < 0.10
-    assert abs(r["approx_union"] - 1500) / 1500 < 0.05
-    assert abs(r["approx_jaccard"] - 1 / 3) < 0.05
-
-
 def test_dedup_index_build_query_append(spark, tmp_path):
     """Incremental dedup: history is hashed once into a persisted
     index; deltas dedup against it by band join + signature agreement."""
@@ -1560,53 +1434,6 @@ def test_dedup_index_build_query_append(spark, tmp_path):
         dedup.build_dedup_index(
             corpus, "doc_id", "text", idx, mode="append"
         )
-
-
-def test_mergeable_quantile_rollup_tolerance(spark):
-    """Bucket quantiles and the merged GLOBAL quantiles track the exact
-    answers; the global estimate comes from sketch bytes only."""
-    import numpy as np
-
-    from tcga_query_project_spark.operators import sketches
-
-    rng = np.random.default_rng(8)
-    vals = rng.normal(loc=50, scale=10, size=6000)
-    rows = [(int(i % 4), float(v)) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "b int, v double")
-    per_bucket, total = sketches.mergeable_quantile_rollup(
-        df, F.col("b"), "v", quantiles=(0.25, 0.5, 0.75)
-    )
-    exact_global = np.quantile(vals, [0.25, 0.5, 0.75])
-    got_total = total.collect()[0]
-    assert got_total["n_rows"] == 6000
-    for g, e in zip(got_total["approx_quantiles"], exact_global):
-        assert abs(g - e) < 1.0, (g, e)  # ~0.1 sigma rank tolerance
-    pb = {r["bucket"]: r for r in per_bucket.collect()}
-    assert set(pb) == {0, 1, 2, 3}
-    for bkt, r in pb.items():
-        sub = vals[np.arange(len(vals)) % 4 == bkt]
-        assert r["n_rows"] == len(sub)
-        for g, e in zip(
-            r["approx_quantiles"], np.quantile(sub, [0.25, 0.5, 0.75])
-        ):
-            assert abs(g - e) < 1.5, (bkt, g, e)
-
-
-def test_mergeable_quantile_rollup_empty_input_returns_null_total(spark):
-    """A filtered-to-empty slice must yield a NULL total, not an ANSI
-    INVALID_ARRAY_INDEX crash from the fold seed."""
-    from tcga_query_project_spark.operators import sketches
-
-    df = spark.createDataFrame([], "b int, v double")
-    per_bucket, total = sketches.mergeable_quantile_rollup(
-        df, F.col("b"), "v"
-    )
-    assert per_bucket.count() == 0
-    row = total.collect()[0]
-    assert row["n_rows"] is None
-    assert row["approx_quantiles"] is None or all(
-        x is None for x in row["approx_quantiles"]
-    )
 
 
 def test_apply_cdc_merge_semantics(spark):

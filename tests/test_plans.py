@@ -300,28 +300,6 @@ def test_bucketed_join_elides_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS bt_orders")
 
 
-def test_partitioned_write_prunes_partitions(spark, tmp_path):
-    """Hive-partitioned layout + equality filter → partition pruning:
-    the filter lands in PartitionFilters and non-matching directories
-    are never read."""
-    from tcga_query_project_spark.operators import partitioning
-    from tcga_query_project_spark.sources.io import read_events
-
-    ev = read_events(spark, SF_SMALL).drop("ts")
-    out = str(tmp_path / "events_by_type")
-    partitioning.write_partitioned(ev, out, ["event_type"])
-    back = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    back.collect()
-    plan = plans.formatted_plan(back)
-    assert "PartitionFilters" in plan
-    import re
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "event_type" in m.group(1), plan
-    # pruning is real: only the matching partition's rows come back
-    expected = ev.filter(F.col("event_type") == "click").count()
-    assert back.count() == expected
-
-
 def test_aqe_skew_join_split_engages(spark):
     """Plan evidence that the AQE skew-join path WORKS (round-9 skew
     bench, BENCH_SKEW.json: at bench volume no shuffle-join partition

@@ -40,8 +40,6 @@ ALLOWED: dict[str, str] = {
     f"{PKG}.plans.inspect": "plan assertions behind tests/test_plans.py",
     # Reference implementations the engine paths are compared against.
     f"{PKG}.operators.glm:_fit_core": "numpy IRLS reference for the SQL NB-GLM Wald fit",
-    f"{PKG}.streaming.neardup:_band_sigs_expr": "expression reference for the near-dup kernel's bands",
-    f"{PKG}.streaming.neardup:_shingle_expr": "expression reference for the near-dup kernel's shingles",
     # Paper entry points that have no catalog query yet.
     f"{PKG}.sources.ingest": "GDC acquisition path (GDCquery/GDCdownload/GDCprepare)",
     f"{PKG}.sources.io:write_bucketed": "bucketed sink the GDC acquisition path writes through",
@@ -52,20 +50,6 @@ ALLOWED: dict[str, str] = {
     f"{PKG}.operators.glm:nb_glm_wald_pairs": "the all-pairs NB-GLM Wald fit behind pairwise_de",
     # Sinks a benchmark plan names.
     f"{PKG}.sources.io:write_training_shards": "training-shard sink of the corpus pipeline",
-    # Tested operators awaiting a catalog query (ROADMAP open item 3: wire
-    # each into a query or delete it with its tests).
-    f"{PKG}.operators.classifier": "supervised tier of the corpus quality filter",
-    f"{PKG}.operators.fuzzy:delete_variants": "column form of the deletion neighbourhood fuzzy_pairs builds on",
-    f"{PKG}.operators.fuzzy:fuzzy_join": "two-table form of fuzzy_pairs",
-    f"{PKG}.operators.partitioning:salted_join": "skew fallback where AQE cannot split a hot join key",
-    f"{PKG}.operators.partitioning:salted_agg": "skew fallback for a hot group on pre-partitioned input",
-    f"{PKG}.operators.partitioning:skew_profile": "hot-key diagnostic before choosing a salted form",
-    f"{PKG}.operators.partitioning:stratified_cap": "window-form reference for stratified_cap_scaled's keep-set",
-    f"{PKG}.operators.partitioning:write_partitioned": "hive-partitioned sink for the GDC predicate columns",
-    f"{PKG}.operators.partitioning:write_zordered": "multi-column Z-order layout for stats pruning",
-    f"{PKG}.operators.sketches:mergeable_distinct_rollup": "HLL distinct-count rollup over bucket sketches",
-    f"{PKG}.operators.sketches:approx_set_overlap": "theta-sketch overlap estimate before an exact anti-join",
-    f"{PKG}.operators.sketches:mergeable_quantile_rollup": "KLL quantile rollup over bucket sketches",
 }
 
 
