@@ -26,10 +26,37 @@ them; violating any one breaks the value-hash match):
 - Aggregate/computed column names are aliased identically in the
   DataFrame code and the SQL (driver hashes after sorting columns by
   name).
+
+Two builder forms, both registered into ``REGISTRY`` or ``BENCH_ONLY``:
+
+- ``register_sql``: the SQL names its tables as placeholders
+  (``FROM {lineitem} l``). The oracle is that text with each
+  placeholder bound to the table name; the builder runs the same text
+  through ``spark.sql`` with each placeholder bound to the table's
+  DataFrame (``_t``, so ``read_events``' normalisation and the parquet
+  schema memo still apply). No view or function outlives the build.
+- ``@register`` / ``@register_bench_only``: a DataFrame builder with a
+  separately written oracle.
+
+A query takes the SQL form only if all four checks hold:
+
+1. its DataFrame builder calls no package operator (``operators/``,
+   ``stats``, ``survival``, ``fuzzy``);
+2. the SQL form returns the oracle's exact rows at sf0.001 and sf0.01;
+3. every tests/test_plans.py pin and budget holds, and at sf0.01 and a
+   native TPC-H sf1 (tools/gen_native_tpch.py) the executed plan has no
+   more exchanges and no fewer broadcast joins than the builder's;
+4. at sf0.1 it does not lose 8 or more of 10 interleaved build + noop
+   write pairs against the builder.
+
+A query that attests an operator stays a builder: for a SQL-form query
+the oracle check compares two engines running one text, not the
+operator against an independent derivation of the same result.
 """
 
 from __future__ import annotations
 
+import string
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -105,16 +132,38 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
 
 
+def register_sql(
+    into: dict[str, QuerySpec], name: str, sql: str, tags: tuple[str, ...] = ()
+) -> None:
+    """Register a query whose builder is its own oracle text.
+
+    ``sql`` names each table it reads as a placeholder (``FROM
+    {lineitem} l``). The oracle binds every placeholder to the bare
+    table name; the builder binds it to the table's DataFrame through
+    ``spark.sql``'s formatter, which registers each as a temporary view
+    only while the text is analyzed and drops it before returning."""
+    tables = sorted({f for _, f, _, _ in string.Formatter().parse(sql) if f})
+    oracle = sql.format(**{t: t for t in tables})
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(sql, **{t: _t(spark, sf_dir, t) for t in tables})
+
+    into[name] = QuerySpec(name, build, oracle, tags)
+
+
 # =========================================================================
 # Relational core (SURVEY.md §2.1-2.3, §2.6-2.9)
 # =========================================================================
 
 # orders/lineitem timestamps are TIMESTAMP_NTZ (wall-clock, no zone) in
-# both engines, so NTZ-vs-NTZ-literal comparison is timezone-free.
-_Q1_CUTOFF = "2001-09-02 00:00:00"
-
-
-@register(
+# both engines, and Spark folds a TIMESTAMP literal compared with one to
+# an NTZ literal, so these cutoffs are timezone-free.
+#
+# Flagship (SURVEY.md §7 step 1): filter → grouped cohort aggregate +
+# HAVING (A1, vital_status_DESeq.R:47) → significance binning (A9,
+# vital_status_DESeq.R:93-97), over lineitem (TPC-H Q1-like).
+register_sql(
+    REGISTRY,
     "q1_pricing_summary",
     f"""
     SELECT l_returnflag, l_linestatus,
@@ -127,93 +176,42 @@ _Q1_CUTOFF = "2001-09-02 00:00:00"
            ROUND(AVG(l_discount), 6) AS avg_disc,
            CAST(COUNT(*) AS BIGINT) AS count_order,
            {SIGNIF_BIN_SQL.format(p="ROUND(AVG(l_discount), 6)")} AS disc_signif
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '{_Q1_CUTOFF}'
+    FROM {{lineitem}}
+    WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     HAVING COUNT(*) >= 10
     """,
     tags=("flagship", "A1", "A9", "O1", "P3"),
 )
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship (SURVEY.md §7 step 1): the reference's core shape —
-    filter → grouped cohort aggregate + HAVING (A1,
-    vital_status_DESeq.R:47) → significance-style binning (A9,
-    vital_status_DESeq.R:93-97) — recast over lineitem (TPC-H Q1-like).
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    avg_disc = F.round(F.avg("l_discount"), 6)
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit(_Q1_CUTOFF).cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("sum_disc_price"),
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                ),
-                4,
-            ).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-            avg_disc.alias("avg_disc"),
-            F.count(F.lit(1)).cast("long").alias("count_order"),
-            signif_bin(avg_disc).alias("disc_signif"),
-        )
-        .filter(F.col("count_order") >= 10)
-    )
 
 
-@register(
+# P3 IS-NOT-NULL + P5 disequality filters (``!is.na(...)``
+# vital_status_DESeq.R:29; ``!= "Stage_X"`` BRCA_path_stage_DESeq.R:45-46).
+# Both predicates push into the scan.
+register_sql(
+    REGISTRY,
     "p3_p5_filters",
     """
     SELECT event_id, event_type, value
-    FROM events
+    FROM {events}
     WHERE value IS NOT NULL AND event_type != 'error' AND value > 100.0
     """,
     tags=("P3", "P5"),
 )
-def p3_p5_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3 IS-NOT-NULL + P5 disequality filters
-    (``!is.na(...)`` vital_status_DESeq.R:29; ``!= "Stage_X"``
-    BRCA_path_stage_DESeq.R:45-46). Both predicates push into the scan.
-    """
-    ev = _t(spark, sf_dir, "events")
-    return ev.filter(
-        F.col("value").isNotNull()
-        & (F.col("event_type") != "error")
-        & (F.col("value") > 100.0)
-    ).select("event_id", "event_type", "value")
 
 
-@register_bench_only(
+# P4: literal IN-list membership (``%in% goi``, vital_status_DESeq.R:88).
+# Bench-only; the IN-list stays driver-visible through f_scalar_suite and
+# j3_semi_join_dim.
+register_sql(
+    BENCH_ONLY,
     "p4_isin_inlist",
     """
-    SELECT p_partkey, p_brand, p_size FROM part
+    SELECT p_partkey, p_brand, p_size FROM {part}
     WHERE p_brand IN ('Brand#13', 'Brand#20') AND p_size >= 5
     """,
     tags=("P4",),
 )
-def p4_isin_inlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4: literal IN-list membership (``%in% goi``,
-    vital_status_DESeq.R:88).
-
-    BENCH_ONLY: its driver slot serves ``a6_poisson_wald`` (the GLM
-    cross-check). No verification is lost: this query keeps its oracle
-    here (tests/test_oracle_parity.py runs BENCH_ONLY through the
-    identical comparison), and the P4 IN-list operator stays
-    driver-visible through ``f_scalar_suite``'s IN-list column and
-    ``j3_semi_join_dim``'s tags."""
-    return (
-        _t(spark, sf_dir, "part")
-        .filter(F.col("p_brand").isin("Brand#13", "Brand#20") & (F.col("p_size") >= 5))
-        .select("p_partkey", "p_brand", "p_size")
-    )
 
 
 @register(
@@ -275,40 +273,22 @@ def p7_cohort_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# J1: fact ⟕ dimension, then group (``left_join(clinical_data, gene_count,
+# by="barcode")``, vital_status_DESeq.R:116). customer scales with SF, so
+# AQE decides the broadcast from measured size; no hint.
+register_sql(
+    REGISTRY,
     "j1_left_join_enrich",
     """
     SELECT c.c_mktsegment,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
            ROUND(SUM(o.o_totalprice), 4) AS total_price,
            ROUND(AVG(c.c_acctbal), 6) AS mean_acctbal
-    FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    FROM {orders} o LEFT JOIN {customer} c ON o.o_custkey = c.c_custkey
     GROUP BY c.c_mktsegment
     """,
     tags=("J1",),
 )
-def j1_left_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: left equi-join fact ⟕ dimension then group
-    (``left_join(clinical_data, gene_count, by="barcode")``,
-    vital_status_DESeq.R:116). The dimension side is AQE size-decided
-    (it broadcasts at any realistic dim size — plan test pins the
-    BroadcastHashJoin); customer is SF-scaled, so a FORCED hint here
-    would be the q17/q18 100 TB OOM class."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    return (
-        orders.join(
-            cust,
-            orders.o_custkey == cust.c_custkey,
-            "left",
-        )
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 4).alias("total_price"),
-            F.round(F.avg("c_acctbal"), 6).alias("mean_acctbal"),
-        )
-    )
 
 
 @register(
@@ -370,7 +350,12 @@ def a8_pairwise_contrasts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Grouping-set rollup: per (flag, status), per flag and grand total in one
+# pass. The grand-total row carries A2's global max/min (plot bracket,
+# vital_status_DESeq.R:142) and A3's filtered count (legend group sizes,
+# surv_analysis_median_exp.R:143-144).
+register_sql(
+    REGISTRY,
     "a10_rollup_totals",
     """
     SELECT l_returnflag, l_linestatus,
@@ -379,30 +364,11 @@ def a8_pairwise_contrasts(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(l_extendedprice) AS max_price,
            MIN(l_extendedprice) AS min_price,
            CAST(SUM(CASE WHEN l_extendedprice > 50000 THEN 1 ELSE 0 END) AS BIGINT) AS n_high
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
     tags=("A2", "A3", "A10", "grouping-sets"),
 )
-def a10_rollup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouping-set rollup (beyond the reference surface): subtotals per
-    (flag, status), per flag, and grand total in ONE pass — Spark
-    ``rollup`` = partial-agg tree, no triple scan. The grand-total row
-    carries A2's global max/min (plot-bracket y position,
-    vital_status_DESeq.R:142) and A3's filtered count (legend group
-    sizes, surv_analysis_median_exp.R:143-144) — the rollup's
-    grouping-null row IS the global aggregate, so A2/A3 ride the same
-    single pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.max("l_extendedprice").alias("max_price"),
-        F.min("l_extendedprice").alias("min_price"),
-        F.sum(F.when(F.col("l_extendedprice") > 50000, 1).otherwise(0))
-        .cast("long")
-        .alias("n_high"),
-    )
 
 
 @register_bench_only(
@@ -637,27 +603,18 @@ def r2_ragged_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("rn", "v_P", "v_O", "v_F")
 
 
-@register(
+# P2: the gene_id → gene-symbol rename (vital_status_DESeq.R:109-113)
+# done the long-schema way, a join with the dimension that aliases its
+# attribute. part scales with SF, so AQE decides the broadcast.
+register_sql(
+    REGISTRY,
     "p2_rename_dim_join",
     """
     SELECT l.l_orderkey, l.l_linenumber, p.p_name AS part_name
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+    FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
     """,
     tags=("P2", "J1"),
 )
-def p2_rename_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2: the reference's gene_id → gene-symbol rename
-    (``colnames(gene_count)[tmp] <- gene``, vital_status_DESeq.R:109-113)
-    done the long-schema way — a broadcast join against the dimension
-    table, aliasing the dim attribute (SURVEY.md §2.2 P2: 'the rename is
-    a join with the genes dim — strictly better')."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    # part is SF-scaled: AQE size-decides the join (broadcast at any
-    # realistic dim size); a forced hint would OOM at 100 TB.
-    return li.join(
-        part, li.l_partkey == part.p_partkey
-    ).select("l_orderkey", "l_linenumber", F.col("p_name").alias("part_name"))
 
 
 @register(
@@ -2723,7 +2680,7 @@ def tcga_de_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     wx = dp.wilcoxon_secondary(goi_long, "NT", "TP").select(
         "gene_name", F.round("p_value", 6).alias("p_value")
     )
-    adj = stats.bh_adjust_distinct(wx, "p_value")
+    adj = stats.bh_adjust(wx, "p_value", [], F.col("gene_name").asc())
     de = adj.select(
         "gene_name",
         "p_value",
@@ -3167,30 +3124,21 @@ def tcga_drug_km_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 
 
-@register_bench_only(
+# Left anti-join (NOT EXISTS): customers who never placed an urgent order.
+# The right side's filter is pushed below the join.
+register_sql(
+    BENCH_ONLY,
     "j5_anti_join",
     """
     SELECT c_custkey, c_name, c_acctbal
-    FROM customer c
+    FROM {customer} c
     WHERE NOT EXISTS (
-      SELECT 1 FROM orders o
+      SELECT 1 FROM {orders} o
       WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT'
     )
     """,
     tags=("J5", "anti-join"),
 )
-def j5_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left anti-join (NOT EXISTS): customers who never placed an urgent
-    order. The filter on the right side is pushed below the join, so at
-    scale the anti-join probes ~1/5 of orders; AQE picks broadcast-anti
-    when the filtered side fits."""
-    cust = _t(spark, sf_dir, "customer")
-    urgent = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    return cust.join(
-        urgent, cust.c_custkey == urgent.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name", "c_acctbal")
 
 
 _Q3_CUTOFF = "2001-06-01 00:00:00"
@@ -3248,17 +3196,17 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Value bands for the non-equi range join: a literal dimension, exactly
-# the shape of a rate-card / SLA-tier / bucket-boundary lookup.
-_VALUE_BANDS = [("low", 0.0, 50.0), ("mid", 50.0, 200.0), ("high", 200.0, 1e18)]
-
-
-@register_bench_only(
+# Non-equi band join, ``lo <= value < hi``, against a literal band table
+# (the shape of a rate-card or bucket-boundary lookup). No equi-key, so
+# Spark plans a BroadcastNestedLoopJoin: each fact partition scans the
+# three bands in place, with no shuffle of the fact side.
+register_sql(
+    BENCH_ONLY,
     "tj_range_join",
     """
     SELECT b.band, CAST(COUNT(*) AS BIGINT) AS n,
            ROUND(SUM(e.value), 4) AS total_value
-    FROM events e
+    FROM {events} e
     JOIN (VALUES ('low', 0.0, 50.0), ('mid', 50.0, 200.0),
                  ('high', 200.0, 1e18)) b(band, lo, hi)
       ON e.value >= b.lo AND e.value < b.hi
@@ -3266,24 +3214,6 @@ _VALUE_BANDS = [("low", 0.0, 50.0), ("mid", 50.0, 200.0), ("high", 200.0, 1e18)]
     """,
     tags=("range-join",),
 )
-def tj_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Non-equi (range/band) join: events matched to a value-band
-    dimension on ``lo <= value < hi``. No equi-key → Spark plans a
-    BroadcastNestedLoopJoin, which IS the right 100 TB plan when the
-    band table is small (each fact partition scans k bands in place;
-    no shuffle of the fact side)."""
-    ev = _t(spark, sf_dir, "events")
-    bands = F.broadcast(
-        spark.createDataFrame(_VALUE_BANDS, "band STRING, lo DOUBLE, hi DOUBLE")
-    )
-    return (
-        ev.join(bands, (ev.value >= bands.lo) & (ev.value < bands.hi))
-        .groupBy("band")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-    )
 
 
 @register_bench_only(
@@ -4057,7 +3987,11 @@ def pp_training_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# CUBE(lang, source): all four grouping levels in one hash aggregation;
+# GROUPING() tells a margin row from a real NULL group. Complements
+# a10_rollup_totals (ROLLUP).
+register_sql(
+    REGISTRY,
     "a12_cube_margins",
     """
     SELECT COALESCE(lang, '(all)') AS lang,
@@ -4065,35 +3999,11 @@ def pp_training_full(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(GROUPING(lang) * 2 + GROUPING(source) AS BIGINT) AS gid,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM documents
+    FROM {documents}
     GROUP BY CUBE (lang, source)
     """,
     tags=("agg-cube",),
 )
-def a12_cube_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE(lang, source) margins over documents — all four grouping
-    levels (detail, per-lang, per-source, grand total) in ONE pass:
-    Spark expands grouping sets before the single hash aggregation, so
-    the cost is one shuffle regardless of how many margins are
-    requested (vs 4 self-unioned GROUP BYs re-scanning the corpus).
-    grouping_id disambiguates a real NULL group value from a margin
-    row. Complements a10_rollup_totals (ROLLUP)."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.cube("lang", "source")
-        .agg(
-            F.grouping_id().cast("bigint").alias("gid"),
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-        )
-        .select(
-            F.coalesce(F.col("lang"), F.lit("(all)")).alias("lang"),
-            F.coalesce(F.col("source"), F.lit("(all)")).alias("source"),
-            "gid",
-            "n_docs",
-            "total_chars",
-        )
-    )
 
 
 @register_bench_only(
@@ -5893,55 +5803,32 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_bench_only(
+# TPC-H Q22 shape: customers with an above-average positive balance and no
+# orders, per country code (nationkey mod 10 stands in for the phone
+# prefix). The average is ROUNDed to 4 in both engines, so the threshold
+# compare is portable; NOT EXISTS plans as a left-anti join.
+register_sql(
+    BENCH_ONLY,
     "q22_idle_customers",
     """
     WITH ab AS (
       SELECT ROUND(AVG(c_acctbal), 4) AS avg_bal
-      FROM customer WHERE c_acctbal > 0.0
+      FROM {customer} WHERE c_acctbal > 0.0
     ),
     eligible AS (
       SELECT c_custkey, c_nationkey % 10 AS cntry, c_acctbal
-      FROM customer, ab WHERE c_acctbal > ab.avg_bal
+      FROM {customer}, ab WHERE c_acctbal > ab.avg_bal
     )
     SELECT CAST(cntry AS BIGINT) AS cntry,
            CAST(COUNT(*) AS BIGINT) AS n_cust,
            ROUND(SUM(c_acctbal), 4) AS total_bal
     FROM eligible e
-    WHERE NOT EXISTS (SELECT 1 FROM orders o
+    WHERE NOT EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = e.c_custkey)
     GROUP BY cntry
     """,
     tags=("relational", "scalar-subquery-anti-join", "tpch-q22"),
 )
-def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (global sales opportunity): customers with an
-    above-average positive balance and NO orders, grouped by a country
-    code (nationkey mod 10 stands in for the phone prefix). The scalar
-    subquery is a one-row broadcast (the global average, ROUNDed to 4
-    on both sides so the threshold compare is FP-portable); the NOT
-    EXISTS is a left-anti join against the order custkeys; the
-    customer table shuffles once (anti-join key), orders reduce to
-    their distinct custkeys before the exchange."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_acctbal"
-    )
-    ab = cust.filter(F.col("c_acctbal") > 0.0).agg(
-        F.round(F.avg("c_acctbal"), 4).alias("avg_bal")
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    return (
-        cust.join(F.broadcast(ab))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(orders, "c_custkey", "left_anti")
-        .groupBy((F.col("c_nationkey") % 10).cast("long").alias("cntry"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_cust"),
-            F.round(F.sum("c_acctbal"), 4).alias("total_bal"),
-        )
-    )
 
 
 @register(
@@ -6057,21 +5944,25 @@ def a6_poisson_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB; display-only money columns keep the ROUND(4) convention.
 # =========================================================================
 
-_Q2_SIZE_LO, _Q2_SIZE_HI = 5, 30
 
-
-@register_bench_only(
+# TPC-H Q2 shape: the European supplier(s) at each qualifying part's
+# minimum unit cost. With no partsupp, the cost is MIN(l_extendedprice /
+# l_quantity) per (part, supplier): one division then an order-insensitive
+# MIN is exact in both engines, so the minimum equality compares exact
+# doubles and the cost stays unrounded.
+register_sql(
+    BENCH_ONLY,
     "q2_min_cost_supplier",
-    f"""
+    """
     WITH ps AS (
       SELECT l_partkey, l_suppkey,
              MIN(l_extendedprice / l_quantity) AS unit_cost
-      FROM lineitem GROUP BY l_partkey, l_suppkey
+      FROM {lineitem} GROUP BY l_partkey, l_suppkey
     ),
     eu AS (
       SELECT s_suppkey, s_name, s_acctbal, n_name
-      FROM supplier JOIN nation ON s_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
+      FROM {supplier} JOIN {nation} ON s_nationkey = n_nationkey
+      JOIN {region} ON n_regionkey = r_regionkey
       WHERE r_name = 'EUROPE'
     ),
     cand AS (
@@ -6080,8 +5971,8 @@ _Q2_SIZE_LO, _Q2_SIZE_HI = 5, 30
              MIN(ps.unit_cost) OVER (PARTITION BY p.p_partkey) AS min_cost
       FROM ps
       JOIN eu ON ps.l_suppkey = eu.s_suppkey
-      JOIN part p ON ps.l_partkey = p.p_partkey
-      WHERE p.p_size BETWEEN {_Q2_SIZE_LO} AND {_Q2_SIZE_HI}
+      JOIN {part} p ON ps.l_partkey = p.p_partkey
+      WHERE p.p_size BETWEEN 5 AND 30
         AND p.p_type = 'STANDARD'
     )
     SELECT p_partkey, p_name, s_name, n_name, s_acctbal,
@@ -6092,67 +5983,6 @@ _Q2_SIZE_LO, _Q2_SIZE_HI = 5, 30
     """,
     tags=("relational", "correlated-min", "tpch-q2"),
 )
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (minimum-cost supplier): for each qualifying part,
-    the European supplier(s) achieving the minimum unit cost. With no
-    partsupp table, the part-supplier cost relation derives from
-    lineitem as MIN(l_extendedprice / l_quantity) per (part, supplier)
-    — deliberately MIN, not AVG: a one-instruction IEEE division then
-    an order-insensitive MIN is bit-exact in both engines, so the
-    correlated-minimum EQUALITY (the crux of Q2) compares exact
-    doubles, never a rounded FP sum — and the output cost stays
-    UNROUNDED for the same reason (it is already exact; a display
-    ROUND would reintroduce engine-dependent half-way cases). Plan:
-    the (part, supp) aggregation is the ONE fact-sized shuffle and it
-    map-side combines, so the wire carries (part, supplier) partials,
-    not lineitems; only the bounded nation/region dims carry broadcast
-    hints — supplier and part scale with SF, so AQE decides their join
-    strategy from measured size (the q17/q5 rule); the per-part
-    minimum then re-exchanges ONLY those aggregated pairs onto partkey
-    for the window (verified: 2 hash exchanges, both post-combine —
-    cheaper at scale than a pre-partitioned single shuffle, which
-    would forgo the combine and move raw fact rows); top-k is
-    TakeOrderedAndProject."""
-    li = _t(spark, sf_dir, "lineitem")
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.expr("min(l_extendedprice / l_quantity) AS unit_cost")
-    )
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter("r_name = 'EUROPE'")
-    eu = (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.expr("s_nationkey = n_nationkey"))
-        .join(F.broadcast(region), F.expr("n_regionkey = r_regionkey"))
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    parts = _t(spark, sf_dir, "part").filter(
-        f"p_size BETWEEN {_Q2_SIZE_LO} AND {_Q2_SIZE_HI}"
-        " AND p_type = 'STANDARD'"
-    ).select("p_partkey", "p_name")
-    cand = (
-        ps.join(eu, F.expr("l_suppkey = s_suppkey"))
-        .join(parts, F.expr("l_partkey = p_partkey"))
-    )
-    return (
-        cand.selectExpr(
-            "*", "min(unit_cost) OVER (PARTITION BY p_partkey) AS _min_cost"
-        )
-        .filter("unit_cost = _min_cost")
-        .select(
-            "p_partkey",
-            "p_name",
-            "s_name",
-            "n_name",
-            "s_acctbal",
-            F.col("unit_cost").alias("supplycost"),
-        )
-        .orderBy(
-            F.col("s_acctbal").desc(),
-            F.col("p_partkey").asc(),
-            F.col("s_name").asc(),
-        )
-        .limit(100)
-    )
 
 
 _Q6_LO = "1997-01-01 00:00:00"
@@ -6199,20 +6029,23 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_bench_only(
+# TPC-H Q7 shape: revenue shipped between ASIA and EUROPE, both
+# directions, per year; the nation → region map joins once per side.
+register_sql(
+    BENCH_ONLY,
     "q7_volume_shipping",
     """
     WITH nr AS (
       SELECT n_nationkey, r_name
-      FROM nation JOIN region ON n_regionkey = r_regionkey
+      FROM {nation} JOIN {region} ON n_regionkey = r_regionkey
     )
     SELECT nr_s.r_name AS supp_region, nr_c.r_name AS cust_region,
            CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS l_year,
            ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM lineitem l
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
+    FROM {lineitem} l
+    JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+    JOIN {orders} o ON o.o_orderkey = l.l_orderkey
+    JOIN {customer} c ON c.c_custkey = o.o_custkey
     JOIN nr nr_s ON nr_s.n_nationkey = s.s_nationkey
     JOIN nr nr_c ON nr_c.n_nationkey = c.c_nationkey
     WHERE (nr_s.r_name = 'ASIA' AND nr_c.r_name = 'EUROPE')
@@ -6221,75 +6054,26 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("relational", "disjunctive-pair", "tpch-q7"),
 )
-def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape (volume shipping): trade volume between two
-    territories in both directions, by ship year. Adapted to regions
-    (the synthetic nation dim spreads suppliers too thin at small SF
-    for a nation pair to be non-empty). Plan: the nation→region name
-    map is built once and broadcast into BOTH the supplier and the
-    customer sides (two independent broadcast hash joins, no
-    self-join shuffle); the disjunctive pair predicate filters after
-    the cheap dim joins; lineitem is leftmost so the fact never
-    becomes a build side; one exchange for the final group-by."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_suppkey", "l_orderkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nr = (
-        _t(spark, sf_dir, "nation")
-        .join(
-            F.broadcast(_t(spark, sf_dir, "region")),
-            F.expr("n_regionkey = r_regionkey"),
-        )
-        .select("n_nationkey", "r_name")
-    )
-    nr_s = nr.selectExpr(
-        "n_nationkey AS _snk", "r_name AS supp_region"
-    )
-    nr_c = nr.selectExpr(
-        "n_nationkey AS _cnk", "r_name AS cust_region"
-    )
-    return (
-        li.join(supp, F.expr("l_suppkey = s_suppkey"))
-        .join(orders, F.expr("l_orderkey = o_orderkey"))
-        .join(cust, F.expr("o_custkey = c_custkey"))
-        .join(F.broadcast(nr_s), F.expr("s_nationkey = _snk"))
-        .join(F.broadcast(nr_c), F.expr("c_nationkey = _cnk"))
-        .filter(
-            "(supp_region = 'ASIA' AND cust_region = 'EUROPE')"
-            " OR (supp_region = 'EUROPE' AND cust_region = 'ASIA')"
-        )
-        .groupBy(
-            "supp_region",
-            "cust_region",
-            F.expr("CAST(year(l_shipdate) AS BIGINT) AS l_year"),
-        )
-        .agg(
-            F.expr(
-                "round(sum(l_extendedprice * (1 - l_discount)), 4)"
-                " AS revenue"
-            )
-        )
-    )
 
 
-@register_bench_only(
+# TPC-H Q8 shape: one nation's share of its region's ECONOMY-part volume,
+# per order year.
+register_sql(
+    BENCH_ONLY,
     "q8_market_share",
     """
     WITH vol AS (
       SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
              l.l_extendedprice * (1 - l.l_discount) AS volume,
              ns.n_name AS supp_nation
-      FROM lineitem l
-      JOIN part p ON p.p_partkey = l.l_partkey
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN orders o ON o.o_orderkey = l.l_orderkey
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation nc ON nc.n_nationkey = c.c_nationkey
-      JOIN region r ON r.r_regionkey = nc.n_regionkey
-      JOIN nation ns ON ns.n_nationkey = s.s_nationkey
+      FROM {lineitem} l
+      JOIN {part} p ON p.p_partkey = l.l_partkey
+      JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+      JOIN {orders} o ON o.o_orderkey = l.l_orderkey
+      JOIN {customer} c ON c.c_custkey = o.o_custkey
+      JOIN {nation} nc ON nc.n_nationkey = c.c_nationkey
+      JOIN {region} r ON r.r_regionkey = nc.n_regionkey
+      JOIN {nation} ns ON ns.n_nationkey = s.s_nationkey
       WHERE r.r_name = 'AMERICA' AND p.p_type = 'ECONOMY'
     )
     SELECT o_year,
@@ -6300,58 +6084,13 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("relational", "conditional-share", "tpch-q8"),
 )
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape (national market share): NATION_3's share of
-    ECONOMY-part revenue sold into AMERICA, by order year. The share is
-    a conditional-sum / total-sum ratio inside ONE aggregation pass
-    (never two scans joined back); the bounded nation maps carry the
-    only broadcast hints — part/supplier are SF-scaled, AQE
-    size-decides them; orders joins on the fact's orderkey; one
-    exchange for
-    the year group-by. The ratio rounds to 6 (FP-accumulation path);
-    the total keeps the money-scale ROUND 4."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    part = _t(spark, sf_dir, "part").filter("p_type = 'ECONOMY'").select(
-        "p_partkey"
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter("r_name = 'AMERICA'")
-    nc = nation.join(
-        F.broadcast(region), F.expr("n_regionkey = r_regionkey")
-    ).selectExpr("n_nationkey AS _cnk")
-    ns = nation.selectExpr(
-        "n_nationkey AS _snk", "n_name AS supp_nation"
-    )
-    vol = (
-        li.join(part, F.expr("l_partkey = p_partkey"))
-        .join(supp, F.expr("l_suppkey = s_suppkey"))
-        .join(orders, F.expr("l_orderkey = o_orderkey"))
-        .join(cust, F.expr("o_custkey = c_custkey"))
-        .join(F.broadcast(nc), F.expr("c_nationkey = _cnk"))
-        .join(F.broadcast(ns), F.expr("s_nationkey = _snk"))
-        .selectExpr(
-            "CAST(year(o_orderdate) AS BIGINT) AS o_year",
-            "l_extendedprice * (1 - l_discount) AS volume",
-            "supp_nation",
-        )
-    )
-    return vol.groupBy("o_year").agg(
-        F.expr(
-            "round(sum(CASE WHEN supp_nation = 'NATION_3' THEN volume"
-            " ELSE 0.0D END) / sum(volume), 6) AS mkt_share"
-        ),
-        F.expr("round(sum(volume), 4) AS total_volume"),
-    )
 
 
-@register(
+# TPC-H Q9 shape: profit on red-named parts by supplier nation and order
+# year. With no partsupp.ps_supplycost, cost is half the part's retail
+# price per unit.
+register_sql(
+    REGISTRY,
     "q9_product_type_profit",
     """
     SELECT ns.n_name AS nation,
@@ -6359,53 +6098,16 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)
                      - 0.5 * p.p_retailprice * l.l_quantity), 4)
              AS sum_profit
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    JOIN nation ns ON ns.n_nationkey = s.s_nationkey
+    FROM {lineitem} l
+    JOIN {part} p ON p.p_partkey = l.l_partkey
+    JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+    JOIN {orders} o ON o.o_orderkey = l.l_orderkey
+    JOIN {nation} ns ON ns.n_nationkey = s.s_nationkey
     WHERE p.p_name LIKE '%red%'
     GROUP BY nation, o_year
     """,
     tags=("relational", "profit-rollup", "tpch-q9"),
 )
-def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (product-type profit): profit on red-named parts
-    by supplier nation and order year. With no partsupp.ps_supplycost,
-    cost is proxied as half the part's retail price per unit — the
-    arithmetic shape (revenue minus quantity-scaled cost inside one
-    SUM) is Q9's. Only the bounded nation dim is broadcast-hinted; the
-    SF-scaled part (LIKE-filtered) and supplier sides are AQE
-    size-decided; orders joins on the fact key (the one big exchange
-    besides the final group-by)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_orderkey",
-        "l_extendedprice", "l_discount", "l_quantity",
-    )
-    part = _t(spark, sf_dir, "part").filter("p_name LIKE '%red%'").select(
-        "p_partkey", "p_retailprice"
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    nation = _t(spark, sf_dir, "nation").selectExpr(
-        "n_nationkey AS _snk", "n_name AS nation"
-    )
-    return (
-        li.join(part, F.expr("l_partkey = p_partkey"))
-        .join(supp, F.expr("l_suppkey = s_suppkey"))
-        .join(orders, F.expr("l_orderkey = o_orderkey"))
-        .join(F.broadcast(nation), F.expr("s_nationkey = _snk"))
-        .groupBy(
-            "nation", F.expr("CAST(year(o_orderdate) AS BIGINT) AS o_year")
-        )
-        .agg(
-            F.expr(
-                "round(sum((l_extendedprice * (1 - l_discount))"
-                " - ((0.5D * p_retailprice) * l_quantity)), 4)"
-                " AS sum_profit"
-            )
-        )
-    )
 
 
 _Q10_LO = "1997-07-01 00:00:00"
@@ -6467,17 +6169,22 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_bench_only(
+# TPC-H Q11 shape: parts whose European-supplied value exceeds 0.1% of the
+# total. Values sum as integer cents and the threshold is the integer
+# compare value_c * 1000 > total_c, so both engines keep the same rows;
+# the total reuses the per-part aggregate's exchange.
+register_sql(
+    BENCH_ONLY,
     "q11_important_parts",
     """
     WITH pv AS (
       SELECT l.l_partkey,
              SUM(CAST(ROUND(l.l_extendedprice * l.l_quantity * 100, 0)
                       AS BIGINT)) AS value_c
-      FROM lineitem l
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN nation n ON n.n_nationkey = s.s_nationkey
-      JOIN region r ON r.r_regionkey = n.n_regionkey
+      FROM {lineitem} l
+      JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+      JOIN {nation} n ON n.n_nationkey = s.s_nationkey
+      JOIN {region} r ON r.r_regionkey = n.n_regionkey
       WHERE r.r_name = 'EUROPE'
       GROUP BY l.l_partkey
     ),
@@ -6488,46 +6195,12 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("relational", "global-share-scalar", "tpch-q11"),
 )
-def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape (important stock identification): parts whose
-    European-supplied value exceeds 0.1% of the total. Two exactness
-    moves make the cross-engine row SET identical: per-term
-    integer-cents conversion BEFORE summation (BIGINT sums are
-    order-insensitive; FP sums are not), and the threshold compare as
-    an integer cross-multiplication (value_c * 1000 > total_c) instead
-    of a float fraction. Plan: ONE fact aggregation; the grand total
-    reuses the per-part aggregate (never a second scan) and broadcasts
-    as a one-row relation into the filter."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
-    )
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter("r_name = 'EUROPE'")
-    eu_supp = (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.expr("s_nationkey = n_nationkey"))
-        .join(F.broadcast(region), F.expr("n_regionkey = r_regionkey"))
-        .select("s_suppkey")
-    )
-    pv = (
-        li.join(eu_supp, F.expr("l_suppkey = s_suppkey"))
-        .groupBy("l_partkey")
-        .agg(
-            F.expr(
-                "sum(CAST(round((l_extendedprice * l_quantity) * 100, 0)"
-                " AS BIGINT)) AS value_c"
-            )
-        )
-    )
-    tot = pv.agg(F.expr("sum(value_c) AS total_c"))
-    return (
-        pv.join(F.broadcast(tot))
-        .filter("value_c * 1000 > total_c")
-        .selectExpr("l_partkey", "value_c / 100.0D AS part_value")
-    )
 
 
-@register(
+# TPC-H Q12 shape: lines shipped more than 90 days after their order,
+# counted by order-priority class per line status.
+register_sql(
+    REGISTRY,
     "q12_priority_lateness",
     """
     SELECT l.l_linestatus,
@@ -6535,51 +6208,26 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                          THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
            CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
                          THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+    FROM {lineitem} l JOIN {orders} o ON o.o_orderkey = l.l_orderkey
     WHERE l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
     GROUP BY l.l_linestatus
     """,
     tags=("relational", "case-agg", "tpch-q12"),
 )
-def q12_priority_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (shipping modes and order priority): among late
-    shipments (shipped > 90 days after the order date — this schema
-    has no commit/receipt dates), how many came from high- vs
-    low-priority orders, per linestatus (the mode dimension stand-in).
-    The priority CASE split happens inside one aggregation pass; the
-    only exchanges are the orderkey join and the 2-group final agg."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linestatus", "l_shipdate"
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    high = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
-    return (
-        li.join(orders, F.expr("l_orderkey = o_orderkey"))
-        .filter("l_shipdate > o_orderdate + INTERVAL 90 DAYS")
-        .groupBy("l_linestatus")
-        .agg(
-            F.expr(
-                f"CAST(sum(CAST(({high}) AS INT)) AS BIGINT)"
-                " AS high_line_count"
-            ),
-            F.expr(
-                f"CAST(sum(CAST((NOT ({high})) AS INT)) AS BIGINT)"
-                " AS low_line_count"
-            ),
-        )
-    )
 
 
-@register_bench_only(
+# TPC-H Q13 shape: the order-side predicate sits in the LEFT OUTER join
+# condition, so customers with no matching order survive into the
+# c_count = 0 bucket.
+register_sql(
+    BENCH_ONLY,
     "q13_customer_distribution",
     """
     SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
     FROM (
       SELECT c.c_custkey, CAST(COUNT(o.o_orderkey) AS BIGINT) AS c_count
-      FROM customer c
-      LEFT OUTER JOIN orders o
+      FROM {customer} c
+      LEFT OUTER JOIN {orders} o
         ON c.c_custkey = o.o_custkey
        AND o.o_orderpriority <> '1-URGENT'
       GROUP BY c.c_custkey
@@ -6587,74 +6235,25 @@ def q12_priority_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("relational", "outer-join-histogram", "tpch-q13"),
 )
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape (customer order-count distribution): a LEFT
-    OUTER join whose unmatched side MUST survive (customers with zero
-    orders land in the c_count=0 bucket — an inner join silently drops
-    the most interesting bar of the histogram), then a two-level
-    aggregation: per-customer count, then a count distribution over
-    the counts. The order-side predicate lives in the JOIN condition,
-    not a WHERE (a post-join WHERE on the right side would turn the
-    outer join back into an inner one). Plan: one custkey exchange for
-    the join+first agg (partial counts push below the shuffle), then a
-    tiny second exchange on the count value."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").filter(
-        "o_orderpriority != '1-URGENT'"
-    ).select("o_custkey", "o_orderkey")
-    per_cust = (
-        cust.join(orders, F.expr("c_custkey = o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.expr("CAST(count(o_orderkey) AS BIGINT) AS c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(
-        F.expr("CAST(count(1) AS BIGINT) AS custdist")
-    )
 
 
-_Q14_LO = "1997-09-01 00:00:00"
-_Q14_HI = "1997-10-01 00:00:00"
-
-
-@register_bench_only(
+# TPC-H Q14 shape: the PROMO share of one month's revenue.
+register_sql(
+    BENCH_ONLY,
     "q14_promo_revenue",
-    f"""
+    """
     SELECT ROUND(100.0 * SUM(CASE WHEN p.p_type = 'PROMO'
                                   THEN l.l_extendedprice * (1 - l.l_discount)
                                   ELSE 0 END)
                  / SUM(l.l_extendedprice * (1 - l.l_discount)), 6)
              AS promo_revenue_pct,
            CAST(COUNT(*) AS BIGINT) AS n_items
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE l.l_shipdate >= TIMESTAMP '{_Q14_LO}'
-      AND l.l_shipdate < TIMESTAMP '{_Q14_HI}'
+    FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
+    WHERE l.l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
+      AND l.l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
     """,
     tags=("relational", "conditional-ratio", "tpch-q14"),
 )
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape (promotion effect): PROMO-typed parts' share of
-    one ship-month's revenue. The month bound prunes lineitem at the
-    scan; part is SF-scaled so its join is AQE size-decided (no hint);
-    numerator and denominator are computed in
-    the SAME single aggregation (one pass, no self-join); the ratio
-    rounds to 6 as an FP-accumulation path."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        f"l_shipdate >= TIMESTAMP_NTZ '{_Q14_LO}'"
-        f" AND l_shipdate < TIMESTAMP_NTZ '{_Q14_HI}'"
-    ).select("l_partkey", "l_extendedprice", "l_discount")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = "l_extendedprice * (1 - l_discount)"
-    return (
-        li.join(part, F.expr("l_partkey = p_partkey"))
-        .agg(
-            F.expr(
-                "round((100.0D * sum(CASE WHEN p_type = 'PROMO'"
-                f" THEN {rev} ELSE 0.0D END)) / sum({rev}), 6)"
-                " AS promo_revenue_pct"
-            ),
-            F.expr("CAST(count(1) AS BIGINT) AS n_items"),
-        )
-    )
 
 
 _Q15_LO = "1996-01-01 00:00:00"
@@ -6721,61 +6320,36 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q16_SIZES = (1, 5, 9, 14, 19, 23, 36, 45)
-
-
-@register_bench_only(
+# TPC-H Q16 shape: distinct suppliers per (brand, type, size). Suppliers
+# with a negative balance stand in for the original's complaint scan, and
+# the lineitem join for partsupp.
+register_sql(
+    BENCH_ONLY,
     "q16_supplier_part_counts",
-    f"""
+    """
     SELECT p.p_brand, p.p_type, p.p_size,
            CAST(COUNT(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
     WHERE p.p_brand <> 'Brand#1'
-      AND p.p_size IN {_Q16_SIZES!r}
+      AND p.p_size IN (1, 5, 9, 14, 19, 23, 36, 45)
       AND l.l_suppkey NOT IN
-          (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+          (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
     GROUP BY p.p_brand, p.p_type, p.p_size
     """,
     tags=("relational", "count-distinct-anti", "tpch-q16"),
 )
-def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape (parts/supplier relationship): how many distinct
-    suppliers ship each (brand, type, size) combination, excluding a
-    blacklist (negative-balance suppliers stand in for the original's
-    complaint-comment scan; the lineitem join stands in for partsupp).
-    The NOT IN is a LEFT ANTI join against the blacklist — never a
-    NullAwareAntiJoin pitfall because s_suppkey is non-null; blacklist
-    and part are supplier/part-derived (SF-scaled), so neither carries
-    a broadcast hint (AQE size-decides — at real SF the ~6%-selective
-    blacklist still broadcasts on measured size, the full part dim may
-    not); COUNT(DISTINCT) expands to the standard
-    two-phase partial-distinct plan on the group keys."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    bad = _t(spark, sf_dir, "supplier").filter("s_acctbal < 0").selectExpr(
-        "s_suppkey AS l_suppkey"
-    )
-    sizes = ", ".join(str(s) for s in _Q16_SIZES)
-    part = _t(spark, sf_dir, "part").filter(
-        f"p_brand != 'Brand#1' AND p_size IN ({sizes})"
-    ).select("p_partkey", "p_brand", "p_type", "p_size")
-    return (
-        li.join(bad, "l_suppkey", "left_anti")
-        .join(part, F.expr("l_partkey = p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(
-            F.expr(
-                "CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt"
-            )
-        )
-    )
 
 
-@register_bench_only(
+# TPC-H Q19 shape: an OR of three brand/size/quantity conjunctions across
+# both join sides. Catalyst pushes each side's implied bounds into its
+# scan; the residual OR runs after the join.
+register_sql(
+    BENCH_ONLY,
     "q19_disjunctive_revenue",
     """
     SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_items
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
     WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
            AND l.l_quantity BETWEEN 1 AND 20)
        OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25
@@ -6785,56 +6359,24 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("relational", "disjunctive-pushdown", "tpch-q19"),
 )
-def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape (discounted revenue): an OR of three
-    brand/size/quantity conjunctions spanning both join sides — the
-    canonical disjunctive-predicate query. Catalyst's CNF conversion
-    extracts the single-side implications (brand IN the three brands,
-    size <= the widest bound, quantity within the union range) and
-    pushes them to the respective scans, so each side prunes BEFORE
-    the join even though no single conjunct applies globally; the
-    residual OR evaluates post-join. Part is SF-scaled — no broadcast
-    hint, AQE size-decides; one row out."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    disj = (
-        "(p_brand = 'Brand#1' AND (p_size BETWEEN 1 AND 15)"
-        " AND (l_quantity BETWEEN 1 AND 20))"
-        " OR (p_brand = 'Brand#2' AND (p_size BETWEEN 1 AND 25)"
-        " AND (l_quantity BETWEEN 10 AND 30))"
-        " OR (p_brand = 'Brand#3' AND (p_size BETWEEN 1 AND 35)"
-        " AND (l_quantity BETWEEN 20 AND 40))"
-    )
-    return (
-        li.join(part, F.expr("l_partkey = p_partkey"))
-        .filter(disj)
-        .agg(
-            F.expr(
-                "round(sum(l_extendedprice * (1 - l_discount)), 4)"
-                " AS revenue"
-            ),
-            F.expr("CAST(count(1) AS BIGINT) AS n_items"),
-        )
-    )
 
 
-_Q20_LO = "1997-01-01 00:00:00"
-_Q20_HI = "1998-01-01 00:00:00"
-
-
-@register_bench_only(
+# TPC-H Q20 shape, decorrelated: African suppliers that shipped more than
+# half of some small part's 1997 volume. The per-(part, supplier)
+# aggregate feeds the per-part total, and dominance is the exact integer
+# compare 2 * qty > total.
+register_sql(
+    BENCH_ONLY,
     "q20_dominant_suppliers",
-    f"""
+    """
     WITH ps AS (
       SELECT l.l_partkey, l.l_suppkey,
              SUM(CAST(l.l_quantity AS BIGINT)) AS qty
-      FROM lineitem l
-      JOIN part p ON p.p_partkey = l.l_partkey
+      FROM {lineitem} l
+      JOIN {part} p ON p.p_partkey = l.l_partkey
       WHERE p.p_name LIKE 'small%'
-        AND l.l_shipdate >= TIMESTAMP '{_Q20_LO}'
-        AND l.l_shipdate < TIMESTAMP '{_Q20_HI}'
+        AND l.l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+        AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
       GROUP BY l.l_partkey, l.l_suppkey
     ),
     tot AS (
@@ -6846,56 +6388,14 @@ _Q20_HI = "1998-01-01 00:00:00"
       WHERE 2 * ps.qty > tot.total_qty
     )
     SELECT s.s_name, n.n_name
-    FROM supplier s
-    JOIN nation n ON n.n_nationkey = s.s_nationkey
-    JOIN region r ON r.r_regionkey = n.n_regionkey
+    FROM {supplier} s
+    JOIN {nation} n ON n.n_nationkey = s.s_nationkey
+    JOIN {region} r ON r.r_regionkey = n.n_regionkey
     JOIN dom ON dom.l_suppkey = s.s_suppkey
     WHERE r.r_name = 'AFRICA'
     """,
     tags=("relational", "nested-decorrelation", "tpch-q20"),
 )
-def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape (potential part promotion): African suppliers
-    who shipped more than half of some small-named part's 1997 volume
-    — the original's doubly-nested IN/scalar-subquery, decorrelated.
-    The per-(part, supplier) aggregate is computed ONCE and reused for
-    the per-part total (the second grouping consumes the first's
-    output, so the fact scans once); dominance is an exact integer
-    compare (quantities are integral, summed as BIGINT — 2*qty >
-    total, no 0.5 float); the dominant-supplier set semi-joins into
-    the supplier dim, region filter broadcast."""
-    small = _t(spark, sf_dir, "part").filter("p_name LIKE 'small%'").select(
-        "p_partkey"
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        f"l_shipdate >= TIMESTAMP_NTZ '{_Q20_LO}'"
-        f" AND l_shipdate < TIMESTAMP_NTZ '{_Q20_HI}'"
-    ).select("l_partkey", "l_suppkey", "l_quantity")
-    ps = (
-        li.join(small, F.expr("l_partkey = p_partkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.expr("sum(CAST(l_quantity AS BIGINT)) AS qty"))
-    )
-    tot = ps.groupBy("l_partkey").agg(F.expr("sum(qty) AS total_qty"))
-    dom = (
-        ps.join(tot, "l_partkey")
-        .filter("2 * qty > total_qty")
-        .select("l_suppkey")
-        .distinct()
-    )
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter("r_name = 'AFRICA'")
-    return (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.expr("s_nationkey = n_nationkey"))
-        .join(F.broadcast(region), F.expr("n_regionkey = r_regionkey"))
-        .join(
-            dom.withColumnRenamed("l_suppkey", "s_suppkey"),
-            "s_suppkey",
-            "left_semi",
-        )
-        .select("s_name", "n_name")
-    )
 
 
 @register_bench_only(

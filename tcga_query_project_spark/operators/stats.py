@@ -92,7 +92,7 @@ def size_factors(
 
 
 def log_normalize(
-    fact: DataFrame, sf: DataFrame, sample: str, value: str, out: str = "normalized"
+    fact: DataFrame, sf: DataFrame, sample: str, value: str
 ) -> DataFrame:
     """A7 (v1): variance-stabilizing transform stand-in —
     ``log2(count / size_factor + 1)``.
@@ -102,10 +102,10 @@ def log_normalize(
     rank-based operations (median splits W1, boxplots), which are
     invariant under monotone transforms — so this monotone surrogate
     preserves the pipeline's semantics. Documented divergence
-    (SURVEY.md §2.4 A7).
+    (SURVEY.md §2.4 A7). Appends ``normalized``.
     """
     return fact.join(F.broadcast(sf), sample).withColumn(
-        out, F.log2(F.col(value) / F.col("size_factor") + 1.0)
+        "normalized", F.log2(F.col(value) / F.col("size_factor") + 1.0)
     )
 
 
@@ -115,7 +115,6 @@ def vst_fitted(
     gene: str,
     sample: str,
     value: str,
-    out: str = "vst",
     round_intermediates: int | None = None,
 ) -> DataFrame:
     """A7 (v2): dispersion-aware variance-stabilizing transform — the
@@ -140,6 +139,8 @@ def vst_fitted(
     to ``log2(q + 1)`` — the v1 transform — keeping the operator total.
     Cohort-relative by construction: pass cohort-restricted ``fact``/
     ``sf`` for the drug-cohort pipeline (SURVEY §3.3 step 3).
+
+    Returns ``(gene, sample, normalized_count, vst)``.
 
     ``round_intermediates``: round per-gene mu/alpha to this many
     decimals before the trend fit — pins the alpha>0 gene set and the
@@ -225,8 +226,8 @@ def vst_fitted(
     )
     return (
         q_tbl.crossJoin(F.broadcast(trend))
-        .withColumn(out, F.expr(vst_s))
-        .select(gene, sample, "_q", out)
+        .withColumn("vst", F.expr(vst_s))
+        .select(gene, sample, "_q", "vst")
         .withColumnRenamed("_q", "normalized_count")
     )
 
@@ -313,6 +314,12 @@ def bh_adjust(
     NULL-aware: ``n`` counts the non-null p, NULL p rank last (so they
     never shift a tested row's rank) and get a NULL padj — untested rows
     ride along instead of being split off and unioned back.
+
+    Tied p share one padj whatever ``tiebreak`` says: the cummin at any
+    rank of a tie group reaches the group's largest rank, where
+    ``p*n/rank`` is smallest. With no ``partition_cols`` the window is a
+    single partition, so the input should be one row per test (per
+    gene), never per observation.
     """
     w_rank = Window.partitionBy(*partition_cols).orderBy(
         F.col(p).asc_nulls_last(), tiebreak
@@ -340,51 +347,6 @@ def bh_adjust(
         )
         .drop("_rank", "_n_tests")
     )
-
-
-def bh_adjust_distinct(
-    df: DataFrame,
-    p: str,
-    partition_cols: list[str] | None = None,
-    out: str = "padj",
-) -> DataFrame:
-    """BH adjustment via the distinct-p formulation — the 100 TB path.
-
-    :func:`bh_adjust` windows over every row; with no partition columns
-    that is a single-partition sort (WindowExec warns, and at billions
-    of tests it is the bottleneck). BH padj is a function of the p
-    *value* alone (tied p share a padj, computed at the tie group's
-    largest rank), so: aggregate to distinct p with counts (parallel
-    hash agg), run the rank/cummin windows over the distinct values —
-    orders of magnitude smaller — and broadcast-join the padj back onto
-    the rows. Exact same output as the row-level formulation.
-    """
-    part = list(partition_cols or [])
-    per_p = df.groupBy(*part, p).agg(F.count(F.lit(1)).alias("_c"))
-    w_cum = (
-        Window.partitionBy(*part)
-        .orderBy(F.col(p).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_n = Window.partitionBy(*part) if part else Window.partitionBy(F.lit(1))
-    ranked = per_p.withColumn(
-        "_max_rank", F.sum("_c").over(w_cum).cast("double")
-    ).withColumn("_n_tests", F.sum("_c").over(w_n).cast("double"))
-    w_cummin = (
-        Window.partitionBy(*part)
-        .orderBy(F.col(p).desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    adjusted = ranked.withColumn(
-        out,
-        F.least(
-            F.lit(1.0),
-            F.min(F.col(p) * F.col("_n_tests") / F.col("_max_rank")).over(
-                w_cummin
-            ),
-        ),
-    ).select(*part, p, out)
-    return df.join(F.broadcast(adjusted), [*part, p])
 
 
 def r_lowess(
@@ -476,9 +438,12 @@ def r_lowess(
     return ys
 
 
-def select_filter_theta(
-    num_rej: list[float], alpha_fit: list[float] | None = None
-) -> int:
+#: BH level of DESeq2 ``results()``' independent filtering (its
+#: ``alpha`` default): the rejection count each theta is scored by
+FILTER_ALPHA = 0.1
+
+
+def select_filter_theta(num_rej: list[float]) -> int:
     """DESeq2 ``results()`` independent-filtering threshold selection
     (pvalueAdjustment in DESeq2 results.R; Love et al. 2014 and Bourgon
     et al. 2010 for why filtering on base mean is p-value-independent
@@ -490,8 +455,7 @@ def select_filter_theta(
     theta rejects more than 10 hypotheses the data cannot support a
     threshold choice and index 0 (no filtering benefit) is returned.
 
-    Pure driver-side selection over the dimension-sized grid;
-    ``alpha_fit`` injects a precomputed smooth for tests.
+    Pure driver-side selection over the dimension-sized grid.
     """
     n = len(num_rej)
     if n == 0:
@@ -499,11 +463,7 @@ def select_filter_theta(
     if max(num_rej) <= 10:
         return 0
     thetas = [i / (n - 1) if n > 1 else 0.0 for i in range(n)]
-    fit = (
-        alpha_fit
-        if alpha_fit is not None
-        else r_lowess(thetas, [float(v) for v in num_rej], f=1.0 / 5.0)
-    )
+    fit = r_lowess(thetas, [float(v) for v in num_rej], f=1.0 / 5.0)
     pos = [(v, fv) for v, fv in zip(num_rej, fit) if v > 0]
     if pos:
         mse = sum((v - fv) ** 2 for v, fv in pos) / len(pos)
@@ -590,9 +550,7 @@ def independent_filter_padj(
     base_mean_col: str,
     p: str,
     *,
-    alpha: float = 0.1,
     n_theta: int = 50,
-    out: str = "padj",
 ) -> DataFrame:
     """DESeq2 ``results()`` independent filtering + BH — the default
     padj the reference actually reads (vital_status_DESeq.R:89 consumes
@@ -607,7 +565,7 @@ def independent_filter_padj(
        (Spark's exact ``percentile`` interpolates identically to R
        type 7).
     2. for each theta: BH over the genes with ``baseMean >= cutoff``
-       and non-NULL p; count rejections at ``alpha``.
+       and non-NULL p; count rejections at :data:`FILTER_ALPHA`.
     3. select theta by the lowess rule (:func:`select_filter_theta`).
     4. final padj: BH over the kept genes at the chosen cutoff, one
        row window over the input; genes filtered out (or with NULL p)
@@ -668,7 +626,7 @@ def independent_filter_padj(
             for i in range(n_theta)
         ]
         rej = (
-            rejection_grid(df, base_mean_col, p, thetas, alpha=alpha)
+            rejection_grid(df, base_mean_col, p, thetas, alpha=FILTER_ALPHA)
             .orderBy("_ti")
             .collect()
         )
@@ -688,23 +646,26 @@ def independent_filter_padj(
     # Tied p share one padj, so the tiebreak cannot move a value.
     kept_p = F.when(F.col(base_mean_col) >= F.lit(cutoff), F.col(p))
     return (
-        bh_adjust(df.withColumn("_kept_p", kept_p), "_kept_p", [], F.col(p), out=out)
+        bh_adjust(df.withColumn("_kept_p", kept_p), "_kept_p", [], F.col(p))
         .drop("_kept_p")
         .withColumn("filter_theta", F.lit(round(thetas[j], 6)))
         .withColumn("filter_threshold", F.lit(round(cutoff, 6)))
     )
 
 
+#: modified-z cut of Iglewicz & Hoaglin
+ROBUST_Z_THRESHOLD = 3.5
+#: scales the MAD to estimate sigma under normality
+MAD_CONSISTENCY = 1.4826
+
+
 def robust_outliers(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    *,
-    z_threshold: float = 3.5,
-    consistency: float = 1.4826,
 ) -> DataFrame:
     """Per-group robust outlier scores — median/MAD z-scores (Iglewicz
-    & Hoaglin's modified z, |z| > 3.5 default), the standard
+    & Hoaglin's modified z, |z| > :data:`ROBUST_Z_THRESHOLD`), the standard
     mean/stddev-free anomaly gate: one fat-tailed batch (a crawl dump
     of minified JS, a price-feed glitch) moves mean and stddev enough
     to mask its own outliers, while median and MAD have a 50%
@@ -712,8 +673,8 @@ def robust_outliers(
 
     Appends ``robust_z`` (DOUBLE, rounded 6) and ``is_outlier``
     (BOOLEAN) to the input rows: ``robust_z = (x - median) /
-    (consistency * MAD)`` with ``MAD = median(|x - median|)``;
-    ``consistency = 1.4826`` rescales MAD to estimate sigma under
+    (MAD_CONSISTENCY * MAD)`` with ``MAD = median(|x - median|)``;
+    :data:`MAD_CONSISTENCY` rescales MAD to estimate sigma under
     normality. Degenerate groups (MAD = 0: over half the values
     identical) and NULL values yield ``robust_z = NULL`` /
     ``is_outlier = false`` — an explicit guard, not an ANSI
@@ -746,7 +707,7 @@ def robust_outliers(
     ).otherwise(
         F.round(
             (F.col(value_col) - F.col("_med"))
-            / (F.lit(float(consistency)) * F.col("_mad")),
+            / (F.lit(MAD_CONSISTENCY) * F.col("_mad")),
             6,
         )
     )
@@ -756,7 +717,7 @@ def robust_outliers(
         .withColumn(
             "is_outlier",
             F.coalesce(
-                F.abs(F.col("robust_z")) > F.lit(float(z_threshold)),
+                F.abs(F.col("robust_z")) > F.lit(ROBUST_Z_THRESHOLD),
                 F.lit(False),
             ),
         )
@@ -807,6 +768,10 @@ def poisson1_weight_hex_sql(slice_expr: str) -> str:
     return f"case {whens} else {len(POISSON1_CDF_HEX)} end"
 
 
+#: coverage of the bootstrap interval
+BOOTSTRAP_LEVEL = 0.95
+
+
 def bootstrap_ci(
     df: DataFrame,
     group_cols: list[str],
@@ -814,7 +779,6 @@ def bootstrap_ci(
     id_col: str,
     *,
     n_boot: int = 100,
-    level: float = 0.95,
     salt: str = "boot",
 ) -> DataFrame:
     """Per-group bootstrap confidence interval for the MEAN via the
@@ -833,8 +797,8 @@ def bootstrap_ci(
 
     Returns one row per group: ``(group_cols..., est, lo, hi,
     n_boot)`` — ``est`` the plain mean, ``lo``/``hi`` the
-    equal-tailed percentile interval over replicate means (all rounded
-    6). Replicates where a group draws zero total weight (possible
+    equal-tailed :data:`BOOTSTRAP_LEVEL` percentile interval over
+    replicate means (all rounded 6). Replicates where a group draws zero total weight (possible
     only for tiny groups) yield a NULL replicate mean, which the
     percentile skips — the standard small-group caveat of the Poisson
     bootstrap. Rows with a NULL ``value_col`` are excluded before
@@ -850,9 +814,7 @@ def bootstrap_ci(
     2.5%/97.5% tails is the practical floor. No driver-side state, no
     rand() (never reproducible across retries), no per-row Python.
     """
-    if not 0 < level < 1:
-        raise ValueError("level must be in (0, 1)")
-    alpha = (1.0 - level) / 2.0
+    alpha = (1.0 - BOOTSTRAP_LEVEL) / 2.0
     n_groups = (n_boot + 3) // 4
     # NULL values are excluded up front: a NULL-valued row would add
     # its Poisson weight to the replicate denominator SUM(_w) while

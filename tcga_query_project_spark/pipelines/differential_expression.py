@@ -111,10 +111,8 @@ def differential_expression(
             .withColumn("p_signif", signif_bin(F.col("padj")))
             .withColumnRenamed("gene", "gene_id")
         )
-    # The fit has exactly one consumer: a row-window BH over genes. The
-    # distinct-p form (stats.bh_adjust_distinct) saves nothing here —
-    # one test per gene, p-values almost all distinct, so its window is
-    # as large — and its join back would evaluate the fit a second time.
+    # The fit has exactly one consumer: a row-window BH over genes (one
+    # test per gene, so the window is gene-sized).
     return (
         stats.bh_adjust(de, "pvalue", [], F.col("gene").asc())
         .withColumn("p_signif", signif_bin(F.col("padj")))

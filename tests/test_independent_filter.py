@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tcga_query_project_spark.operators.stats import (
-    bh_adjust_distinct,
+    bh_adjust,
     independent_filter_padj,
     r_lowess,
     select_filter_theta,
@@ -211,7 +211,9 @@ def test_independent_filter_rejects_more_than_plain_bh(spark):
     )
     filt = independent_filter_padj(df, "base_mean", "pvalue")
     n_filt = filt.filter(F.col("padj") < 0.1).count()
-    plain = bh_adjust_distinct(df.filter(F.col("pvalue").isNotNull()), "pvalue")
+    plain = bh_adjust(
+        df.filter(F.col("pvalue").isNotNull()), "pvalue", [], F.col("gene").asc()
+    )
     n_plain = plain.filter(F.col("padj") < 0.1).count()
     assert n_filt > n_plain
 
@@ -233,7 +235,7 @@ def test_independent_filter_no_benefit_degrades_to_plain_bh(spark):
     }
     plain = {
         r["gene"]: r["padj"]
-        for r in bh_adjust_distinct(df, "pvalue").collect()
+        for r in bh_adjust(df, "pvalue", [], F.col("gene").asc()).collect()
     }
     assert filt == pytest.approx(plain, abs=1e-12)
 

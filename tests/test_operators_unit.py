@@ -255,21 +255,30 @@ def test_asof_join_semantics(spark):
     assert out["d"]["asof_ts"] is None and out["d"]["asof_v"] is None
 
 
-def test_bh_adjust_distinct_matches_rowwise(spark):
-    """The distinct-p (scale) formulation must agree exactly with the
-    row-level windows, including tie groups."""
+def test_bh_adjust_ties_share_one_padj(spark):
+    """Tied p-values get one padj whatever the tiebreak ranks them,
+    and every padj equals a numpy step-up reference."""
     import random
+
+    import numpy as np
 
     rng = random.Random(3)
     vals = [round(rng.random(), 2) for _ in range(200)]  # plenty of ties
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "id int, p double"
     )
-    row = {r["id"]: r["padj"] for r in stats.bh_adjust(df, "p", [], F.col("id").asc()).collect()}
-    dis = {r["id"]: r["padj"] for r in stats.bh_adjust_distinct(df, "p").collect()}
-    assert set(row) == set(dis)
-    for i in row:
-        assert abs(row[i] - dis[i]) < 1e-12, (i, row[i], dis[i])
+    got = {r["id"]: r["padj"] for r in stats.bh_adjust(df, "p", [], F.col("id").asc()).collect()}
+    p = np.array(vals)
+    order = np.argsort(p, kind="stable")
+    stepped = p[order] * len(p) / np.arange(1, len(p) + 1)
+    ref = np.empty_like(p)
+    ref[order] = np.minimum(1.0, np.minimum.accumulate(stepped[::-1])[::-1])
+    by_p: dict[float, set[float]] = {}
+    for i, v in enumerate(vals):
+        by_p.setdefault(v, set()).add(got[i])
+        assert abs(got[i] - ref[i]) < 1e-12, (i, got[i], ref[i])
+    assert len(by_p) < len(vals)  # the input does have ties
+    assert all(len(padjs) == 1 for padjs in by_p.values()), by_p
 
 
 def test_vst_fitted_monotone_and_log_like(spark):

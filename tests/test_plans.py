@@ -138,12 +138,11 @@ GLOBAL_WINDOW_ALLOWED = {
     # broadcast label).
     "w2_km_curve",
     "w3_w4_survival_tests",
-    # BH cummin over DISTINCT p values (stats.bh_adjust_distinct), not
-    # over test rows — the window input is the p-value cardinality.
+    # row-window BH (stats.bh_adjust) over the Wilcoxon results: one
+    # row per gene of interest, not per sample observation.
     "tcga_de_pipeline",
     # row-window BH over the per-gene fit: one row per gene, bounded by
-    # the gene annotation (and as large as the distinct-p window, since
-    # the p-values are almost all distinct)
+    # the gene annotation
     "tcga_de_full",
     # the same row-window BH over the per-gene fit, masked to the genes
     # the theta cut keeps
@@ -263,6 +262,22 @@ def test_eager_build_allowlist(spark):
         f"allowlisted queries no longer eager at build(): {stale} — "
         "remove them from EAGER_BUILD_ALLOWED"
     )
+
+
+def test_sql_form_builds_leave_no_view(spark):
+    """A ``register_sql`` builder binds its tables through
+    ``spark.sql``'s formatter, which registers each DataFrame as a
+    temporary view for the analysis only. After every SQL-form query is
+    built, the session's catalog lists no table or view: the driver's
+    session keeps no side effect of a build."""
+    sql_form = [
+        spec for spec in _LOOKUP().values()
+        if spec.build.__qualname__.startswith("register_sql.")
+    ]
+    assert sql_form
+    for spec in sql_form:
+        spec.build(spark, SF_SMALL)
+    assert spark.catalog.listTables() == []
 
 
 def test_bucketed_join_elides_shuffle(spark):
