@@ -599,7 +599,6 @@ def r2_ragged_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["P", "O", "F"],
         "o_totalprice",
         [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()],
-        "v_",
     ).select("rn", "v_P", "v_O", "v_F")
 
 
@@ -855,9 +854,7 @@ def a7_normalize_vst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = _t(spark, sf_dir, "lineitem")
     sf = stats.size_factors(li, "l_partkey", "l_suppkey", "l_quantity")
-    out = stats.vst_fitted(
-        li, sf, "l_partkey", "l_suppkey", "l_quantity", round_intermediates=8
-    )
+    out = stats.vst_fitted(li, sf, "l_partkey", "l_suppkey", "l_quantity")
     return out.select(
         "l_partkey",
         "l_suppkey",
@@ -1095,7 +1092,7 @@ def w1_ntile_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv_analysis_median_exp.R:131-141)."""
     ev = _t(spark, sf_dir, "events")
     return survival.ntile_strata(
-        ev, "value", 4, ["event_type"], F.col("event_id").asc(), strict=True
+        ev, "value", 4, ["event_type"], F.col("event_id").asc()
     ).select("event_id", "event_type", "stratum")
 
 
@@ -1145,9 +1142,9 @@ def w1_quantile_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ties at t_low all LOW; ties at t_high all MID) that the oracle
     mirrors exactly."""
     ev = _t(spark, sf_dir, "events")
-    return survival.quantile_strata(
-        ev, "value", 4, ["event_type"], decimals=2
-    ).select("event_id", "event_type", "stratum")
+    return survival.quantile_strata(ev, "value", 4, ["event_type"]).select(
+        "event_id", "event_type", "stratum"
+    )
 
 
 # Shared survival-cohort construction: per-user follow-up time (span of
@@ -1213,7 +1210,7 @@ def _survival_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("value"), 2).alias("total_value"),
     )
     return survival.ntile_strata(
-        subj, "total_value", 2, [], F.col("user_id").asc(), strict=True
+        subj, "total_value", 2, [], F.col("user_id").asc()
     ).drop("total_value")
 
 
@@ -1722,7 +1719,7 @@ def dd_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles (frequency broadcast, doc-keyed sorted-key aggregate)
     with the O(1) length filter, then an id-keyed array verify."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.jaccard_prefix_join(docs, "doc_id", "text", 0.6, shingle_k=3)
+    return dedup.jaccard_prefix_join(docs, "doc_id", "text")
 
 
 @register(
@@ -1902,9 +1899,7 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed, which is exactly why the engine uses the star
     algorithm instead."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.dup_clusters(
-        docs, "doc_id", "text", k=3, num_hashes=8, band_size=2, threshold=0.2
-    )
+    return dedup.dup_clusters(docs, "doc_id", "text")
 
 
 @register_bench_only(
@@ -1938,9 +1933,7 @@ def dd_band_firstseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate instead of a verified pair join — one (band, band_sig)-keyed
     aggregation of min-ids."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.band_firstseen_gate(
-        docs, "doc_id", "text", k=3, num_hashes=8, band_size=2
-    )
+    return dedup.band_firstseen_gate(docs, "doc_id", "text")
 
 
 @register(
@@ -2016,10 +2009,7 @@ def dd_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     ref = docs.filter(F.col("doc_id") % 37 == 0)
     corp = docs.filter(F.col("doc_id") % 37 != 0)
-    return dedup.decontaminate(
-        corp, ref, "doc_id", "text",
-        k=3, num_hashes=8, band_size=2, threshold=0.2,
-    )
+    return dedup.decontaminate(corp, ref, "doc_id", "text")
 
 
 @register_bench_only(
@@ -2074,12 +2064,10 @@ def dd_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"dedup_index_{_os.getpid()}_{sf_tag}",
     )
     dedup.build_dedup_index(
-        docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text",
-        index_dir, k=3, num_hashes=8, band_size=2,
+        docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", index_dir
     )
     return dedup.dedup_against_index(
-        docs.filter(F.col("doc_id") % 2 == 1), "doc_id", "text",
-        index_dir, k=3, band_size=2, est_threshold=0.5,
+        docs.filter(F.col("doc_id") % 2 == 1), "doc_id", "text", index_dir
     )
 
 
@@ -2331,9 +2319,7 @@ def pp_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tcga_query_project_spark.pipelines import corpus_prep
 
     docs = _t(spark, sf_dir, "documents")
-    return corpus_prep.corpus_clean(
-        docs, "doc_id", "text", min_quality=0.4, langs=("en",)
-    )
+    return corpus_prep.corpus_clean(docs)
 
 
 def _pagerank_oracle(n_iter: int, damping: float) -> str:
@@ -2436,7 +2422,7 @@ def gq_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dst"),
         )
     )
-    pr = graph.pagerank(edges, damping=0.85, n_iter=6)
+    pr = graph.pagerank(edges)
     return pr.select(
         F.col("node").alias("doc_id"),
         F.round(F.col("rank"), 8).alias("pagerank"),
@@ -3084,7 +3070,7 @@ def tcga_drug_km_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, KM + Greenwood + log CIs — is replayed by the DuckDB oracle
     and hash-compared. Floats round to 6 on
     both sides; the ntile ordering (normalized, barcode) is total —
-    enforced at RUNTIME (``ntile_strata(strict=True)``
+    enforced at RUNTIME (``ntile_strata``'s duplicate-key guard
     raises on any duplicate order key, so engine-stability no longer
     depends on fixture luck; the fixture assertion in
     tests/test_pipelines.py remains as the fast signal)."""
@@ -3591,7 +3577,7 @@ def tx_ctfidf_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     a term tiebreak so the cut is engine-portable; the oracle replays
     the identical algebra."""
     docs = _t(spark, sf_dir, "documents")
-    return text.ctfidf_top_terms(docs, "lang", "text", top_n=10)
+    return text.ctfidf_top_terms(docs, "lang", "text")
 
 
 @register_bench_only(
@@ -3977,13 +3963,7 @@ def pp_training_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return prepare_training_corpus(
-        docs,
-        min_quality=0.4,
-        langs=("en", "fr", "de"),
-        mixture={"en": 1.0, "fr": 1.5, "de": 0.5},
-        max_tokens=64,
-        shard_budget=4096,
-        block_size=1024,
+        docs, max_tokens=64, shard_budget=4096, block_size=1024
     )
 
 
@@ -4032,7 +4012,7 @@ def tx_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/text.build_vocab. BENCH_ONLY (48-slot driver cap);
     verified by tests/test_oracle_parity.py."""
     docs = _t(spark, sf_dir, "documents")
-    return text.build_vocab(docs, "text", min_count=2, max_size=100)
+    return text.build_vocab(docs, "text")
 
 
 @register_bench_only(
@@ -4540,9 +4520,7 @@ def tx_unigram_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tcga_query_project_spark.operators import unigram as ug
 
     docs = _t(spark, sf_dir, "documents")
-    model = ug.unigram_train(
-        docs, "text", vocab_size=300, seed_size=1500, max_words=50_000
-    )
+    model = ug.unigram_train(docs, "text", vocab_size=300, seed_size=1500)
     enc = ug.unigram_encode(docs, model, "doc_id", "text")
     return enc.select(
         "doc_id",
@@ -4639,7 +4617,7 @@ def qa_orders_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return qa.audit(
         orders,
         [
-            qa.not_null("o_custkey", 0.0),
+            qa.not_null("o_custkey"),
             qa.in_range("o_totalprice", 0.0, 1_000_000.0),
             qa.unique("o_orderkey"),
             qa.in_set("o_orderstatus", ["O", "F", "P"]),
@@ -4867,12 +4845,7 @@ def tj_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch micros per the catalog convention."""
     ev = _t(spark, sf_dir, "events")
     return temporal.funnel(
-        ev,
-        "user_id",
-        "ts",
-        "event_type",
-        ["signup", "click", "purchase"],
-        max_span_us=604_800_000_000,
+        ev, "user_id", "ts", "event_type", ["signup", "click", "purchase"]
     )
 
 
@@ -5113,7 +5086,7 @@ def er_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
     from tcga_query_project_spark.operators import fuzzy
 
-    return fuzzy.resolve_entities(part, "p_name", max_dist=2)
+    return fuzzy.resolve_entities(part, "p_name")
 
 
 @register_bench_only(
@@ -5233,8 +5206,6 @@ def qa_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur,
         numeric={"o_totalprice": list(_PSI_PRICE_EDGES)},
         categorical=["o_orderpriority", "o_orderstatus"],
-        epsilon=1e-6,
-        threshold=0.2,
     )
 
 

@@ -109,13 +109,12 @@ def hash_split_bucket(key: Column) -> Column:
     return md5_prefix_long(key.cast("string")) % 100
 
 
-def split_label(
-    key: Column, train_pct: int = 90, val_pct: int = 5
-) -> Column:
-    """train/val/test label from :func:`hash_split_bucket`."""
+def split_label(key: Column) -> Column:
+    """train/val/test label from :func:`hash_split_bucket`: 90/5/5
+    percent."""
     b = hash_split_bucket(key)
     return (
-        F.when(b < train_pct, "train")
-        .when(b < train_pct + val_pct, "val")
+        F.when(b < 90, "train")
+        .when(b < 95, "val")
         .otherwise("test")
     )

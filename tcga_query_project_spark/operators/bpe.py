@@ -57,9 +57,7 @@ from tcga_query_project_spark.operators.text import bpe_tokens
 EOW = "</w>"
 
 
-def word_histogram(
-    df: DataFrame, text_col: str, max_words: int, min_freq: int = 1
-) -> DataFrame:
+def word_histogram(df: DataFrame, text_col: str, max_words: int) -> DataFrame:
     """``(word, freq)`` for the ``max_words`` most frequent pre-tokens
     (``text.bpe_tokens`` pre-tokenization: alphanumeric runs or single
     punctuation marks). ONE corpus shuffle; the frequency cut plans as
@@ -69,7 +67,6 @@ def word_histogram(
         df.select(F.explode(bpe_tokens(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-        .filter(F.col("freq") >= min_freq)
         .orderBy(F.col("freq").desc(), F.col("word").asc())
         .limit(max_words)
     )
@@ -139,7 +136,6 @@ def bpe_train(
     text_col: str,
     num_merges: int = 1000,
     max_words: int = 1_000_000,
-    min_freq: int = 1,
 ) -> DataFrame:
     """Learn a BPE merge table from the corpus. Returns ``(rank BIGINT,
     left STRING, right STRING, merged STRING)`` — rank 0 is the first
@@ -152,7 +148,7 @@ def bpe_train(
     """
     hist = [
         (r["word"], r["freq"])
-        for r in word_histogram(df, text_col, max_words, min_freq).collect()
+        for r in word_histogram(df, text_col, max_words).collect()
     ]
     merges = _learn_merges(hist, num_merges)
     spark = df.sparkSession

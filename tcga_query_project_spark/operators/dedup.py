@@ -24,21 +24,11 @@ from tcga_query_project_spark.operators.similarity import (
     sign_bucket,
     vector_side,
 )
-from tcga_query_project_spark.operators.text import tokens
+from tcga_query_project_spark.operators.text import norm_tokens_sql
 
 
 def normalized_text(text: Column) -> Column:
     return F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
-
-
-def _norm_tokens_sql(text_col: str) -> str:
-    """SQL form of ``tokens(normalized_text(col))`` — one parsed
-    expression instead of a py4j Column chain; identical semantics."""
-    return (
-        "split(trim(lower(regexp_replace(trim(`"
-        + text_col
-        + "`), '\\\\s+', ' '))), '\\\\s+')"
-    )
 
 
 def _shingles_sql(k: int) -> str:
@@ -58,14 +48,20 @@ def _shingles_sql(k: int) -> str:
 #: so (2·seed+1)·v + seed·1000003 stays within signed-64 range.
 MINHASH_PRIME = 4294967311
 
+#: MinHash seeds of the dedup operators that fix the family (8 hashes,
+#: banded in pairs of 2 over word 3-shingles).
+SEEDS = list(range(1, 9))
 
-def shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
-) -> DataFrame:
-    """Distinct word k-gram shingles per document as ROWS, built on the
+#: Jaccard at or above which two documents are near-duplicates in the
+#: cluster and decontamination operators.
+DUP_THRESHOLD = 0.2
+
+
+def shingle_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Distinct word 3-gram shingles per document as ROWS, built on the
     whole-stage-codegen gram path: posexplode the token array, lead()
-    over a doc-keyed window, concat, distinct — the
-    :func:`jaccard_prefix_join` shingle machinery as a reusable helper.
+    over a doc-keyed window, concat, distinct — the shingles of
+    :func:`jaccard_prefix_join` and of the persisted dedup index.
 
     Output is row-for-row the set ``explode(shingle_array(...))``
     produces (same normalization, same
@@ -78,19 +74,15 @@ def shingle_rows(
     :func:`shingle_array` only where the per-doc ARRAY itself is the
     payload (the array_intersect verify of :func:`near_duplicates`).
 
-    One doc-keyed window exchange; documents with fewer than ``k``
-    tokens emit nothing.
+    One doc-keyed window exchange; documents with fewer than 3 tokens
+    emit nothing.
     """
     seq = fan_out(df, id_col).selectExpr(
         f"`{id_col}`",
-        f"posexplode({_norm_tokens_sql(text_col)}) as (_p, _w)",
+        f"posexplode({norm_tokens_sql(text_col)}) as (_p, _w)",
     )
-    if k == 1:
-        return seq.select(
-            F.col(id_col), F.col("_w").alias("shingle")
-        ).distinct()
     over = f"over (partition by `{id_col}` order by _p)"
-    leads = [f"lead(_w, {i}) {over}" for i in range(1, k)]
+    leads = [f"lead(_w, {i}) {over}" for i in (1, 2)]
     return (
         seq.selectExpr(
             f"`{id_col}`",
@@ -117,7 +109,7 @@ def shingle_array(
     """
     df = fan_out(df, id_col)
     return df.selectExpr(
-        f"`{id_col}`", _norm_tokens_sql(text_col) + " as _toks"
+        f"`{id_col}`", norm_tokens_sql(text_col) + " as _toks"
     ).selectExpr(
         f"`{id_col}`", f"array_distinct({_shingles_sql(k)}) as shingles"
     )
@@ -315,18 +307,20 @@ def near_duplicates(
     )
 
 
+#: Jaccard threshold of the exact prefix-filter similarity join.
+PREFIX_JOIN_THRESHOLD = 0.6
+
+
 def jaccard_prefix_join(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.6,
-    shingle_k: int | None = None,
 ) -> DataFrame:
-    """EXACT token-set similarity join via prefix filtering (the
-    AllPairs/PPJoin candidate rule — Bayardo et al. 2007, Xiao et al.
-    2008): every pair of documents whose distinct-token Jaccard is
-    >= ``threshold``, with NO false negatives — the deterministic
-    complement to :func:`near_duplicates` (MinHash-LSH misses a pair
+    """EXACT set similarity join via prefix filtering (the AllPairs/
+    PPJoin candidate rule — Bayardo et al. 2007, Xiao et al. 2008):
+    every pair of documents whose distinct word 3-shingle Jaccard is
+    >= ``PREFIX_JOIN_THRESHOLD``, with NO false negatives — the
+    deterministic complement to :func:`near_duplicates` (MinHash-LSH misses a pair
     with probability (1-s^r)^b; dedup audits and contracts sometimes
     need the exact answer).
 
@@ -372,60 +366,18 @@ def jaccard_prefix_join(
     ceil and on the positional bound) only ever ADD candidates, so a
     binary-rounded-UP threshold cannot drop a true pair.
 
-    ``shingle_k``: None joins on distinct lowercased TOKEN sets (the
-    classic PPJoin universe — right for short records like titles or
-    URLs); an integer joins on distinct word k-SHINGLE sets (the
-    near-dup universe :func:`near_duplicates` uses — order-sensitive,
-    so template-heavy corpora whose documents share vocabulary but not
-    phrasing don't collapse into one giant quadratic output cluster).
+    The universe is distinct word 3-SHINGLE sets (the near-dup
+    universe :func:`near_duplicates` uses — order-sensitive, so
+    template-heavy corpora whose documents share vocabulary but not
+    phrasing don't collapse into one giant quadratic output cluster),
+    built by :func:`shingle_rows` on the codegen gram path.
     """
-    from pyspark.sql.window import Window
-
     from tcga_query_project_spark.operators.caching import materialize_shared
 
-    t = float(threshold)
-    if shingle_k is None:
-        raw = F.array_remove(
-            F.array_distinct(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-            ),
-            "",
-        )
-        post0 = (
-            df.select(F.col(id_col).alias("_id"), raw.alias("_toks"))
-            .filter(F.size("_toks") > 0)
-            .select("_id", F.explode("_toks").alias("_tok"))
-        )
-    else:
-        # k-shingles via posexplode + lead window — the codegen gram
-        # path (text.py's repeated-spans pattern), NOT shingle_array's
-        # transform(array_join(slice)) lambda: Spark evaluates HOF
-        # lambdas interpreted, ~38 us per shingle — measured ~10s just
-        # to materialize sf0.1's 260k shingle strings, vs ~1s for
-        # explode + lead + concat, all inside whole-stage codegen
-        # (one doc-keyed window shuffle)
-        k = int(shingle_k)
-        seq = fan_out(df, id_col).select(
-            F.col(id_col).alias("_id"),
-            F.posexplode(
-                tokens(normalized_text(F.col(text_col)))
-            ).alias("_p", "_w"),
-        )
-        w = Window.partitionBy("_id").orderBy("_p")
-        leads = [F.lead("_w", i).over(w) for i in range(1, k)]
-        # gram AND its completeness guard in ONE projection: a window
-        # expression placed after a filter would re-evaluate over the
-        # filtered frame and shift every tail gram
-        post0 = (
-            seq.select(
-                "_id",
-                F.concat_ws(" ", F.col("_w"), *leads).alias("_tok"),
-                leads[-1].alias("_last"),
-            )
-            .filter(F.col("_last").isNotNull())
-            .select("_id", "_tok")
-            .distinct()
-        )
+    t = PREFIX_JOIN_THRESHOLD
+    post0 = shingle_rows(df, id_col, text_col).select(
+        F.col(id_col).alias("_id"), F.col("shingle").alias("_tok")
+    )
     # the FLAT postings spine: feeds the frequency agg, the key-sort
     # agg, and BOTH verify sides — persist it. LAZY:
     # an eager count() paid one full extra pass per cache just to
@@ -526,9 +478,6 @@ def band_firstseen_gate(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
-    num_hashes: int = 8,
-    band_size: int = 2,
 ) -> DataFrame:
     """Near-dedup admission gate: a document passes iff EVERY one of
     its LSH band signatures is first-seen, with "arrival order" =
@@ -538,7 +487,7 @@ def band_firstseen_gate(
     :func:`near_duplicates`: no candidate verify, so an LSH
     false-positive on even one band rejects a unique document — the
     fail-closed direction (never admits a near-dup the bands can see).
-    Documents with no bands (< ``k`` tokens after normalization) pass
+    Documents with no bands (< 3 tokens after normalization) pass
     trivially.
 
     Output: one row per input document — ``(id, n_bands BIGINT,
@@ -564,10 +513,9 @@ def band_firstseen_gate(
         materialize_shared,
     )
 
-    sh = materialize_shared(shingle_array(df, id_col, text_col, k))
-    sig = minhash_signature_arrays(sh, id_col, num_hashes)
-    seeds = sorted(int(c[3:]) for c in sig.columns if c.startswith("_mh"))
-    bands = _band_signatures(sig, id_col, seeds, band_size)
+    sh = materialize_shared(shingle_array(df, id_col, text_col))
+    sig = minhash_signature_arrays(sh, id_col)
+    bands = _band_signatures(sig, id_col, SEEDS, 2)
     w = Window.partitionBy("band", "band_sig")
     per_doc = (
         bands.withColumn("_keep", F.min(id_col).over(w))
@@ -742,7 +690,6 @@ def embedding_near_dup_auto(
     threshold: float,
     n_tables: int = 4,
     target_occupancy: int = 16,
-    min_bits: int = 4,
     max_bits: int = 16,
 ) -> DataFrame:
     """Approximate embedding near-dup: sign-LSH candidate generation
@@ -760,9 +707,9 @@ def embedding_near_dup_auto(
     :func:`embedding_near_dup` result. A FIXED
     ``bits`` is only a constant-factor reduction of quadratic
     (Σ bucket² ≈ n²·T/2^bits), so the width follows the corpus size
-    (``min_bits == max_bits`` pins it):
+    (at least 4 bits):
 
-        bits = clamp(min_bits, max_bits,
+        bits = clamp(4, max_bits,
                      ceil(log2(n / target_occupancy)))
 
     so expected bucket occupancy stays ≈ ``target_occupancy`` at ANY
@@ -805,7 +752,7 @@ def embedding_near_dup_auto(
         F.greatest(F.count(F.lit(1)), F.lit(1)).cast("double").alias("_n")
     )
     bits_col = F.greatest(
-        F.lit(min_bits).cast("long"),
+        F.lit(4).cast("long"),
         F.least(
             F.lit(max_bits).cast("long"),
             F.ceil(F.log2(F.col("_n") / F.lit(float(target_occupancy)))),
@@ -875,7 +822,7 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     df = fan_out(df, id_col)
     toks = df.selectExpr(
         f"`{id_col}`",
-        f"explode({_norm_tokens_sql(text_col)}) as _t",
+        f"explode({norm_tokens_sql(text_col)}) as _t",
     )
     # bit b (our numbering: b//4 = hex-char index, 3 - b%4 = bit within
     # nibble) is bit (15 - b) of the integer value of the 4-char prefix.
@@ -904,16 +851,12 @@ def decontaminate(
     reference: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Cross-corpus near-duplicate detection — the train/test
     DECONTAMINATION job: find training documents that near-duplicate an
     evaluation/reference document, so they can be dropped before
     training. Returns ``(corpus_id, reference_id, jaccard)`` for every
-    cross pair at or above ``threshold``; anti-join the corpus against
+    cross pair at or above ``DUP_THRESHOLD``; anti-join the corpus against
     the distinct ``corpus_id`` values to clean it.
 
     Same machinery as :func:`near_duplicates` (identical shingle/
@@ -944,15 +887,14 @@ def decontaminate(
         materialize_shared,
     )
 
-    sh_c = materialize_shared(shingle_array(corpus, id_col, text_col, k))
-    sh_r = materialize_shared(shingle_array(reference, id_col, text_col, k))
-    sig_c = minhash_signature_arrays(sh_c, id_col, num_hashes)
-    sig_r = minhash_signature_arrays(sh_r, id_col, num_hashes)
-    seeds = list(range(1, num_hashes + 1))
-    bands_c = _band_signatures(sig_c, id_col, seeds, band_size).select(
+    sh_c = materialize_shared(shingle_array(corpus, id_col, text_col))
+    sh_r = materialize_shared(shingle_array(reference, id_col, text_col))
+    sig_c = minhash_signature_arrays(sh_c, id_col)
+    sig_r = minhash_signature_arrays(sh_r, id_col)
+    bands_c = _band_signatures(sig_c, id_col, SEEDS, 2).select(
         F.col(id_col).alias("corpus_id"), "band", "band_sig"
     )
-    bands_r = _band_signatures(sig_r, id_col, seeds, band_size).select(
+    bands_r = _band_signatures(sig_r, id_col, SEEDS, 2).select(
         F.col(id_col).alias("reference_id"), "band", "band_sig"
     )
     cand = (
@@ -975,7 +917,7 @@ def decontaminate(
             "reference_id",
             F.round(inter / (sza + szb - inter), 6).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= DUP_THRESHOLD)
     )
 
 
@@ -983,9 +925,7 @@ def clusters_from_pairs(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    weight_col: Column | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
+    weight_col: Column,
 ) -> DataFrame:
     """Resolve ANY duplicate-pair relation (MinHash-LSH, SimHash,
     embedding-cosine, exact-digest — anything emitting ``(id_a,
@@ -993,8 +933,7 @@ def clusters_from_pairs(
     Output per input row: ``(id_col, component, cluster_size,
     keep_id)``; ``component`` is the min id in the connected component
     (singletons label themselves), ``keep_id`` the member maximizing
-    ``weight_col`` (ties → smallest id; ``weight_col=None`` keeps the
-    smallest id outright).
+    ``weight_col`` (ties → smallest id).
 
     The component window hash-spreads on component id — singleton
     components dominate real corpora, so no skew; the graph step only
@@ -1010,10 +949,9 @@ def clusters_from_pairs(
 
     from tcga_query_project_spark.operators.graph import connected_components
 
-    comp = connected_components(pairs, id_a, id_b)
+    comp = connected_components(pairs, "id_a", "id_b")
     base = docs.select(
-        F.col(id_col).cast("long").alias(id_col),
-        (weight_col if weight_col is not None else F.lit(0)).alias("_wt"),
+        F.col(id_col).cast("long").alias(id_col), weight_col.alias("_wt")
     )
     labelled = base.join(
         comp, base[id_col] == comp["id"], "left"
@@ -1038,10 +976,6 @@ def dup_clusters(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Near-duplicate CLUSTER resolution: pairs → transitive groups →
     one keeper per group. Returns one row per document:
@@ -1068,10 +1002,7 @@ def dup_clusters(
     corpus, so the graph step is cheap; the only corpus-sized shuffle
     beyond near-dup itself is the final component window.
     """
-    pairs = near_duplicates(
-        docs, id_col, text_col,
-        k=k, num_hashes=num_hashes, band_size=band_size, threshold=threshold,
-    )
+    pairs = near_duplicates(docs, id_col, text_col, threshold=DUP_THRESHOLD)
     return clusters_from_pairs(
         docs, pairs, id_col, weight_col=F.length(F.col(text_col))
     )
@@ -1082,10 +1013,6 @@ def build_dedup_index(
     id_col: str,
     text_col: str,
     index_dir: str,
-    k: int = 3,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    mode: str = "overwrite",
 ) -> None:
     """Materialize the corpus's MinHash state as a PERSISTED dedup
     index, so later deltas dedup against history without re-reading
@@ -1105,33 +1032,26 @@ def build_dedup_index(
     ``io.write_bucketed`` on (band, band_sig) instead — this parquet
     form keeps the index engine-portable.
 
-    ``mode`` must be ``overwrite`` or ``errorifexists``: this builder
-    derives bands by reading back the signatures store, so an
-    ``append`` here would re-band the ENTIRE history on every call
-    (quadratic band growth across appends).
+    Every call is a full (re)build that overwrites the index: bands are
+    derived by reading back the signatures store, so appending would
+    re-band the ENTIRE history on every call.
     """
-    if mode not in ("overwrite", "errorifexists", "error"):
-        raise ValueError(
-            f"build_dedup_index: mode={mode!r} unsupported — full "
-            "(re)builds only"
-        )
     # shingle ROWS on the codegen gram path: the signature
     # aggregate is this chain's only consumer and wants exploded rows
     # anyway, so the interpreted shingle-array lambda (and the persist
     # that guarded its re-expansion) is pure overhead here — see
     # shingle_rows; same shingle set, same signatures.
-    sig = minhash_signature(
-        shingle_rows(docs, id_col, text_col, k), id_col, num_hashes
-    )
-    seeds = list(range(1, num_hashes + 1))
+    sig = minhash_signature(shingle_rows(docs, id_col, text_col), id_col, 8)
     # write signatures FIRST, then derive bands by reading them back:
     # the two writes are independent jobs, and without this the second
     # would re-run the whole shingle+minhash chain (doubling the
     # dominant cost of the build — the one-corpus-hash claim above)
-    sig.write.mode(mode).parquet(f"{index_dir}/signatures")
+    sig.write.mode("overwrite").parquet(f"{index_dir}/signatures")
     sig_back = docs.sparkSession.read.parquet(f"{index_dir}/signatures")
-    bands = _band_signatures(sig_back, id_col, seeds, band_size)
-    bands.write.mode(mode).partitionBy("band").parquet(f"{index_dir}/bands")
+    bands = _band_signatures(sig_back, id_col, SEEDS, 2)
+    bands.write.mode("overwrite").partitionBy("band").parquet(
+        f"{index_dir}/bands"
+    )
 
 
 def dedup_against_index(
@@ -1139,14 +1059,11 @@ def dedup_against_index(
     id_col: str,
     text_col: str,
     index_dir: str,
-    k: int = 3,
-    band_size: int = 2,
-    est_threshold: float = 0.5,
 ) -> DataFrame:
     """Flag delta documents that near-duplicate the INDEXED corpus:
     ``(id_col, matched_id, est_jaccard)`` for each (delta doc, indexed
     doc) candidate whose MinHash signature agreement reaches
-    ``est_threshold``.
+    0.5.
 
     The candidate join is delta-bands ⋈ index-bands on (band,
     band_sig); the verify stage estimates Jaccard as the FRACTION OF
@@ -1174,10 +1091,10 @@ def dedup_against_index(
     # single consumer, no interpreted array lambda.
     sig_n = materialize_shared(
         minhash_signature(
-            shingle_rows(new_docs, id_col, text_col, k), id_col, len(seeds)
+            shingle_rows(new_docs, id_col, text_col), id_col, len(seeds)
         )
     )
-    bands_n = _band_signatures(sig_n, id_col, seeds, band_size).select(
+    bands_n = _band_signatures(sig_n, id_col, seeds, 2).select(
         F.col(id_col), "band", "band_sig"
     )
     idx_id = sig_i.columns[0]  # id column as written by build
@@ -1207,5 +1124,5 @@ def dedup_against_index(
             "matched_id",
             F.round(agree, 6).alias("est_jaccard"),
         )
-        .filter(F.col("est_jaccard") >= est_threshold)
+        .filter(F.col("est_jaccard") >= 0.5)
     )

@@ -96,7 +96,7 @@ def _variant_table(
     )
 
 
-def fuzzy_pairs(df: DataFrame, col: str, max_dist: int = 2) -> DataFrame:
+def fuzzy_pairs(df: DataFrame, col: str, max_dist: int) -> DataFrame:
     """All UNORDERED pairs of distinct values of ``col`` within
     Levenshtein distance ``max_dist`` — ``(name_a, name_b, dist)``
     with ``name_a < name_b``, exactly the brute-force all-pairs result
@@ -119,10 +119,9 @@ def fuzzy_pairs(df: DataFrame, col: str, max_dist: int = 2) -> DataFrame:
     )
 
 
-def resolve_entities(
-    df: DataFrame, col: str, max_dist: int = 2
-) -> DataFrame:
-    """Entity resolution over a string key: fuzzy pairs → connected
+def resolve_entities(df: DataFrame, col: str) -> DataFrame:
+    """Entity resolution over a string key: fuzzy pairs within edit
+    distance 2 → connected
     components (transitive closure — 'bolt'~'bolte'~'boltte' is ONE
     entity even though the ends are 2+2 apart) → canonical name per
     cluster (lexicographically smallest, a deterministic and
@@ -147,7 +146,7 @@ def resolve_entities(
         .distinct()
         .withColumn("_id", md5_prefix_long(F.col("name")))
     )
-    pairs = fuzzy_pairs(df, col, max_dist)
+    pairs = fuzzy_pairs(df, col, 2)
     edges = (
         pairs.withColumn("_u", md5_prefix_long(F.col("name_a")))
         .withColumn("_v", md5_prefix_long(F.col("name_b")))

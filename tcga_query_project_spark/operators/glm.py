@@ -81,21 +81,22 @@ def _normal_sf_two_sided(z: np.ndarray) -> np.ndarray:
 
 
 def _fit_nb_irls(
-    y: np.ndarray, x: np.ndarray, offset: np.ndarray, alpha: float, max_iter: int = 50
+    y: np.ndarray, x: np.ndarray, offset: np.ndarray, alpha: float
 ) -> tuple[np.ndarray, np.ndarray] | None:
     """IRLS for the NB(mean mu, dispersion alpha) log-link GLM
     ``log mu = X beta + offset`` (var = mu + alpha * mu^2).
 
     Returns (beta, standard errors) or None if the fit degenerates.
     For alpha=0 this reduces to Poisson IRLS. Working weights
-    w = mu / (1 + alpha * mu) are the canonical NB2 GLM weights.
+    w = mu / (1 + alpha * mu) are the canonical NB2 GLM weights; at most
+    50 iterations.
     """
     n, p = x.shape
     beta = np.zeros(p)
     # moment start: intercept at log of offset-adjusted mean
     mean0 = max(np.mean(y / np.exp(offset)), 1e-8)
     beta[0] = np.log(mean0)
-    for _ in range(max_iter):
+    for _ in range(50):
         eta = x @ beta + offset
         eta = np.clip(eta, -30.0, 30.0)
         mu = np.exp(eta)
@@ -410,7 +411,7 @@ SHRUNK_RESULT_SCHEMA = StructType(
 )
 
 
-def _betacf(a: float, b: float, x: float, max_iter: int = 200) -> float:
+def _betacf(a: float, b: float, x: float) -> float:
     """Continued fraction for the regularized incomplete beta
     (Lentz's method — the classic numerical recipe; no scipy here)."""
     tiny = 1e-300
@@ -420,7 +421,7 @@ def _betacf(a: float, b: float, x: float, max_iter: int = 200) -> float:
         d = tiny
     d = 1.0 / d
     h = d
-    for m in range(1, max_iter + 1):
+    for m in range(1, 201):
         m2 = 2 * m
         aa = m * (b - m) * x / ((qam + m2) * (a + m2))
         d = 1.0 + aa * d
@@ -558,16 +559,13 @@ def _map_dispersion(
     x: np.ndarray,
     offset: np.ndarray,
     alpha_trend: float,
-    prior_sigma2: float = 0.25,
-    lo: float = 1e-8,
-    hi: float = 10.0,
-    iters: int = 40,
+    prior_sigma2: float,
 ) -> float:
     """Posterior mode of the dispersion: golden-section maximization of
     ``CR-loglik(alpha) + logNormal(log alpha; log alpha_trend, sigma2)``
-    over log alpha — DESeq2's dispersion MAP (log-normal prior centered
-    at the fitted trend; default prior variance 0.25 mirrors DESeq2's
-    floor on dispPriorVar)."""
+    over log alpha in [1e-8, 10] (40 steps) — DESeq2's dispersion MAP
+    (log-normal prior centered at the fitted trend)."""
+    lo = 1e-8
     la_t = np.log(max(alpha_trend, lo))
 
     def obj(la: float) -> float:
@@ -576,10 +574,10 @@ def _map_dispersion(
         ) / (2.0 * prior_sigma2)
 
     gr = (np.sqrt(5.0) - 1.0) / 2.0
-    a, b = np.log(lo), np.log(hi)
+    a, b = np.log(lo), np.log(10.0)
     c, d = b - gr * (b - a), a + gr * (b - a)
     fc, fd = obj(c), obj(d)
-    for _ in range(iters):
+    for _ in range(40):
         if fc >= fd:
             b, d, fd = d, c, fc
             c = b - gr * (b - a)
@@ -764,17 +762,15 @@ def estimate_dispersion_prior_variance(
     disp: DataFrame,
     a0: float,
     a1: float,
-    p: int = 2,
-    min_var: float = 0.25,
 ) -> float:
     """DESeq2's dispPriorVar estimate (estimateDispersionsMAP): the
     robust variance of log gene-wise dispersions around the fitted
     trend — ``(1.4826 · MAD(log α_gene − log trend(μ_gene)))²`` —
     minus the EXPECTED sampling variance of a log dispersion estimate,
     ``trigamma((m − p)/2)`` (m = per-gene sample count, median across
-    genes; p = design columns), floored at ``min_var`` (DESeq2 floors
-    at 0.25). Subtracting the sampling noise leaves only the true
-    biological spread: with few replicates the gene-wise estimates
+    genes; p = 2 design columns), floored at 0.25 as in DESeq2.
+    Subtracting the sampling noise leaves only the true biological
+    spread: with few replicates the gene-wise estimates
     scatter widely even when every gene sits ON the trend, and a prior
     as wide as that scatter would barely shrink at all.
 
@@ -790,30 +786,27 @@ def estimate_dispersion_prior_variance(
         F.percentile(F.col("_m"), F.lit(0.5)).alias("m_med"),
     ).first()
     if first is None or first["med"] is None:
-        return min_var
-    med, m_med = float(first["med"]), float(first["m_med"] or (p + 2))
+        return 0.25
+    med, m_med = float(first["med"]), float(first["m_med"] or 4)
     mad_row = disp.agg(
         F.percentile(F.abs(lr - F.lit(med)), F.lit(0.5)).alias("mad")
     ).first()
     if mad_row is None or mad_row["mad"] is None:
-        return min_var
+        return 0.25
     s2 = (1.4826 * float(mad_row["mad"])) ** 2
-    return max(s2 - _trigamma(max((m_med - p) / 2.0, 0.51)), min_var)
+    return max(s2 - _trigamma(max((m_med - 2) / 2.0, 0.51)), 0.25)
 
 
 def fit_dispersion_trend(
     disp: DataFrame,
     max_iter: int = 10,
-    ratio_lo: float = 1e-4,
-    ratio_hi: float = 15.0,
-    tol: float = 1e-3,
 ) -> tuple[float, float]:
     """Iteratively-refit parametric dispersion trend
     ``alpha(mu) = a0 + a1/mu`` over a per-gene ``(_alpha, _mu)`` table —
     DESeq2's estimateDispersionsFit loop: fit, drop genes whose
     gene-wise dispersion deviates from the current trend by more than
-    ``ratio_hi``× (or below ``ratio_lo``×, the all-but-Poisson floor),
-    refit until the coefficients move < ``tol`` relatively. The first
+    15× (or below 1e-4×, the all-but-Poisson floor), refit until the
+    coefficients move < 1e-3 relatively. The first
     pass uses every gene (the previous single-pass behavior ==
     ``max_iter=1``); high-dispersion outlier genes then stop dragging
     the trend every other gene's prior is centered on.
@@ -855,14 +848,14 @@ def fit_dispersion_trend(
         a0, a1 = coeffs
         trend = F.lit(a0) + F.lit(a1) * F.col("_x")
         kept = xy.filter(
-            (F.col("_y") / trend > ratio_lo) & (F.col("_y") / trend < ratio_hi)
+            (F.col("_y") / trend > 1e-4) & (F.col("_y") / trend < 15.0)
         )
         new = _sums_to_coeffs(kept.agg(*agg_cols).first(), coeffs)
         if new is None:
             break
         if (
-            abs(new[0] - a0) <= tol * max(a0, 1e-8)
-            and abs(new[1] - a1) <= tol * max(a1, 1e-8)
+            abs(new[0] - a0) <= 1e-3 * max(a0, 1e-8)
+            and abs(new[1] - a1) <= 1e-3 * max(a1, 1e-8)
         ):
             coeffs = new
             break
@@ -879,7 +872,6 @@ def nb_glm_wald_shrunk(
     sample: str,
     level_a: str,
     level_b: str,
-    prior_sigma2: float | None = None,
 ) -> DataFrame:
     """A6 v2: per-gene NB GLM Wald contrast with DESeq2-style
     empirical-Bayes dispersion shrinkage (``DESeq()``'s
@@ -906,11 +898,10 @@ def nb_glm_wald_shrunk(
        (``cooks_outlier = 1``) and their p-value withheld (NaN) —
        DESeq2's outlier gate.
 
-    Two DESeq2 refinements over the plain MAP fit:
-    ``prior_sigma2=None`` (default) now ESTIMATES the prior variance
-    from the data (:func:`estimate_dispersion_prior_variance` —
-    MAD²-around-trend minus trigamma sampling noise, floored at 0.25,
-    DESeq2's dispPriorVar; pass a float to pin it), and flagged genes
+    Two DESeq2 refinements over the plain MAP fit: the prior variance
+    is ESTIMATED from the data (:func:`estimate_dispersion_prior_variance`
+    — MAD²-around-trend minus trigamma sampling noise, floored at 0.25,
+    DESeq2's dispPriorVar), and flagged genes
     with ≥ 7 replicates per group get their outlier counts REPLACED by
     group trimmed means and the fit re-run (minReplicatesForReplace
     semantics — the refit p-value is reported, ``n_replaced`` counts
@@ -963,8 +954,7 @@ def nb_glm_wald_shrunk(
     disp = disp.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         a0, a1 = fit_dispersion_trend(disp)
-        if prior_sigma2 is None:
-            prior_sigma2 = estimate_dispersion_prior_variance(disp, a0, a1)
+        prior_sigma2 = estimate_dispersion_prior_variance(disp, a0, a1)
     finally:
         disp.unpersist(blocking=False)
 

@@ -241,7 +241,7 @@ def connected_components(
     return members.union(roots).distinct()
 
 
-def _pagerank_local(spark, pairs, damping: float, n_iter: int):
+def _pagerank_local(spark, pairs):
     """Driver-side sparse power iteration — the small-graph escape
     hatch (same recurrence as the distributed loop; accumulation order
     differs only at float ulp, inside every consumer's rounding)."""
@@ -265,28 +265,27 @@ def _pagerank_local(spark, pairs, damping: float, n_iter: int):
     for u, v in pairs:
         out.setdefault(idx[u], []).append(idx[v])
     rank = [1.0 / n] * n
-    for _ in range(n_iter):
-        nxt = [(1.0 - damping) / n] * n
+    for _ in range(PAGERANK_ITERS):
+        nxt = [(1.0 - DAMPING) / n] * n
         dang = sum(rank[i] for i in range(n) if i not in out)
         if dang:
-            add = damping * dang / n
+            add = DAMPING * dang / n
             nxt = [x + add for x in nxt]
         for i, targets in out.items():
-            share = damping * rank[i] / len(targets)
+            share = DAMPING * rank[i] / len(targets)
             for j in targets:
                 nxt[j] += share
         rank = nxt
     return frame(rank)
 
 
+#: PageRank damping factor and the fixed number of power iterations.
+DAMPING = 0.85
+PAGERANK_ITERS = 6
+
+
 def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    damping: float = 0.85,
-    n_iter: int = 10,
-    local_threshold: int = 1_000_000,
+    edges: DataFrame, *, local_threshold: int = 1_000_000
 ) -> DataFrame:
     """PageRank over a directed edge list — the link-graph quality
     prior of a web-scale training pipeline (Common Crawl publishes
@@ -294,8 +293,9 @@ def pagerank(
     and crawl frontier prioritization both consume it).
 
     Returns ``(node BIGINT, rank DOUBLE)`` with one row per node that
-    appears in ``edges`` (as source OR target); ranks sum to 1. Fixed
-    ``n_iter`` synchronous power iterations of the standard recurrence
+    appears in ``edges`` (``src``, ``dst`` columns; as source OR
+    target); ranks sum to 1. ``PAGERANK_ITERS`` synchronous power
+    iterations of the standard recurrence
 
         rank'(j) = (1-d)/n + d * (sum_{i->j} rank(i)/outdeg(i)
                                   + dangling_mass/n)
@@ -303,8 +303,8 @@ def pagerank(
     with dangling-node mass (nodes with no out-edges) redistributed
     uniformly — the convention of Page et al. 1999 that keeps the
     iterate a probability distribution, so a fixed iteration count is
-    comparable across engines (and mirrorable in SQL as ``n_iter``
-    chained CTEs: see the ``gq_pagerank`` oracle).
+    comparable across engines (and mirrorable in SQL as
+    ``PAGERANK_ITERS`` chained CTEs: see the ``gq_pagerank`` oracle).
 
     Scale notes (billion-node web graph):
 
@@ -327,10 +327,10 @@ def pagerank(
       this many edges (decided by the same bounded collect as
       :func:`connected_components`, whose rows feed the driver-side
       iteration), iterate driver-side instead —
-      n_iter distributed rounds cost ~4 shuffle-stage schedulings each
+      the distributed rounds cost ~4 shuffle-stage schedulings each
       however small the graph (measured 4.7 s for a 5000-node graph at
       sf0.1), while sparse power iteration on 1M collected edges is
-      O(E·n_iter) driver work, well under a second. Same size-gated
+      O(E·iterations) driver work, well under a second. Same size-gated
       escape hatch as :func:`connected_components`; 0 forces the
       distributed path (the differential tests pin both paths to the
       same numpy reference).
@@ -338,12 +338,10 @@ def pagerank(
     Reference analog: none (no graph step in the reference); serves
     the LLM-data-pipeline quality surface the brief adds.
     """
-    if n_iter < 1:
-        raise ValueError("n_iter must be >= 1")
     e = (
         edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
+            F.col("src").cast("long").alias("src"),
+            F.col("dst").cast("long").alias("dst"),
         )
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .filter(F.col("src") != F.col("dst"))
@@ -353,10 +351,7 @@ def pagerank(
         small = _collect_at_most(e, local_threshold)
         if small is not None:
             return _pagerank_local(
-                edges.sparkSession,
-                [(r["src"], r["dst"]) for r in small],
-                damping,
-                n_iter,
+                edges.sparkSession, [(r["src"], r["dst"]) for r in small]
             )
     e = e.repartition("src").persist()
     nodes = (
@@ -386,8 +381,8 @@ def pagerank(
     ranks = base.select(
         "node", F.lit(1.0 / n).alias("rank")
     ).localCheckpoint(eager=True)
-    teleport = (1.0 - damping) / n
-    for _ in range(n_iter):
+    teleport = (1.0 - DAMPING) / n
+    for _ in range(PAGERANK_ITERS):
         withdeg = ranks.join(base, "node")
         contrib = (
             withdeg.join(e, withdeg["node"] == e["src"])
@@ -405,7 +400,7 @@ def pagerank(
                 "node",
                 (
                     F.lit(teleport)
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * (
                         F.coalesce(F.col("_contrib"), F.lit(0.0))
                         + F.col("_dang") / F.lit(float(n))
@@ -419,9 +414,7 @@ def pagerank(
     return ranks
 
 
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation and local clustering coefficient
     over an undirected simple graph — the community-structure /
     spam-farm signal of a link-graph quality pipeline (dense local
@@ -429,7 +422,8 @@ def triangle_counts(
     global transitivity ratio is the standard graph-health summary).
 
     Returns ``(node BIGINT, degree BIGINT, triangles BIGINT,
-    clustering DOUBLE)`` — one row per node appearing in ``edges``;
+    clustering DOUBLE)`` — one row per node appearing in ``edges``
+    (``src``, ``dst`` columns);
     ``clustering = round(2·T / (d·(d−1)), 6)``, NULL when ``d < 2``
     (undefined: no possible wedge). Direction, duplicate edges, and
     self-loops are dropped (simple-graph semantics, same normalization
@@ -462,8 +456,8 @@ def triangle_counts(
     """
     e = (
         edges.select(
-            F.col(src).cast("long").alias("a"),
-            F.col(dst).cast("long").alias("b"),
+            F.col("src").cast("long").alias("a"),
+            F.col("dst").cast("long").alias("b"),
         )
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .filter(F.col("a") != F.col("b"))

@@ -16,15 +16,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def fan_out(df: DataFrame, key: str | None = None, target: int | None = None) -> DataFrame:
-    """Ensure at least ``target`` (default: cluster parallelism)
-    partitions before a CPU-bound per-row stage.
+def fan_out(df: DataFrame, key: str) -> DataFrame:
+    """Ensure at least cluster-parallelism partitions before a CPU-bound
+    per-row stage.
 
     No-op when the input already has that many partitions — the guard
     makes this safe to leave in operator code at any scale; it only
     fires when the scan produced too few splits to keep the cores busy.
     ``key`` hash-partitions (deterministic placement, and pre-aligns a
-    following groupBy on the same key); without it Spark round-robins.
+    following groupBy on the same key).
 
     The partition probe (``df.rdd.getNumPartitions()``) compiles the
     subtree to an RDD — ~0.1 s of physical planning per call, paid at
@@ -36,8 +36,7 @@ def fan_out(df: DataFrame, key: str | None = None, target: int | None = None) ->
     the metastore sense, not result caching.
     """
     spark = df.sparkSession
-    sc = spark.sparkContext
-    target = target or sc.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     memo = getattr(spark, "_fanout_npart_memo", None)
     if memo is None:
         memo = {}
@@ -49,7 +48,7 @@ def fan_out(df: DataFrame, key: str | None = None, target: int | None = None) ->
         memo[mkey] = nparts
     if nparts >= target:
         return df
-    return df.repartition(target, F.col(key)) if key else df.repartition(target)
+    return df.repartition(target, F.col(key))
 
 
 def _cap_order_key(tiebreak: str, salt: str) -> "F.Column":

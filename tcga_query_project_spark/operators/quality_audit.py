@@ -11,13 +11,13 @@ one-row result.
 
 Check types (constructors below):
 
-- ``not_null(col, max_null_frac)`` — null-rate ceiling;
+- ``not_null(col)`` — no NULLs;
 - ``in_range(col, lo, hi)`` — min/max bounds on a numeric column;
 - ``unique(col)`` — key uniqueness (count == approx-free exact
   count(distinct) — the one check that is NOT map-side-only; it adds
   the standard distinct expansion to the single pass);
-- ``in_set(col, values)`` — categorical domain;
-- ``row_count(lo, hi)`` — batch-size sanity bounds.
+- ``in_set(col, values)`` — categorical domain, every row a member;
+- ``row_count(lo)`` — batch-size floor.
 
 Output: one row per check — ``(check STRING, column STRING, metric
 DOUBLE, threshold DOUBLE, passed BOOLEAN)``; the gate passes iff
@@ -49,14 +49,9 @@ class Check:
     at_most: bool
 
 
-def not_null(col: str, max_null_frac: float = 0.0) -> Check:
-    return Check(
-        "not_null",
-        col,
-        F.avg(F.col(col).isNull().cast("double")),
-        float(max_null_frac),
-        at_most=True,
-    )
+def not_null(col: str) -> Check:
+    nulls = F.avg(F.col(col).isNull().cast("double"))
+    return Check("not_null", col, nulls, 0.0, at_most=True)
 
 
 def in_range(col: str, lo: float, hi: float) -> tuple[Check, Check]:
@@ -89,33 +84,21 @@ def unique(col: str) -> Check:
     return Check("unique", col, dup_frac, 0.0, at_most=True)
 
 
-def in_set(col: str, values: Sequence[str], min_frac: float = 1.0) -> Check:
+def in_set(col: str, values: Sequence[str]) -> Check:
     # NULL counts as NON-member (coalesce): isin(NULL) is NULL and avg
     # would silently skip it — a domain check that ignores null rows
     # understates violations
     member = F.coalesce(
         F.col(col).isin(list(values)), F.lit(False)
     ).cast("double")
+    return Check("in_set", col, F.avg(member), 1.0, at_most=False)
+
+
+def row_count(lo: int) -> Check:
     return Check(
-        "in_set", col, F.avg(member), float(min_frac), at_most=False
+        "row_count_at_least", "*",
+        F.count(F.lit(1)).cast("double"), float(lo), at_most=False,
     )
-
-
-def row_count(lo: int, hi: int | None = None) -> tuple[Check, ...]:
-    checks = (
-        Check(
-            "row_count_at_least", "*",
-            F.count(F.lit(1)).cast("double"), float(lo), at_most=False,
-        ),
-    )
-    if hi is not None:
-        checks += (
-            Check(
-                "row_count_at_most", "*",
-                F.count(F.lit(1)).cast("double"), float(hi), at_most=True,
-            ),
-        )
-    return checks
 
 
 def _flatten(checks) -> list[Check]:
@@ -196,14 +179,18 @@ def _bin_label_sql(col: str, edges: Sequence[float]) -> str:
     )
 
 
+#: PSI share floor for empty bins, and the PSI above which a feature
+#: has drifted (the conventional "major shift" level).
+PSI_EPSILON = 1e-6
+PSI_THRESHOLD = 0.2
+
+
 def psi_drift(
     ref: DataFrame,
     cur: DataFrame,
     *,
-    numeric: dict[str, Sequence[float]] | None = None,
-    categorical: Sequence[str] | None = None,
-    epsilon: float = 1e-6,
-    threshold: float = 0.2,
+    numeric: dict[str, Sequence[float]],
+    categorical: Sequence[str],
 ) -> DataFrame:
     """Population Stability Index between two snapshots of the same
     table — the standard drift gate between a reference window (the
@@ -213,16 +200,16 @@ def psi_drift(
     enough that sampling weights and filter thresholds need re-tuning.
 
     PSI(feature) = Σ_bins (p - q) · ln(p / q), p/q = ref/cur bin
-    shares floored at ``epsilon`` (the standard guard for empty bins);
-    the conventional alert levels are 0.1 (moderate) and 0.2 (major —
-    the default ``threshold``). Numeric features bin by explicit
+    shares floored at ``PSI_EPSILON`` (the standard guard for empty
+    bins); the conventional alert levels are 0.1 (moderate) and 0.2
+    (major — ``PSI_THRESHOLD``). Numeric features bin by explicit
     ascending ``edges`` (data-independent, so the binning itself
     cannot drift between runs); categorical features bin by value,
     NULL as its own ``'__null__'`` bin on both paths.
 
     Returns one row per feature: ``(feature STRING, psi DOUBLE
     [rounded 6], n_bins BIGINT, drifted BOOLEAN)``; ``drifted``
-    compares the ROUNDED psi to ``threshold`` so the verdict is
+    compares the ROUNDED psi to ``PSI_THRESHOLD`` so the verdict is
     engine-portable.
 
     Scale: each side contributes one narrow projection + explode
@@ -234,8 +221,6 @@ def psi_drift(
     shuffle. Reference analog: none (serves the pipeline-hygiene
     surface, like :func:`audit`).
     """
-    numeric = dict(numeric or {})
-    categorical = list(categorical or [])
     if not numeric and not categorical:
         raise ValueError("psi_drift needs at least one feature")
 
@@ -254,13 +239,13 @@ def psi_drift(
             F.sum(1 - F.col("_is_ref")).cast("double").alias("cur_n"),
         )
     )
-    return psi_from_counts(counts, epsilon=epsilon, threshold=threshold)
+    return psi_from_counts(counts)
 
 
 def binned_features(
     df: DataFrame,
-    numeric: dict[str, Sequence[float]] | None = None,
-    categorical: Sequence[str] | None = None,
+    numeric: dict[str, Sequence[float]],
+    categorical: Sequence[str],
     extra_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Project a table into the long ``(*extra_cols, feature, bin)``
@@ -271,11 +256,11 @@ def binned_features(
     still a zero-shuffle map-side pass."""
     pairs = [
         f"struct('{col}' as feature, {_bin_label_sql(col, edges)} as bin)"
-        for col, edges in (numeric or {}).items()
+        for col, edges in numeric.items()
     ] + [
         f"struct('{col}' as feature, "
         f"coalesce(cast(`{col}` as string), '__null__') as bin)"
-        for col in categorical or []
+        for col in categorical
     ]
     return df.selectExpr(
         *[f"`{c}`" for c in extra_cols],
@@ -286,8 +271,6 @@ def binned_features(
 def psi_from_counts(
     counts: DataFrame,
     *,
-    epsilon: float = 1e-6,
-    threshold: float = 0.2,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """PSI from pre-aggregated bin counts ``(*group_cols, feature,
@@ -297,7 +280,7 @@ def psi_from_counts(
     batch by construction, not by parallel implementation).
 
     An EMPTY side (no reference rows / no current rows) must not
-    0/0-NaN the shares: its every bin share floors to epsilon, so
+    0/0-NaN the shares: its every bin share floors to PSI_EPSILON, so
     PSI degenerates to "everything changed" — large and drifted,
     the sensible verdict — identically in both engines.
     """
@@ -305,7 +288,7 @@ def psi_from_counts(
     totals = counts.groupBy(*gcols).agg(
         F.sum("ref_n").alias("_rt"), F.sum("cur_n").alias("_ct")
     )
-    eps = f"{float(epsilon)!r}D"
+    eps = f"{PSI_EPSILON!r}D"
     p = (
         "greatest(case when _rt > 0 then ref_n / _rt else 0.0D end, "
         f"{eps})"
@@ -322,7 +305,7 @@ def psi_from_counts(
             F.expr(f"round(sum({term}), 6) as psi"),
             F.expr("cast(count(1) as bigint) as n_bins"),
         )
-        .withColumn("drifted", F.col("psi") > F.lit(threshold))
+        .withColumn("drifted", F.col("psi") > F.lit(PSI_THRESHOLD))
     )
 
 
@@ -450,9 +433,6 @@ def ks_drift(
     cur: DataFrame,
     value_col: str,
     group_cols: Sequence[str],
-    *,
-    c_alpha: float = 1.358,
-    round_to: int = 6,
 ) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov drift gate between two snapshots,
     per group — the sup-norm ECDF complement to :func:`psi_drift`:
@@ -468,10 +448,10 @@ def ks_drift(
     exact on doubles in every engine, and the ECDF cumulative sums are
     integer-exact, so the only float ops are one division and one abs
     per grid row (deterministic IEEE, no accumulation-order
-    sensitivity). Verdict: ``ROUND(D) > ROUND(c_alpha *
-    sqrt((n1+n2)/(n1*n2)))`` — the large-sample rejection bound
-    (c = 1.358 at alpha = 0.05), both sides rounded BEFORE comparing
-    so the boolean cannot diverge cross-engine.
+    sensitivity). Verdict: ``ROUND(D, 6) > ROUND(1.358 *
+    sqrt((n1+n2)/(n1*n2)), 6)`` — the large-sample rejection bound at
+    alpha = 0.05, both sides rounded BEFORE comparing so the boolean
+    cannot diverge cross-engine.
 
     Contract: NULL values are excluded (an ECDF is over observed
     values; route NULL-share drift through :func:`psi_drift`'s
@@ -528,7 +508,7 @@ def ks_drift(
         F.sum("_ref_n").over(w_tot).cast("long").alias("n_ref"),
         F.sum("_cur_n").over(w_tot).cast("long").alias("n_cur"),
     )
-    crit = F.lit(c_alpha) * F.sqrt(
+    crit = F.lit(1.358) * F.sqrt(
         (F.col("n_ref") + F.col("n_cur"))
         / (F.col("n_ref") * F.col("n_cur"))
     )
@@ -553,11 +533,8 @@ def ks_drift(
             *gcols,
             "n_ref",
             "n_cur",
-            F.round(F.col("_d"), round_to).alias("d_stat"),
-            F.round(crit, round_to).alias("d_crit"),
-            (
-                F.round(F.col("_d"), round_to)
-                > F.round(crit, round_to)
-            ).alias("drifted"),
+            F.round(F.col("_d"), 6).alias("d_stat"),
+            F.round(crit, 6).alias("d_crit"),
+            (F.round(F.col("_d"), 6) > F.round(crit, 6)).alias("drifted"),
         )
     )

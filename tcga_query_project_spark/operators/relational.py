@@ -124,11 +124,11 @@ def ragged_export(
     groups: list[str],
     value_col: str,
     order: list[Column],
-    prefix: str = "",
 ) -> DataFrame:
     """R2: the reference's ``cbind.fill`` ragged column-bind
     (vital_status_DESeq.R:147-168): unequal-length per-group value
-    vectors padded with NULL and laid side by side for CSV export.
+    vectors padded with NULL and laid side by side for CSV export, one
+    ``v_<group>`` column per group.
 
     Relational reconstruction: row_number within group, then pivot groups
     into columns keyed by row_number. Export-shape-only op — lives at the
@@ -142,7 +142,7 @@ def ragged_export(
         F.row_number().over(w).cast("long").alias("rn"),
     )
     return (
-        pivot_wide(numbered, "rn", group_col, groups, F.first(value_col), prefix)
+        pivot_wide(numbered, "rn", group_col, groups, F.first(value_col), "v_")
         .orderBy("rn")
     )
 

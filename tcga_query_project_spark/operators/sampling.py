@@ -276,7 +276,6 @@ def pps_systematic_sample(
     k: int,
     *,
     salt: str = "pps",
-    carry_cols: tuple[str, ...] = (),
     block_size: int = 1 << 20,
     superblock_factor: int = 1 << 12,
 ) -> DataFrame:
@@ -323,8 +322,8 @@ def pps_systematic_sample(
     already collects (``return_total``), so no second corpus scan and
     no cross-join — total and rotation are plan literals.
 
-    Returns ``(key_col, *carry_cols, weight, cum_weight, n_hits)``
-    filtered to sampled rows (``n_hits ≥ 1``).
+    Returns ``(key_col, weight, cum_weight, n_hits)`` filtered to
+    sampled rows (``n_hits ≥ 1``).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -333,7 +332,7 @@ def pps_systematic_sample(
         F.coalesce(F.col(weight_col).cast("long"), F.lit(0)), F.lit(0)
     )
     base = df.filter(F.col(key_col).isNotNull()).select(
-        F.col(key_col), *[F.col(c) for c in carry_cols], wt.alias("_w")
+        F.col(key_col), wt.alias("_w")
     )
     packed, total = pack_shards(
         base,
@@ -341,14 +340,12 @@ def pps_systematic_sample(
         "_w",
         budget=1 << 62,  # shard column unused; one bin
         block_size=block_size,
-        carry_cols=carry_cols,
         superblock_factor=superblock_factor,
         return_total=True,  # grand total falls out of the roll-up —
         # a separate agg would rescan the whole input (review finding)
     )
     cum = packed.select(
         key_col,
-        *carry_cols,
         F.col("n_tokens").alias("weight"),
         F.col("cum_tokens").alias("cum_weight"),
     )
@@ -390,7 +387,6 @@ def dsir_select(
     target_col: str,
     k: int,
     n_buckets: int = 1024,
-    salt: str = "dsir",
 ) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al. 2023,
     NeurIPS — DSIR): score every document by how much more likely its
@@ -417,7 +413,7 @@ def dsir_select(
     uniform distribution (ratio well-defined), so no guard is needed.
 
     Gumbel-top-k: ``key = round(log_w, 6) + round(g, 6)`` re-rounded to
-    6, with ``g = -ln(-ln(u))`` and ``u = (md5_prefix(salt||id) + 0.5)
+    6, with ``g = -ln(-ln(u))`` and ``u = (md5_prefix('dsir'||id) + 0.5)
     / 2^32`` — u is an EXACT dyadic rational on both engines, so the
     only cross-engine noise is 1-ulp ln, absorbed by the rounding
     grid. ``selected`` marks the top ``k`` keys (doc_id tiebreak).
@@ -515,7 +511,7 @@ def dsir_select(
         )
     )
     u = (
-        md5_prefix_long(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+        md5_prefix_long(F.concat(F.lit("dsir"), F.col(id_col).cast("string")))
         .cast("double")
         + 0.5
     ) / float(1 << 32)

@@ -24,18 +24,17 @@ def approx_profile(
     group_col: str,
     distinct_col: str,
     value_col: str,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Per-group approximate profile: HLL distinct count + quartiles.
 
     One hash aggregation, all sketch state mergeable map-side — the
-    shuffle carries sketches, not rows. ``accuracy`` is
-    percentile_approx's inverse-epsilon (10000 → ~0.01% rank error).
+    shuffle carries sketches, not rows. percentile_approx runs at
+    accuracy 10000 (inverse epsilon: ~0.01% rank error).
     """
     return df.groupBy(group_col).agg(
         F.approx_count_distinct(distinct_col).alias("approx_distinct"),
         F.percentile_approx(
-            value_col, [0.25, 0.5, 0.75], accuracy
+            value_col, [0.25, 0.5, 0.75], 10000
         ).alias("approx_quartiles"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )

@@ -115,7 +115,6 @@ def vst_fitted(
     gene: str,
     sample: str,
     value: str,
-    round_intermediates: int | None = None,
 ) -> DataFrame:
     """A7 (v2): dispersion-aware variance-stabilizing transform — the
     shape of DESeq2's parametric VST (``vst(data, blind=F)``,
@@ -142,10 +141,10 @@ def vst_fitted(
 
     Returns ``(gene, sample, normalized_count, vst)``.
 
-    ``round_intermediates``: round per-gene mu/alpha to this many
-    decimals before the trend fit — pins the alpha>0 gene set and the
-    regression inputs across engines so the DuckDB oracle agrees
-    exactly (catalog determinism conventions); None = full precision.
+    Per-gene mu/alpha are rounded to 8 decimals before the trend fit —
+    that pins the alpha>0 gene set and the regression inputs across
+    engines so the DuckDB oracle agrees exactly (catalog determinism
+    conventions).
 
     LAZY: the trend fit rides the SAME action as the
     transform — the one-row coefficient table enters as a broadcast
@@ -178,13 +177,10 @@ def vst_fitted(
         F.expr("var_samp(_q) AS _s2"),
         F.expr("avg(_inv_sf) AS _xi"),
     )
-    alpha_s = "greatest((_s2 - (_mu * _xi)) / (_mu * _mu), 0.0D)"
-    mu_s = "_mu"
-    if round_intermediates is not None:
-        alpha_s = f"round({alpha_s}, {int(round_intermediates)})"
-        mu_s = f"round({mu_s}, {int(round_intermediates)})"
     disp = per_gene.selectExpr(
-        gq, f"{mu_s} AS _mu", f"{alpha_s} AS _alpha"
+        gq,
+        "round(_mu, 8) AS _mu",
+        "round(greatest((_s2 - (_mu * _xi)) / (_mu * _mu), 0.0D), 8) AS _alpha",
     ).filter("_mu > 0 AND _alpha IS NOT NULL")
     # least-squares alpha ~ a0 + a1 * (1/mu) over genes with alpha > 0.
     # a1 clamped >= 0: DESeq2's parametric trend enforces positive
@@ -300,7 +296,6 @@ def bh_adjust(
     p: str,
     partition_cols: list[str],
     tiebreak: Column,
-    out: str = "padj",
 ) -> DataFrame:
     """Benjamini-Hochberg adjusted p-values — the ``padj`` column the
     reference reads off ``results()`` (A6 component;
@@ -334,7 +329,7 @@ def bh_adjust(
         df.withColumn("_rank", F.row_number().over(w_rank).cast("double"))
         .withColumn("_n_tests", F.count(p).over(w_n).cast("double"))
         .withColumn(
-            out,
+            "padj",
             F.when(
                 F.col(p).isNotNull(),
                 F.least(

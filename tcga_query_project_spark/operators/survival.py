@@ -26,21 +26,18 @@ def ntile_strata(
     n: int,
     partition_cols: list[str],
     tiebreak: Column,
-    keep_extremes_only: bool = True,
-    out: str = "stratum",
-    strict: bool = False,
 ) -> DataFrame:
     """W1 + P9: quantile stratification — ``ntile(km_plot[gene], n)``
     (surv_analysis_median_exp.R:131-141, drug_km_median_exp.R:105-108).
 
     n=2 is the median split; for n>2 only tiles 1 and n are kept
     (``keep <- which(tmp %in% 1 | tmp %in% n)``,
-    surv_analysis_median_exp.R:139-140), labeled LOW/HIGH
-    (:141). ``tiebreak`` makes the ordering total — ntile bucket
-    membership on ties is otherwise engine-dependent
+    surv_analysis_median_exp.R:139-140), labeled LOW/HIGH in
+    ``stratum`` (:141). ``tiebreak`` makes the ordering total — ntile
+    bucket membership on ties is otherwise engine-dependent
     (SURVEY.md §7 hard-part #4).
 
-    ``strict=True`` turns that precondition into a RUNTIME guard: if
+    A RUNTIME guard enforces that precondition: if
     any two rows in a partition share the full ``(value, tiebreak)``
     order key, the job fails with a descriptive error instead of
     silently emitting an engine-dependent stratum. Implemented as a
@@ -56,47 +53,39 @@ def ntile_strata(
     unaffected."""
     w = Window.partitionBy(*partition_cols).orderBy(F.col(value).asc(), tiebreak)
     tiled = df.withColumn("_tile", F.ntile(n).over(w))
-    if strict:
-        # rank < row_number over the FULL (value, tiebreak) ordering
-        # marks every non-first row of a duplicate-key group (ties are
-        # contiguous, so such a row duplicates its immediate
-        # predecessor). The probe works for ANY tiebreak expression —
-        # including SortOrder columns like F.col(x).asc(), which lag/
-        # lead cannot take as input. The whole-partition max carries
-        # (one of) the duplicated values to EVERY row of the partition
-        # — computed BEFORE the extremes filter, so the surviving
-        # tile-1/tile-n rows raise no matter where the duplicates sat
-        # (tile 1 is never empty for a nonempty partition).
-        dup_row = F.rank().over(w) != F.row_number().over(w)
-        w_all = w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        tiled = tiled.withColumn(
-            "_dup_val",
-            F.max(F.when(dup_row, F.col(value))).over(w_all),
-        )
-    if keep_extremes_only:
-        tiled = tiled.filter(F.col("_tile").isin(1, n))
+    # rank < row_number over the FULL (value, tiebreak) ordering marks
+    # every non-first row of a duplicate-key group (ties are contiguous,
+    # so such a row duplicates its immediate predecessor). The probe
+    # works for ANY tiebreak expression — including SortOrder columns
+    # like F.col(x).asc(), which lag/lead cannot take as input. The
+    # whole-partition max carries (one of) the duplicated values to
+    # EVERY row of the partition — computed BEFORE the extremes filter,
+    # so the surviving tile-1/tile-n rows raise no matter where the
+    # duplicates sat (tile 1 is never empty for a nonempty partition).
+    dup_row = F.rank().over(w) != F.row_number().over(w)
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    tiled = tiled.withColumn(
+        "_dup_val", F.max(F.when(dup_row, F.col(value))).over(w_all)
+    ).filter(F.col("_tile").isin(1, n))
     label = (
         F.when(F.col("_tile") == 1, F.lit("LOW"))
         .when(F.col("_tile") == n, F.lit("HIGH"))
         .otherwise(F.lit("MID"))
     )
-    if strict:
-        label = F.when(
-            F.col("_dup_val").isNotNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "ntile_strata(strict=True): duplicate (value, "
-                        "tiebreak) order key within a partition — ntile "
-                        "assignment would be engine-dependent; value="
-                    ),
-                    F.col("_dup_val").cast("string"),
-                )
-            ),
-        ).otherwise(label)
-    return tiled.withColumn(out, label).drop("_tile", "_dup_val")
+    label = F.when(
+        F.col("_dup_val").isNotNull(),
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    "ntile_strata(strict=True): duplicate (value, "
+                    "tiebreak) order key within a partition — ntile "
+                    "assignment would be engine-dependent; value="
+                ),
+                F.col("_dup_val").cast("string"),
+            )
+        ),
+    ).otherwise(label)
+    return tiled.withColumn("stratum", label).drop("_tile", "_dup_val")
 
 
 def quantile_strata(
@@ -104,9 +93,6 @@ def quantile_strata(
     value: str,
     n: int,
     partition_cols: list[str],
-    decimals: int = 2,
-    keep_extremes_only: bool = True,
-    out: str = "stratum",
 ) -> DataFrame:
     """Scale-safe n-tile stratification, replacing :func:`ntile_strata`
     as the 100 TB path (surv_analysis_median_exp.R:131-141 semantics;
@@ -114,8 +100,8 @@ def quantile_strata(
     funnels corpus/|keys| rows through ONE sort task — the only
     superlinear query in BENCH_SCALE at 10x data).
 
-    Explicit deterministic tie rule (inverse CDF on the ``decimals``-
-    rounded value grid), cross-engine portable — unlike
+    Explicit deterministic tie rule (inverse CDF on the value grid
+    rounded to 2 decimals), cross-engine portable — unlike
     percentile_approx, whose sketch state no other engine can replay:
 
     - per group, ``t_low`` = smallest rounded value whose cumulative
@@ -123,7 +109,9 @@ def quantile_strata(
       ``ceil((n-1)·N/n)`` (integer arithmetic: ``(N+n-1) div n`` /
       ``((n-1)·N+n-1) div n`` — no float thresholds);
     - LOW ⇔ rounded value ≤ ``t_low`` (ties at the boundary ALL go
-      low); HIGH ⇔ rounded value > ``t_high`` (boundary ties go MID);
+      low); HIGH ⇔ rounded value > ``t_high`` (boundary ties go MID,
+      and MID rows drop: only the LOW/HIGH extremes are kept, in
+      ``stratum``);
     - NULL values are LOW — matching ntile's nulls-first ascending
       order (tile 1), so a null-valued subject's stratum does not flip
       when swapping implementations. Groups with NO non-null values
@@ -139,12 +127,12 @@ def quantile_strata(
 
     Execution shape — every stage bounded regardless of corpus size:
 
-    1. histogram ``groupBy(group, round(value, decimals))`` — a
+    1. histogram ``groupBy(group, round(value, 2))`` — a
        MERGEABLE count aggregation (map-side partials); the shuffle
        carries distinct (group, grid value) pairs, not rows;
     2. cumulative window over the HISTOGRAM partitioned by group —
        partition size = distinct grid values per group, bounded by the
-       value range × 10^decimals (the grid is the scale lever:
+       value range × 10^2 (the grid is the scale lever:
        coarser grid → smaller histogram, boundary moves by at most one
        grid step), never by row count;
     3. per-group boundary aggregate (one row per group) broadcast back
@@ -153,7 +141,7 @@ def quantile_strata(
     """
     if n < 2:
         raise ValueError(f"quantile_strata: n must be >= 2, got {n}")
-    v = F.round(F.col(value), decimals)
+    v = F.round(F.col(value), 2)
     hist = (
         df.filter(F.col(value).isNotNull())
         .groupBy(*partition_cols, v.alias("_v"))
@@ -193,21 +181,19 @@ def quantile_strata(
         .join(F.broadcast(bounds_k), "_sk")
         .drop("_sk")
     ).withColumn(
-        out,
+        "stratum",
         F.when(
             F.col(value).isNull()
-            | (F.round(F.col(value), decimals) <= F.col("_t_low")),
+            | (F.round(F.col(value), 2) <= F.col("_t_low")),
             F.lit("LOW"),
         )
         .when(
-            F.round(F.col(value), decimals) > F.col("_t_high"),
+            F.round(F.col(value), 2) > F.col("_t_high"),
             F.lit("HIGH"),
         )
         .otherwise(F.lit("MID")),
     )
-    if keep_extremes_only:
-        labeled = labeled.filter(F.col(out) != "MID")
-    return labeled.drop("_t_low", "_t_high")
+    return labeled.filter(F.col("stratum") != "MID").drop("_t_low", "_t_high")
 
 
 def km_curve(

@@ -30,7 +30,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     payload_cols: list[str],
-    tolerance: Column | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """Left as-of join: every ``left`` row gains the ``payload_cols`` of
@@ -54,12 +53,11 @@ def asof_join(
     (key, ts) whenever duplicates are possible (the catalog queries
     do).
 
-    ``tolerance``: optional max |left.ts − match.ts|; matches farther
-    away null out. Units: epoch MICROSECONDS when the ts columns are
-    timestamps, else the columns' own numeric units — time arithmetic
-    here is exact-integer for timestamps (a ``double`` epoch-seconds
-    cast has ~0.24 µs of FP granularity at current epochs, enough to
-    flip a nearest-tie).
+    The nearest pick compares distances in epoch MICROSECONDS when the
+    ts columns are timestamps, else in the columns' own numeric units —
+    time arithmetic here is exact-integer for timestamps (a ``double``
+    epoch-seconds cast has ~0.24 µs of FP granularity at current
+    epochs, enough to flip a nearest-tie).
 
     All directions stay one shuffle: forward is the backward pass on
     the reversed (ts, side) ordering; nearest evaluates both running
@@ -162,18 +160,6 @@ def asof_join(
         f"{asof} AS _asof",
     )
     out = carried.filter(F.col("_side") == 1).drop("_side")
-    if tolerance is not None:
-        out = out.withColumn(
-            "_asof",
-            F.when(
-                F.abs(
-                    F.expr(_num(q(left_ts)))
-                    - F.expr(_num("_asof._ts"))
-                )
-                <= tolerance,
-                F.col("_asof"),
-            ),
-        )
     return out.selectExpr(
         *[q(c) for c in left.columns],
         "_asof._ts AS asof_ts",
@@ -496,11 +482,6 @@ def maintain_grouped_agg(
     base_agg: DataFrame,
     log: DataFrame,
     group_cols: list[str],
-    *,
-    op_col: str = "op",
-    before_prefix: str = "before_",
-    after_prefix: str = "after_",
-    value_col: str = "x",
 ) -> DataFrame:
     """Incremental maintenance of a grouped count/sum/avg aggregate
     from a CDC change log — the materialized-view maintenance step of
@@ -538,21 +519,17 @@ def maintain_grouped_agg(
     full-outer merge with the base aggregate (group-cardinality-sized
     on both sides). No window, no fact scan.
     """
-    retract = log.filter(F.col(op_col).isin("U", "D")).select(
-        *[
-            F.col(before_prefix + g).alias(g) for g in group_cols
-        ],
+    retract = log.filter(F.col("op").isin("U", "D")).select(
+        *[F.col("before_" + g).alias(g) for g in group_cols],
         F.lit(-1).cast("long").alias("_dc"),
-        (-F.col(before_prefix + value_col)
-         .isNotNull().cast("long")).alias("_dcx"),
-        (-F.col(before_prefix + value_col)).alias("_dx"),
+        (-F.col("before_x").isNotNull().cast("long")).alias("_dcx"),
+        (-F.col("before_x")).alias("_dx"),
     )
-    add = log.filter(F.col(op_col).isin("I", "U")).select(
-        *[F.col(after_prefix + g).alias(g) for g in group_cols],
+    add = log.filter(F.col("op").isin("I", "U")).select(
+        *[F.col("after_" + g).alias(g) for g in group_cols],
         F.lit(1).cast("long").alias("_dc"),
-        F.col(after_prefix + value_col)
-        .isNotNull().cast("long").alias("_dcx"),
-        F.col(after_prefix + value_col).alias("_dx"),
+        F.col("after_x").isNotNull().cast("long").alias("_dcx"),
+        F.col("after_x").alias("_dx"),
     )
     delta = (
         retract.unionByName(add)
@@ -619,14 +596,16 @@ def grouped_agg_snapshot(
     )
 
 
+#: Conversion window of :func:`funnel`: 7 days in epoch microseconds.
+FUNNEL_SPAN_US = 604_800_000_000
+
+
 def funnel(
     events: DataFrame,
     user_col: str,
     ts_col: str,
     type_col: str,
     stages: list[str],
-    *,
-    max_span_us: int | None = None,
 ) -> DataFrame:
     """K-stage event funnel (signup -> click -> purchase ...): for each
     user who performed stage 1, the EARLIEST strictly-increasing chain
@@ -635,8 +614,8 @@ def funnel(
 
     Semantics, stated precisely: ``t1`` is the user's first stage-1
     event; ``t_i`` is the first stage-i event strictly AFTER
-    ``t_(i-1)``; a user converts when every stage matched and, with
-    ``max_span_us``, ``t_k - t1 <= max_span_us``. Earliest-chain is
+    ``t_(i-1)``; a user converts when every stage matched and
+    ``t_k - t1 <= FUNNEL_SPAN_US`` (7 days). Earliest-chain is
     deterministic and engine-portable; it is the strict variant of
     funnel matching (a user whose only full chain starts at a LATER
     stage-1 occurrence does not convert — the standard trade the
@@ -684,9 +663,7 @@ def funnel(
     for i in range(2, k + 1):
         completed = completed + F.col(f"t{i}_us").isNotNull().cast("int")
     last = F.col(f"t{k}_us")
-    conv = last.isNotNull()
-    if max_span_us is not None:
-        conv = conv & (last - F.col("t1_us") <= F.lit(int(max_span_us)))
+    conv = last.isNotNull() & (last - F.col("t1_us") <= F.lit(FUNNEL_SPAN_US))
     return cur.select(
         F.col("_u").alias(user_col),
         *[F.col(f"t{i}_us") for i in range(1, k + 1)],

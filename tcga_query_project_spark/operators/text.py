@@ -22,6 +22,16 @@ def tokens(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
+def norm_tokens_sql(text_col: str) -> str:
+    """SQL form of ``tokens(dedup.normalized_text(col))`` — one parsed
+    expression instead of a py4j Column chain; identical semantics."""
+    return (
+        "split(trim(lower(regexp_replace(trim(`"
+        + text_col
+        + "`), '\\\\s+', ' '))), '\\\\s+')"
+    )
+
+
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
 
 
@@ -226,7 +236,6 @@ def bigram_backoff_score(
     id_col: str,
     text_col: str,
     model_col: str,
-    alpha: float = 0.4,
 ) -> DataFrame:
     """Per-document Stupid-Backoff bigram LM score (Brants et al. 2007,
     "Large Language Models in Machine Translation" §4) — the second LM
@@ -319,7 +328,7 @@ def bigram_backoff_score(
     uni_prev = uni.select(
         F.col("_w").alias("_wp"), F.col("_uc").alias("_ucp")
     )
-    a = F.lit(float(alpha))
+    a = F.lit(0.4)
     # NO forced broadcast on `big`: distinct bigrams grow roughly
     # linearly with corpus tokens (Heaps-like), not vocabulary-sized —
     # a hint would bypass AQE's size check and OOM at scale. AQE still
@@ -353,7 +362,6 @@ def ctfidf_top_terms(
     df: DataFrame,
     class_col: str,
     text_col: str,
-    top_n: int = 10,
 ) -> DataFrame:
     """Class-based TF-IDF (the c-TF-IDF of BERTopic, Grootendorst
     2022): the most DISTINCTIVE terms per class — the standard way to
@@ -369,7 +377,7 @@ def ctfidf_top_terms(
     term scores high when frequent in the class and rare elsewhere.
     NULL class is a class like any other (groupBy semantics).
 
-    Output: ``(class_col, term, ctfidf, rank)`` — the ``top_n`` ranked
+    Output: ``(class_col, term, ctfidf, rank)`` — the 10 top-ranked
     terms per class, rank by (ROUNDED score DESC, term ASC) so the
     cut is engine-portable; ``ctfidf`` rounded 6.
 
@@ -421,7 +429,7 @@ def ctfidf_top_terms(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= int(top_n))
+        .filter(F.col("rank") <= 10)
         .select(class_col, "term", "ctfidf", "rank")
     )
 
@@ -456,17 +464,22 @@ def tfidf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+#: Okapi BM25 term-frequency saturation and length normalization.
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
 def bm25_scores(
     df: DataFrame,
     id_col: str,
     text_col: str,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Okapi BM25 ranking of documents against a bag of query terms:
 
     ``score(d) = Σ_t idf(t) · tf · (k1+1) / (tf + k1·(1−b+b·len_d/avg_len))``
+
+    with the usual ``k1 = BM25_K1`` and ``b = BM25_B``,
 
     with the standard idf ``ln(1 + (N − df + 0.5)/(df + 0.5))``. The
     query is literal-sized, so it broadcasts; output is one row per
@@ -532,10 +545,10 @@ def bm25_scores(
             + (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
         )
     )
-    norm = F.col("tf") + k1 * (
-        1.0 - b + b * F.col("_len") / F.col("_avg_len")
+    norm = F.col("tf") + BM25_K1 * (
+        1.0 - BM25_B + BM25_B * F.col("_len") / F.col("_avg_len")
     )
-    contrib = idf * F.col("tf") * (k1 + 1.0) / norm
+    contrib = idf * F.col("tf") * (BM25_K1 + 1.0) / norm
     return (
         matched.join(F.broadcast(dfreq), "term")
         .join(doclen, id_col)
@@ -597,10 +610,7 @@ def repetition_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # inlined the same trees, so the analyzed plan — and every output
     # bit — is unchanged.
     idq, tq = f"`{id_col}`", f"`{text_col}`"
-    norm_toks = (
-        f"split(trim(lower(regexp_replace(trim({tq}), '\\\\s+', ' ')))"
-        ", '\\\\s+')"
-    )
+    norm_toks = norm_tokens_sql(text_col)
 
     # --- per-row line-duplication metrics (array expressions) ---
     srt = (
@@ -815,40 +825,31 @@ def chunk_documents(
 def build_vocab(
     df: DataFrame,
     text_col: str,
-    min_count: int = 1,
-    max_size: int | None = None,
 ) -> DataFrame:
     """Frequency vocabulary over the corpus: ``(token, freq,
-    vocab_id)`` with ids dense in (freq DESC, token ASC) order —
-    deterministic across engines and partitionings.
+    vocab_id)`` for the 100 most frequent tokens seen at least twice,
+    with ids dense in (freq DESC, token ASC) order — deterministic
+    across engines and partitionings.
 
     Scale shape: ONE corpus shuffle (the token-count hash aggregation,
-    map-side partials carry (token, partial_count)); the top-``max_size``
+    map-side partials carry (token, partial_count)); the top-100
     cut plans as TakeOrderedAndProject. The id-assigning window runs on
     the POST-LIMIT frame — a vocabulary is dimension-sized by
     definition (it must broadcast to every trainer worker anyway), so
-    the single-partition window is bounded by max_size, not the
-    corpus. ``max_size`` is therefore REQUIRED: min_count alone keeps
-    a corpus-scale share of distinct tokens and would funnel them
-    through the one-task window (the global-window anti-pattern
-    tests/test_plans.py bans).
+    the single-partition window is bounded by the size cap, not the
+    corpus: the minimum count alone keeps a corpus-scale share of
+    distinct tokens and would funnel them through the one-task window
+    (the global-window anti-pattern tests/test_plans.py bans).
     """
     from pyspark.sql.window import Window
 
-    if max_size is None:
-        raise ValueError(
-            "unbounded vocab: max_size is required (min_count alone "
-            "does not bound the id-assignment window)"
-        )
     tf = df.select(F.explode(tokens(F.col(text_col))).alias("token"))
     cnt = (
         tf.groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-        .filter(F.col("freq") >= min_count)
+        .filter(F.col("freq") >= 2)
     )
-    ordered = cnt.orderBy(F.col("freq").desc(), F.col("token").asc()).limit(
-        max_size
-    )
+    ordered = cnt.orderBy(F.col("freq").desc(), F.col("token").asc()).limit(100)
     w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
     return ordered.select(
         "token",
@@ -862,14 +863,13 @@ def remove_boilerplate_lines(
     id_col: str,
     text_col: str,
     min_docs: int = 3,
-    delimiter: str = "\n",
 ) -> DataFrame:
     """Cross-document repeated-LINE removal — the C4/RefinedWeb
     boilerplate pass that document-level dedup cannot do: navigation
     menus, cookie banners, license headers and signatures repeat
     across *different* pages whose documents are otherwise unique, so
     no whole-doc signature catches them. A line (trimmed,
-    ``delimiter``-split) occurring in at least ``min_docs`` DISTINCT
+    newline-split) occurring in at least ``min_docs`` DISTINCT
     documents is removed from every document; blank lines and the
     documents' own internal repetition are untouched (that is
     ``repetition_metrics``' Gopher territory).
@@ -895,7 +895,7 @@ def remove_boilerplate_lines(
     lines = df.select(
         F.col(id_col),
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), delimiter)
+            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
         ).alias("_pos", "_line"),
     ).withColumn("_key", F.md5(F.trim(F.col("_line"))))
     boiler = (
@@ -910,7 +910,7 @@ def remove_boilerplate_lines(
         tagged.groupBy(id_col)
         .agg(
             F.concat_ws(
-                delimiter,
+                "\n",
                 F.transform(
                     F.array_sort(
                         F.collect_list(

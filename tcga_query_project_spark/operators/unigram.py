@@ -61,6 +61,9 @@ MARKER = "▁"  # ▁
 #: totality: any string segments, unknown chars cost this much each).
 UNK_LOGPROB = -20.0
 
+#: Longest piece (in characters) the model seeds and Viterbi considers.
+MAX_PIECE_LEN = 8
+
 
 def _seed_vocab(
     hist: list[tuple[str, int]], seed_size: int, max_piece_len: int
@@ -235,28 +238,23 @@ def unigram_train(
     text_col: str,
     vocab_size: int = 400,
     *,
-    max_words: int = 50_000,
-    min_freq: int = 1,
-    max_piece_len: int = 8,
     seed_size: int = 4000,
-    em_rounds: int = 2,
-    shrink: float = 0.75,
 ) -> DataFrame:
     """Train the unigram LM: seed an over-complete substring vocabulary
-    from the word histogram, alternate EM with pruning (keep all
-    single characters + the top expected-count multi-char pieces,
-    shrinking by ``shrink`` per round) until ``vocab_size``, then run
-    ``em_rounds`` final EM passes. Returns ``(piece STRING, logprob
-    DOUBLE)`` — the tokenizer model.
+    (pieces up to ``MAX_PIECE_LEN`` characters) from the histogram of
+    the 50,000 most frequent words, alternate 2 EM rounds with pruning
+    (keep all single characters + the top expected-count multi-char
+    pieces, shrinking to 3/4 per round) until ``vocab_size``. Returns
+    ``(piece STRING, logprob DOUBLE)`` — the tokenizer model.
 
     The ONE corpus-sized job is the word histogram (module
     docstring); everything after runs on the collected dimension-sized
     histogram."""
     hist = [
         (r["word"], r["freq"])
-        for r in word_histogram(df, text_col, max_words, min_freq).collect()
+        for r in word_histogram(df, text_col, 50_000).collect()
     ]
-    lp = _seed_vocab(hist, seed_size, max_piece_len)
+    lp = _seed_vocab(hist, seed_size, MAX_PIECE_LEN)
     spark = df.sparkSession
     if not lp:
         # degenerate corpus (empty, or all-empty/whitespace texts):
@@ -270,11 +268,11 @@ def unigram_train(
     singles = {p for p in lp if len(p) == 1}
     target = max(vocab_size, len(singles))
     while True:
-        for _ in range(em_rounds):
-            lp, _ll = _em_round(hist, lp, max_piece_len)
+        for _ in range(2):
+            lp, _ll = _em_round(hist, lp, MAX_PIECE_LEN)
         if len(lp) <= target:
             break
-        keep_n = max(target, int(len(lp) * shrink))
+        keep_n = max(target, int(len(lp) * 0.75))
         multi = sorted(
             ((p, v) for p, v in lp.items() if len(p) > 1),
             key=lambda kv: (-kv[1], kv[0]),
@@ -297,7 +295,6 @@ def unigram_encode(
     model: DataFrame,
     id_col: str,
     text_col: str,
-    max_piece_len: int = 8,
 ) -> DataFrame:
     """Viterbi-tokenize each document under a trained model:
     ``(id_col, pieces ARRAY<STRING>, n_pieces BIGINT)``. Same plan
@@ -324,7 +321,7 @@ def unigram_encode(
         def enc_word(w: str) -> list[str]:
             got = memo.get(w)
             if got is None:
-                got = _viterbi(MARKER + w, model_lp, max_piece_len)
+                got = _viterbi(MARKER + w, model_lp, MAX_PIECE_LEN)
                 memo[w] = got
             return got
 

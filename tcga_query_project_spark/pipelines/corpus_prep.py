@@ -26,31 +26,22 @@ from tcga_query_project_spark.operators.text import doc_metrics
 
 def corpus_clean(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_quality: float = 0.4,
     langs: tuple[str, ...] = ("en",),
-    decontaminate_against: DataFrame | None = None,
-    decontaminate_threshold: float = 0.5,
     keep_text: bool = False,
 ) -> DataFrame:
-    """Cleaned corpus with per-document features.
+    """Cleaned corpus with per-document features, from ``(doc_id,
+    text)`` rows.
 
     Stages: (1) first-arrival-wins exact dedup on normalized content —
     ``row_number`` over the content key, min id kept; (2) one fused
     projection computing n_tokens / ttr / stopword_ratio /
     quality_score / pred_lang from a token array materialized ONCE
     (array-lambda inputs must be pre-materialized — an inlined
-    tokenizer re-runs per element); (3) declarative quality/language
-    filters, which Catalyst pushes against the feature projection;
-    (4, optional) eval-set decontamination: pass the benchmark/eval
-    documents as ``decontaminate_against`` (same id/text columns) and
-    every kept document that near-duplicates one at Jaccard ≥
-    ``decontaminate_threshold`` is anti-joined out
-    (operators/dedup.decontaminate — broadcast reference, one extra
-    corpus signature shuffle). Off by default; the oracle-checked
-    pp_corpus_clean query runs stages 1-3.
+    tokenizer re-runs per element); (3) declarative filters — quality
+    score ≥ 0.4 and a language in ``langs`` — which Catalyst pushes
+    against the feature projection.
     """
+    id_col, text_col = "doc_id", "text"
     # The dedup key is the md5 of the normalized content, not the
     # content itself: the shuffle then partitions/sorts on a fixed
     # 32-char key instead of arbitrary-length documents (a 128-bit
@@ -104,55 +95,37 @@ def corpus_clean(
         "split",
         split_label(F.col(id_col)),
     )
-    cleaned = feats.filter(
-        (F.col("quality_score") >= min_quality) & F.col("pred_lang").isin(*langs)
+    return feats.filter(
+        (F.col("quality_score") >= 0.4) & F.col("pred_lang").isin(*langs)
     )
-    if decontaminate_against is not None:
-        from tcga_query_project_spark.operators.dedup import decontaminate
 
-        contaminated = decontaminate(
-            kept,
-            decontaminate_against,
-            id_col,
-            text_col,
-            threshold=decontaminate_threshold,
-        ).select(F.col("corpus_id").alias(id_col)).distinct()
-        cleaned = cleaned.join(contaminated, id_col, "left_anti")
-    return cleaned
+
+#: Target domain mixture of the training corpus: detected language →
+#: sampling weight (sampling.sample_mixture).
+MIXTURE = {"en": 1.0, "fr": 1.5, "de": 0.5}
 
 
 def prepare_training_corpus(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_quality: float = 0.4,
-    langs: tuple[str, ...] = ("en",),
-    gopher: bool = True,
-    scrub: bool = True,
-    mixture: dict[str, float] | None = None,
     max_tokens: int = 1024,
-    stride: int | None = None,
     shard_budget: int = 1 << 20,
     block_size: int = 1 << 20,
-    decontaminate_against: DataFrame | None = None,
-    decontaminate_threshold: float = 0.5,
 ) -> DataFrame:
     """The FULL training-data path, raw corpus → trainer-ready shard
     plan, composing every corpus stage in the order a production
     pipeline runs them:
 
     1. exact dedup + fused quality/language features + filters
-       (:func:`corpus_clean` stages 1-3, one content shuffle);
+       (:func:`corpus_clean` over en/fr/de, one content shuffle);
     2. Gopher repetition gate (``passes_gopher`` — catches the
        machine-generated/boilerplate docs the quality score misses;
        one n-gram window exchange, see text.repetition_metrics);
     3. PII redaction of the surviving text (text.pii_scrub — free:
        fuses into the projection);
     4. domain-mixture re-weighting on the detected language
-       (``mixture`` maps pred_lang → weight; None keeps every doc
-       once) — map-only;
-    5. context-window chunking to ``max_tokens`` (text.chunk_documents
-       — narrow explode);
+       (``MIXTURE`` maps pred_lang → weight) — map-only;
+    5. context-window chunking to disjoint ``max_tokens`` windows
+       (text.chunk_documents — narrow explode);
     6. token-budget shard packing (sampling.pack_shards, distributed
        prefix-sum), carrying the chunk text so
        sources/io.write_training_shards can materialize directly.
@@ -176,41 +149,31 @@ def prepare_training_corpus(
     # keep_text=True: the cleaned frame carries the payload out of the
     # feature projection, so the old corpus-wide re-join by id (docs ⋈
     # cleaned — two exchanges of text at any scale) is gone.
-    base = corpus_clean(
-        docs, id_col, text_col, min_quality=min_quality, langs=langs,
-        decontaminate_against=decontaminate_against,
-        decontaminate_threshold=decontaminate_threshold,
-        keep_text=True,
-    ).select(id_col, "split", "pred_lang", text_col)
-    if gopher:
-        # metrics over the SURVIVORS only — the n-gram explode is the
-        # costliest stage, so docs already dropped by dedup/quality/
-        # language must not flow through it. The gate re-attaches as a
-        # broadcast ANTI join on the FAILERS (guide §8):
-        # repetition_metrics is total (a row per input, passes_gopher
-        # never NULL), so inner-join + filter(passes) ≡ anti-join on
-        # NOT passes — and the failer id list is the sparse side, so
-        # the corpus text no longer shuffles by id to meet the metrics.
-        fails = repetition_metrics(
-            base.select(id_col, text_col), id_col, text_col
-        ).filter(~F.col("passes_gopher")).select(id_col)
-        base = base.join(F.broadcast(fails), id_col, "left_anti")
-    if scrub:
-        # fused into the projection (pii_scrub_text expression) — a
-        # per-row regex rewrite must not cost a corpus self-join
-        base = base.withColumn(
-            text_col, pii_scrub_text(F.col(text_col))
-        )
-    if mixture is not None:
-        base = sample_mixture(base, "pred_lang", mixture, id_col)
-    else:
-        base = base.withColumn("copy_idx", F.lit(0).cast("long"))
+    id_col, text_col = "doc_id", "text"
+    base = corpus_clean(docs, langs=("en", "fr", "de"), keep_text=True).select(
+        id_col, "split", "pred_lang", text_col
+    )
+    # Gopher metrics over the SURVIVORS only — the n-gram explode is the
+    # costliest stage, so docs already dropped by dedup/quality/
+    # language must not flow through it. The gate re-attaches as a
+    # broadcast ANTI join on the FAILERS (guide §8):
+    # repetition_metrics is total (a row per input, passes_gopher
+    # never NULL), so inner-join + filter(passes) ≡ anti-join on
+    # NOT passes — and the failer id list is the sparse side, so
+    # the corpus text no longer shuffles by id to meet the metrics.
+    fails = repetition_metrics(
+        base.select(id_col, text_col), id_col, text_col
+    ).filter(~F.col("passes_gopher")).select(id_col)
+    base = base.join(F.broadcast(fails), id_col, "left_anti")
+    # PII scrub fused into the projection (pii_scrub_text expression) —
+    # a per-row regex rewrite must not cost a corpus self-join
+    base = base.withColumn(text_col, pii_scrub_text(F.col(text_col)))
+    base = sample_mixture(base, "pred_lang", MIXTURE, id_col)
     chunks = chunk_documents(
         base,
         id_col,
         text_col,
         max_tokens=max_tokens,
-        stride=stride,
         carry_cols=("copy_idx", "split", "pred_lang"),
     )
     # pack_shards consumes the chain twice (block-totals aggregate + the

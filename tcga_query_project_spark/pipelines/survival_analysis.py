@@ -56,7 +56,6 @@ def goi_normalized(
     expression: DataFrame,
     genes: DataFrame,
     goi: list[str],
-    min_total: float = 10.0,
 ) -> DataFrame:
     """Normalized expression for the genes of interest: A1 floor →
     A5 size factors (full cohort) → A7 normalize → J3 goi semi-join.
@@ -64,7 +63,7 @@ def goi_normalized(
     keep = (
         expression.groupBy("gene_id")
         .agg(F.sum("count").alias("_tot"))
-        .filter(F.col("_tot") >= min_total)
+        .filter(F.col("_tot") >= 10.0)
         .select("gene_id")
     )
     floored = expression.join(keep, "gene_id", "left_semi")
@@ -83,33 +82,21 @@ def km_by_median_expression(
     genes: DataFrame,
     samples: DataFrame,
     goi: list[str],
-    n_tiles: int = 2,
-    extra_keys: list[str] | None = None,
 ) -> dict[str, DataFrame]:
     """Entry point B composed end-to-end. Returns the four result
     shapes the reference plots: ``strata`` (subject-level, W1),
     ``curves`` (KM + Greenwood, W2/W5), ``medians`` (W4) and
     ``logrank`` (W3 per gene)."""
-    keys = list(extra_keys or [])
     km = km_table(samples)
     expr = goi_normalized(expression, genes, goi)
     joined = km.join(expr, "barcode")  # J2
     strata = survival.ntile_strata(
-        joined,
-        "normalized",
-        n_tiles,
-        [*keys, "gene_name"],
-        F.col("barcode").asc(),
-        strict=True,
+        joined, "normalized", 2, ["gene_name"], F.col("barcode").asc()
     )
-    curves = survival.km_curve(
-        strata, "time", "status", [*keys, "gene_name", "stratum"]
-    )
-    medians = survival.median_survival(
-        curves, "time", [*keys, "gene_name", "stratum"]
-    )
+    curves = survival.km_curve(strata, "time", "status", ["gene_name", "stratum"])
+    medians = survival.median_survival(curves, "time", ["gene_name", "stratum"])
     logrank = survival.logrank_test(
-        strata, "time", "status", "stratum", extra_partition=[*keys, "gene_name"]
+        strata, "time", "status", "stratum", extra_partition=["gene_name"]
     )
     return {
         "strata": strata,
@@ -148,7 +135,6 @@ def drug_km(
     samples: DataFrame,
     therapeutics: dict[str, list[str]],
     goi: list[str],
-    n_tiles: int = 2,
 ) -> dict[str, DataFrame]:
     """Entry point C composed end-to-end: for each drug class, restrict
     samples to treated participants (P7 semi-join on submitter_id),
@@ -215,12 +201,7 @@ def drug_km(
     )
     joined = km.join(normalized, ["drug_class", "barcode"])
     strata = survival.ntile_strata(
-        joined,
-        "normalized",
-        n_tiles,
-        ["drug_class", "gene_name"],
-        F.col("barcode").asc(),
-        strict=True,
+        joined, "normalized", 2, ["drug_class", "gene_name"], F.col("barcode").asc()
     )
     curves = survival.km_curve(
         strata, "time", "status", ["drug_class", "gene_name", "stratum"]

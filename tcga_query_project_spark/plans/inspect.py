@@ -93,11 +93,14 @@ def count_exchanges(df: DataFrame) -> int:
     AQE's reused/coalesced wrappers) — the number every extra groupBy /
     misaligned join pays for at scale."""
     # simple mode prints the partitioning inline with the node name
-    # (formatted mode splits it into an Arguments: line); ReusedExchange
-    # prints as its own operator, so each materialized shuffle counts once.
-    plan = formatted_plan(df, "simple")
-    return len(re.findall(r"\bExchange hashpartitioning", plan)) + len(
-        re.findall(r"\bExchange rangepartitioning", plan)
+    # (formatted mode splits it into an Arguments: line). A final plan
+    # prints a reuse as "ReusedExchange [...], Exchange hashpartitioning
+    # (...)" on one line; skipping those lines counts each materialized
+    # shuffle once.
+    return sum(
+        len(re.findall(r"\bExchange (?:hash|range)partitioning", line))
+        for line in formatted_plan(df, "simple").splitlines()
+        if "ReusedExchange" not in line
     )
 
 

@@ -204,17 +204,14 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_csv_single(df: DataFrame, path: str, null_fill: str | None = "") -> None:
+def write_csv_single(df: DataFrame, path: str) -> None:
     """S5 CSV sink with the reference's NA→"" blank-fill on export
     (P8; reference vital_status_DESeq.R:174-175).
 
     ``coalesce(1)`` reproduces the reference's single-file output shape;
     at cluster scale callers drop the coalesce and write sharded.
     """
-    out = df
-    if null_fill is not None:
-        out = out.na.fill(null_fill)
-    out.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
+    df.na.fill("").coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
 
 def write_training_shards(

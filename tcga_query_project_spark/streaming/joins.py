@@ -20,8 +20,6 @@ def enrich_with_scd2(
     dim: DataFrame,
     key: str,
     ts_col: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> DataFrame:
     """Point-in-time dimension enrichment for a stream: join each event
     to the SCD2 dimension version that was valid AT THE EVENT'S OWN
@@ -55,12 +53,12 @@ def enrich_with_scd2(
     left = stream.alias("_evt")
     d = dim.select(
         F.col(key).alias("_dimkey"),
-        F.col(valid_from).alias("_vf"),
-        F.col(valid_to).alias("_vt"),
+        F.col("valid_from").alias("_vf"),
+        F.col("valid_to").alias("_vt"),
         *[
             F.col(c)
             for c in dim.columns
-            if c not in (key, valid_from, valid_to)
+            if c not in (key, "valid_from", "valid_to")
         ],
     )
     ev_key = F.col(f"_evt.{key}")

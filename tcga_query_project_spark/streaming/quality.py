@@ -33,8 +33,8 @@ from tcga_query_project_spark.operators.quality_audit import (
 def baseline_counts(
     baseline: DataFrame,
     *,
-    numeric: dict[str, Sequence[float]] | None = None,
-    categorical: Sequence[str] | None = None,
+    numeric: dict[str, Sequence[float]],
+    categorical: Sequence[str],
 ) -> DataFrame:
     """Reference bin counts ``(feature, bin, ref_n)`` from the static
     baseline table — computed once, bin-cardinality-sized."""
@@ -48,9 +48,6 @@ def baseline_counts(
 def psi_report_for_batch(
     batch_counts: DataFrame,
     ref_counts: DataFrame,
-    *,
-    epsilon: float = 1e-6,
-    threshold: float = 0.2,
 ) -> DataFrame:
     """PSI per (window, feature) from a table of window bin counts
     ``(window_start_us, feature, bin, cur_n)``: expand the baseline across the batch's windows, OUTER-
@@ -72,9 +69,4 @@ def psi_report_for_batch(
             F.coalesce("cur_n", F.lit(0.0)).alias("cur_n"),
         )
     )
-    return psi_from_counts(
-        merged,
-        epsilon=epsilon,
-        threshold=threshold,
-        group_cols=["window_start_us"],
-    )
+    return psi_from_counts(merged, group_cols=["window_start_us"])

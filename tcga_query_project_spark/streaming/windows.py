@@ -17,9 +17,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _maybe_watermark(df: DataFrame, ts_col: str, watermark: str | None) -> DataFrame:
-    if watermark and df.isStreaming:
-        return df.withWatermark(ts_col, watermark)
+#: Event-time lateness a streaming aggregation tolerates before a
+#: window's state is finalized and evicted.
+WATERMARK = "10 minutes"
+
+
+def _maybe_watermark(df: DataFrame, ts_col: str) -> DataFrame:
+    if df.isStreaming:
+        return df.withWatermark(ts_col, WATERMARK)
     return df
 
 
@@ -29,12 +34,11 @@ def tumbling_agg(
     duration: str,
     keys: list[str],
     aggs: list[Column],
-    watermark: str | None = "10 minutes",
 ) -> DataFrame:
     """Tumbling-window aggregation: ``window(ts, duration)`` + groupBy.
     Epoch-aligned, timezone-free for sub-day durations. In streaming
     mode the watermark bounds state and handles late data."""
-    w = _maybe_watermark(df, ts_col, watermark)
+    w = _maybe_watermark(df, ts_col)
     return (
         w.groupBy(F.window(F.col(ts_col), duration).alias("_w"), *keys)
         .agg(*aggs)
@@ -50,11 +54,10 @@ def sliding_agg(
     slide: str,
     keys: list[str],
     aggs: list[Column],
-    watermark: str | None = "10 minutes",
 ) -> DataFrame:
     """Sliding (hopping) windows — each event lands in
     duration/slide windows; Spark expands them JVM-side."""
-    w = _maybe_watermark(df, ts_col, watermark)
+    w = _maybe_watermark(df, ts_col)
     return (
         w.groupBy(F.window(F.col(ts_col), duration, slide).alias("_w"), *keys)
         .agg(*aggs)
@@ -69,13 +72,12 @@ def session_agg(
     gap: str,
     keys: list[str],
     aggs: list[Column],
-    watermark: str | None = "10 minutes",
 ) -> DataFrame:
     """Session windows: events within ``gap`` of each other merge into
     one session per key (``session_window``). The batch-mode oracle is
     the classic gaps-and-islands SQL; the streaming mode is the same
     call with a watermark — state eviction is handled by Spark."""
-    w = _maybe_watermark(df, ts_col, watermark)
+    w = _maybe_watermark(df, ts_col)
     return (
         w.groupBy(F.session_window(F.col(ts_col), gap).alias("_w"), *keys)
         .agg(*aggs)

@@ -83,7 +83,7 @@ def test_resolve_entities_transitive_chain(spark):
     df = spark.createDataFrame([(n,) for n in names], "name string")
     got = {
         r["name"]: (r["canonical"], r["cluster_size"])
-        for r in fuzzy.resolve_entities(df, "name", 2).collect()
+        for r in fuzzy.resolve_entities(df, "name").collect()
     }
     assert got == {
         "bolt": ("bolt", 3),

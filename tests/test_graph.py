@@ -160,9 +160,7 @@ def test_dup_clusters_golden(spark):
         ],
         "doc_id long, text string",
     )
-    out = dedup.dup_clusters(
-        docs, "doc_id", "text", k=3, num_hashes=8, band_size=2, threshold=0.2
-    )
+    out = dedup.dup_clusters(docs, "doc_id", "text")
     rows = {r["doc_id"]: r for r in out.collect()}
     assert rows.keys() == {1, 2, 3, 10, 11, 50}
     assert [rows[i]["component"] for i in (1, 2, 3)] == [1, 1, 1]
@@ -187,9 +185,7 @@ def test_dup_clusters_keeper_partition_is_consistent(spark, tmp_path):
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("doc_id", "text")
     )
-    out = dedup.dup_clusters(
-        docs, "doc_id", "text", k=3, num_hashes=8, band_size=2, threshold=0.2
-    ).cache()
+    out = dedup.dup_clusters(docs, "doc_id", "text").cache()
     try:
         per_comp = out.groupBy("component").agg(
             F.countDistinct("keep_id").alias("nk"),
@@ -213,13 +209,13 @@ def test_clusters_from_pairs_embedding_source(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     pairs = dedup.embedding_near_dup(emb, "vec_id", "embedding", 0.35)
     pl = [(r["id_a"], r["id_b"]) for r in pairs.collect()]
-    out = dedup.clusters_from_pairs(emb, pairs, "vec_id")
+    out = dedup.clusters_from_pairs(emb, pairs, "vec_id", F.lit(0))
     rows = {r["vec_id"]: r for r in out.collect()}
     assert len(rows) == emb.count()
     ref = union_find_components(pl)
     for vid, r in rows.items():
         assert r["component"] == ref.get(vid, vid)
-        # weight_col=None -> keeper is the component label (min id)
+        # equal weights -> keeper is the component label (min id)
         assert r["keep_id"] == r["component"]
 
 
@@ -266,7 +262,7 @@ def _pagerank_dict(spark, edges, **kw) -> dict[int, float]:
 
 
 def test_pagerank_two_node_cycle_is_uniform(spark):
-    got = _pagerank_dict(spark, [(1, 2), (2, 1)], n_iter=5)
+    got = _pagerank_dict(spark, [(1, 2), (2, 1)])
     assert got == pytest.approx({1: 0.5, 2: 0.5})
 
 
@@ -274,9 +270,7 @@ def test_pagerank_star_concentrates_on_hub(spark):
     # 4 leaves all pointing at the hub; hub is dangling. With uniform
     # dangling redistribution rank stays a probability distribution and
     # the hub strictly dominates every leaf.
-    got = _pagerank_dict(
-        spark, [(1, 0), (2, 0), (3, 0), (4, 0)], n_iter=8
-    )
+    got = _pagerank_dict(spark, [(1, 0), (2, 0), (3, 0), (4, 0)])
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
     assert all(got[0] > got[leaf] for leaf in (1, 2, 3, 4))
     assert got[1] == pytest.approx(got[2])
@@ -295,11 +289,8 @@ def test_pagerank_matches_numpy_power_iteration(
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
     edges += edges[:5]  # duplicates
     edges.append((3, 3))  # self-loop (dropped by both)
-    want = numpy_pagerank(edges, damping=0.85, n_iter=7)
-    got = _pagerank_dict(
-        spark, edges, damping=0.85, n_iter=7,
-        local_threshold=local_threshold,
-    )
+    want = numpy_pagerank(edges, damping=0.85, n_iter=6)
+    got = _pagerank_dict(spark, edges, local_threshold=local_threshold)
     assert set(got) == set(want)
     for node, rank in want.items():
         assert got[node] == pytest.approx(rank, abs=1e-12), node

@@ -173,33 +173,31 @@ def test_ntile_strata_median_split(spark):
 
 
 def test_ntile_strata_strict_guards_duplicate_order_keys(spark):
-    """strict=True (round-10 verdict item 7): duplicate (value,
-    tiebreak) order keys must FAIL at runtime — ntile assignment on a
-    non-total order is engine-dependent — while unique keys (even with
-    tied values, disambiguated by the tiebreak) pass unchanged."""
+    """Duplicate (value, tiebreak) order keys must FAIL at runtime —
+    ntile assignment on a non-total order is engine-dependent — while
+    unique keys (even with tied values, disambiguated by the tiebreak)
+    pass."""
     import pytest as _pt
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
-    # tied values but unique tiebreak -> total order -> identical output
+    # tied values but unique tiebreak -> total order -> tiles by id
     df = spark.createDataFrame(
         [(i, float(i // 2)) for i in range(10)], "id int, v double"
     )
-    loose = survival.ntile_strata(df, "v", 2, [], F.col("id").asc())
-    strict = survival.ntile_strata(
-        df, "v", 2, [], F.col("id").asc(), strict=True
-    )
-    assert sorted(map(tuple, loose.collect())) == sorted(
-        map(tuple, strict.collect())
-    )
+    labs = {
+        r["id"]: r["stratum"]
+        for r in survival.ntile_strata(df, "v", 2, [], F.col("id").asc()).collect()
+    }
+    assert labs == {i: "LOW" if i < 5 else "HIGH" for i in range(10)}
     # duplicate full order key -> raise (even though values tie-broken
     # elsewhere): rows (1, 5.0) twice
     dup = spark.createDataFrame(
         [(1, 5.0), (1, 5.0), (2, 7.0), (3, 9.0)], "id int, v double"
     )
-    bad = survival.ntile_strata(dup, "v", 2, [], F.col("id").asc(), strict=True)
+    bad = survival.ntile_strata(dup, "v", 2, [], F.col("id").asc())
     with _pt.raises(SparkRuntimeException, match="duplicate"):
         bad.collect()
-    # boundary-straddling pair with keep_extremes_only and n=4: the
+    # boundary-straddling pair with n=4: the
     # second row of the pair lands in a dropped MID tile — the
     # SURVIVING first row must still carry the flag (lead probe)
     dup2 = spark.createDataFrame(
@@ -207,9 +205,7 @@ def test_ntile_strata_strict_guards_duplicate_order_keys(spark):
          (6, 6.0), (7, 7.0)],
         "id int, v double",
     )
-    bad2 = survival.ntile_strata(
-        dup2, "v", 4, [], F.col("id").asc(), strict=True
-    )
+    bad2 = survival.ntile_strata(dup2, "v", 4, [], F.col("id").asc())
     with _pt.raises(SparkRuntimeException, match="duplicate"):
         bad2.collect()
     # duplicate pair confined ENTIRELY to a dropped MID tile (n=4,
@@ -222,9 +218,7 @@ def test_ntile_strata_strict_guards_duplicate_order_keys(spark):
          (6, 6.0), (7, 7.0)],
         "id int, v double",
     )
-    bad3 = survival.ntile_strata(
-        dup3, "v", 4, [], F.col("id").asc(), strict=True
-    )
+    bad3 = survival.ntile_strata(dup3, "v", 4, [], F.col("id").asc())
     with _pt.raises(SparkRuntimeException, match="duplicate"):
         bad3.collect()
 
@@ -524,12 +518,6 @@ def test_quantile_strata_matches_ntile_when_tie_free(spark):
     out = {r["id"]: r["stratum"]
            for r in sv.quantile_strata(withnull, "v", 4, ["g"]).collect()}
     assert out[0] == "LOW" and 5 not in out
-    # keep_extremes_only=False labels the middle too
-    full = sv.quantile_strata(
-        tied, "v", 4, ["g"], keep_extremes_only=False
-    ).collect()
-    assert {r["stratum"] for r in full} == {"LOW", "MID", "HIGH"}
-    assert len(full) == 8
 
 
 def test_hash_split_bucket_engine_parity_and_proportions(spark):
@@ -663,7 +651,7 @@ def test_embedding_near_dup_empty_partner_blocks_no_duplicates(spark):
 
 
 def test_embedding_near_dup_bucketed_subset_with_high_recall(spark):
-    """The sign-LSH form at a pinned width (min_bits == max_bits): output
+    """The sign-LSH form at a pinned width (max_bits == 4, the floor): output
     is a subset of the exact all-pairs result with high recall of the
     planted pairs, each pair once."""
     from tcga_query_project_spark.operators import dedup
@@ -677,7 +665,7 @@ def test_embedding_near_dup_bucketed_subset_with_high_recall(spark):
         (r["id_a"], r["id_b"], r["cosine"])
         for r in dedup.embedding_near_dup_auto(
             df, "vec_id", "embedding", 0.95,
-            n_tables=4, min_bits=4, max_bits=4,
+            n_tables=4, max_bits=4,
         ).collect()
     }
     # approximate: never a false positive, and the sign-stable planted
@@ -707,7 +695,7 @@ def test_embedding_near_dup_auto_tunes_bits_and_stays_subset(spark):
         (r["id_a"], r["id_b"], r["cosine"])
         for r in dedup.embedding_near_dup_auto(
             df, "vec_id", "embedding", 0.95,
-            n_tables=2, target_occupancy=1, min_bits=4, max_bits=8,
+            n_tables=2, target_occupancy=1, max_bits=8,
         ).collect()
     }
     assert tuned <= expect
@@ -941,9 +929,7 @@ def test_decontaminate_cross_corpus(spark):
     ]
     corpus = spark.createDataFrame(train, "doc_id long, text string")
     reference = spark.createDataFrame(evals, "doc_id long, text string")
-    out = dedup.decontaminate(
-        corpus, reference, "doc_id", "text", threshold=0.5
-    ).collect()
+    out = dedup.decontaminate(corpus, reference, "doc_id", "text").collect()
     pairs = {(r["corpus_id"], r["reference_id"]): r["jaccard"] for r in out}
     assert (1, 100) in pairs          # near-dup across corpora caught
     # hand-check the exact jaccard: shingle sets of the two texts
@@ -1113,16 +1099,11 @@ def test_build_vocab_and_encode(spark):
         ],
         "doc_id long, text string",
     )
-    vocab = t.build_vocab(docs, "text", min_count=2, max_size=10)
+    vocab = t.build_vocab(docs, "text")
     rows = [(r["token"], r["freq"], r["vocab_id"]) for r in
             vocab.orderBy("vocab_id").collect()]
     # apple 3, banana 3 (tie -> alpha), cherry/durian freq 1 dropped
     assert rows == [("apple", 3, 0), ("banana", 3, 1)]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        t.build_vocab(docs, "text")  # unbounded
 
 
 def test_asof_join_directions(spark):
@@ -1434,15 +1415,6 @@ def test_dedup_index_build_query_append(spark, tmp_path):
     got = {(r["doc_id"], r["matched_id"]): r["est_jaccard"] for r in hits}
     assert (100, 1) in got and got[(100, 1)] == 1.0  # exact copy of A
     assert all(i != 101 for i, _ in got)             # novel doc clean
-
-    # append mode on the full builder would re-band the entire history
-    # every call (quadratic band growth)
-    import pytest
-
-    with pytest.raises(ValueError, match="mode='append' unsupported"):
-        dedup.build_dedup_index(
-            corpus, "doc_id", "text", idx, mode="append"
-        )
 
 
 def test_apply_cdc_merge_semantics(spark):
@@ -2239,16 +2211,16 @@ def test_funnel_span_boundary(spark):
 
     from tcga_query_project_spark.operators import temporal
 
+    # the 7-day conversion window is inclusive
     rows = [
-        (1, dt(2000, 1, 1, 0, 0), "a"), (1, dt(2000, 1, 1, 0, 10), "b"),
-        (2, dt(2000, 1, 1, 0, 0), "a"), (2, dt(2000, 1, 1, 0, 11), "b"),
+        (1, dt(2000, 1, 1, 0, 0), "a"), (1, dt(2000, 1, 8, 0, 0), "b"),
+        (2, dt(2000, 1, 1, 0, 0), "a"), (2, dt(2000, 1, 8, 0, 1), "b"),
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
     got = {
         r["user_id"]: bool(r["converted"])
         for r in temporal.funnel(
-            df, "user_id", "ts", "event_type", ["a", "b"],
-            max_span_us=600_000_000,  # exactly 10 minutes, inclusive
+            df, "user_id", "ts", "event_type", ["a", "b"]
         ).collect()
     }
     assert got == {1: True, 2: False}
@@ -2301,14 +2273,12 @@ def test_quantile_strata_null_partition_key_is_its_own_group(spark):
     rows = [("a", float(v)) for v in range(1, 9)]
     rows += [(None, float(v)) for v in range(1, 9)]
     df = spark.createDataFrame(rows, "g string, v double")
-    got = sv.quantile_strata(
-        df, "v", 4, ["g"], keep_extremes_only=False
-    ).collect()
+    got = sv.quantile_strata(df, "v", 4, ["g"]).collect()
     by_g = {}
     for r in got:
         by_g.setdefault(r["g"], []).append(r["stratum"])
-    assert len(by_g.get(None, [])) == 8  # nothing dropped
-    # NULL group gets the same LOW/MID/HIGH split as the named group
+    assert len(by_g.get(None, [])) == 4  # LOW 1,2 and HIGH 7,8 kept
+    # NULL group gets the same LOW/HIGH split as the named group
     from collections import Counter
 
     assert Counter(by_g[None]) == Counter(by_g["a"])
@@ -2564,8 +2534,8 @@ def test_resample_all_null_value_bucket_carries_null(spark):
 
 
 def test_jaccard_prefix_join_matches_brute_force(spark):
-    """PPJoin prefix filtering vs brute force on both element
-    universes (token sets and 3-shingle sets): exact same pair set —
+    """PPJoin prefix filtering vs brute force on 3-shingle sets:
+    exact same pair set —
     the no-false-negative guarantee LSH cannot make — plus empty/NULL
     docs never pairing and the doc_a < doc_b canonical order."""
     import itertools
@@ -2597,31 +2567,17 @@ def test_jaccard_prefix_join_matches_brute_force(spark):
                 want[(a, b)] = round(j, 6)
         return want
 
-    # token-set universe
-    tok_sets = {
-        i: set(t.lower().strip().split()) - {""} for i, t in docs if t
-    }
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.jaccard_prefix_join(df, "doc_id", "text", 0.6).collect()
-    }
-    assert got == brute(tok_sets, 0.6)
-    assert all(a < b for a, b in got)
-
-    # 3-shingle universe at a threshold whose binary form rounds UP
-    # (0.7): the ceil guard must not shorten the prefix
     def shingles(t):
         ts = t.lower().strip().split()
         return {" ".join(ts[i : i + 3]) for i in range(len(ts) - 2)}
 
     sh_sets = {i: shingles(t) for i, t in docs if t}
-    got_sh = {
+    got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.jaccard_prefix_join(
-            df, "doc_id", "text", 0.7, shingle_k=3
-        ).collect()
+        for r in dedup.jaccard_prefix_join(df, "doc_id", "text").collect()
     }
-    assert got_sh == brute(sh_sets, 0.7)
+    assert got == brute(sh_sets, 0.6)
+    assert all(a < b for a, b in got)
 
 
 def test_ctfidf_top_terms_matches_python(spark):
@@ -2642,7 +2598,7 @@ def test_ctfidf_top_terms_matches_python(spark):
     df = spark.createDataFrame(docs, "doc_id long, lang string, body string")
     out = [
         (r["lang"], r["term"], r["ctfidf"], r["rank"])
-        for r in text.ctfidf_top_terms(df, "lang", "body", top_n=2).collect()
+        for r in text.ctfidf_top_terms(df, "lang", "body").collect()
     ]
     tf = Counter()
     for _, lang, body in docs:

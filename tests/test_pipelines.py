@@ -229,38 +229,6 @@ def test_corpus_clean_dedups_filters_and_classifies(spark):
     assert r["quality_score"] >= 0.4
 
 
-def test_corpus_clean_decontamination_stage(spark):
-    """corpus_clean's optional stage 4: a kept, high-quality doc that
-    near-duplicates an eval doc is anti-joined out; everything else is
-    byte-identical to the undecontaminated run."""
-    from tcga_query_project_spark.pipelines.corpus_prep import corpus_clean
-
-    base = (
-        "the quick brown fox jumps over the lazy dog and then runs far "
-        "away into the quiet green forest before the early morning light"
-    )
-    other = (
-        "completely different high quality english text about cooking "
-        "fresh vegetables with olive oil herbs and a little sea salt"
-    )
-    docs = spark.createDataFrame(
-        [(1, base), (2, other)], "doc_id long, text string"
-    )
-    evals = spark.createDataFrame(
-        [(100, base + " today")], "doc_id long, text string"
-    )
-    plain = corpus_clean(docs)
-    decon = corpus_clean(docs, decontaminate_against=evals)
-    plain_ids = sorted(r["doc_id"] for r in plain.collect())
-    decon_rows = {r["doc_id"]: r for r in decon.collect()}
-    assert 1 in plain_ids and 2 in plain_ids
-    assert 1 not in decon_rows            # contaminated doc removed
-    assert 2 in decon_rows                # clean doc untouched
-    # surviving rows identical to the plain run's
-    plain_rows = {r["doc_id"]: r for r in plain.collect()}
-    assert decon_rows[2] == plain_rows[2]
-
-
 def test_prepare_training_corpus_end_to_end(spark):
     """Flagship composition: dedup -> quality/lang -> gopher gate ->
     PII scrub -> mixture -> chunk -> pack, on crafted docs where every
@@ -277,8 +245,7 @@ def test_prepare_training_corpus_end_to_end(spark):
     rows = [
         (1, good),
         (2, good),  # exact dup of 1 -> dropped (keeper is min id)
-        (3, "le chat est sur le toit et le chien dort la et le vent "
-            "souffle fort sur la maison pres de la mer ce soir"),  # fr
+        (3, "x1 y2 z3 q4 w5 e6 r7 t8 u9 i10 o11 p12 a13 s14 d15 f16"),  # und
         (4, "the cat sat " * 20 + "and it is done"),  # en but gopher-fail
         (5, "the contact address is admin@example.com and the office "
             "is open now so the team can answer all the questions sent "
@@ -289,22 +256,15 @@ def test_prepare_training_corpus_end_to_end(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = prepare_training_corpus(
-        docs,
-        min_quality=0.4,
-        langs=("en",),
-        mixture={"en": 2.0},
-        max_tokens=16,
-        stride=None,
-        shard_budget=40,
-        block_size=2,
+        docs, max_tokens=16, shard_budget=40, block_size=2
     ).cache()
     try:
         rows_out = out.collect()
         ids = {r["doc_id"] for r in rows_out}
         assert ids == {1, 5}
-        # mixture 2.0 -> both copies present for every kept doc
+        # mixture weight 1.0 for English -> one copy of every kept doc
         for d in (1, 5):
-            assert {r["copy_idx"] for r in rows_out if r["doc_id"] == d} == {0, 1}
+            assert {r["copy_idx"] for r in rows_out if r["doc_id"] == d} == {0}
         # chunking: doc 1 has 36 tokens -> 3 chunks of <=16 per copy
         c1 = sorted(
             (r["copy_idx"], r["chunk_idx"], r["n_tokens"])

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from tcga_query_project_spark import plans
 from tcga_query_project_spark.catalog import BENCH_ONLY, REGISTRY
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, TESTDATA
 
 
 def _LOOKUP():
@@ -671,6 +671,17 @@ def test_tpch_no_forced_broadcast_of_sf_scaled_relations(spark):
             f"{name}: {got} forced broadcast hints (allowed {want}) — "
             "new hints on SF-scaled relations are the q17/q18 OOM class"
         )
+
+
+def test_count_exchanges_skips_reused_exchange(spark):
+    """A final plan prints a reused shuffle as ``ReusedExchange [...],
+    Exchange hashpartitioning(...)``: that line is no second shuffle.
+    q15's quarter aggregate is shuffled once and reused by its max-row
+    branch at sf0.01."""
+    df = _LOOKUP()["q15_top_supplier"].build(spark, f"{TESTDATA}/sf0.01")
+    df.collect()
+    assert "ReusedExchange" in plans.formatted_plan(df, "simple")
+    assert plans.count_exchanges(df) == 1
 
 
 def test_aggregate_self_joins_reuse_exchange(spark):

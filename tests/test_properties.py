@@ -62,10 +62,8 @@ def test_ntile_bucket_sizes_differ_by_at_most_one(spark, n, values):
     df = spark.createDataFrame(
         [(i, float(v)) for i, v in enumerate(values)], "id int, v double"
     )
-    out = survival.ntile_strata(
-        df, "v", n, [], F.col("id").asc(), keep_extremes_only=False
-    )
-    # reconstruct tile sizes from the labels by recomputing ntile
+    out = survival.ntile_strata(df, "v", n, [], F.col("id").asc())
+    # reconstruct tile sizes by recomputing ntile
     tiled = df.withColumn(
         "t",
         F.ntile(n).over(
@@ -74,9 +72,14 @@ def test_ntile_bucket_sizes_differ_by_at_most_one(spark, n, values):
             )
         ),
     )
-    sizes = [r["c"] for r in tiled.groupBy("t").agg(F.count("*").alias("c")).collect()]
-    assert max(sizes) - min(sizes) <= 1
-    assert out.count() == len(values)
+    sizes = {r["t"]: r["c"] for r in tiled.groupBy("t").agg(F.count("*").alias("c")).collect()}
+    assert max(sizes.values()) - min(sizes.values()) <= 1
+    # the operator keeps exactly tiles 1 (LOW) and n (HIGH)
+    labels = {
+        r["stratum"]: r["c"]
+        for r in out.groupBy("stratum").agg(F.count("*").alias("c")).collect()
+    }
+    assert labels == {"LOW": sizes[1], "HIGH": sizes[n]}
 
 
 @given(

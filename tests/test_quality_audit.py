@@ -26,12 +26,12 @@ def test_metrics_and_verdicts(spark):
     report = qa.audit(
         df,
         [
-            qa.not_null("lang", max_null_frac=0.0),       # fails: 1/5 null
+            qa.not_null("lang"),                           # fails: 1/5 null
             qa.not_null("score"),                          # passes
             qa.in_range("score", 0.0, 100.0),              # min fails, max fails
             qa.unique("id"),                               # fails: dup 4
-            qa.in_set("lang", ["en", "fr", "de"], 0.8),    # passes: 4/5
-            qa.row_count(3, 10),                           # passes
+            qa.in_set("lang", ["en", "fr", "de"]),         # fails: 4/5
+            qa.row_count(3),                               # passes
         ],
     )
     rows = {(r["check"], r["column"]): r for r in report.collect()}
@@ -45,7 +45,7 @@ def test_metrics_and_verdicts(spark):
     assert rows[("unique", "id")]["metric"] == 0.2
     assert not rows[("unique", "id")]["passed"]
     assert rows[("in_set", "lang")]["metric"] == 0.8
-    assert rows[("in_set", "lang")]["passed"]
+    assert not rows[("in_set", "lang")]["passed"]
     assert rows[("row_count_at_least", "*")]["metric"] == 5.0
     assert rows[("row_count_at_least", "*")]["passed"]
     assert not all(r["passed"] for r in rows.values())
@@ -107,7 +107,7 @@ def test_raw_metric_comparison_not_rounded(spark):
     df = spark.range(n).selectExpr(
         "id", "CASE WHEN id = 0 THEN NULL ELSE 'en' END AS lang"
     )
-    report = qa.audit(df, [qa.not_null("lang", max_null_frac=0.0)])
+    report = qa.audit(df, [qa.not_null("lang")])
     r = report.collect()[0]
     assert r["metric"] == 0.0  # reported metric rounds to 6 decimals
     assert not r["passed"]     # but the verdict sees the raw 2.5e-7
@@ -145,7 +145,7 @@ def test_psi_hand_worked_value(spark):
         = 1.2 ln 4 = 1.663553."""
     ref = spark.createDataFrame([("a",)] * 8 + [("b",)] * 2, "cat string")
     cur = spark.createDataFrame([("a",)] * 2 + [("b",)] * 8, "cat string")
-    got = _psi_map(qa.psi_drift(ref, cur, categorical=["cat"]))["cat"]
+    got = _psi_map(qa.psi_drift(ref, cur, numeric={}, categorical=["cat"]))["cat"]
     assert got["psi"] == 1.663553
     assert got["n_bins"] == 2
     assert bool(got["drifted"]) is True
@@ -176,7 +176,7 @@ def test_psi_one_sided_bin_uses_epsilon_floor_and_null_bin(spark):
         [("a",), ("a",), ("c",), (None,)], "cat string"
     )
     cur = spark.createDataFrame([("a",), ("a",), (None,), (None,)], "cat string")
-    out = _psi_map(qa.psi_drift(ref, cur, categorical=["cat"]))["cat"]
+    out = _psi_map(qa.psi_drift(ref, cur, numeric={}, categorical=["cat"]))["cat"]
     import math
 
     assert out["n_bins"] == 3  # a, c, __null__
@@ -188,7 +188,7 @@ def test_psi_empty_reference_side_is_total_and_drifts(spark):
     share floors to epsilon -> PSI large -> drifted, deterministically."""
     ref = spark.createDataFrame([], "cat string")
     cur = spark.createDataFrame([("a",), ("b",)], "cat string")
-    row = qa.psi_drift(ref, cur, categorical=["cat"]).first()
+    row = qa.psi_drift(ref, cur, numeric={}, categorical=["cat"]).first()
     import math
 
     assert math.isfinite(row["psi"]) and row["psi"] > 0.2
@@ -200,7 +200,7 @@ def test_psi_requires_features(spark):
 
     df = spark.range(3)
     with _pt.raises(ValueError):
-        qa.psi_drift(df, df)
+        qa.psi_drift(df, df, numeric={}, categorical=[])
 
 
 # ---------------------------------------------------------------------------

@@ -16,8 +16,17 @@ Resolution is by name, so a local variable that shadows a top-level name can
 make a definition look reached (the scan errs towards passing), never the
 reverse.
 
-Run as a script to print the unreached definitions with their line counts:
-``python tests/test_reachability.py``.
+The same AST load also guards the operator OPTIONS: every defaulted
+parameter of a top-level package function must see at least two distinct
+values at the roots' call sites, unless ``OPTIONS_ALLOWED`` names it with a
+reason. Calls match by function name; an omitted argument counts as the
+default value, and a runtime expression, a forwarded variable or a
+reference to the function that is not a call (a callback) counts as many
+values. A parameter only one value reaches is configuration space no
+workload runs: make it a constant.
+
+Run as a script to print the unreached definitions with their line counts,
+then the option report: ``python tests/test_reachability.py``.
 """
 
 from __future__ import annotations
@@ -50,6 +59,58 @@ ALLOWED: dict[str, str] = {
     f"{PKG}.operators.glm:nb_glm_wald_pairs": "the all-pairs NB-GLM Wald fit behind pairwise_de",
     # Sinks a benchmark plan names.
     f"{PKG}.sources.io:write_training_shards": "training-shard sink of the corpus pipeline",
+}
+
+#: Modules whose options the option guard does not scan: test
+#: infrastructure and the GDC acquisition path. Their calls are not roots.
+OPTION_EXEMPT_MODULES = (
+    f"{PKG}.sources.ingest",
+    f"{PKG}.fixtures",
+    f"{PKG}.schemas",
+    f"{PKG}.plans.inspect",
+)
+
+_PERFBENCH = "perfbench passes it (the benchmark's own setting)"
+_TOY = "tests shrink it: a production-scale path at toy scale, or a fast test"
+_SALT = "tests vary the salt to draw independent samples"
+
+#: Defaulted parameters, ``module:function:param``, that fewer than two
+#: distinct values reach from the roots, kept on purpose with the reason.
+OPTIONS_ALLOWED: dict[str, str] = {
+    f"{PKG}.operators.dedup:near_duplicates:k": _PERFBENCH,
+    f"{PKG}.operators.dedup:near_duplicates:num_hashes": _PERFBENCH,
+    f"{PKG}.operators.dedup:near_duplicates:band_size": _PERFBENCH,
+    f"{PKG}.operators.dedup:embedding_near_dup_auto:n_tables": _PERFBENCH,
+    f"{PKG}.operators.dedup:embedding_near_dup_auto:target_occupancy": _TOY,
+    f"{PKG}.operators.dedup:embedding_near_dup_auto:max_bits": _TOY,
+    f"{PKG}.operators.dedup:embedding_near_dup:n_blocks": _TOY,
+    f"{PKG}.operators.bpe:bpe_encode:max_word_len": _TOY,
+    f"{PKG}.operators.bpe:bpe_train:num_merges": _TOY,
+    f"{PKG}.operators.bpe:bpe_train:max_words": _TOY,
+    f"{PKG}.operators.unigram:unigram_train:vocab_size": _TOY,
+    f"{PKG}.operators.unigram:unigram_train:seed_size": _TOY,
+    f"{PKG}.operators.sketches:heavy_hitters:k": _TOY,
+    f"{PKG}.operators.sketches:heavy_hitters:capacity": _TOY,
+    f"{PKG}.operators.glm:fit_dispersion_trend:max_iter": "tests pin the single-pass trend (max_iter=1) against the refit",
+    f"{PKG}.operators.graph:connected_components:max_iter": _TOY,
+    f"{PKG}.operators.graph:connected_components:local_threshold": "tests force the distributed path (0) on toy graphs",
+    f"{PKG}.operators.graph:pagerank:local_threshold": "tests force the distributed path (0) on toy graphs",
+    f"{PKG}.operators.partitioning:stratified_cap_scaled:salt": _SALT,
+    f"{PKG}.operators.partitioning:stratified_cap_scaled:slack": _TOY,
+    f"{PKG}.operators.partitioning:stratified_cap_scaled:margin": _TOY,
+    f"{PKG}.operators.sampling:dsir_select:n_buckets": _TOY,
+    f"{PKG}.operators.sampling:pps_systematic_sample:salt": _SALT,
+    f"{PKG}.operators.sampling:sample_mixture:salt": _SALT,
+    f"{PKG}.operators.stats:bootstrap_ci:n_boot": _TOY,
+    f"{PKG}.operators.stats:bootstrap_ci:salt": _SALT,
+    f"{PKG}.operators.stats:independent_filter_padj:n_theta": _TOY,
+    f"{PKG}.operators.stats:r_lowess:iters": "tests check the port of R's lowess against R's own values",
+    f"{PKG}.operators.temporal:apply_cdc:tiebreak": "keeps window orders total (catalog determinism convention)",
+    f"{PKG}.operators.temporal:range_join:bucket_width": _TOY,
+    f"{PKG}.operators.text:remove_boilerplate_lines:min_docs": _TOY,
+    f"{PKG}.pipelines.corpus_prep:prepare_training_corpus:max_tokens": _TOY,
+    f"{PKG}.pipelines.corpus_prep:prepare_training_corpus:shard_budget": _TOY,
+    f"{PKG}.pipelines.corpus_prep:prepare_training_corpus:block_size": _TOY,
 }
 
 
@@ -257,8 +318,100 @@ def test_allowlist_has_no_stale_entries():
     assert not stale, f"ALLOWED entries that are now reached or gone: {stale}"
 
 
+_MANY = "<runtime>"
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None, ast.AST]]:
+    """(name, positional index or None, default) of each defaulted parameter."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, first + i, d) for i, (p, d) in enumerate(zip(pos[first:], a.defaults))]
+    out += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _value(node: ast.AST) -> str:
+    try:
+        ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return _MANY
+    return ast.unparse(node)
+
+
+def option_values() -> dict[str, set[str]]:
+    """``module:function:param`` -> the distinct values the roots' call
+    sites pass for every in-scope defaulted parameter."""
+    pkg, roots = _parsed()
+    by_name: dict[str, list[tuple[str, ast.FunctionDef]]] = {}
+    for m in pkg.values():
+        if m.name in OPTION_EXEMPT_MODULES:
+            continue
+        for node in m.tree.body:
+            if isinstance(node, ast.FunctionDef) and f"{m.name}:{node.name}" not in ALLOWED:
+                by_name.setdefault(node.name, []).append((m.name, node))
+    values = {
+        f"{mod}:{fn.name}:{p}": set()
+        for fns in by_name.values()
+        for mod, fn in fns
+        for p, _, _ in _defaulted(fn)
+    }
+    callers = [m for m in pkg.values() if m.name not in OPTION_EXEMPT_MODULES]
+    for m in callers + list(roots.values()):
+        called = set()
+        for node in ast.walk(m.tree):
+            if not isinstance(node, ast.Call):
+                continue
+            called.add(id(node.func))
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            starred = any(isinstance(a, ast.Starred) for a in node.args)
+            kwargs = {k.arg: k.value for k in node.keywords}
+            for mod, fn in by_name.get(name, []):
+                for p, i, default in _defaulted(fn):
+                    if p in kwargs:
+                        v = _value(kwargs[p])
+                    elif i is not None and i < len(node.args) and not starred:
+                        v = _value(node.args[i])
+                    elif starred or None in kwargs:
+                        v = _MANY
+                    else:
+                        v = _value(default)
+                    values[f"{mod}:{fn.name}:{p}"].add(v)
+        for node in ast.walk(m.tree):  # callbacks: any value may reach them
+            if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in called:
+                name = getattr(node, "id", None) or getattr(node, "attr", None)
+                for mod, fn in by_name.get(name, []):
+                    for p, _, _ in _defaulted(fn):
+                        values[f"{mod}:{fn.name}:{p}"].add(_MANY)
+    return values
+
+
+def single_valued_options() -> dict[str, set[str]]:
+    return {k: v for k, v in option_values().items() if len(v) < 2 and _MANY not in v}
+
+
+def test_every_option_has_two_values_in_use():
+    bad = sorted(k for k in single_valued_options() if k not in OPTIONS_ALLOWED)
+    assert not bad, (
+        "defaulted parameters no root passes a second value (make them "
+        f"constants, or add a reasoned entry to OPTIONS_ALLOWED): {bad}"
+    )
+
+
+def test_option_allowlist_has_no_stale_entries():
+    found = single_valued_options()
+    stale = [k for k in OPTIONS_ALLOWED if k not in found]
+    assert not stale, f"OPTIONS_ALLOWED entries that now see two values or are gone: {stale}"
+
+
 if __name__ == "__main__":
     bad = unreached()
     for key, n in sorted(unreached(allowed=False).items()):
         print(f"{n:5d}  {'UNREACHED' if key in bad else 'allowed  '}  {key}")
     print(f"{sum(bad.values())} unreached lines in {len(bad)} definitions", file=sys.stderr)
+    opts = option_values()
+    single = single_valued_options()
+    for key, vals in sorted(opts.items()):
+        tag = "" if key not in single else "allowed " if key in OPTIONS_ALLOWED else "SINGLE  "
+        print(f"{tag:8s}  {key}  {sorted(vals)}")
+    print(f"{len(opts)} defaulted parameters, {len(single)} with one value in use", file=sys.stderr)

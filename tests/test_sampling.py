@@ -252,28 +252,6 @@ def test_sample_mixture_null_semantics(spark):
     assert sorted(rows) == [(1, 0), (1, 1)]
 
 
-def test_prepare_training_corpus_decontaminates(spark):
-    from tcga_query_project_spark.pipelines.corpus_prep import (
-        prepare_training_corpus,
-    )
-
-    good = ("the quick brown fox jumps over the lazy dog and then it "
-            "runs far away to the old stone bridge where it is resting "
-            "now while the tired hunter is walking home this evening")
-    other = ("the small boat is drifting near the shore and the wind "
-             "is pushing it along while the birds are calling out over "
-             "the water in the bright cold morning air today again")
-    docs = spark.createDataFrame(
-        [(1, good), (2, other)], "doc_id long, text string"
-    )
-    evals = spark.createDataFrame([(900, good)], "doc_id long, text string")
-    out = prepare_training_corpus(
-        docs, max_tokens=16, shard_budget=64, block_size=2,
-        decontaminate_against=evals, decontaminate_threshold=0.5,
-    )
-    assert {r["doc_id"] for r in out.collect()} == {2}
-
-
 # ---------------------------------------------------------------------------
 # pps_systematic_sample (integer-grid weighted sampling)
 # ---------------------------------------------------------------------------

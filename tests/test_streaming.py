@@ -48,8 +48,7 @@ def test_tumbling_stream_equals_batch(spark, events_stream):
         F.round(F.sum("value"), 4).alias("total_value"),
     ]
     b = sw.tumbling_agg(batch, "ts", "1 hour", ["event_type"], aggs)
-    s_df = sw.tumbling_agg(stream, "ts", "1 hour", ["event_type"], aggs,
-                           watermark="1 minute")
+    s_df = sw.tumbling_agg(stream, "ts", "1 hour", ["event_type"], aggs)
     assert s_df.isStreaming
     s = _run_stream(spark, s_df, "t_tumble")
     cols = ["window_start_us", "event_type", "n_events", "total_value"]
@@ -60,8 +59,7 @@ def test_session_stream_equals_batch(spark, events_stream):
     batch, stream = events_stream
     aggs = [F.count(F.lit(1)).cast("long").alias("n_events")]
     b = sw.session_agg(batch, "ts", "1 day", ["user_id"], aggs)
-    s_df = sw.session_agg(stream, "ts", "1 day", ["user_id"], aggs,
-                          watermark="1 minute")
+    s_df = sw.session_agg(stream, "ts", "1 day", ["user_id"], aggs)
     s = _run_stream(spark, s_df, "t_session")
     cols = ["user_id", "session_start_us", "session_end_us", "n_events"]
     assert _sorted_rows(s, cols) == _sorted_rows(b, cols)
@@ -71,8 +69,7 @@ def test_sliding_stream_equals_batch(spark, events_stream):
     batch, stream = events_stream
     aggs = [F.count(F.lit(1)).cast("long").alias("n_events")]
     b = sw.sliding_agg(batch, "ts", "2 hours", "1 hour", [], aggs)
-    s_df = sw.sliding_agg(stream, "ts", "2 hours", "1 hour", [], aggs,
-                          watermark="1 minute")
+    s_df = sw.sliding_agg(stream, "ts", "2 hours", "1 hour", [], aggs)
     s = _run_stream(spark, s_df, "t_slide")
     cols = ["window_start_us", "n_events"]
     assert _sorted_rows(s, cols) == _sorted_rows(b, cols)
@@ -107,7 +104,6 @@ def test_watermark_drops_late_data_in_append_mode(spark, tmp_path):
         "1 hour",
         [],
         [F.count(F.lit(1)).cast("long").alias("n")],
-        watermark="10 minutes",
     )
     q = (
         agg.writeStream.format("memory")

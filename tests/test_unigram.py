@@ -123,9 +123,7 @@ def _decode(pieces):
 
 def test_train_encode_decode_round_trip(spark):
     df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
-    model = unigram.unigram_train(
-        df, "text", vocab_size=60, seed_size=200, em_rounds=2
-    )
+    model = unigram.unigram_train(df, "text", vocab_size=60, seed_size=200)
     rows = model.collect()
     assert len(rows) <= 200
     # probabilities normalized
@@ -186,9 +184,7 @@ def test_frequent_word_becomes_one_piece(spark):
     """'data' dominates the corpus: the trained model must keep
     (MARKER + 'data') as a single piece and Viterbi must use it."""
     df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
-    model = unigram.unigram_train(
-        df, "text", vocab_size=60, seed_size=200, em_rounds=2
-    )
+    model = unigram.unigram_train(df, "text", vocab_size=60, seed_size=200)
     pieces = {r["piece"] for r in model.collect()}
     assert MARKER + "data" in pieces
     enc = unigram.unigram_encode(
